@@ -196,6 +196,12 @@ def main() -> None:
                 # r1-r5 values under this key were 1x quotients (~32.5k),
                 # r6+ are marginal 4x-drain rates — not comparable.
                 "relay_prompb_method": relay_pb["prompb_method"],
+                # fixture discontinuity marker: the relay_prompb_* bodies
+                # were literal-only (uncompressed) snappy before this
+                # key appeared; they are now really compressed by
+                # pyarrow's codec and decoded by it too, so the rates are
+                # not comparable across the marker.
+                "relay_prompb_fixture": "snappy_pyarrow",
                 "relay_prompb_records_per_sec_1x_quotient": relay_pb[
                     "records_per_sec_1x_quotient"
                 ],

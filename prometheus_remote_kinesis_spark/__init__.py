@@ -14,7 +14,7 @@ Layout
                 configured for cluster-scale defaults (AQE, Arrow, UTC).
 ``ingest``      Layer A: prompb WriteRequest → flat records (flatten,
                 NaN→NULL, name extraction) as pure DataFrame transforms.
-``sources/``    Parquet/NDJSON scans, pure-python snappy+protobuf decode
+``sources/``    Parquet/NDJSON scans, snappy (pyarrow) + protobuf decode
                 of the Prometheus remote-write wire format.
 ``sinks``       NDJSON encode, Kinesis/Firehose-shaped chunked batch sink
                 (≤500 records / ≤4.5e6 bytes per call), parquet archival.

@@ -156,7 +156,7 @@ def main(argv: list[str] | None = None) -> int:
         **handlers,
     ).start()
     source = (
-        read_prompb_record_stream(spark, spool, parallel=True)
+        read_prompb_record_stream(spark, spool)
         if args.raw_spool
         else read_record_stream(spark, spool)
     )

@@ -79,7 +79,7 @@ def encode_bmp24(pixels: np.ndarray) -> bytes:
     order) as an uncompressed 24-bpp BMP — BITMAPFILEHEADER +
     BITMAPINFOHEADER, rows bottom-up and zero-padded to 4 bytes, per the
     public format spec. Fixture twin of ``decode_bmp24`` (the
-    ``snappy_compress_literal`` pattern: encoder exists for tests)."""
+    ``encode_write_request`` pattern: encoder exists for tests)."""
     h, w, _ = pixels.shape
     stride = (w * 3 + 3) & ~3
     data = bytearray()

@@ -7,7 +7,7 @@ reference handler's exact staging and status codes:
 | stage | reference | here | failure → HTTP |
 |---|---|---|---|
 | 1 read | ``ioutil.ReadAll`` (kinesis.go:69) | ``rfile.read(len)`` | 500 (kinesis.go:70-74) |
-| 2 decompress | ``snappy.Decode`` (kinesis.go:76) | ``prompb.snappy_decompress`` | 400 (kinesis.go:77-81) |
+| 2 decompress | ``snappy.Decode`` (kinesis.go:76) | ``prompb.snappy_decompress`` (pyarrow's snappy; preamble capped at 22× the body) | 400 (kinesis.go:77-81) |
 | 3 decode | ``proto.Unmarshal`` (kinesis.go:83-84) | ``prompb.parse_write_request`` | 400 (kinesis.go:85-88) |
 | 4 transform | ``parseRecords`` (prometheus.go:10-37) | ``flatten_timeseries`` below | — (infallible) |
 | 5 handoff | ``writeCh <- records`` (kinesis.go:92) | atomic NDJSON file into the spool dir | — |
@@ -20,9 +20,12 @@ ack-before-durable data loss window (SURVEY.md §3.2) is closed: we write
 the records before answering 200.
 
 ``flatten_timeseries`` mirrors ``parseRecords`` row-at-a-time in the
-handler thread, exactly like the reference's per-request goroutine;
-``tests/test_server.py`` pins it against the Spark-side
-``ingest.flatten_write_requests`` on the same fixtures so the two can
+handler thread, exactly like the reference's per-request goroutine. It is
+the only Python copy of the flatten rules: the ``format("prompb")``
+DataSource and ``decode_remote_write`` build their Arrow batches from its
+output (``prompb_datasource.decode_body``). ``tests/test_server.py`` pins
+it against the Spark-side ``ingest.flatten_write_requests`` (which
+flattens already-nested Spark rows) on the same fixtures so the two can
 never diverge silently.
 
 Beyond the reference's write-only surface, the same server optionally
@@ -46,7 +49,7 @@ from prometheus_remote_kinesis_spark.sources.prompb import (
     encode_read_response,
     parse_read_request,
     parse_write_request,
-    snappy_compress_literal,
+    snappy_compress,
     snappy_decompress,
 )
 
@@ -248,6 +251,14 @@ class _Handler(BaseHTTPRequestHandler):
                 return
             try:
                 series = self.server.range_handler(q, start_s, end_s, step_s)  # type: ignore[attr-defined]
+                # NULL points are absent samples (Prometheus never returns
+                # a value-less point), and a series left with none is
+                # absent too
+                result = []
+                for labels, pts in series:
+                    values = [[t_s, str(float(v))] for t_s, v in pts if v is not None]
+                    if values:
+                        result.append({"metric": labels, "values": values})
             except ValueError as e:  # PromQLError subclasses ValueError
                 self._bad(str(e))
                 return
@@ -262,18 +273,7 @@ class _Handler(BaseHTTPRequestHandler):
                 200,
                 {
                     "status": "success",
-                    "data": {
-                        "resultType": "matrix",
-                        "result": [
-                            {
-                                "metric": labels,
-                                "values": [
-                                    [t_s, str(float(v))] for t_s, v in pts
-                                ],
-                            }
-                            for labels, pts in series
-                        ],
-                    },
+                    "data": {"resultType": "matrix", "result": result},
                 },
             )
             return
@@ -313,6 +313,13 @@ class _Handler(BaseHTTPRequestHandler):
                 return
         try:
             t_s, results = self.server.query_handler(q, time_s)  # type: ignore[attr-defined]
+            # a NULL value is an absent sample: an aggregation over no
+            # series is an empty vector, not an element without a value
+            result = [
+                {"metric": labels, "value": [t_s, str(float(v))]}
+                for labels, v in results
+                if v is not None
+            ]
         except ValueError as e:  # PromQLError subclasses ValueError
             self._bad(str(e))
             return
@@ -326,13 +333,7 @@ class _Handler(BaseHTTPRequestHandler):
             200,
             {
                 "status": "success",
-                "data": {
-                    "resultType": "vector",
-                    "result": [
-                        {"metric": labels, "value": [t_s, str(float(v))]}
-                        for labels, v in results
-                    ],
-                },
+                "data": {"resultType": "vector", "result": result},
             },
         )
 
@@ -370,7 +371,7 @@ class _Handler(BaseHTTPRequestHandler):
                 return
             try:
                 results = self.server.read_handler(queries)  # type: ignore[attr-defined]
-                payload = snappy_compress_literal(encode_read_response(results))
+                payload = snappy_compress(encode_read_response(results))
             except Exception:
                 self.send_response(500)
                 self.end_headers()

@@ -1,24 +1,27 @@
-"""Pure-python codecs for the Prometheus remote-write wire format.
+"""Codecs for the Prometheus remote-write wire format.
 
 The reference ingests ``snappy(block) ∘ protobuf(prompb.WriteRequest)``
-HTTP bodies (``/root/reference/kinesis.go:76-84``). This module implements
-both layers from their PUBLIC specifications — the snappy block format
-(github.com/google/snappy format_description.txt) and the protobuf wire
-format for the prompb messages:
+HTTP bodies (``kinesis.go:76-84``). The snappy block format
+(github.com/google/snappy format_description.txt) is pyarrow's built-in
+codec behind the uvarint length preamble; the protobuf wire format for
+the prompb messages is parsed here in pure Python from its public
+specification:
 
     WriteRequest { repeated TimeSeries timeseries = 1; }
     TimeSeries   { repeated Label labels = 1; repeated Sample samples = 2; }
     Label        { string name = 1; string value = 2; }
     Sample       { double value = 1; int64 timestamp = 2; }
 
-No third-party snappy/protobuf dependency: executors need only stdlib.
-Encoders exist for test fixtures (snappy literal-only encoding is valid
-snappy; the decoder handles the full format including copies).
+No protobuf runtime dependency; snappy comes from pyarrow, which every
+Spark Arrow path already needs. Encoders exist for test fixtures and the
+``/read`` responses.
 """
 
 from __future__ import annotations
 
 import struct
+
+import pyarrow as pa
 
 # --------------------------- snappy block format ---------------------------
 
@@ -48,71 +51,36 @@ def _write_uvarint(n: int) -> bytes:
             return bytes(out)
 
 
+# Valid snappy expands at most 64 output bytes per 3-byte copy element
+# (copy-2: length 64, tag + 2 offset bytes), i.e. < 22x the block size. A
+# preamble declaring more cannot be a real payload; it is refused before
+# an output buffer of the declared size is allocated.
+SNAPPY_MAX_EXPANSION = 22
+
+
 def snappy_decompress(data: bytes) -> bytes:
     """Block-format snappy decode (the format ``snappy.Decode`` consumes,
-    kinesis.go:76): uvarint decompressed-length preamble, then a tag
-    stream of literals and back-references."""
-    expected, pos = _read_uvarint(data, 0)
-    out = bytearray()
-    n = len(data)
-    while pos < n:
-        tag = data[pos]
-        pos += 1
-        kind = tag & 3
-        if kind == 0:  # literal
-            length = tag >> 2
-            if length >= 60:
-                nbytes = length - 59
-                length = int.from_bytes(data[pos : pos + nbytes], "little")
-                pos += nbytes
-            length += 1
-            out += data[pos : pos + length]
-            pos += length
-        else:
-            if kind == 1:  # copy, 1-byte offset
-                length = ((tag >> 2) & 0x7) + 4
-                offset = ((tag >> 5) << 8) | data[pos]
-                pos += 1
-            elif kind == 2:  # copy, 2-byte offset
-                length = (tag >> 2) + 1
-                offset = int.from_bytes(data[pos : pos + 2], "little")
-                pos += 2
-            else:  # copy, 4-byte offset
-                length = (tag >> 2) + 1
-                offset = int.from_bytes(data[pos : pos + 4], "little")
-                pos += 4
-            if offset == 0 or offset > len(out):
-                raise ValueError("snappy: invalid copy offset")
-            start = len(out) - offset
-            for i in range(length):  # may overlap — byte-at-a-time semantics
-                out.append(out[start + i])
-    if len(out) != expected:
-        raise ValueError(f"snappy: length mismatch {len(out)} != {expected}")
-    return bytes(out)
+    kinesis.go:76): uvarint decompressed-length preamble, then pyarrow's
+    snappy codec. Every failure raises ``ValueError``."""
+    try:
+        expected, _ = _read_uvarint(data, 0)
+    except IndexError:
+        raise ValueError("snappy: truncated length preamble") from None
+    if expected > SNAPPY_MAX_EXPANSION * len(data):
+        raise ValueError(
+            f"snappy: preamble declares {expected} bytes for a {len(data)}-byte block"
+        )
+    try:
+        return pa.decompress(
+            data, decompressed_size=expected, codec="snappy", asbytes=True
+        )
+    except OSError as e:
+        raise ValueError(f"snappy: {e}") from None
 
 
-def snappy_compress_literal(data: bytes) -> bytes:
-    """Minimal valid snappy encoding: the whole payload as literals (no
-    back-references). Produces output any conformant decoder (including
-    the Go reference's) accepts — used for test fixtures."""
-    out = bytearray(_write_uvarint(len(data)))
-    pos = 0
-    while pos < len(data) or (pos == 0 and not data):
-        chunk = data[pos : pos + 65536]
-        if not chunk and data:
-            break
-        ln = len(chunk) - 1
-        if len(data) == 0:
-            break
-        if ln < 60:
-            out.append(ln << 2)
-        else:
-            nbytes = (ln.bit_length() + 7) // 8
-            out.append((59 + nbytes) << 2)
-            out += ln.to_bytes(nbytes, "little")
-        out += chunk
-        pos += len(chunk)
-    return bytes(out)
+def snappy_compress(data: bytes) -> bytes:
+    """Block-format snappy encode (pyarrow's codec, real back-references)."""
+    return pa.compress(data, codec="snappy", asbytes=True)
 
 
 # --------------------------- protobuf wire format --------------------------
@@ -372,7 +340,7 @@ def encode_remote_write_body(
 ) -> bytes:
     """Full wire body: snappy(protobuf(WriteRequest)) — what hits
     ``/receive`` (kinesis.go:69-84)."""
-    return snappy_compress_literal(encode_write_request(timeseries))
+    return snappy_compress(encode_write_request(timeseries))
 
 
 # ---------------------------------------------------------------------------

@@ -4,32 +4,57 @@
 snappy-compressed protobuf ``WriteRequest`` spool files — the exact bytes
 the reference receives per HTTP POST (kinesis.go:68-93) and our
 ``server.py`` endpoint spools — and produces RECORD_SCHEMA rows with the
-reference's flatten semantics (prometheus.go:10-37: label-map build, name
-projection, empty-series passthrough, NaN→NULL).
+reference's flatten semantics (prometheus.go:10-37, implemented once in
+``server.flatten_timeseries``).
 
 This is the idiomatic Spark-4 way to expose a bespoke wire format as a
 first-class source: one InputPartition per spool file, so a directory of N
-files scans N-way parallel and the decode (pure-Python snappy + prompb,
-sources/prompb.py) runs on executors — the driver never touches payload
-bytes. At 100 TB the same class pointed at an object-store prefix keeps the
-shape; only file listing grows, and Spark batches that on the driver.
+files scans N-way parallel and the decode (``decode_body``: pyarrow's
+snappy, the prompb parser, the flatten) runs on executors — the driver
+never touches payload bytes. At 100 TB the same class pointed at an
+object-store prefix keeps the shape; only file listing grows, and Spark
+batches that on the driver.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
     DataSourceWriter,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 
+from prometheus_remote_kinesis_spark.server import flatten_timeseries
+from prometheus_remote_kinesis_spark.sources.prompb import (
+    parse_write_request,
+    snappy_decompress,
+)
+
 RECORD_DDL = "name string, time bigint, value double, labels map<string,string>"
+RECORD_ARROW_SCHEMA = pa.schema(
+    [
+        ("name", pa.string()),
+        ("time", pa.int64()),
+        ("value", pa.float64()),
+        ("labels", pa.map_(pa.string(), pa.string())),
+    ]
+)
+
+
+def decode_body(body: bytes) -> pa.RecordBatch:
+    """One remote-write body → one RECORD_DDL ``pyarrow.RecordBatch``.
+    Yielding RecordBatch (supported by the Python DataSource API and
+    ``mapInArrow``) skips Spark's per-row tuple→Arrow conversion."""
+    return pa.RecordBatch.from_pylist(
+        flatten_timeseries(parse_write_request(snappy_decompress(body))),
+        schema=RECORD_ARROW_SCHEMA,
+    )
 
 
 class PrompbDataSource(DataSource):
@@ -45,39 +70,28 @@ class PrompbDataSource(DataSource):
     def reader(self, schema) -> "PrompbReader":  # noqa: ANN001 (API signature)
         return PrompbReader(self.options)
 
-    def simpleStreamReader(self, schema) -> "PrompbStreamReader":  # noqa: ANN001,N802
-        return PrompbStreamReader(self.options)
+    def streamReader(self, schema) -> "PrompbParallelStreamReader":  # noqa: ANN001,N802
+        return PrompbParallelStreamReader(self.options)
 
     def writer(self, schema, overwrite: bool) -> "PrompbWriter":  # noqa: ANN001
         return PrompbWriter(self.options)
 
-    def streamReader(self, schema) -> "PrompbParallelStreamReader":  # noqa: ANN001,N802
-        # option("parallel", "true") selects the executor-parallel reader;
-        # raising the not-implemented error makes Spark fall back to the
-        # simple (driver-side) reader — the documented dispatch contract.
-        if str(self.options.get("parallel", "false")).lower() != "true":
-            from pyspark.errors import PySparkNotImplementedError
 
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
-        return PrompbParallelStreamReader(self.options)
+class _Spool:
+    """Options, listing and per-file decode shared by both readers."""
 
-
-class PrompbReader(DataSourceReader):
     def __init__(self, options) -> None:  # noqa: ANN001
         self.path = options.get("path")
         if not self.path:
             raise ValueError("prompb source requires a path")
         self.suffix = options.get("suffix", ".pb.sz")
 
-    def partitions(self):
-        files = sorted(
-            f for f in os.listdir(self.path) if f.endswith(self.suffix)
-        )
+    def _list(self) -> list[str]:
+        return sorted(f for f in os.listdir(self.path) if f.endswith(self.suffix))
+
+    def _partitions(self, files: list[str]) -> list[InputPartition]:
         # One partition per spool file: parallelism = file count, decode
-        # executor-side. Empty dir → one no-op partition (Spark requires ≥1).
+        # executor-side. No files → one no-op partition (Spark requires ≥1).
         if not files:
             return [InputPartition(None)]
         return [InputPartition(os.path.join(self.path, f)) for f in files]
@@ -85,137 +99,24 @@ class PrompbReader(DataSourceReader):
     def read(self, partition):
         if partition.value is None:
             return
-        yield from _decode_file_arrow(partition.value)
+        with open(partition.value, "rb") as fh:
+            yield decode_body(fh.read())
 
 
-def _decode_file(path: str):
-    from prometheus_remote_kinesis_spark.server import flatten_timeseries
-    from prometheus_remote_kinesis_spark.sources.prompb import (
-        parse_write_request,
-        snappy_decompress,
-    )
-
-    with open(path, "rb") as fh:
-        body = fh.read()
-    for rec in flatten_timeseries(parse_write_request(snappy_decompress(body))):
-        yield (rec["name"], rec["time"], rec["value"], rec["labels"])
+class PrompbReader(_Spool, DataSourceReader):
+    def partitions(self):
+        return self._partitions(self._list())
 
 
-def _decode_file_arrow(path: str):
-    """Arrow-batched twin of ``_decode_file``: one ``pyarrow.RecordBatch``
-    per spool file. Yielding RecordBatch (supported by the Python
-    DataSource API) skips Spark's per-row tuple→Arrow conversion — the
-    r5 profiling found THAT conversion, not the prompb parse, dominated
-    the relay decode path (~17 µs/record parse per core vs ~14 s wall for
-    600 k records on 32 cores in BENCH_r04). Columns are built in one
-    pass; the RECORD_DDL column order is load-bearing."""
-    import math
-
-    import pyarrow as pa
-
-    from prometheus_remote_kinesis_spark.sources.prompb import (
-        parse_write_request,
-        snappy_decompress,
-    )
-
-    with open(path, "rb") as fh:
-        body = fh.read()
-    # Columnar flatten (same semantics as server.flatten_timeseries,
-    # prometheus.go:10-37 — label-map build with last-wins duplicates,
-    # __name__ projection, empty-series passthrough, NaN→NULL) straight
-    # into flat arrays; the map column is assembled via
-    # MapArray.from_arrays(offsets, keys, values), which skips the
-    # per-row dict→map conversion cost of pa.array-of-dicts.
-    names: list[str] = []
-    times: list[int] = []
-    values: list[float | None] = []
-    offsets: list[int] = [0]
-    keys: list[str] = []
-    vals: list[str] = []
-    for ts in parse_write_request(snappy_decompress(body)):
-        d = {lbl["name"]: lbl["value"] for lbl in ts["labels"]}
-        lkeys, lvals = list(d.keys()), list(d.values())
-        name = d.get("__name__", "")
-        samples = ts["samples"] or [{"value": None, "timestamp": 0}]
-        for s in samples:
-            v = s["value"]
-            names.append(name)
-            times.append(s["timestamp"])
-            values.append(None if v is not None and math.isnan(v) else v)
-            keys += lkeys
-            vals += lvals
-            offsets.append(len(keys))
-    yield pa.RecordBatch.from_arrays(
-        [
-            pa.array(names, pa.string()),
-            pa.array(times, pa.int64()),
-            pa.array(values, pa.float64()),
-            pa.MapArray.from_arrays(
-                pa.array(offsets, pa.int32()),
-                pa.array(keys, pa.string()),
-                pa.array(vals, pa.string()),
-            ),
-        ],
-        ["name", "time", "value", "labels"],
-    )
-
-
-class PrompbStreamReader(SimpleDataSourceStreamReader):
+class PrompbParallelStreamReader(_Spool, DataSourceStreamReader):
     """``readStream.format("prompb")`` — each micro-batch consumes the spool
     files that appeared since the last committed offset, exactly once
-    (offset = the sorted seen-file list, replayable via
-    ``readBetweenOffsets`` after a failure).
-
-    The *simple* stream-reader API decodes on the driver — the right
-    throughput class for this source: spool files are whole POST bodies,
-    and the reference's consumer is likewise a single goroutine draining a
-    channel (kinesis.go:99-151). A partition-parallel
-    ``DataSourceStreamReader`` is the scale-up path; sequence-numbered
-    names (the Kinesis analog) would then replace the seen-set offset with
-    a watermark so offsets stay O(1)."""
-
-    def __init__(self, options) -> None:  # noqa: ANN001
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("prompb source requires a path")
-        self.suffix = options.get("suffix", ".pb.sz")
-
-    def _list(self) -> list[str]:
-        return sorted(f for f in os.listdir(self.path) if f.endswith(self.suffix))
-
-    def initialOffset(self) -> dict:  # noqa: N802
-        return {"seen": []}
-
-    def read(self, start: dict):
-        seen = set(start["seen"])
-        fresh = [f for f in self._list() if f not in seen]
-        rows = [
-            row for f in fresh for row in _decode_file(os.path.join(self.path, f))
-        ]
-        return iter(rows), {"seen": sorted(seen | set(fresh))}
-
-    def readBetweenOffsets(self, start: dict, end: dict):  # noqa: N802
-        replay = sorted(set(end["seen"]) - set(start["seen"]))
-        return iter(
-            row for f in replay for row in _decode_file(os.path.join(self.path, f))
-        )
-
-
-class PrompbParallelStreamReader(DataSourceStreamReader):
-    """Executor-parallel streaming reader (``option("parallel", "true")``):
-    the driver only LISTS the spool between offsets; each new file becomes
-    an InputPartition and decodes on an executor — the scale-up path the
-    simple reader's docstring promises (N new files per micro-batch scan
-    N-way parallel, payload bytes never touch the driver)."""
-
-    def __init__(self, options) -> None:  # noqa: ANN001
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("prompb source requires a path")
-        self.suffix = options.get("suffix", ".pb.sz")
-
-    def _list(self) -> list[str]:
-        return sorted(f for f in os.listdir(self.path) if f.endswith(self.suffix))
+    (offset = the sorted seen-file list). The driver only LISTS the spool;
+    each new file becomes an InputPartition and decodes on an executor, so
+    N new files per micro-batch scan N-way parallel and payload bytes
+    never touch the driver. Sequence-numbered names (the Kinesis analog)
+    would replace the seen-set offset with a watermark so offsets stay
+    O(1)."""
 
     def initialOffset(self) -> dict:  # noqa: N802
         return {"seen": []}
@@ -224,15 +125,7 @@ class PrompbParallelStreamReader(DataSourceStreamReader):
         return {"seen": self._list()}
 
     def partitions(self, start: dict, end: dict):
-        fresh = sorted(set(end["seen"]) - set(start["seen"]))
-        if not fresh:
-            return [InputPartition(None)]
-        return [InputPartition(os.path.join(self.path, f)) for f in fresh]
-
-    def read(self, partition):
-        if partition.value is None:
-            return
-        yield from _decode_file_arrow(partition.value)
+        return self._partitions(sorted(set(end["seen"]) - set(start["seen"])))
 
     def commit(self, end: dict) -> None:
         pass

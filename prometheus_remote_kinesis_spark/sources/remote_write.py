@@ -1,10 +1,10 @@
 """S1-S3: the remote-write ingest stage as a Spark transform.
 
 ``decode_remote_write`` turns a DataFrame of raw POST bodies (binary
-snappy+protobuf, the exact bytes of ``kinesis.go:69``) into
-WriteRequest-shaped rows, which then flow through the SAME declarative
-``ingest.flatten_write_requests`` as every other path — decode is the only
-Python step, and it is Arrow-batched ``mapInPandas`` (SURVEY.md §2.10 U1).
+snappy+protobuf, the exact bytes of ``kinesis.go:69``) into RECORD_SCHEMA
+rows through the same per-body decoder as the ``format("prompb")``
+DataSource (``prompb_datasource.decode_body``), as an Arrow-batched
+``mapInArrow`` (SURVEY.md §2.10 U1).
 
 The HTTP listener itself is peripheral (BASELINE.json): in production the
 bodies arrive via a stream transport (Kinesis/Kafka topic of raw bodies, or
@@ -16,35 +16,25 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
-
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from prometheus_remote_kinesis_spark.ingest import flatten_write_requests
-from prometheus_remote_kinesis_spark.schema import WRITE_REQUEST_SCHEMA
-from prometheus_remote_kinesis_spark.sources.prompb import (
-    parse_write_request,
-    snappy_decompress,
+from prometheus_remote_kinesis_spark.sources.prompb_datasource import (
+    RECORD_DDL,
+    decode_body,
 )
 
 
 def decode_remote_write(bodies: DataFrame, body_col: str = "body") -> DataFrame:
-    """binary bodies → RECORD_SCHEMA rows (decode → flatten → normalize).
+    """binary bodies → RECORD_SCHEMA rows (decode → flatten → NaN→NULL).
 
     Stage 2+3 of the reference's hot path (kinesis.go:76-90); malformed
     bodies raise (the reference answers HTTP 400 — at the pipeline level
     a poison message is surfaced, not dropped silently)."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "timeseries": [
-                        parse_write_request(snappy_decompress(bytes(b)))
-                        for b in pdf[body_col]
-                    ]
-                }
-            )
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for body in batch.column(body_col).to_pylist():
+                yield decode_body(body)
 
-    requests = bodies.mapInPandas(decode, WRITE_REQUEST_SCHEMA)
-    return flatten_write_requests(requests)
+    return bodies.select(body_col).mapInArrow(decode, RECORD_DDL)

@@ -63,23 +63,20 @@ def read_record_stream(
 
 
 def read_prompb_record_stream(
-    spark: SparkSession, path: str, parallel: bool = False
+    spark: SparkSession, path: str, parallel: bool = True
 ) -> DataFrame:
     """Streaming record source over a RAW remote-write spool (snappy prompb
     bodies, ``RemoteWriteServer(raw=True)``): the custom
-    ``format("prompb")`` DataSource decodes on read, so the HTTP handler
-    stays O(bytes) and the snappy+protobuf+flatten cost runs where the
-    cores are. ``parallel=True`` selects the executor-parallel stream
-    reader (InputPartition per new spool file)."""
+    ``format("prompb")`` DataSource decodes on read (InputPartition per new
+    spool file), so the HTTP handler stays O(bytes) and the
+    snappy+protobuf+flatten cost runs where the cores are. ``parallel`` is
+    accepted for older callers and ignored: there is one stream reader."""
     from prometheus_remote_kinesis_spark.sources.prompb_datasource import (
         register_prompb_source,
     )
 
     register_prompb_source(spark)
-    reader = spark.readStream.format("prompb")
-    if parallel:
-        reader = reader.option("parallel", "true")
-    return reader.load(path)
+    return spark.readStream.format("prompb").load(path)
 
 
 def read_write_request_stream(spark: SparkSession, path: str) -> DataFrame:

@@ -13,11 +13,12 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from prometheus_remote_kinesis_spark.sources.prompb import (
+    SNAPPY_MAX_EXPANSION,
     _write_uvarint,
     encode_remote_write_body,
     encode_write_request,
     parse_write_request,
-    snappy_compress_literal,
+    snappy_compress,
     snappy_decompress,
 )
 from prometheus_remote_kinesis_spark.sources.remote_write import decode_remote_write
@@ -26,7 +27,24 @@ from prometheus_remote_kinesis_spark.sources.remote_write import decode_remote_w
 @given(st.binary(max_size=200_000))
 @settings(max_examples=50, deadline=None)
 def test_snappy_literal_roundtrip(data):
-    assert snappy_decompress(snappy_compress_literal(data)) == data
+    assert snappy_decompress(snappy_compress(data)) == data
+
+
+def test_snappy_rejects_declared_size_bomb():
+    """A preamble may not declare more than SNAPPY_MAX_EXPANSION × the
+    block length: the output buffer is sized from it, so a tiny body
+    claiming 1 GiB must fail before any allocation. A maximally
+    expanding valid block (copy-2 elements of length 64) stays under the
+    cap, and truncated or empty input is a ValueError too."""
+    with pytest.raises(ValueError, match="declares"):
+        snappy_decompress(_write_uvarint(1 << 30) + b"\x00")
+    dense = bytes([0]) + b"a" + _encode_copy(2, 64, 1) * 1000  # literal + copies
+    blob = _write_uvarint(1 + 64 * 1000) + dense
+    assert len(blob) * SNAPPY_MAX_EXPANSION > 1 + 64 * 1000
+    assert snappy_decompress(blob) == b"a" * (1 + 64 * 1000)
+    for bad in (b"", b"\x80"):
+        with pytest.raises(ValueError):
+            snappy_decompress(bad)
 
 
 def test_snappy_copy_elements():
@@ -62,10 +80,11 @@ def test_snappy_fuzz_copy_literal_mix(data):
     """Property fuzz over the FULL element grammar: random interleavings
     of literals and all three copy tag formats (including overlapping
     copies, offset < length) are built alongside the output they imply,
-    and the decoder must reproduce that output exactly. Closes the gap
-    between the literal-only round-trip test and the hand-built copy
-    cases — the decoder runs executor-side on every ingested body, so a
-    100 TB replay hits every element shape a conformant encoder emits."""
+    and the decoder must reproduce that output exactly. Literal-only
+    blocks (every draw a literal) are covered here too, next to the
+    encoder round-trip and the hand-built copy cases — the decoder runs
+    executor-side on every ingested body, so a 100 TB replay hits every
+    element shape a conformant encoder emits."""
     expected = bytearray()
     body = bytearray()
     n_ops = data.draw(st.integers(min_value=1, max_value=12))
@@ -126,8 +145,8 @@ def test_protobuf_skips_unknown_fields():
 
 def test_decode_remote_write_end_to_end(spark):
     """Raw snappy+protobuf bodies → records, matching the reference's
-    flatten/NaN/empty-series semantics exactly (one pipeline: decode via
-    mapInPandas, then the same declarative flatten as every other path)."""
+    flatten/NaN/empty-series semantics exactly (one ``mapInArrow`` over
+    the same per-body decoder as the format("prompb") DataSource)."""
     body1 = encode_remote_write_body(
         [
             ({"__name__": "up", "job": "n"}, [(1.0, 1000), (float("nan"), 2000)]),

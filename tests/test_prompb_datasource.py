@@ -73,25 +73,12 @@ def test_prompb_stream_reader_exactly_once(spark, tmp_path):
 
 
 def test_prompb_parallel_stream_reader_exactly_once(spark, tmp_path):
-    """Same growing-spool contract as the simple reader, through the
-    executor-parallel DataSourceStreamReader (option parallel=true):
-    InputPartition per new file, driver lists only."""
+    """Same growing-spool contract with several files per micro-batch: the
+    first run consumes both files (one InputPartition each, the driver
+    only lists), the second ONLY the new file."""
     src, out, ckpt = tmp_path / "spool", tmp_path / "out", tmp_path / "ckpt"
     src.mkdir()
     register_prompb_source(spark)
-
-    def drain():
-        q = (
-            spark.readStream.format("prompb")
-            .option("parallel", "true")
-            .load(str(src))
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
     (src / "a.pb.sz").write_bytes(
         encode_remote_write_body([({"__name__": "m1"}, [(1.0, 1000)])])
@@ -99,13 +86,13 @@ def test_prompb_parallel_stream_reader_exactly_once(spark, tmp_path):
     (src / "b.pb.sz").write_bytes(
         encode_remote_write_body([({"__name__": "m2"}, [(2.0, 2000)])])
     )
-    drain()
+    _drain(spark, src, out, ckpt)
     assert spark.read.parquet(str(out)).count() == 2
 
     (src / "c.pb.sz").write_bytes(
         encode_remote_write_body([({"__name__": "m3"}, [(3.0, 3000)])])
     )
-    drain()
+    _drain(spark, src, out, ckpt)
     rows = spark.read.parquet(str(out)).collect()
     assert {(r.name, r.time) for r in rows} == {
         ("m1", 1000),
@@ -141,18 +128,22 @@ def test_prompb_writer_roundtrip(spark, tmp_path):
     }
 
 
-def test_decode_file_matches_flatten_property(tmp_path):
+def test_decode_file_matches_flatten_property():
     """Property: for arbitrary label maps (unicode) and samples (incl. NaN
-    and negative epoch values), decoding a spool file through the
-    DataSource's per-partition path equals the reference flatten of the
-    same parsed body. Pure-Python — no Spark job per example."""
+    and negative epoch values), the per-body Arrow batch every reader
+    yields (``decode_body``) equals the reference flatten of the same
+    parsed body, row for row and in order. Pure-Python — no Spark job per
+    example."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
     from prometheus_remote_kinesis_spark.server import flatten_timeseries
     from prometheus_remote_kinesis_spark.sources.prompb import parse_write_request
     from prometheus_remote_kinesis_spark.sources.prompb import snappy_decompress
-    from prometheus_remote_kinesis_spark.sources.prompb_datasource import _decode_file
+    from prometheus_remote_kinesis_spark.sources.prompb_datasource import (
+        RECORD_ARROW_SCHEMA,
+        decode_body,
+    )
 
     text = st.text(
         alphabet=st.characters(blacklist_categories=("Cs",)), max_size=20
@@ -168,11 +159,14 @@ def test_decode_file_matches_flatten_property(tmp_path):
     @settings(max_examples=50, deadline=None, suppress_health_check=list(HealthCheck))
     def check(series):
         body = encode_remote_write_body(series)
-        path = tmp_path / "prop.pb.sz"
-        path.write_bytes(body)
-        got = list(_decode_file(str(path)))
-        want = [
+        batch = decode_body(body)
+        assert batch.schema == RECORD_ARROW_SCHEMA
+        got = [
             (r["name"], r["time"], r["value"], r["labels"])
+            for r in batch.to_pylist()
+        ]
+        want = [
+            (r["name"], r["time"], r["value"], list(r["labels"].items()))
             for r in flatten_timeseries(parse_write_request(snappy_decompress(body)))
         ]
         assert got == want

@@ -14,7 +14,7 @@ import pytest
 from prometheus_remote_kinesis_spark.server import RemoteWriteServer, flatten_timeseries
 from prometheus_remote_kinesis_spark.sources.prompb import (
     encode_remote_write_body,
-    snappy_compress_literal,
+    snappy_compress,
 )
 
 FIXTURE = [
@@ -42,7 +42,7 @@ def test_http_receive_to_streaming_relay(spark, tmp_path):
         # reference status codes: bad snappy → 400, bad route → 404
         assert _post(host, port, b"\xff\xff not snappy") == 400
         # valid snappy wrapping garbage protobuf → 400 (kinesis.go:85-88)
-        assert _post(host, port, snappy_compress_literal(b"\x99\x99\x99")) == 400
+        assert _post(host, port, snappy_compress(b"\x99\x99\x99")) == 400
         assert _post(host, port, encode_remote_write_body(FIXTURE), "/else") == 404
     finally:
         srv.stop()
@@ -113,7 +113,7 @@ def test_raw_spool_to_prompb_stream_relay(spark, tmp_path):
     try:
         assert _post(host, port, encode_remote_write_body(FIXTURE)) == 200
         assert _post(host, port, b"\xff\xff not snappy") == 400
-        assert _post(host, port, snappy_compress_literal(b"\x99\x99\x99")) == 400
+        assert _post(host, port, snappy_compress(b"\x99\x99\x99")) == 400
     finally:
         srv.stop()
 
@@ -122,7 +122,7 @@ def test_raw_spool_to_prompb_stream_relay(spark, tmp_path):
     )
 
     out = (
-        read_prompb_record_stream(spark, spool, parallel=True)
+        read_prompb_record_stream(spark, spool)
         .writeStream.format("memory")
         .queryName("raw_relay")
         .outputMode("append")
@@ -153,7 +153,7 @@ def test_remote_read_endpoint_round_trip(tmp_path):
         MATCH_RE,
         encode_read_request,
         parse_read_response,
-        snappy_compress_literal,
+        snappy_compress,
         snappy_decompress,
     )
 
@@ -170,7 +170,7 @@ def test_remote_read_endpoint_round_trip(tmp_path):
 
     srv = RemoteWriteServer(str(tmp_path / "spool"), read_handler=handler).start()
     host, port = srv.server_address[:2]
-    req = snappy_compress_literal(
+    req = snappy_compress(
         encode_read_request(
             [{"start_ms": 1000, "end_ms": 2000,
               "matchers": [(MATCH_EQ, "__name__", "click"),
@@ -265,7 +265,7 @@ def test_remote_read_spark_e2e(spark, tmp_path):
         MATCH_EQ,
         encode_read_request,
         parse_read_response,
-        snappy_compress_literal,
+        snappy_compress,
         snappy_decompress,
     )
     from prometheus_remote_kinesis_spark.sources.tables import load_table
@@ -289,7 +289,7 @@ def test_remote_read_spark_e2e(spark, tmp_path):
         conn.request(
             "POST",
             "/read",
-            body=snappy_compress_literal(
+            body=snappy_compress(
                 encode_read_request(
                     [{"start_ms": start, "end_ms": end, "matchers": matchers}]
                 )
@@ -912,3 +912,73 @@ def test_promql_r13_grammar_over_http(spark, tmp_path):
             assert e.code == 404
     finally:
         srv2.stop()
+
+
+def test_snappy_bomb_rejected_on_receive_and_read(tmp_path):
+    """A tiny body whose snappy preamble declares 1 GiB is refused with
+    400 before any buffer of that size is allocated — on /receive (both
+    spool modes) and on /read with a read handler set. Nothing is
+    spooled and the read handler never runs."""
+    from prometheus_remote_kinesis_spark.sources.prompb import _write_uvarint
+
+    bomb = _write_uvarint(1 << 30) + b"\x00" * 8
+    calls = []
+    for raw in (False, True):
+        spool = tmp_path / f"spool_{raw}"
+        srv = RemoteWriteServer(
+            str(spool), raw=raw, read_handler=lambda q: calls.append(q) or [[]]
+        ).start()
+        host, port = srv.server_address[:2]
+        try:
+            assert _post(host, port, bomb) == 400
+            assert _post(host, port, bomb, "/read") == 400
+            assert _post(host, port, encode_remote_write_body(FIXTURE)) == 200
+        finally:
+            srv.stop()
+        assert len([f for f in spool.iterdir() if not f.name.startswith(".")]) == 1
+    assert calls == []
+
+
+def test_promql_empty_aggregate_over_http(spark, tmp_path):
+    """An aggregation over no series answers 200 with an empty result,
+    never a value-less element or a dropped connection: ``sum(rate(...))``
+    at an evaluation time before the corpus's first sample (instant), and
+    over a range that ends there (matrix)."""
+    import json as _json
+    from urllib.parse import quote
+    from urllib.request import urlopen
+
+    from prometheus_remote_kinesis_spark.promql import (
+        make_promql_http_handler,
+        make_promql_range_http_handler,
+    )
+    from prometheus_remote_kinesis_spark.sources.tables import load_table
+    from tests.conftest import SF_SMOKE
+
+    first_ms = (
+        load_table(spark, SF_SMOKE, "events")
+        .selectExpr("min(unix_millis(ts)) AS t")
+        .collect()[0]["t"]
+    )
+    t_s = (first_ms - 86_400_000) / 1000.0
+    q = quote("sum(rate(click[5m]))")
+    srv = RemoteWriteServer(
+        str(tmp_path / "spool"),
+        query_handler=make_promql_http_handler(spark, SF_SMOKE),
+        range_handler=make_promql_range_http_handler(spark, SF_SMOKE),
+    ).start()
+    try:
+        host, port = srv.server_address[:2]
+        base = f"http://{host}:{port}/api/v1"
+        with urlopen(f"{base}/query?query={q}&time={t_s}", timeout=120) as resp:
+            assert resp.status == 200
+            doc = _json.loads(resp.read())
+        assert doc["status"] == "success"
+        assert doc["data"] == {"resultType": "vector", "result": []}
+        url = f"{base}/query_range?query={q}&start={t_s - 3600}&end={t_s}&step=15m"
+        with urlopen(url, timeout=120) as resp:
+            assert resp.status == 200
+            doc = _json.loads(resp.read())
+        assert doc["data"] == {"resultType": "matrix", "result": []}
+    finally:
+        srv.stop()

@@ -257,7 +257,7 @@ def measure_prompb(spark, sf_dir: str, bodies: int = 64, runs: int = 1) -> dict:
         # same steady-state warm-up as measure() — see the note there
         t0 = time.time()
         q = relay(
-            read_prompb_record_stream(spark, src, parallel=True),
+            read_prompb_record_stream(spark, src),
             put_records_fn=noop_put,
             checkpoint_dir=ckpt + "_warmup",
             available_now=True,
@@ -270,7 +270,7 @@ def measure_prompb(spark, sf_dir: str, bodies: int = 64, runs: int = 1) -> dict:
         def _timed_pair(i: int) -> tuple[float, float]:
             t0 = time.time()
             q = relay(
-                read_prompb_record_stream(spark, src, parallel=True),
+                read_prompb_record_stream(spark, src),
                 put_records_fn=noop_put,
                 checkpoint_dir=f"{ckpt}_run{i}",
                 available_now=True,
@@ -279,7 +279,7 @@ def measure_prompb(spark, sf_dir: str, bodies: int = 64, runs: int = 1) -> dict:
             e1 = time.time() - t0
             t0 = time.time()
             q = relay(
-                read_prompb_record_stream(spark, src4, parallel=True),
+                read_prompb_record_stream(spark, src4),
                 put_records_fn=noop_put,
                 checkpoint_dir=f"{ckpt}_run{i}_4x",
                 available_now=True,

@@ -105,7 +105,7 @@ def main() -> None:
         )
         series(
             "tiny_prompb_drain",
-            lambda: read_prompb_record_stream(spark, pb_src, parallel=True),
+            lambda: read_prompb_record_stream(spark, pb_src),
             os.path.join(workdir, "pb_ckpt"),
         )
         # restart on the ALREADY-DRAINED first NDJSON checkpoint: no new
