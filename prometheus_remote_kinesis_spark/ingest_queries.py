@@ -17,7 +17,7 @@ from prometheus_remote_kinesis_spark.ingest import records_from_columns
 from prometheus_remote_kinesis_spark.registry import register
 from prometheus_remote_kinesis_spark.schema import RECORD_SCHEMA
 from prometheus_remote_kinesis_spark.sinks import encode_ndjson
-from prometheus_remote_kinesis_spark.sources.tables import load_table
+from prometheus_remote_kinesis_spark.sources.tables import corpus_max_ms, load_table
 
 
 def _event_records(
@@ -439,14 +439,8 @@ def r6_remote_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     RE2 regex + closed time range — against DuckDB's regex engine. The
     wire framing (snappy ∘ protobuf ReadRequest/ReadResponse, prompb.py
     read codecs) is pinned separately by the server e2e pytest."""
-    from prometheus_remote_kinesis_spark.sources.tables import max_ts_ms
-
-    # r13: footer-stats corpus max replaces a driver-side collect() (a
-    # whole Spark job at plan-BUILD time — guide §5); scan fallback.
-    t = max_ts_ms(sf_dir, "events")
-    if t is None:
-        ev = load_table(spark, sf_dir, "events")
-        t = ev.agg(F.max(F.unix_millis("ts")).alias("t")).collect()[0][0]
+    # the PromQL compiler's T (footer stats, else one scalar job)
+    t = corpus_max_ms(spark, sf_dir)
     if t is None:  # empty corpus → empty (but well-typed) read window
         t = 86400000
     from prometheus_remote_kinesis_spark.sources.prompb import MATCH_EQ, MATCH_RE

@@ -1171,8 +1171,6 @@ def t22_downsample_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = events.select(
         "event_type", "user_id", F.unix_millis("ts").alias("ms"), "value"
     )
-    # r13 (guide §6): corpus-max anchor from exact parquet footer stats
-    # when provable (sources.tables.max_ms_frame), scan fallback.
     t_max = max_ms_frame(spark, sf_dir, "t_max")
     s = s.crossJoin(F.broadcast(t_max))
     recent = s.filter(F.col("ms") > F.col("t_max") - 86400000).select(
@@ -1238,7 +1236,6 @@ def t23_instant_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = events.select(
         "event_type", "user_id", F.unix_millis("ts").alias("ms"), "value"
     )
-    # r13: footer-stats eval anchor (max_ms_frame), scan fallback.
     t_eval = max_ms_frame(spark, sf_dir, "t_eval")
     s = s.crossJoin(F.broadcast(t_eval)).filter(
         F.col("ms").between(F.col("t_eval") - 300000, F.col("t_eval"))
@@ -1595,7 +1592,6 @@ def t28_slo_burn_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic eval-point pattern)."""
     events = load_table(spark, sf_dir, "events")
     s = events.select("user_id", "event_type", F.unix_millis("ts").alias("ms"))
-    # r13: footer-stats eval anchor (max_ms_frame), scan fallback.
     t_eval = max_ms_frame(spark, sf_dir, "t_eval")
     s = s.crossJoin(F.broadcast(t_eval)).filter(
         F.col("ms").between(F.col("t_eval") - 3600000, F.col("t_eval"))

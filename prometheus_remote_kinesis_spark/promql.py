@@ -8,9 +8,11 @@ DataFrame plans the t-family operators use, so "switch the dashboard to
 the Spark engine" needs no query rewrite for the supported subset.
 
 Supported grammar (instant queries, evaluated at T = corpus max ms —
-the t23/t25 convention — or at the client-supplied ``eval_ms``/HTTP
-``time=`` parameter, r12; standard precedence — ``*``/``/`` bind tighter
-than ``+``/``-``, comparisons lowest, all left-associative)::
+the t23/t25 convention, resolved ONCE per compile by
+``sources.tables.corpus_max_ms`` and inlined as a literal — or at the
+client-supplied ``eval_ms``/HTTP ``time=`` parameter, r12; standard
+precedence — ``*``/``/`` bind tighter than ``+``/``-``, comparisons
+lowest, all left-associative)::
 
     expr     := cmpexpr | expr ('and'|'or'|'unless') cmpexpr
     cmpexpr  := addexpr | cmpexpr CMP number
@@ -111,14 +113,13 @@ import re
 from dataclasses import dataclass
 from fractions import Fraction
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from prometheus_remote_kinesis_spark.registry import register
 from prometheus_remote_kinesis_spark.sources.tables import (
+    corpus_max_ms,
     load_table,
-    max_ms_frame,
-    max_ts_ms,
 )
 
 # ---------------------------------------------------------------- AST
@@ -1299,70 +1300,19 @@ def _base(spark: SparkSession, sf_dir: str, sel: Selector) -> DataFrame:
     )
 
 
-def _t_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r13 (guide §6): the corpus-max anchor is answered from exact
-    # parquet footer statistics when they prove it (max_ts_ms docstring),
-    # replacing a full single-column scan + aggregate + exchange in
-    # every instant-vector query; identical value, scan fallback.
-    return max_ms_frame(spark, sf_dir, "t_eval")
-
-
-def _t_frame(
-    spark: SparkSession, sf_dir: str, eval_ms: int | None
-) -> DataFrame:
-    """The 1-row evaluation-time frame every instant kernel cross-joins:
-    corpus max ms by default (the t23/t25 convention), or the CLIENT'S
-    timestamp when the HTTP API supplies ``time=`` (r11 VERDICT task #3
-    — previously the endpoint ignored the spec's parameter and always
-    answered at T = corpus max)."""
-    if eval_ms is None:
-        return _t_eval(spark, sf_dir)
-    return spark.sql(f"SELECT CAST({int(eval_ms)} AS BIGINT) AS t_eval")
-
-
-def _anchor(d: DataFrame, sel: Selector) -> DataFrame:
-    """Apply a selector's @ and offset modifiers to the joined 1-row
-    t_eval frame (r13 adds @): @ REPLACES the evaluation time with the
-    fixed unix-ms literal, offset then shifts back — Prometheus applies
-    offset relative to the @ time."""
-    if sel.at_ms is not None:
-        d = d.withColumn("t_eval", F.lit(int(sel.at_ms)).cast("long"))
-    if sel.offset_ms:
-        d = d.withColumn("t_eval", F.col("t_eval") - sel.offset_ms)
-    return d
-
-
-def _t_resolved(sf_dir: str, sel, eval_ms: int | None) -> int | None:
-    """The evaluation anchor as a PYTHON int when it is knowable at
-    plan-build time — a selector's ``@`` literal, the client's ``time=``
-    literal, or the corpus max proven by parquet footer statistics
-    (``max_ts_ms``, read per invocation from the live inputs; nothing
-    cached across runs) — with the selector's @/offset modifiers applied
-    in ``_anchor``'s order (@ REPLACES the evaluation time, offset then
-    shifts back). None → the caller keeps the 1-row-frame crossJoin +
-    ``_anchor`` fallback (unprovable footers).
-
-    r14 (guide §2.4 remove the join outright, §4 fewer boundary calls):
-    inlining the anchor as a literal deletes the 1-row
-    BroadcastNestedLoopJoin + BroadcastExchange from every instant plan,
-    the ``max(t_eval)`` carry buffer from the staleness aggregations, and
-    2-3 Dataset creations per compile. The literal is the IDENTICAL long
-    the 1-row frame held (footer == scan is pinned by
-    tests/test_queries.py::TestMaxTsFooterStats at every SF), consumed by
-    the identical expressions, so every result is bit-equal."""
-    at = getattr(sel, "at_ms", None) if sel is not None else None
-    if at is not None:
-        t = int(at)
-    elif eval_ms is not None:
-        t = int(eval_ms)
-    else:
-        ms = max_ts_ms(sf_dir, "events")
-        if ms is None:
-            return None
-        t = ms
-    if sel is not None and sel.offset_ms:
+def _t_lit(sel: Selector, t_eval: int | None) -> Column:
+    """A selector's evaluation anchor as a long literal: its ``@`` time
+    REPLACES the query's T, ``offset`` then shifts back (Prometheus
+    applies offset relative to the @ time). ``t_eval`` is the T the
+    compile resolved once (``compile_promql``); None — a corpus with no
+    timestamps — stays NULL, so every window cut is unknown and selects
+    nothing, with no branch at the call site. Catalyst folds the cast
+    and the cut arithmetic back to plain literals, so an instant plan
+    carries no anchor join, exchange or carried anchor column."""
+    t = sel.at_ms if sel.at_ms is not None else t_eval
+    if t is not None and sel.offset_ms:
         t -= sel.offset_ms
-    return t
+    return F.lit(t).cast("long")
 
 
 def _no_at_on_grid(sel: Selector) -> None:
@@ -1388,7 +1338,8 @@ class _Grid:
       0 ≤ k ≤ (end−start)//step — Prometheus's client-supplied grid,
       used by ``GET /api/v1/query_range``;
     - T-anchored (``span_ms`` set): end = T (corpus max ms, the t23/t25
-      convention), start = T − span — used by the registered pqr*
+      convention — the compile's one ``corpus_max_ms`` literal), start
+      = T − span — used by the registered pqr*
       queries so the DuckDB oracle derives the IDENTICAL grid from the
       data with no out-of-band constant. When step divides span the
       last grid point is exactly T, so the instant query is the grid's
@@ -1420,14 +1371,12 @@ class _Grid:
 
 
 def _grid_expand(
-    spark: SparkSession,
-    sf_dir: str,
     d: DataFrame,
     grid: _Grid,
     w: int,
     off: int,
     prep=None,
-    eval_ms: int | None = None,
+    t_eval: int | None = None,
 ) -> DataFrame:
     """Attach the grid to a sample frame: each sample expands to exactly
     the grid points t_k whose window (t_k − w, t_k] contains it — the
@@ -1459,16 +1408,9 @@ def _grid_expand(
     ``(start + k·step) cast long``, in one Dataset instead of three."""
     step = grid.step_ms
     if grid.span_ms is not None:
-        # r14: the T anchor inlines as a literal when footer stats (or
-        # the client's time=) prove it — no 1-row crossJoin, no
-        # BroadcastExchange in the plan (see _t_resolved); the frame
-        # join remains the fallback for unprovable footers.
-        tv = _t_resolved(sf_dir, None, eval_ms)
-        if tv is None:
-            d = d.crossJoin(F.broadcast(_t_frame(spark, sf_dir, eval_ms)))
-            start = F.col("t_eval") - grid.span_ms
-        else:
-            start = F.lit(int(tv - grid.span_ms)).cast("long")
+        # the compile's T as a literal (NULL on a timestamp-less corpus:
+        # the range cut then keeps nothing) — see _t_lit
+        start = F.lit(t_eval).cast("long") - grid.span_ms
         last_k = grid.span_ms // step
     else:
         start = F.lit(grid.start_ms)
@@ -1515,7 +1457,7 @@ def _compile_rangefn_grid(
     sf_dir: str,
     node: RangeFn,
     grid: _Grid,
-    eval_ms: int | None = None,
+    t_eval: int | None = None,
 ) -> _Vec:
     """The RangeFn kernels evaluated per grid point — identical window
     semantics to the instant branch (windows cover (t_k − w, t_k]),
@@ -1543,8 +1485,7 @@ def _compile_rangefn_grid(
             )
 
         d = _grid_expand(
-            spark, sf_dir, base, grid, w, node.sel.offset_ms,
-            prep_pairs, eval_ms,
+            base, grid, w, node.sel.offset_ms, prep_pairs, t_eval
         )
         pair_in = F.col("pms").isNotNull() & (
             F.col("pms") + F.lit(node.sel.offset_ms) > F.col("t_ms") - w
@@ -1612,7 +1553,7 @@ def _compile_rangefn_grid(
             )
 
         d = _grid_expand(
-            spark, sf_dir, base, grid, w, node.sel.offset_ms, prep, eval_ms
+            base, grid, w, node.sel.offset_ms, prep, t_eval
         )
         # the pair counts toward t_k only if the earlier sample is also
         # in (t_k − w, t_k] — offset shifts BOTH endpoints identically
@@ -1646,9 +1587,7 @@ def _compile_rangefn_grid(
             F.lit(100).cast("long").alias("den"),
         )
         return _Vec(out, ("t_ms", "user"), den_const=100)
-    d = _grid_expand(
-        spark, sf_dir, base, grid, w, node.sel.offset_ms, eval_ms=eval_ms
-    )
+    d = _grid_expand(base, grid, w, node.sel.offset_ms, t_eval=t_eval)
     if node.fn in ("stddev_over_time", "stdvar_over_time"):
         g = d.groupBy("t_ms", "user").agg(
             F.count(F.lit(1)).alias("n"),
@@ -1711,7 +1650,7 @@ def _compile_vector(
     sf_dir: str,
     node,
     grid: _Grid | None = None,
-    eval_ms: int | None = None,
+    t_eval: int | None = None,
 ) -> _Vec:
     if isinstance(node, Selector):  # instant vector: last sample, staleness cut
         if grid is not None:
@@ -1719,8 +1658,8 @@ def _compile_vector(
             # per grid point: the last sample within the staleness
             # window (t_k − 5m, t_k] — t23's instant vector, gridded
             d = _grid_expand(
-                spark, sf_dir, _base(spark, sf_dir, node),
-                grid, STALENESS_MS, node.offset_ms, eval_ms=eval_ms,
+                _base(spark, sf_dir, node),
+                grid, STALENESS_MS, node.offset_ms, t_eval=t_eval,
             )
             g = d.groupBy("t_ms", "user").agg(
                 F.max_by("c", F.struct("ms", "event_id")).alias("num")
@@ -1734,35 +1673,17 @@ def _compile_vector(
                 ("t_ms", "user"),
                 den_const=100,
             )
-        t = _t_resolved(sf_dir, node, eval_ms)
-        if t is None:  # unprovable footers → 1-row frame fallback
-            d = _anchor(
-                _base(spark, sf_dir, node).crossJoin(
-                    F.broadcast(_t_frame(spark, sf_dir, eval_ms))
-                ),
-                node,
+        t = _t_lit(node, t_eval)
+        g = (
+            _base(spark, sf_dir, node)
+            .where(F.col("ms") <= t)
+            .groupBy("user")
+            .agg(
+                F.max("ms").alias("last_ms"),
+                F.max_by("c", F.struct("ms", "event_id")).alias("num"),
             )
-            g = (
-                d.where(F.col("ms") <= F.col("t_eval"))
-                .groupBy("user")
-                .agg(
-                    F.max("ms").alias("last_ms"),
-                    F.max_by("c", F.struct("ms", "event_id")).alias("num"),
-                    F.max("t_eval").alias("t_eval"),
-                )
-                .where(F.col("last_ms") >= F.col("t_eval") - STALENESS_MS)
-            )
-        else:  # r14: literal anchor — no join, no max(t_eval) buffer
-            g = (
-                _base(spark, sf_dir, node)
-                .where(F.col("ms") <= t)
-                .groupBy("user")
-                .agg(
-                    F.max("ms").alias("last_ms"),
-                    F.max_by("c", F.struct("ms", "event_id")).alias("num"),
-                )
-                .where(F.col("last_ms") >= t - STALENESS_MS)
-            )
+            .where(F.col("last_ms") >= t - STALENESS_MS)
+        )
         return _Vec(
             g.select("user", F.col("num").cast("long").alias("num"),
                      F.lit(100).cast("long").alias("den")),
@@ -1775,8 +1696,8 @@ def _compile_vector(
         if grid is not None:
             _no_at_on_grid(node.sel)
             d = _grid_expand(
-                spark, sf_dir, _base(spark, sf_dir, node.sel),
-                grid, STALENESS_MS, node.sel.offset_ms, eval_ms=eval_ms,
+                _base(spark, sf_dir, node.sel),
+                grid, STALENESS_MS, node.sel.offset_ms, t_eval=t_eval,
             )
             g = d.groupBy("t_ms", "user").agg(F.max("ms").alias("num"))
             return _Vec(
@@ -1788,31 +1709,14 @@ def _compile_vector(
                 ("t_ms", "user"),
                 den_const=1000,
             )
-        t = _t_resolved(sf_dir, node.sel, eval_ms)
-        if t is None:  # unprovable footers → 1-row frame fallback
-            d = _anchor(
-                _base(spark, sf_dir, node.sel).crossJoin(
-                    F.broadcast(_t_frame(spark, sf_dir, eval_ms))
-                ),
-                node.sel,
-            )
-            g = (
-                d.where(F.col("ms") <= F.col("t_eval"))
-                .groupBy("user")
-                .agg(
-                    F.max("ms").alias("last_ms"),
-                    F.max("t_eval").alias("t_eval"),
-                )
-                .where(F.col("last_ms") >= F.col("t_eval") - STALENESS_MS)
-            )
-        else:  # r14: literal anchor — no join, no max(t_eval) buffer
-            g = (
-                _base(spark, sf_dir, node.sel)
-                .where(F.col("ms") <= t)
-                .groupBy("user")
-                .agg(F.max("ms").alias("last_ms"))
-                .where(F.col("last_ms") >= t - STALENESS_MS)
-            )
+        t = _t_lit(node.sel, t_eval)
+        g = (
+            _base(spark, sf_dir, node.sel)
+            .where(F.col("ms") <= t)
+            .groupBy("user")
+            .agg(F.max("ms").alias("last_ms"))
+            .where(F.col("last_ms") >= t - STALENESS_MS)
+        )
         return _Vec(
             g.select(
                 "user", F.col("last_ms").cast("long").alias("num"),
@@ -1823,24 +1727,12 @@ def _compile_vector(
         )
     if isinstance(node, RangeFn):
         if grid is not None:
-            return _compile_rangefn_grid(spark, sf_dir, node, grid, eval_ms)
+            return _compile_rangefn_grid(spark, sf_dir, node, grid, t_eval)
         w = node.window_ms
-        t = _t_resolved(sf_dir, node.sel, eval_ms)
-        if t is None:  # unprovable footers → 1-row frame fallback
-            d = _anchor(
-                _base(spark, sf_dir, node.sel).crossJoin(
-                    F.broadcast(_t_frame(spark, sf_dir, eval_ms))
-                ),
-                node.sel,
-            )
-            d = d.where(
-                (F.col("ms") > F.col("t_eval") - w)
-                & (F.col("ms") <= F.col("t_eval"))
-            )
-        else:  # r14: literal anchor — the window cut inlines, no join
-            d = _base(spark, sf_dir, node.sel).where(
-                (F.col("ms") > t - w) & (F.col("ms") <= t)
-            )
+        t = _t_lit(node.sel, t_eval)
+        d = _base(spark, sf_dir, node.sel).where(
+            (F.col("ms") > t - w) & (F.col("ms") <= t)
+        )
         if node.fn in ("stddev_over_time", "stdvar_over_time"):
             # population variance = (n·Σc² − (Σc)²) / (n²·100²); the
             # regression-sums discipline (t31): exact integer partials,
@@ -2023,7 +1915,7 @@ def _compile_vector(
                 "by(t_ms) is invalid — the grid timestamp is an "
                 "implicit per-step grouping key, not a label"
             )
-        inner = _compile_vector(spark, sf_dir, node.expr, grid, eval_ms)
+        inner = _compile_vector(spark, sf_dir, node.expr, grid, t_eval)
         if inner.sqrt and node.op not in ("count", "group"):
             raise PromQLError(
                 "aggregating sqrt-deferred values (sqrt/stddev_over_time) "
@@ -2219,7 +2111,7 @@ def _compile_vector(
             den_c = 1
         return _Vec(out, tuple(keys), den_const=den_c)
     if isinstance(node, TopK):
-        inner = _compile_vector(spark, sf_dir, node.expr, grid, eval_ms)
+        inner = _compile_vector(spark, sf_dir, node.expr, grid, t_eval)
         # sort key = ONE IEEE division of exact integers per row —
         # identical on both engines (the d23 priority-key argument);
         # labels break ties (LIMIT determinism rule); bottomk flips
@@ -2245,7 +2137,7 @@ def _compile_vector(
         return _Vec(out, inner.labels, sqrt=inner.sqrt,
                     den_const=inner.den_const)
     if isinstance(node, VecAbs):
-        inner = _compile_vector(spark, sf_dir, node.expr, grid, eval_ms)
+        inner = _compile_vector(spark, sf_dir, node.expr, grid, t_eval)
         if inner.sqrt:  # a stddev is already non-negative
             return inner
         # den > 0 invariant: |num/den| = |num|/den, still exact
@@ -2256,7 +2148,7 @@ def _compile_vector(
         )
         return _Vec(out, inner.labels, den_const=inner.den_const)
     if isinstance(node, IntFn):
-        inner = _compile_vector(spark, sf_dir, node.expr, grid, eval_ms)
+        inner = _compile_vector(spark, sf_dir, node.expr, grid, t_eval)
         if inner.sqrt:
             raise PromQLError(
                 f"{node.fn} over stddev_over_time is outside the exact-"
@@ -2296,7 +2188,7 @@ def _compile_vector(
         )
         return _Vec(out, inner.labels, den_const=1)
     if isinstance(node, SqrtFn):
-        inner = _compile_vector(spark, sf_dir, node.expr, grid, eval_ms)
+        inner = _compile_vector(spark, sf_dir, node.expr, grid, t_eval)
         if inner.sqrt:
             raise PromQLError(
                 "nested sqrt is outside the exact-rational subset (one "
@@ -2310,7 +2202,7 @@ def _compile_vector(
             inner.labels, sqrt=True, den_const=inner.den_const,
         )
     if isinstance(node, DateFn):
-        inner = _compile_vector(spark, sf_dir, node.expr, grid, eval_ms)
+        inner = _compile_vector(spark, sf_dir, node.expr, grid, t_eval)
         if inner.sqrt:
             raise PromQLError(
                 f"{node.fn} over stddev_over_time is outside the exact-"
@@ -2342,7 +2234,7 @@ def _compile_vector(
         )
         return _Vec(out, inner.labels, den_const=1)
     if isinstance(node, Clamp):
-        inner = _compile_vector(spark, sf_dir, node.expr, grid, eval_ms)
+        inner = _compile_vector(spark, sf_dir, node.expr, grid, t_eval)
         if inner.sqrt:
             raise PromQLError(
                 "clamp over stddev_over_time is outside the exact-rational "
@@ -2364,7 +2256,7 @@ def _compile_vector(
         den_c = None if inner.den_const is None else _chk_den(inner.den_const * q)
         return _Vec(out, inner.labels, den_const=den_c)
     if isinstance(node, Cmp):
-        inner = _compile_vector(spark, sf_dir, node.expr, grid, eval_ms)
+        inner = _compile_vector(spark, sf_dir, node.expr, grid, t_eval)
         scalar = node.scalar
         if inner.sqrt:
             if scalar < 0:
@@ -2394,7 +2286,7 @@ def _compile_vector(
         return _Vec(inner.df.where(cond), inner.labels, sqrt=inner.sqrt,
                     den_const=inner.den_const)
     if isinstance(node, Scale):
-        inner = _compile_vector(spark, sf_dir, node.expr, grid, eval_ms)
+        inner = _compile_vector(spark, sf_dir, node.expr, grid, t_eval)
         s = node.scalar if node.op == "*" else 1 / node.scalar
         if inner.sqrt:
             if s < 0:
@@ -2411,7 +2303,7 @@ def _compile_vector(
         )
         return _Vec(out, inner.labels, sqrt=inner.sqrt, den_const=den_c)
     if isinstance(node, PowMod):
-        inner = _compile_vector(spark, sf_dir, node.expr, grid, eval_ms)
+        inner = _compile_vector(spark, sf_dir, node.expr, grid, t_eval)
         if inner.sqrt:
             raise PromQLError(
                 f"{node.op} over stddev_over_time is outside the exact-"
@@ -2458,7 +2350,7 @@ def _compile_vector(
         )
         return _Vec(out, inner.labels, den_const=den_c)
     if isinstance(node, Shift):
-        inner = _compile_vector(spark, sf_dir, node.expr, grid, eval_ms)
+        inner = _compile_vector(spark, sf_dir, node.expr, grid, t_eval)
         if inner.sqrt:
             raise PromQLError(
                 "scalar +/- over stddev_over_time is outside the exact-"
@@ -2477,8 +2369,8 @@ def _compile_vector(
         den_c = None if inner.den_const is None else _chk_den(inner.den_const * q)
         return _Vec(out, inner.labels, den_const=den_c)
     if isinstance(node, VecCmp):
-        lv = _compile_vector(spark, sf_dir, node.left, grid, eval_ms)
-        rv = _compile_vector(spark, sf_dir, node.right, grid, eval_ms)
+        lv = _compile_vector(spark, sf_dir, node.left, grid, t_eval)
+        rv = _compile_vector(spark, sf_dir, node.right, grid, t_eval)
         if lv.sqrt or rv.sqrt:
             # sqrt is monotone, so sqrt-vs-sqrt WOULD compare exactly by
             # comparing the radicands — but only when both sides carry
@@ -2517,8 +2409,8 @@ def _compile_vector(
         )
         return _Vec(out, out_labels, den_const=lv.den_const)
     if isinstance(node, VecBin):
-        lv = _compile_vector(spark, sf_dir, node.left, grid, eval_ms)
-        rv = _compile_vector(spark, sf_dir, node.right, grid, eval_ms)
+        lv = _compile_vector(spark, sf_dir, node.left, grid, t_eval)
+        rv = _compile_vector(spark, sf_dir, node.right, grid, t_eval)
         if lv.sqrt or rv.sqrt:
             raise PromQLError(
                 "vector arithmetic over stddev_over_time is outside the "
@@ -2578,8 +2470,8 @@ def _compile_vector(
         )
         return _Vec(out, out_labels, den_const=den_c)
     if isinstance(node, SetOp):
-        lv = _compile_vector(spark, sf_dir, node.left, grid, eval_ms)
-        rv = _compile_vector(spark, sf_dir, node.right, grid, eval_ms)
+        lv = _compile_vector(spark, sf_dir, node.left, grid, t_eval)
+        rv = _compile_vector(spark, sf_dir, node.right, grid, t_eval)
         if lv.labels != rv.labels:
             raise PromQLError(
                 f"{node.op} needs identical label sets (one-to-one "
@@ -2610,20 +2502,10 @@ def _compile_vector(
                 "outside the subset (evaluate as an instant query)"
             )
         w = node.window_ms if node.window_ms is not None else STALENESS_MS
-        t = _t_resolved(sf_dir, node.sel, eval_ms)
-        if t is None:  # unprovable footers → 1-row frame fallback
-            d = _base(spark, sf_dir, node.sel).crossJoin(
-                F.broadcast(_t_frame(spark, sf_dir, eval_ms))
-            )
-            d = _anchor(d, node.sel)
-            d = d.where(
-                (F.col("ms") > F.col("t_eval") - w)
-                & (F.col("ms") <= F.col("t_eval"))
-            )
-        else:  # r14: literal anchor
-            d = _base(spark, sf_dir, node.sel).where(
-                (F.col("ms") > t - w) & (F.col("ms") <= t)
-            )
+        t = _t_lit(node.sel, t_eval)
+        d = _base(spark, sf_dir, node.sel).where(
+            (F.col("ms") > t - w) & (F.col("ms") <= t)
+        )
         # a global count ALWAYS yields one row (0 on an empty scan) —
         # keep it only when the window is empty, then emit the 1-sample
         g = d.agg(F.count(F.lit(1)).alias("n")).where(F.col("n") == 0)
@@ -2635,7 +2517,7 @@ def _compile_vector(
     if isinstance(node, LabelJoin):
         if node.dst in ("t_ms", "num", "den"):
             raise PromQLError(f"label_join: reserved dst {node.dst!r}")
-        inner = _compile_vector(spark, sf_dir, node.expr, grid, eval_ms)
+        inner = _compile_vector(spark, sf_dir, node.expr, grid, t_eval)
         for src in node.srcs:
             if src not in inner.labels or src == "t_ms":
                 raise PromQLError(
@@ -2657,7 +2539,7 @@ def _compile_vector(
         # dst validation needs no compiled inner — fire sparklessly
         if node.dst in ("t_ms", "num", "den"):
             raise PromQLError(f"label_replace: reserved dst {node.dst!r}")
-        inner = _compile_vector(spark, sf_dir, node.expr, grid, eval_ms)
+        inner = _compile_vector(spark, sf_dir, node.expr, grid, t_eval)
         if node.src not in inner.labels or node.src == "t_ms":
             raise PromQLError(
                 f"label_replace: src label {node.src!r} not in "
@@ -2701,7 +2583,7 @@ def _compile_vector(
         n_pts = -(-node.range_ms // node.step_ms)  # ceil
         sub = _Grid(step_ms=node.step_ms, span_ms=(n_pts - 1) * node.step_ms)
         sub.check()
-        inner = _compile_vector(spark, sf_dir, node.expr, sub, eval_ms)
+        inner = _compile_vector(spark, sf_dir, node.expr, sub, t_eval)
         if inner.sqrt and node.fn not in (
             "count_over_time", "present_over_time"
         ):
@@ -2774,25 +2656,14 @@ def _compile_vector(
         if grid is not None:
             _no_at_on_grid(node.sel)
             d = _grid_expand(
-                spark, sf_dir, base, grid, node.window_ms,
-                node.sel.offset_ms, eval_ms=eval_ms,
+                base, grid, node.window_ms, node.sel.offset_ms, t_eval=t_eval
             )
             keys = ["t_ms", "user"]
         else:
-            t = _t_resolved(sf_dir, node.sel, eval_ms)
-            if t is None:  # unprovable footers → 1-row frame fallback
-                d = base.crossJoin(
-                    F.broadcast(_t_frame(spark, sf_dir, eval_ms))
-                )
-                d = _anchor(d, node.sel)
-                d = d.where(
-                    (F.col("ms") > F.col("t_eval") - node.window_ms)
-                    & (F.col("ms") <= F.col("t_eval"))
-                )
-            else:  # r14: literal anchor
-                d = base.where(
-                    (F.col("ms") > t - node.window_ms) & (F.col("ms") <= t)
-                )
+            t = _t_lit(node.sel, t_eval)
+            d = base.where(
+                (F.col("ms") > t - node.window_ms) & (F.col("ms") <= t)
+            )
             keys = ["user"]
         g = d.groupBy(*keys).agg(
             F.sort_array(F.collect_list("c")).alias("arr"),
@@ -2838,7 +2709,7 @@ def _compile_deriv(
     spark: SparkSession,
     sf_dir: str,
     node,  # Deriv | PredictLinear — shared partials, two finalizes
-    eval_ms: int | None = None,
+    t_eval: int | None = None,
     grid: _Grid | None = None,
 ) -> DataFrame:
     """Compile ``deriv(sel[w])`` — see the Deriv dataclass docstring for
@@ -2862,8 +2733,8 @@ def _compile_deriv(
     if grid is not None:
         _no_at_on_grid(node.sel)
         d = _grid_expand(
-            spark, sf_dir, _base(spark, sf_dir, node.sel),
-            grid, w, node.sel.offset_ms, eval_ms=eval_ms,
+            _base(spark, sf_dir, node.sel),
+            grid, w, node.sel.offset_ms, t_eval=t_eval,
         )
         keys = ["t_ms", "user"]
         # rebase to the grid window's start: the sample's effective ms
@@ -2873,25 +2744,13 @@ def _compile_deriv(
             - (F.col("t_ms") - w)
         ).cast(dec)
     else:
-        t = _t_resolved(sf_dir, node.sel, eval_ms)
-        if t is None:  # unprovable footers → 1-row frame fallback
-            d = _base(spark, sf_dir, node.sel).crossJoin(
-                F.broadcast(_t_frame(spark, sf_dir, eval_ms))
-            )
-            d = _anchor(d, node.sel)
-            d = d.where(
-                (F.col("ms") > F.col("t_eval") - w)
-                & (F.col("ms") <= F.col("t_eval"))
-            )
-            # rebase to the window start: t' ∈ (0, w] keeps every
-            # partial exact inside decimal(38,0) ≡ HUGEINT at any
-            # grammar window
-            tp = (F.col("ms") - (F.col("t_eval") - w)).cast(dec)
-        else:  # r14: literal anchor — identical rebase on the same long
-            d = _base(spark, sf_dir, node.sel).where(
-                (F.col("ms") > t - w) & (F.col("ms") <= t)
-            )
-            tp = (F.col("ms") - F.lit(int(t - w))).cast(dec)
+        t = _t_lit(node.sel, t_eval)
+        d = _base(spark, sf_dir, node.sel).where(
+            (F.col("ms") > t - w) & (F.col("ms") <= t)
+        )
+        # rebase to the window start: t' ∈ (0, w] keeps every partial
+        # exact inside decimal(38,0) ≡ HUGEINT at any grammar window
+        tp = (F.col("ms") - (t - w)).cast(dec)
         keys = ["user"]
     c = F.col("c").cast(dec)
     g = (
@@ -2956,7 +2815,7 @@ def _compile_histq(
     spark: SparkSession,
     sf_dir: str,
     node: HistQ,
-    eval_ms: int | None = None,
+    t_eval: int | None = None,
     grid: _Grid | None = None,
 ) -> DataFrame:
     """Compile ``histogram_quantile(φ, sum by (le)
@@ -3001,26 +2860,16 @@ def _compile_histq(
         # row carrying the same fixed-width partial vector — the t36
         # posture, reached from query text
         d = _grid_expand(
-            spark, sf_dir, _base(spark, sf_dir, sel),
-            grid, rf.window_ms, sel.offset_ms, eval_ms=eval_ms,
+            _base(spark, sf_dir, sel),
+            grid, rf.window_ms, sel.offset_ms, t_eval=t_eval,
         )
         g = d.groupBy("t_ms").agg(F.count(F.lit(1)).alias("n"), *cum_aggs)
         keys = [F.col("t_ms").cast("bigint").alias("t_ms")]
     else:
-        t = _t_resolved(sf_dir, sel, eval_ms)
-        if t is None:  # unprovable footers → 1-row frame fallback
-            d = _base(spark, sf_dir, sel).crossJoin(
-                F.broadcast(_t_frame(spark, sf_dir, eval_ms))
-            )
-            d = _anchor(d, sel)
-            d = d.where(
-                (F.col("ms") > F.col("t_eval") - rf.window_ms)
-                & (F.col("ms") <= F.col("t_eval"))
-            )
-        else:  # r14: literal anchor
-            d = _base(spark, sf_dir, sel).where(
-                (F.col("ms") > t - rf.window_ms) & (F.col("ms") <= t)
-            )
+        t = _t_lit(sel, t_eval)
+        d = _base(spark, sf_dir, sel).where(
+            (F.col("ms") > t - rf.window_ms) & (F.col("ms") <= t)
+        )
         g = d.agg(F.count(F.lit(1)).alias("n"), *cum_aggs).where(
             F.col("n") > 0  # empty window → 0 rows (both engines)
         )
@@ -3091,6 +2940,9 @@ def compile_promql(
     all-integer pipeline (histogram_quantile finalizes through its
     interpolation expression instead; see _compile_histq)."""
     ast = parse(query)
+    # T resolved ONCE per compile (footer stats, else one scalar job) and
+    # passed down as a literal; the client's time= needs no read at all
+    t_eval = eval_ms if eval_ms is not None else corpus_max_ms(spark, sf_dir)
     sort_desc: bool | None = None
     sort_labels: tuple[str, ...] = ()
     if isinstance(ast, SortFn):  # r13: outermost presentation order
@@ -3119,10 +2971,10 @@ def compile_promql(
         return df.orderBy(key, *[c for c in df.columns if c != "value"])
 
     if isinstance(ast, HistQ):
-        return _ordered(_compile_histq(spark, sf_dir, ast, eval_ms))
+        return _ordered(_compile_histq(spark, sf_dir, ast, t_eval))
     if isinstance(ast, (Deriv, PredictLinear)):
-        return _ordered(_compile_deriv(spark, sf_dir, ast, eval_ms))
-    vec = _compile_vector(spark, sf_dir, ast, eval_ms=eval_ms)
+        return _ordered(_compile_deriv(spark, sf_dir, ast, t_eval))
+    vec = _compile_vector(spark, sf_dir, ast, t_eval=t_eval)
     ratio = F.col("num").cast("double") / F.col("den").cast("double")
     val = F.sqrt(ratio) if vec.sqrt else ratio
     forced = _string_forced(ast)
@@ -3186,11 +3038,13 @@ def compile_promql_range(
             "start_ms+end_ms (literal), not both/neither"
         )
     grid.check()
+    # only a T-anchored grid needs T; a literal start/end grid never reads
+    t_eval = corpus_max_ms(spark, sf_dir) if span_ms is not None else None
     if isinstance(ast, HistQ):
-        return _compile_histq(spark, sf_dir, ast, grid=grid)
+        return _compile_histq(spark, sf_dir, ast, t_eval, grid)
     if isinstance(ast, (Deriv, PredictLinear)):
-        return _compile_deriv(spark, sf_dir, ast, grid=grid)
-    vec = _compile_vector(spark, sf_dir, ast, grid)
+        return _compile_deriv(spark, sf_dir, ast, t_eval, grid)
+    vec = _compile_vector(spark, sf_dir, ast, grid, t_eval)
     ratio = F.col("num").cast("double") / F.col("den").cast("double")
     val = F.sqrt(ratio) if vec.sqrt else ratio
     forced = _string_forced(ast)
@@ -4558,8 +4412,8 @@ def pq35_promql_at_modifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``@`` modifier, a VERDICT r12 grammar residual): the selector
     evaluates at the FIXED unix timestamp (2024-01-15T00:00:00Z, mid-
     corpus at every SF) instead of the query's evaluation time — the
-    pin-a-panel-to-an-incident idiom. Compiles by REPLACING the 1-row
-    t_eval frame's value with the literal (offset then shifts relative
+    pin-a-panel-to-an-incident idiom. Compiles by REPLACING the
+    compile's T literal with the @ time (offset then shifts relative
     to it, the Prometheus rule); the oracle needs no corpus-max CTE at
     all. Instant-only in this subset: @ inside a range-query grid is a
     constant across the grid and rejects at compile (pytest-pinned)."""
@@ -5209,19 +5063,15 @@ def make_promql_http_handler(spark: SparkSession, sf_dir: str):
     corpus max ms as before."""
 
     def handler(query: str, time_s: float | None = None):
-        eval_ms = None if time_s is None else int(round(time_s * 1000))
-        df = compile_promql(spark, sf_dir, query, eval_ms=eval_ms)
-        rows = df.collect()
         if time_s is None:
-            # r14 (guide §5): answer the response timestamp from footer
-            # stats when provable — no Spark job per HTTP call; the
-            # collect stays the unprovable-footer fallback.
-            t_row = max_ts_ms(sf_dir, "events")
-            if t_row is None:
-                t_row = _t_eval(spark, sf_dir).collect()[0]["t_eval"]
-            t_s = (t_row or 0) / 1000.0
+            # ONE resolution of T per call, shared by the compile and
+            # the response timestamp
+            eval_ms = corpus_max_ms(spark, sf_dir)
+            t_s = (eval_ms or 0) / 1000.0
         else:
+            eval_ms = int(round(time_s * 1000))
             t_s = time_s
+        rows = compile_promql(spark, sf_dir, query, eval_ms=eval_ms).collect()
         out = []
         for r in rows:
             d = r.asDict()

@@ -124,7 +124,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def max_ts_ms(sf_dir: str, name: str = "events", column: str = "ts") -> int | None:
     """Exact corpus-max timestamp in epoch-ms from parquet FOOTER
     statistics, or None when the stats cannot prove it (missing/inexact
-    stats, empty table, all-NULL column) — callers fall back to a scan.
+    stats, empty table, all-NULL column) — ``corpus_max_ms`` then runs
+    its one scalar job.
 
     r13 (guide §6 — make readers skip data): ~80 instant-vector queries
     anchor at ``t_eval = max(ts)``, which planned as a full single-column
@@ -215,20 +216,32 @@ def table_num_rows(sf_dir: str, name: str) -> int | None:
         return None
 
 
-def max_ms_frame(spark: SparkSession, sf_dir: str, alias: str) -> DataFrame:
-    """1-row frame holding the corpus-max epoch-ms of events.ts — from
-    footer statistics when provable (max_ts_ms), else the scan+aggregate
-    plan. The shared eval-anchor producer for the instant-style batch
-    queries (t22/t23/t25/t26, promql._t_eval)."""
+def corpus_max_ms(spark: SparkSession, sf_dir: str) -> int | None:
+    """The corpus-max epoch-ms of events.ts — the evaluation time T of
+    every instant-style query (the t23/t25 convention) — as a Python
+    int: from footer statistics when they prove it (``max_ts_ms``, no
+    Spark job), else ONE scalar ``max(unix_millis(ts))`` collect. None
+    only when events holds no non-NULL ts. Read per call from the live
+    inputs, never cached; callers resolve it once per query build and
+    inline it as a literal."""
     ms = max_ts_ms(sf_dir, "events")
     if ms is not None:
-        # ONE Dataset creation (r13 guide §4: spark.range(1).select was
-        # two Py4J round trips + two eager analyses; this frame builds
-        # once per instant/grid query, so the fixed cost is fleet-wide)
-        return spark.sql(f"SELECT CAST({int(ms)} AS BIGINT) AS {alias}")
-    return load_table(spark, sf_dir, "events").agg(
-        F.max(F.unix_millis("ts")).alias(alias)
+        return ms
+    return (
+        load_table(spark, sf_dir, "events")
+        .agg(F.max(F.unix_millis("ts")))
+        .collect()[0][0]
     )
+
+
+def max_ms_frame(spark: SparkSession, sf_dir: str, alias: str) -> DataFrame:
+    """1-row frame holding ``corpus_max_ms`` (SQL NULL when events has no
+    timestamps) — the eval anchor the t22/t23/t25/t28 batch queries
+    cross-join. ONE Dataset creation (r13 guide §4: spark.range(1).select
+    was two Py4J round trips + two eager analyses)."""
+    ms = corpus_max_ms(spark, sf_dir)
+    lit = "NULL" if ms is None else int(ms)
+    return spark.sql(f"SELECT CAST({lit} AS BIGINT) AS {alias}")
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -84,6 +84,7 @@ from prometheus_remote_kinesis_spark.registry import register
 from prometheus_remote_kinesis_spark.sources.tables import (
     _NANOS_TS_COLUMNS,
     _normalize_timestamps,
+    corpus_max_ms,
     load_table,
 )
 
@@ -823,16 +824,12 @@ def pqs1_promql_sum_over_time_stream(spark: SparkSession, sf_dir: str) -> DataFr
     )
     drained = run_to_batch(agg, "complete")
     # Coverage guard: the oracle's window is (T−30d, T] with T = the
-    # GLOBAL max event ms (the compiler's _t_eval scalar), so the uncut
+    # GLOBAL max event ms (the compiler's T, corpus_max_ms), so the uncut
     # streaming sum equals the oracle iff T − min(purchase ms) < 30d.
     # Purchase-only span is NOT sufficient: non-purchase events later
     # than the last purchase push T right and can cut early purchases
     # while a span check stays silent (r10 ADVICE).
-    t_global = (
-        load_table(spark, sf_dir, "events")
-        .agg(F.max(F.unix_millis("ts")).alias("t"))
-        .collect()[0]["t"]
-    )
+    t_global = corpus_max_ms(spark, sf_dir)
     lo_min = drained.agg(F.min("lo").alias("lo")).collect()[0]["lo"]
     if lo_min is not None and t_global - lo_min >= 2592000000:
         raise RuntimeError(
@@ -873,7 +870,7 @@ def pqs2_promql_regex_count_stream(spark: SparkSession, sf_dir: str) -> DataFram
     chop-invariant because counts are — and the compiler's identical
     divide-once + floor finalize at drain. Coverage guard is pqs1's
     CORRECTED r11 form: the drained min(matched ms) is compared against
-    the GLOBAL max event ts (the compiler's _t_eval scalar), so
+    the GLOBAL max event ts (the compiler's T, corpus_max_ms), so
     non-click events extending past the last matched click cannot slip
     the oracle's 30d cut past a silent guard."""
     events = stream_table(spark, sf_dir, "events")
@@ -889,11 +886,7 @@ def pqs2_promql_regex_count_stream(spark: SparkSession, sf_dir: str) -> DataFram
         )
     )
     drained = run_to_batch(agg, "complete")
-    t_global = (
-        load_table(spark, sf_dir, "events")
-        .agg(F.max(F.unix_millis("ts")).alias("t"))
-        .collect()[0]["t"]
-    )
+    t_global = corpus_max_ms(spark, sf_dir)
     lo_min = drained.agg(F.min("lo").alias("lo")).collect()[0]["lo"]
     if lo_min is not None and t_global - lo_min >= 2592000000:
         raise RuntimeError(

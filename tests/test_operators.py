@@ -2138,7 +2138,7 @@ def test_promql_range_last_point_is_instant(spark):
     # the bare-selector case needs sf0.01: its 5-minute staleness windows
     # are empty at nearly every sf0.001 grid point (~1 sample / 13 ks per
     # type) — pqr2's registered form runs at sf0.01 for the same reason
-    from prometheus_remote_kinesis_spark.promql import _t_eval
+    from prometheus_remote_kinesis_spark.sources.tables import corpus_max_ms
 
     nonempty_last = 0
     for q, sf in (
@@ -2156,7 +2156,7 @@ def test_promql_range_last_point_is_instant(spark):
         assert grid, q
         # the THEORETICAL last grid point is T itself (step divides span);
         # the max RETURNED t_ms can be earlier — empty instants emit no row
-        t_last = _t_eval(spark, sf).collect()[0]["t_eval"]
+        t_last = corpus_max_ms(spark, sf)
         last = {
             tuple(v for k, v in sorted(r.asDict().items()) if k != "t_ms")
             for r in grid

@@ -57,9 +57,10 @@ def test_query_runs(spark, name):
 
 
 class TestMaxTsFooterStats:
-    """r13: promql._t_eval answers from parquet footer statistics when
-    they prove the corpus max (sources.tables.max_ts_ms); these pin the
-    fast path to the scan-computed truth and the fallback contract."""
+    """The PromQL eval time T (sources.tables.corpus_max_ms) answers from
+    parquet footer statistics when they prove the corpus max
+    (sources.tables.max_ts_ms); these pin the fast path to the
+    scan-computed truth and the fallback contract."""
 
     def test_footer_equals_scan_all_sfs(self, spark):
         from pyspark.sql import functions as F
@@ -86,10 +87,21 @@ class TestMaxTsFooterStats:
         assert max_ts_ms(str(tmp_path), "events") is None
 
     def test_t_eval_matches_scan(self, spark):
-        from prometheus_remote_kinesis_spark.promql import _t_eval
+        from pyspark.sql import functions as F
 
-        v = _t_eval(spark, "/root/testdata/sf0.01").collect()
-        assert len(v) == 1 and isinstance(v[0][0], int)
+        from prometheus_remote_kinesis_spark.sources.tables import (
+            corpus_max_ms,
+            load_table,
+        )
+
+        sf_dir = SF_SMOKE.replace("sf0.001", "sf0.01")
+        scanned = (
+            load_table(spark, sf_dir, "events")
+            .agg(F.max(F.unix_millis("ts")))
+            .collect()[0][0]
+        )
+        t = corpus_max_ms(spark, sf_dir)
+        assert isinstance(t, int) and t == scanned
 
     def test_footer_num_rows_equals_count(self, spark):
         from prometheus_remote_kinesis_spark.sources.tables import (

@@ -66,71 +66,12 @@ WHITELIST: set[tuple[str, str]] = {
     # per-series lasts (≤ |series| rows, not the stream)
     ("t23s_instant_vector_stream", "nested_loop_join"),
     ("t25_rate_extrapolated", "nested_loop_join"),  # broadcast eval-time scalar
-    # PromQL front-end: every compiled instant query carries the same
-    # 1-row broadcast eval-time scalar (T = corpus max ms, the t25/t31
-    # shape) into the window/staleness cut
-    ("pq1_promql_sum_increase", "nested_loop_join"),
-    ("pq2_promql_threshold_filter", "nested_loop_join"),
-    ("pq3_promql_count_instant", "nested_loop_join"),
-    ("pq4_promql_rate_scaled", "nested_loop_join"),
-    ("pq5_promql_topk", "nested_loop_join"),
-    ("pq6_promql_offset_window", "nested_loop_join"),
-    ("pq7_promql_stddev_topk", "nested_loop_join"),
-    ("pq8_promql_label_matcher", "nested_loop_join"),
-    # r11 pq additions: the identical 1-row _t_eval broadcast (pq10
-    # carries it on BOTH VecBin sides; pq11's histq agg consumes it
-    # before the single-row interpolation)
-    ("pq9_promql_regex_matcher", "nested_loop_join"),
-    ("pq10_promql_vector_ratio", "nested_loop_join"),
-    ("pq11_promql_histogram_quantile", "nested_loop_join"),
-    ("pq12_promql_scalar_shift", "nested_loop_join"),
-    ("pq13_promql_and_semi_join", "nested_loop_join"),
-    ("pq14_promql_unless_anti_join", "nested_loop_join"),
-    ("pq15_promql_abs_clamp", "nested_loop_join"),
-    ("pq16_promql_bottomk", "nested_loop_join"),
-    # r12 grammar extensions: the same 1-row eval-time broadcast (pq17's
-    # on() group_left adds the 1-row aggregated-rhs cross join — the
-    # share-of-total shape; pq18's subquery grid derives start from the
-    # corpus max; pq19/pq20 cross the eval-time scalar into the scan)
+    # PromQL: the eval time T is an inlined literal, so no pq/pqr plan
+    # carries a 1-row anchor join. The one BNLJ left is the empty-key
+    # vector match — ``on() group_left`` crosses the 1-row aggregated
+    # rhs (the share-of-total shape) into every lhs series.
     ("pq17_promql_group_left_ratio", "nested_loop_join"),
-    ("pq18_promql_subquery", "nested_loop_join"),
-    ("pq19_promql_quantile_over_time", "nested_loop_join"),
-    ("pq20_promql_sum_quantile", "nested_loop_join"),
-    ("pq21_promql_label_replace", "nested_loop_join"),
-    ("pq22_promql_absent", "nested_loop_join"),
-    ("pq23_promql_sum_resets", "nested_loop_join"),
-    ("pq24_promql_irate", "nested_loop_join"),
-    ("pq25_promql_deriv", "nested_loop_join"),
-    ("pq26_promql_predict_linear", "nested_loop_join"),
-    ("pq27_promql_sum_floor", "nested_loop_join"),
-    # r12 range queries: the same 1-row eval-time broadcast — the
-    # T-anchored grid derives its start from the corpus max via
-    # crossJoin(broadcast(_t_eval)); data never enters a loop join
-    # (samples meet grid points by bucket EXPANSION, not by join)
-    ("pqr1_promql_range_sum_rate", "nested_loop_join"),
-    ("pqr2_promql_range_selector", "nested_loop_join"),
-    # r13 additions — the same 1-row eval-time/grid-anchor broadcast
-    # (cross join against the 1-row t_eval frame), never data-sized
-    ("pqr3_promql_range_histogram_quantile", "nested_loop_join"),
-    ("pqr4_promql_range_predict_linear", "nested_loop_join"),
-    ("pq28_promql_sum_delta", "nested_loop_join"),
-    ("pq29_promql_stdvar_over_time", "nested_loop_join"),
-    ("pq30_promql_quantile_agg", "nested_loop_join"),
-    ("pq31_promql_stddev_agg", "nested_loop_join"),
-    ("pq32_promql_count_values", "nested_loop_join"),
-    ("pq33_promql_group_agg", "nested_loop_join"),
-    ("pq34_promql_bool_modifier", "nested_loop_join"),
-    ("pq35_promql_at_modifier", "nested_loop_join"),
-    ("pq36_promql_sort_desc", "nested_loop_join"),
-    ("pq37_promql_label_join", "nested_loop_join"),
-    ("pq38_promql_vector_compare", "nested_loop_join"),
-    ("pq39_promql_bool_vector_compare", "nested_loop_join"),
-    ("pq40_promql_mod_scalar", "nested_loop_join"),
-    ("pq41_promql_pow_scalar", "nested_loop_join"),
-    ("pq42_promql_timestamp", "nested_loop_join"),
-    ("pq43_promql_sqrt", "nested_loop_join"),
     ("pq44_promql_share_of_total", "nested_loop_join"),
-    ("pqr5_promql_range_date_fn", "nested_loop_join"),
     # same 1-row eval-time broadcast via extrapolated_rate_1d, applied
     # post-drain over the trailing-buffer residue (~1d of samples/series)
     ("t25s_rate_extrapolated_stream", "nested_loop_join"),
