@@ -409,8 +409,8 @@ class _Handler(BaseHTTPRequestHandler):
         if getattr(self.server, "raw", False):
             # Raw mode: the handler only VALIDATES (status-code parity with
             # kinesis.go:76-88) and persists the original snappy body; the
-            # flatten + encode work moves into Spark executors via the
-            # format("prompb") DataSource — the handler does O(bytes) work
+            # flatten + encode work moves into Spark executors via
+            # read_prompb_record_stream — the handler does O(bytes) work
             # per request instead of O(samples).
             self.server.spool_raw(body)  # type: ignore[attr-defined]
             self.send_response(200)
@@ -446,8 +446,8 @@ class RemoteWriteServer(ThreadingHTTPServer):
     ):
         super().__init__((host, port), _Handler)
         self.spool_dir = spool_dir
-        # raw=True: spool the validated snappy body as .pb.sz for the
-        # format("prompb") DataSource — decode runs in Spark, not here.
+        # raw=True: spool the validated snappy body as .pb.sz for
+        # read_prompb_record_stream — decode runs in Spark, not here.
         self.raw = raw
         # optional remote_read: callable(queries) -> per-query series lists
         # (prompb.encode_read_response shape); None keeps the server

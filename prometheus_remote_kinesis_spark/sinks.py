@@ -11,7 +11,9 @@ partition key, and deliberately FIX the reference's warts (SURVEY.md §4.3):
 2. nil entry on marshal failure (kinesis.go:156-161): ``to_json`` cannot
    emit nil entries; NULL-text rows are filtered defensively anyway;
 3. ignored partial failures / no retry (kinesis.go:191-192): ``put_batch``
-   retries the failed subset with bounded backoff.
+   retries the failed subset with bounded backoff, and a micro-batch whose
+   entries still fail after the retries fails the query instead of being
+   logged and dropped.
 
 AWS clients are injected (a ``put_records_fn``), never imported — tests use
 an in-memory fake; production wires ``boto3.client("kinesis").put_records``.
@@ -131,6 +133,12 @@ def foreach_batch_writer(
     dedups downstream). With a commit dir, each delivered ``batch_id``
     drops a marker file (atomic create) and a replay of a marked batch is
     skipped — source-side dedup instead of sink-side duplicates.
+
+    Entries that still fail after ``put_batch``'s retries are counted in
+    an accumulator; if any did, the batch raises (failing the streaming
+    query) and writes no marker, so a rerun on the same checkpoint replays
+    the batch instead of losing it silently. Entries of the batch that
+    were delivered are delivered again on that replay (at-least-once).
     """
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
@@ -160,23 +168,23 @@ def foreach_batch_writer(
             F.concat_ws("\n", "partition_key", "line").alias("kl")
         )
 
+        failed = batch_df.sparkSession.sparkContext.accumulator(0)
+
         def send_partition(rows: Iterator) -> None:
             def entries() -> Iterator[tuple[str, bytes]]:
                 for (kl,) in rows:
                     key, _, line = kl.rpartition("\n")
                     yield key, (line + "\n").encode("utf-8")
 
-            n_failed = 0
             for chunk in chunk_entries(entries(), max_entries, max_bytes):
-                n_failed += put_batch(chunk, put_records_fn)
-            if n_failed:
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "%d entries permanently failed after retries", n_failed
-                )
+                failed.add(put_batch(chunk, put_records_fn))
 
         single.foreachPartition(send_partition)
+        if failed.value:
+            raise RuntimeError(
+                f"batch {batch_id}: {failed.value} entries permanently failed "
+                "after retries"
+            )
         if commit_dir is not None:
             with open(marker, "w"):
                 pass

@@ -5,15 +5,17 @@ snappy-compressed protobuf ``WriteRequest`` spool files — the exact bytes
 the reference receives per HTTP POST (kinesis.go:68-93) and our
 ``server.py`` endpoint spools — and produces RECORD_SCHEMA rows with the
 reference's flatten semantics (prometheus.go:10-37, implemented once in
-``server.flatten_timeseries``).
+``server.flatten_timeseries``). ``df.write.format("prompb")`` is the
+archival twin that writes such files.
 
-This is the idiomatic Spark-4 way to expose a bespoke wire format as a
-first-class source: one InputPartition per spool file, so a directory of N
-files scans N-way parallel and the decode (``decode_body``: pyarrow's
-snappy, the prompb parser, the flatten) runs on executors — the driver
-never touches payload bytes. At 100 TB the same class pointed at an
-object-store prefix keeps the shape; only file listing grows, and Spark
-batches that on the driver.
+The batch reader makes one InputPartition per spool file, and the decode
+(``decode_body``: pyarrow's snappy, the prompb parser, the flatten) runs on
+executors — the driver never touches payload bytes. ``decode_body`` is
+the one per-body decoder: the streaming relay
+(``streaming.pipeline.read_prompb_record_stream``) reads the same spool
+through Spark's own ``binaryFile`` file source, which packs many small
+files into few tasks, and decodes with it through ``mapInArrow``. There
+is no streaming reader here.
 """
 
 from __future__ import annotations
@@ -24,7 +26,6 @@ import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     DataSourceWriter,
     InputPartition,
     WriterCommitMessage,
@@ -70,28 +71,22 @@ class PrompbDataSource(DataSource):
     def reader(self, schema) -> "PrompbReader":  # noqa: ANN001 (API signature)
         return PrompbReader(self.options)
 
-    def streamReader(self, schema) -> "PrompbParallelStreamReader":  # noqa: ANN001,N802
-        return PrompbParallelStreamReader(self.options)
-
     def writer(self, schema, overwrite: bool) -> "PrompbWriter":  # noqa: ANN001
         return PrompbWriter(self.options)
 
 
-class _Spool:
-    """Options, listing and per-file decode shared by both readers."""
+class PrompbReader(DataSourceReader):
+    """``read.format("prompb")`` — one InputPartition per spool file, the
+    decode on executors."""
 
     def __init__(self, options) -> None:  # noqa: ANN001
         self.path = options.get("path")
         if not self.path:
             raise ValueError("prompb source requires a path")
-        self.suffix = options.get("suffix", ".pb.sz")
 
-    def _list(self) -> list[str]:
-        return sorted(f for f in os.listdir(self.path) if f.endswith(self.suffix))
-
-    def _partitions(self, files: list[str]) -> list[InputPartition]:
-        # One partition per spool file: parallelism = file count, decode
-        # executor-side. No files → one no-op partition (Spark requires ≥1).
+    def partitions(self):
+        files = sorted(f for f in os.listdir(self.path) if f.endswith(".pb.sz"))
+        # No files → one no-op partition (Spark requires ≥1).
         if not files:
             return [InputPartition(None)]
         return [InputPartition(os.path.join(self.path, f)) for f in files]
@@ -101,34 +96,6 @@ class _Spool:
             return
         with open(partition.value, "rb") as fh:
             yield decode_body(fh.read())
-
-
-class PrompbReader(_Spool, DataSourceReader):
-    def partitions(self):
-        return self._partitions(self._list())
-
-
-class PrompbParallelStreamReader(_Spool, DataSourceStreamReader):
-    """``readStream.format("prompb")`` — each micro-batch consumes the spool
-    files that appeared since the last committed offset, exactly once
-    (offset = the sorted seen-file list). The driver only LISTS the spool;
-    each new file becomes an InputPartition and decodes on an executor, so
-    N new files per micro-batch scan N-way parallel and payload bytes
-    never touch the driver. Sequence-numbered names (the Kinesis analog)
-    would replace the seen-set offset with a watermark so offsets stay
-    O(1)."""
-
-    def initialOffset(self) -> dict:  # noqa: N802
-        return {"seen": []}
-
-    def latestOffset(self) -> dict:  # noqa: N802
-        return {"seen": self._list()}
-
-    def partitions(self, start: dict, end: dict):
-        return self._partitions(sorted(set(end["seen"]) - set(start["seen"])))
-
-    def commit(self, end: dict) -> None:
-        pass
 
 
 class PrompbWriter(DataSourceWriter):

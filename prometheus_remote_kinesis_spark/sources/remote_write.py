@@ -4,7 +4,9 @@
 snappy+protobuf, the exact bytes of ``kinesis.go:69``) into RECORD_SCHEMA
 rows through the same per-body decoder as the ``format("prompb")``
 DataSource (``prompb_datasource.decode_body``), as an Arrow-batched
-``mapInArrow`` (SURVEY.md §2.10 U1).
+``mapInArrow`` (SURVEY.md §2.10 U1). The raw-spool relay
+(``streaming.pipeline.read_prompb_record_stream``) is this stage over
+Spark's ``binaryFile`` stream.
 
 The HTTP listener itself is peripheral (BASELINE.json): in production the
 bodies arrive via a stream transport (Kinesis/Kafka topic of raw bodies, or

@@ -2175,86 +2175,6 @@ def t30s_dod_sizing_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_flush_to_batch(
-    streaming_df: DataFrame,
-    output_mode: str,
-    timeout_s: float = 180.0,
-    empty_grace_s: float | None = None,
-) -> DataFrame:
-    """``run_to_batch`` for queries that need the engine's NO-DATA FLUSH
-    micro-batch: Python streaming sources fall back to single-batch
-    execution under ``availableNow`` (MicroBatchExecution warns and runs
-    exactly one batch), so a watermark-finalized APPEND-mode aggregation
-    downstream never gets the extra batch that emits its closed windows.
-    A short ``processingTime`` trigger instead lets the engine run its
-    standard no-data micro-batch once the watermark advances
-    (``spark.sql.streaming.noDataMicroBatches.enabled``, default true) —
-    the same continuous-trigger shape the reference relay runs in
-    production (main.go:75). We stop at the first empty batch observed
-    AFTER at least one data-bearing batch (r8 ADVICE: an initial idle
-    batch — slow listing, offset race — must not end the drain with a
-    partial table and a silent hash mismatch; vacuity is a loud error).
-    A source with NO data at all (empty corpus — the empty-input sweep's
-    legitimate case) never produces a data batch, so once
-    ``empty_grace_s`` of wall-clock passes with at least TWO (empty)
-    micro-batch progress events committed and still zero input rows
-    anywhere in the progress history, the drain concludes empty-source
-    and returns the empty table instead of timing out. The grace scales
-    with ``timeout_s`` (default ``max(15, timeout_s/6)`` — 30 s at the
-    default 180 s; r9 ADVICE #3: a fixed 15 s could conclude "empty"
-    on a heavily loaded box where the first data batch simply hadn't
-    committed yet, silently returning a partial table). The ≥2-idle-
-    events requirement is load-adaptive on top of wall-clock: idle
-    triggers throttle progress events to ~1 per 10 s, and event
-    production itself slows with the box, so a stalled-but-nonempty
-    source keeps failing both conditions until the loud timeout. A real
-    data batch arriving inside the grace window still flips
-    ``saw_data`` via the full-history scan."""
-    import json as _json
-    import time as _time
-
-    global last_run_progress
-    if empty_grace_s is None:
-        empty_grace_s = max(15.0, timeout_s / 6.0)
-    name = f"stream_result_{next(_qname_counter)}"
-    query = (
-        streaming_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(processingTime="500 milliseconds")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="skt_ckpt_"))
-        .start()
-    )
-    try:
-        start = _time.time()
-        deadline = start + timeout_s
-        saw_data = False
-        while _time.time() < deadline:
-            progresses = [_json.loads(p.json) for p in query.recentProgress]
-            # Scan ALL progress events so a data batch sandwiched between
-            # two polls is never missed (recentProgress keeps ~100).
-            if not saw_data:
-                saw_data = any(p["numInputRows"] > 0 for p in progresses)
-            if saw_data:
-                lp = query.lastProgress
-                if lp is not None and _json.loads(lp.json)["numInputRows"] == 0:
-                    break
-            elif len(progresses) >= 2 and _time.time() - start > empty_grace_s:
-                break  # genuinely empty source: all-idle since start
-            _time.sleep(0.25)
-        else:
-            raise TimeoutError(
-                f"streaming query {name} never reached an empty micro-batch "
-                f"after a data-bearing batch within {timeout_s}s "
-                f"(saw_data={saw_data})"
-            )
-    finally:
-        query.stop()
-        query.awaitTermination()
-    last_run_progress = [_json.loads(p.json) for p in query.recentProgress]
-    return streaming_df.sparkSession.table(name)
-
-
 @register("s1e_relay_rollup_stream_e2e", family="E2E-stream", oracle=T5_ORACLE)
 def s1e_relay_rollup_stream_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's PRODUCTION TOPOLOGY as one hash-checked streaming
@@ -2270,7 +2190,7 @@ def s1e_relay_rollup_stream_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     body (name ``__wm_sentinel__``, filtered out downstream) so every
     real 5-minute window finalizes before the availableNow drain stops.
 
-    Stage 1 (ONE streaming query): ``readStream.format("prompb")``
+    Stage 1 (ONE streaming query): ``read_prompb_record_stream``
     decodes on executors (S1–S3), ``dropDuplicatesWithinWatermark`` on
     the wire identity (name, user label, ms timestamp — unique in this
     corpus; state bounded by the 10-minute watermark horizon, never the
@@ -2280,12 +2200,10 @@ def s1e_relay_rollup_stream_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     where only watermark-finalized windows emit, exactly the rows a
     production sink would have received. The sentinel advances the
     watermark past every real window; the engine's standard no-data
-    micro-batch then flushes them (``run_flush_to_batch`` drives the
-    query on a continuous trigger because Python streaming sources fall
-    back to single-batch execution under availableNow — the continuous
-    trigger is also exactly the reference's production shape,
-    main.go:75). Oracle = T5's: the whole wire → dedup → rollup chain
-    must be byte-lossless and exactly-once for the hash to match.
+    micro-batch then flushes them — the spool is read by Spark's own
+    file source, so ``availableNow`` runs that flush batch before it
+    stops. Oracle = T5's: the whole wire → dedup → rollup chain must be
+    byte-lossless and exactly-once for the hash to match.
 
     At 100 TB nothing changes shape: the spool is an object-store prefix
     or Kinesis shard set, the sentinel is wall-clock watermark advance,
@@ -2293,9 +2211,6 @@ def s1e_relay_rollup_stream_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prometheus_remote_kinesis_spark.schema import RECORD_SCHEMA
     from prometheus_remote_kinesis_spark.sources.prompb_datasource import (
         register_prompb_source,
-    )
-    from prometheus_remote_kinesis_spark.streaming.pipeline import (
-        read_prompb_record_stream,
     )
 
     register_prompb_source(spark)
@@ -2320,7 +2235,7 @@ def s1e_relay_rollup_stream_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sentinel.coalesce(1).write.format("prompb").mode("append").save(spool)
 
-    return run_flush_to_batch(relay_rollup_plan(spark, spool), "append")
+    return run_to_batch(relay_rollup_plan(spark, spool), "append")
 
 
 def relay_rollup_plan(spark: SparkSession, spool: str) -> DataFrame:

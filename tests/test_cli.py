@@ -74,7 +74,8 @@ def test_drain_run_end_to_end(spark, tmp_path, monkeypatch):
 @pytest.mark.slow  # HTTP server + prompb DataSource relay e2e (~9 s)
 def test_drain_raw_spool_end_to_end(spark, tmp_path):
     """--raw-spool --drain: the posted body lands as wire bytes, the relay
-    decodes it through format("prompb") on executors, same sink output."""
+    decodes it through read_prompb_record_stream on executors, same sink
+    output."""
     spool = tmp_path / "spool"
     sink = tmp_path / "sink"
     ckpt = tmp_path / "ckpt"

@@ -1,5 +1,6 @@
-"""Custom format("prompb") Python DataSource (sources/prompb_datasource.py):
-decode semantics pinned file-by-file, independent of the r4 oracle query.
+"""Custom format("prompb") Python DataSource (sources/prompb_datasource.py)
+and the raw-spool stream (``read_prompb_record_stream``): decode semantics
+pinned file-by-file, independent of the r4 oracle query.
 """
 
 from __future__ import annotations
@@ -7,6 +8,9 @@ from __future__ import annotations
 from prometheus_remote_kinesis_spark.sources.prompb import encode_remote_write_body
 from prometheus_remote_kinesis_spark.sources.prompb_datasource import (
     register_prompb_source,
+)
+from prometheus_remote_kinesis_spark.streaming.pipeline import (
+    read_prompb_record_stream,
 )
 
 
@@ -39,8 +43,7 @@ def test_prompb_datasource_empty_dir(spark, tmp_path):
 
 def _drain(spark, src_dir, out_dir, ckpt):
     q = (
-        spark.readStream.format("prompb")
-        .load(str(src_dir))
+        read_prompb_record_stream(spark, str(src_dir))
         .writeStream.format("parquet")
         .option("path", str(out_dir))
         .option("checkpointLocation", str(ckpt))
@@ -52,10 +55,10 @@ def _drain(spark, src_dir, out_dir, ckpt):
 
 def test_prompb_stream_reader_exactly_once(spark, tmp_path):
     """Two availableNow runs over a growing spool with a shared checkpoint:
-    the second run must pick up ONLY the new file (offset = seen-file set)."""
+    the second run must pick up ONLY the new file (the file source's
+    offset log)."""
     src, out, ckpt = tmp_path / "spool", tmp_path / "out", tmp_path / "ckpt"
     src.mkdir()
-    register_prompb_source(spark)
 
     (src / "a.pb.sz").write_bytes(
         encode_remote_write_body([({"__name__": "m1"}, [(1.0, 1000), (2.0, 2000)])])
@@ -74,11 +77,9 @@ def test_prompb_stream_reader_exactly_once(spark, tmp_path):
 
 def test_prompb_parallel_stream_reader_exactly_once(spark, tmp_path):
     """Same growing-spool contract with several files per micro-batch: the
-    first run consumes both files (one InputPartition each, the driver
-    only lists), the second ONLY the new file."""
+    first run consumes both files, the second ONLY the new file."""
     src, out, ckpt = tmp_path / "spool", tmp_path / "out", tmp_path / "ckpt"
     src.mkdir()
-    register_prompb_source(spark)
 
     (src / "a.pb.sz").write_bytes(
         encode_remote_write_body([({"__name__": "m1"}, [(1.0, 1000)])])
@@ -100,6 +101,73 @@ def test_prompb_parallel_stream_reader_exactly_once(spark, tmp_path):
         ("m3", 3000),
     }
     assert len(rows) == 3
+
+
+def _drain_to_memory(spark, src_dir, ckpt, name):
+    from pyspark.sql import functions as F
+
+    q = (
+        read_prompb_record_stream(spark, str(src_dir))
+        .withColumn("pid", F.spark_partition_id())
+        .writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", str(ckpt))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
+def test_prompb_stream_packs_files_into_few_tasks(spark, tmp_path):
+    """The stream packs many small spool files into few splits: 12 bodies
+    decode in fewer tasks than files (one Python task per body is the
+    per-task overhead the file source removes), and every record arrives."""
+    src = tmp_path / "spool"
+    src.mkdir()
+    for i in range(12):
+        (src / f"{i:02d}.pb.sz").write_bytes(
+            encode_remote_write_body([({"__name__": f"m{i}"}, [(float(i), 1000 + i)])])
+        )
+    q = _drain_to_memory(spark, src, tmp_path / "ckpt", "prompb_packing")
+    assert q.exception() is None
+    rows = spark.table("prompb_packing").collect()
+    assert sorted((r.name, r.time, r.value) for r in rows) == sorted(
+        (f"m{i}", 1000 + i, float(i)) for i in range(12)
+    )
+    assert len({r.pid for r in rows}) < 12
+
+
+def test_prompb_stream_reads_only_spool_files(spark, tmp_path):
+    """Only ``*.pb.sz`` bodies are read: a foreign file and a dot-prefixed
+    in-flight tmp file (the handler's tmp + rename) are skipped."""
+    src = tmp_path / "spool"
+    src.mkdir()
+    (src / "a.pb.sz").write_bytes(
+        encode_remote_write_body([({"__name__": "m1"}, [(1.0, 1000)])])
+    )
+    (src / "ignored.txt").write_bytes(b"junk")
+    (src / ".x.tmp").write_bytes(b"junk")
+    q = _drain_to_memory(spark, src, tmp_path / "ckpt", "prompb_filtered")
+    assert q.exception() is None
+    rows = spark.table("prompb_filtered").collect()
+    assert [(r.name, r.time, r.value) for r in rows] == [("m1", 1000, 1.0)]
+
+
+def test_prompb_stream_corrupt_body_fails_loudly(spark, tmp_path):
+    """A ``.pb.sz`` file that is not snappy fails the query; it is never
+    dropped silently."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    src = tmp_path / "spool"
+    src.mkdir()
+    (src / "a.pb.sz").write_bytes(
+        encode_remote_write_body([({"__name__": "m1"}, [(1.0, 1000)])])
+    )
+    (src / "bad.pb.sz").write_bytes(b"\xff\xff not snappy")
+    with pytest.raises(StreamingQueryException):
+        _drain_to_memory(spark, src, tmp_path / "ckpt", "prompb_corrupt")
 
 
 def test_prompb_writer_roundtrip(spark, tmp_path):

@@ -105,7 +105,7 @@ def test_python_flatten_matches_spark_ingest(spark):
 
 def test_raw_spool_to_prompb_stream_relay(spark, tmp_path):
     """Raw-spool mode: the handler validates (same status codes) but
-    persists the original snappy body; the format("prompb") DataSource
+    persists the original snappy body; ``read_prompb_record_stream``
     decodes it inside Spark. Same five records as the NDJSON path."""
     spool = str(tmp_path / "raw_spool")
     srv = RemoteWriteServer(spool, raw=True).start()

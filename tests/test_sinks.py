@@ -256,3 +256,62 @@ def test_archive_write_is_time_clustered(spark, tmp_path):
     for f in glob.glob(f"{path}/**/*.parquet", recursive=True):
         times = pq.read_table(f, columns=["time"])["time"].to_pylist()
         assert times == sorted(times), f
+
+
+def test_permanent_put_failure_fails_batch_and_replays(spark, tmp_path):
+    """Entries that still fail after put_batch's retries fail the
+    micro-batch loudly: the query ends in an exception and no commit
+    marker is written, so a rerun on the same checkpoint with a working
+    put replays the batch and delivers every record (nothing is lost
+    silently)."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from prometheus_remote_kinesis_spark.sources.prompb import (
+        encode_remote_write_body,
+    )
+    from prometheus_remote_kinesis_spark.streaming.pipeline import (
+        read_prompb_record_stream,
+    )
+    from prometheus_remote_kinesis_spark.testing import FilePutRecords
+
+    spool, sink, commits = tmp_path / "spool", tmp_path / "sink", tmp_path / "commits"
+    spool.mkdir()
+    sink.mkdir()
+    for i in range(2):
+        (spool / f"{i}.pb.sz").write_bytes(
+            encode_remote_write_body(
+                [({"__name__": f"m{i}"}, [(1.0, 1000), (2.0, 2000)])]
+            )
+        )
+
+    class AlwaysFail:
+        def __call__(self, batch: PutBatch):
+            return list(range(len(batch.entries)))
+
+    def drain(put_fn):
+        return (
+            read_prompb_record_stream(spark, str(spool))
+            .writeStream.foreachBatch(
+                foreach_batch_writer(put_fn, commit_dir=str(commits))
+            )
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    q = drain(AlwaysFail())
+    with pytest.raises(StreamingQueryException, match="4 entries permanently failed"):
+        q.awaitTermination()
+    assert not list(commits.glob("*.done"))
+
+    q = drain(FilePutRecords(str(sink)))
+    q.awaitTermination()
+    assert q.exception() is None
+    lines = [ln for p in sink.iterdir() for ln in p.read_bytes().decode().splitlines()]
+    assert sorted(lines) == sorted(
+        f'{{"name":"m{i}","time":{t},"value":{v},"labels":{{"__name__":"m{i}"}}}}'
+        for i in range(2)
+        for v, t in ((1.0, 1000), (2.0, 2000))
+    )
+    assert list(commits.glob("*.done"))

@@ -186,7 +186,8 @@ if __name__ == "__main__":
 def measure_prompb(spark, sf_dir: str, bodies: int = 64, runs: int = 1) -> dict:
     """Raw-spool relay variant: the same record stream staged as snappy
     prompb WriteRequest bodies (what RemoteWriteServer(raw=True) persists),
-    decoded INSIDE Spark by the format("prompb") parallel stream reader,
+    decoded INSIDE Spark by ``read_prompb_record_stream`` (Spark's
+    binaryFile source, bodies packed into few tasks, ``decode_body``),
     then through the identical chunked-put sink. Directly comparable to
     ``measure``: same records, decode moved from HTTP handler to
     executors.

@@ -10,8 +10,8 @@ only the machinery remains:
   init, offset/commit log creation, micro-batch planning, foreachBatch
   python round-trip) with negligible data and a JVM-only source.
 - ``tiny_prompb_drain``: the same over ONE 2-record snappy prompb body
-  via the Python DataSource stream reader — adds Python-worker spawn
-  and DataSource planStreamInputPartitions driver calls.
+  via ``read_prompb_record_stream`` (binaryFile source + ``mapInArrow``
+  decode) — adds the Python-worker round trip of the decode.
 - ``warm_checkpoint_restart``: re-start the already-drained NDJSON query
   on its existing checkpoint (no new files) — isolates checkpoint
   recovery + no-data-poll shutdown.
