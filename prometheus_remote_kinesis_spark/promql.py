@@ -72,21 +72,22 @@ Prometheus's linear interpolation; it must be the OUTERMOST expression.
 Data-model mapping (TESTDATA.md): metric name ≡ ``event_type``; the one
 label is ``user`` ≡ ``user_id``; sample value ≡ ``value`` (NULL staleness
 markers excluded, the fleet rule). A bare selector is the instant vector:
-each series' last sample within the 5-minute staleness window (t23).
+each series' last sample in (t − 5m, t] — the staleness lookback,
+left-open like every range window.
 
 RANGE QUERIES (r12): ``compile_promql_range`` evaluates the same
 grammar on a step-aligned grid — the ``query_range`` semantics behind
 ``GET /api/v1/query_range``, every Grafana panel's call. The grid
 timestamp rides as a leading ``t_ms`` label through the identical
 _Vec algebra (aggregations group per step, vector matching joins per
-step, topk ranks per step), so every instant-mode kernel is a range
-kernel with no second implementation; each sample bucket-expands to
-the ⌈w/step⌉+1 windows containing it (the j10 idiom), one hash
+step, topk ranks per step). Every leaf — the range functions, the
+selector, ``timestamp()``, ``quantile_over_time``, deriv/
+predict_linear and ``histogram_quantile`` — is ONE kernel over
+``_windowed``, which hands it either the instant window cut or the
+grid expansion (each sample bucket-expands to the ⌈w/step⌉+1 windows
+containing it, the j10 idiom): no second implementation, one hash
 aggregation per kernel, shuffle keys growing with retention ×
-resolution. The terminal functions grid too (r13):
-``histogram_quantile``'s cumulative bucket partials and deriv/
-predict_linear's decimal(38,0) regression partials accumulate per
-grid point, finalized by the identical instant expressions.
+resolution.
 
 EXACT-RATIONAL COMPILATION — the hash discipline as a compiler property:
 every vector node carries its value as an exact integer rational
@@ -1315,15 +1316,6 @@ def _t_lit(sel: Selector, t_eval: int | None) -> Column:
     return F.lit(t).cast("long")
 
 
-def _no_at_on_grid(sel: Selector) -> None:
-    if sel.at_ms is not None:
-        raise PromQLError(
-            "the @ modifier inside a range-query grid is outside the "
-            "subset (a fixed-time vector is constant across the grid — "
-            "evaluate it as an instant query)"
-        )
-
-
 # ------------------------------------------------- range-query grid
 
 _GRID_MAX_POINTS = 11_000  # Prometheus's query_range resolution cap
@@ -1382,20 +1374,21 @@ def _grid_expand(
     the grid points t_k whose window (t_k − w, t_k] contains it — the
     j10 bucket-expansion idiom with the grid index as the bucket
     (`operators/joins.py:728`), never a grid×samples cross join. Adds
-    ``t_ms``; keeps every other column.
+    ``t_ms``; keeps every other column. The grid half of ``_windowed``
+    — leaf kernels call that, never this directly.
 
     Scale posture: the per-sample fan-out is ⌈w/step⌉+1, a QUERY
     constant independent of data size, and the downstream shuffle key is
     (labels, t_ms) — it grows with retention × resolution, the w3b
     partition-key axis (never a low-cardinality constant). ``prep``
-    runs after the range cut but before expansion — rate/increase
+    runs after the range cut but before expansion — the pair kernels
     compute their per-series lag there ONCE, not once per grid point.
     ``off`` implements PromQL ``offset``: sample ms shifts forward into
     the grid frame (window (t_k − off − w, t_k − off] ⟺ effective
     ms + off ∈ (t_k − w, t_k]), leaving output timestamps unshifted.
 
     r13 build-cost note (guide §4/§1.2): this helper runs for every
-    range query and every gridded instant vector, so it is written to
+    gridded leaf, so it is written to
     MINIMIZE Dataset creations (each DataFrame method is a Py4J round
     trip + an eager Catalyst re-analysis of the whole plan so far):
     both helper columns land in ONE select; the two filters merge into
@@ -1452,180 +1445,203 @@ def _grid_expand(
     )
 
 
-def _compile_rangefn_grid(
+def _windowed(
+    spark: SparkSession,
+    sf_dir: str,
+    sel: Selector,
+    w: int,
+    grid: _Grid | None,
+    t_eval: int | None,
+    prep=None,
+) -> tuple[DataFrame, tuple[str, ...], Column]:
+    """The samples of each evaluation window (t − w, t] — the ONE place
+    a leaf chooses between instant and grid evaluation, so every leaf
+    kernel (the range functions, the selector, timestamp(), the
+    terminals) is written once over the returned ``(df, keys, end)``:
+
+    - instant (``grid`` None): the ``_t_lit`` cut, keys ``("user",)``;
+    - grid: every grid point via ``_grid_expand``, keys
+      ``("t_ms", "user")``.
+
+    ``end`` is the window end in the ``ms + offset`` frame — ``t_ms`` on
+    a grid, ``_t_lit + offset`` at an instant (Catalyst folds it to a
+    literal) — so a kernel places an earlier sample in the window with
+    ``pms + offset > end − w`` in both modes. ``prep`` runs once over
+    the cut stream, before grouping (on a grid, before the expansion)."""
+    base = _base(spark, sf_dir, sel)
+    if grid is not None:
+        if sel.at_ms is not None:
+            raise PromQLError(
+                "the @ modifier inside a range-query grid is outside the "
+                "subset (a fixed-time vector is constant across the grid "
+                "— evaluate it as an instant query)"
+            )
+        d = _grid_expand(base, grid, w, sel.offset_ms, prep, t_eval)
+        return d, ("t_ms", "user"), F.col("t_ms")
+    t = _t_lit(sel, t_eval)
+    d = base.where((F.col("ms") > t - w) & (F.col("ms") <= t))
+    return (
+        d if prep is None else prep(d),
+        ("user",),
+        t + F.lit(sel.offset_ms),
+    )
+
+
+def _lag_pairs(d: DataFrame) -> DataFrame:
+    """Each sample's stream-previous (ms, c) per series — the ``prep``
+    of the pair kernels: one Dataset and one Window, not two withColumns
+    (r13)."""
+    wl = Window.partitionBy("user").orderBy("ms", "event_id")
+    return d.select(
+        "*",
+        F.lag("ms").over(wl).alias("pms"),
+        F.lag("c").over(wl).alias("pc"),
+    )
+
+
+_PAIR_FNS = ("rate", "increase", "changes", "resets", "idelta", "irate")
+
+
+def _compile_rangefn(
     spark: SparkSession,
     sf_dir: str,
     node: RangeFn,
-    grid: _Grid,
-    t_eval: int | None = None,
+    grid: _Grid | None,
+    t_eval: int | None,
 ) -> _Vec:
-    """The RangeFn kernels evaluated per grid point — identical window
-    semantics to the instant branch (windows cover (t_k − w, t_k]),
-    grouped by (t_ms, user) instead of (user).
+    """The range-function kernels, one per function, grouped by the
+    ``_windowed`` keys — (user) at an instant, (t_ms, user) per grid
+    point.
 
-    rate/increase correctness note: the per-series lag runs ONCE over
-    the range-cut stream (in ``prep``, before expansion), and a pair's
-    increment counts toward grid point t_k only when the EARLIER sample
-    also sits inside (t_k − w, t_k]. Because a time window selects a
-    contiguous run of the (ms, event_id)-sorted series, stream-
-    consecutive pairs with both endpoints in-window are EXACTLY the
-    window-local consecutive pairs the instant branch lags over — the
-    two formulations are identical, sample for sample (and the window's
-    first sample contributes 0 in both)."""
-    _no_at_on_grid(node.sel)
-    w = node.window_ms
-    base = _base(spark, sf_dir, node.sel)
-    if node.fn in ("changes", "resets", "idelta", "irate"):
-        def prep_pairs(d: DataFrame) -> DataFrame:
-            wl = Window.partitionBy("user").orderBy("ms", "event_id")
-            return d.select(  # one Dataset, not two withColumns (r13)
-                "*",
-                F.lag("ms").over(wl).alias("pms"),
-                F.lag("c").over(wl).alias("pc"),
-            )
-
-        d = _grid_expand(
-            base, grid, w, node.sel.offset_ms, prep_pairs, t_eval
+    Pair-kernel correctness note: the per-series lag runs ONCE over the
+    cut stream (``_lag_pairs``, before any grid expansion), and a pair
+    counts toward a window only when its EARLIER sample also sits inside
+    (t − w, t]. Because a time window selects a contiguous run of the
+    (ms, event_id)-sorted series, stream-consecutive pairs with both
+    endpoints in-window are EXACTLY the window-local consecutive pairs,
+    sample for sample (the window's first sample contributes 0)."""
+    w, off = node.window_ms, node.sel.offset_ms
+    d, keys, end = _windowed(
+        spark, sf_dir, node.sel, w, grid, t_eval,
+        _lag_pairs if node.fn in _PAIR_FNS else None,
+    )
+    gb = d.groupBy(*keys)
+    # offset shifts both endpoints of a pair identically
+    pair_in = F.col("pms").isNotNull() & (F.col("pms") + F.lit(off) > end - w)
+    if node.fn in ("changes", "resets"):
+        # counter-health kernels (r12): count of value changes / counter
+        # resets among window-local consecutive pairs; a single-sample
+        # series reports 0 (Prometheus's behavior) — integer counts,
+        # den = 1, fully aggregable
+        hit = pair_in & (
+            (F.col("c") != F.col("pc"))
+            if node.fn == "changes"
+            else (F.col("c") < F.col("pc"))
         )
-        pair_in = F.col("pms").isNotNull() & (
-            F.col("pms") + F.lit(node.sel.offset_ms) > F.col("t_ms") - w
-        )
-        if node.fn in ("changes", "resets"):
-            hit = (
-                (pair_in & (F.col("c") != F.col("pc")))
-                if node.fn == "changes"
-                else (pair_in & (F.col("c") < F.col("pc")))
-            )
-            g = (
-                d.groupBy("t_ms", "user")
-                .agg(F.sum(hit.cast("long")).cast("long").alias("num"))
-                .select(
-                    "t_ms", "user", "num",
-                    F.lit(1).cast("long").alias("den"),
-                )
-            )
-            return _Vec(g, ("t_ms", "user"), den_const=1)
+        g = gb.agg(F.sum(hit.cast("long")).cast("long").alias("num"))
+        out = g.select(*keys, "num", F.lit(1).cast("long").alias("den"))
+        return _Vec(out, keys, den_const=1)
+    if node.fn in ("idelta", "irate"):
+        # last-pair kernels (r12): idelta = c_last − c_prev (cents, may
+        # be negative); irate = reset-aware inc over the LAST sample
+        # gap, per second — den = 100·gap_ms is PER-SERIES, so irate is
+        # variable-den (aggregations reject at compile). All max_by
+        # picks share the unique (ms, event_id) key, so the four columns
+        # come from the same row deterministically.
         key = F.struct("ms", "event_id")
-        g = (
-            d.groupBy("t_ms", "user")
-            .agg(
-                F.max_by("c", key).alias("lc"),
-                F.max_by("pc", key).alias("lpc"),
-                F.max_by("ms", key).alias("lms"),
-                F.max_by("pms", key).alias("lpms"),
-            )
-            # the window's last sample needs its stream-prev IN window
-            # (contiguity: that is exactly the window-local prev)
-            .where(
-                F.col("lpc").isNotNull()
-                & (
-                    F.col("lpms") + F.lit(node.sel.offset_ms)
-                    > F.col("t_ms") - w
-                )
-            )
+        g = gb.agg(
+            F.max_by("c", key).alias("lc"),
+            F.max_by("pc", key).alias("lpc"),
+            F.max_by("ms", key).alias("lms"),
+            F.max_by("pms", key).alias("lpms"),
+        ).where(  # needs two samples: the last one's prev IN window
+            F.col("lpc").isNotNull() & (F.col("lpms") + F.lit(off) > end - w)
         )
         if node.fn == "idelta":
             out = g.select(
-                "t_ms", "user",
+                *keys,
                 (F.col("lc") - F.col("lpc")).cast("long").alias("num"),
                 F.lit(100).cast("long").alias("den"),
             )
-            return _Vec(out, ("t_ms", "user"), den_const=100)
+            return _Vec(out, keys, den_const=100)
         inc_last = F.when(
             F.col("lc") >= F.col("lpc"), F.col("lc") - F.col("lpc")
         ).otherwise(F.col("lc"))
-        g = g.where(F.col("lms") != F.col("lpms"))  # zero gap → undefined
+        # a zero last-sample gap (same-ms duplicates — impossible in
+        # real Prometheus, present under replicated corpora) makes the
+        # rate undefined: drop the series, the VecBin '/' divisor-zero
+        # precedent (oracle carries ms <> pms)
+        g = g.where(F.col("lms") != F.col("lpms"))
         out = g.select(
-            "t_ms", "user",
+            *keys,
             (inc_last * 1000).cast("long").alias("num"),
             (F.lit(100) * (F.col("lms") - F.col("lpms")))
             .cast("long")
             .alias("den"),
         )
-        return _Vec(out, ("t_ms", "user"))
+        return _Vec(out, keys)  # den varies per series
     if node.fn in ("rate", "increase"):
-        def prep(d: DataFrame) -> DataFrame:
-            wl = Window.partitionBy("user").orderBy("ms", "event_id")
-            return d.select(  # one Dataset, not two withColumns (r13)
-                "*",
-                F.lag("ms").over(wl).alias("pms"),
-                F.lag("c").over(wl).alias("pc"),
-            )
-
-        d = _grid_expand(
-            base, grid, w, node.sel.offset_ms, prep, t_eval
-        )
-        # the pair counts toward t_k only if the earlier sample is also
-        # in (t_k − w, t_k] — offset shifts BOTH endpoints identically
-        pair_in = F.col("pms").isNotNull() & (
-            F.col("pms") + F.lit(node.sel.offset_ms) > F.col("t_ms") - w
-        )
         inc = (
             F.when(~pair_in, F.lit(0))
             .when(F.col("c") >= F.col("pc"), F.col("c") - F.col("pc"))
             .otherwise(F.col("c"))
         )
-        g = (
-            # inc aggregates directly (r13: the narrowing pre-select was
-            # one more Dataset creation; column pruning narrows anyway)
-            d.groupBy("t_ms", "user")
-            .agg(
-                F.sum(inc).cast("long").alias("inc"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .where(F.col("n") >= 2)  # Prometheus: rate needs two samples
-        )
-        if node.fn == "rate":
+        g = gb.agg(
+            F.sum(inc).cast("long").alias("inc"),
+            F.count(F.lit(1)).alias("n"),
+        ).where(F.col("n") >= 2)  # Prometheus: rate needs two samples
+        if node.fn == "rate":  # cents/(100) per (W/1000) s → num/den dollars/s
             out = g.select(
-                "t_ms", "user",
+                *keys,
                 (F.col("inc") * 1000).cast("long").alias("num"),
                 F.lit(100 * w).cast("long").alias("den"),
             )
-            return _Vec(out, ("t_ms", "user"), den_const=_chk_den(100 * w))
+            return _Vec(out, keys, den_const=_chk_den(100 * w))
         out = g.select(
-            "t_ms", "user", F.col("inc").alias("num"),
+            *keys, F.col("inc").alias("num"),
             F.lit(100).cast("long").alias("den"),
         )
-        return _Vec(out, ("t_ms", "user"), den_const=100)
-    d = _grid_expand(base, grid, w, node.sel.offset_ms, t_eval=t_eval)
+        return _Vec(out, keys, den_const=100)
     if node.fn in ("stddev_over_time", "stdvar_over_time"):
-        g = d.groupBy("t_ms", "user").agg(
+        # population variance = (n·Σc² − (Σc)²) / (n²·100²); the
+        # regression-sums discipline (t31): exact integer partials,
+        # value = sqrt(num/den) at finalize for stddev — stdvar (r13) is
+        # the same rational WITHOUT the sqrt, so it is variable-den (n²
+        # per series) and aggregations reject at compile. n·Σc² bounded
+        # ~1e16 at the 64× probe (ANSI mode raises loudly past int64).
+        g = gb.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("c").cast("long").alias("s1"),
             F.sum(F.col("c") * F.col("c")).cast("long").alias("s2"),
         )
         out = g.select(
-            "t_ms", "user",
+            *keys,
             (F.col("n") * F.col("s2") - F.col("s1") * F.col("s1"))
             .cast("long")
             .alias("num"),
             (F.col("n") * F.col("n") * 10000).cast("long").alias("den"),
         )
-        return _Vec(
-            out, ("t_ms", "user"), sqrt=(node.fn == "stddev_over_time")
-        )
+        return _Vec(out, keys, sqrt=(node.fn == "stddev_over_time"))
     if node.fn == "delta":
-        # gauge last − first per grid window (r13) — both picks share
-        # the unique (ms, event_id) key, two samples required
+        # r13 (VERDICT r12 task #3): rate's GAUGE sibling — the window's
+        # last sample minus its first, NO reset logic, two samples
+        # required (the Prometheus rule; this subset is the
+        # non-extrapolated form, the t14/increase convention). Both
+        # picks share the unique (ms, event_id) key → deterministic.
         key = F.struct("ms", "event_id")
-        g = (
-            d.groupBy("t_ms", "user")
-            .agg(
-                F.max_by("c", key).alias("lc"),
-                F.min_by("c", key).alias("fc"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .where(F.col("n") >= 2)
-        )
+        g = gb.agg(
+            F.max_by("c", key).alias("lc"),
+            F.min_by("c", key).alias("fc"),
+            F.count(F.lit(1)).alias("n"),
+        ).where(F.col("n") >= 2)
         out = g.select(
-            "t_ms", "user",
+            *keys,
             (F.col("lc") - F.col("fc")).cast("long").alias("num"),
             F.lit(100).cast("long").alias("den"),
         )
-        return _Vec(out, ("t_ms", "user"), den_const=100)
+        return _Vec(out, keys, den_const=100)
     aggs = {
-        # (num agg, den expr, den_const — None when data-dependent);
-        # keep in lockstep with the instant branch's table below
+        # (num agg, den expr, den_const — None when data-dependent)
         "avg_over_time": (F.sum("c").cast("long"), F.count(F.lit(1)) * 100, None),
         "sum_over_time": (F.sum("c").cast("long"), F.lit(100), 100),
         "count_over_time": (F.count(F.lit(1)), F.lit(1), 1),
@@ -1639,10 +1655,8 @@ def _compile_rangefn_grid(
         "present_over_time": (F.max(F.lit(1)), F.lit(1), 1),
     }
     num, den, den_c = aggs[node.fn]
-    g = d.groupBy("t_ms", "user").agg(
-        num.cast("long").alias("num"), den.cast("long").alias("den")
-    )
-    return _Vec(g, ("t_ms", "user"), den_const=den_c)
+    g = gb.agg(num.cast("long").alias("num"), den.cast("long").alias("den"))
+    return _Vec(g, keys, den_const=den_c)
 
 
 def _compile_vector(
@@ -1652,245 +1666,25 @@ def _compile_vector(
     grid: _Grid | None = None,
     t_eval: int | None = None,
 ) -> _Vec:
-    if isinstance(node, Selector):  # instant vector: last sample, staleness cut
-        if grid is not None:
-            _no_at_on_grid(node)
-            # per grid point: the last sample within the staleness
-            # window (t_k − 5m, t_k] — t23's instant vector, gridded
-            d = _grid_expand(
-                _base(spark, sf_dir, node),
-                grid, STALENESS_MS, node.offset_ms, t_eval=t_eval,
-            )
-            g = d.groupBy("t_ms", "user").agg(
-                F.max_by("c", F.struct("ms", "event_id")).alias("num")
-            )
-            return _Vec(
-                g.select(
-                    "t_ms", "user",
-                    F.col("num").cast("long").alias("num"),
-                    F.lit(100).cast("long").alias("den"),
-                ),
-                ("t_ms", "user"),
-                den_const=100,
-            )
-        t = _t_lit(node, t_eval)
-        g = (
-            _base(spark, sf_dir, node)
-            .where(F.col("ms") <= t)
-            .groupBy("user")
-            .agg(
-                F.max("ms").alias("last_ms"),
-                F.max_by("c", F.struct("ms", "event_id")).alias("num"),
-            )
-            .where(F.col("last_ms") >= t - STALENESS_MS)
+    if isinstance(node, (Selector, TsFn)):
+        # the instant vector: each series' last sample in the staleness
+        # window (t − 5m, t] (t23's 5-minute cut); timestamp() projects
+        # that sample's ms instead — num = ms, den = 1000 (seconds, exact)
+        sel = node if isinstance(node, Selector) else node.sel
+        d, keys, _ = _windowed(spark, sf_dir, sel, STALENESS_MS, grid, t_eval)
+        if isinstance(node, Selector):
+            num, den = F.max_by("c", F.struct("ms", "event_id")), 100
+        else:
+            num, den = F.max("ms"), 1000
+        g = d.groupBy(*keys).agg(num.alias("num"))
+        out = g.select(
+            *keys,
+            F.col("num").cast("long").alias("num"),
+            F.lit(den).cast("long").alias("den"),
         )
-        return _Vec(
-            g.select("user", F.col("num").cast("long").alias("num"),
-                     F.lit(100).cast("long").alias("den")),
-            ("user",),
-            den_const=100,
-        )
-    if isinstance(node, TsFn):
-        # the Selector plan with last_ms projected as the value:
-        # num = ms, den = 1000 (seconds, exact)
-        if grid is not None:
-            _no_at_on_grid(node.sel)
-            d = _grid_expand(
-                _base(spark, sf_dir, node.sel),
-                grid, STALENESS_MS, node.sel.offset_ms, t_eval=t_eval,
-            )
-            g = d.groupBy("t_ms", "user").agg(F.max("ms").alias("num"))
-            return _Vec(
-                g.select(
-                    "t_ms", "user",
-                    F.col("num").cast("long").alias("num"),
-                    F.lit(1000).cast("long").alias("den"),
-                ),
-                ("t_ms", "user"),
-                den_const=1000,
-            )
-        t = _t_lit(node.sel, t_eval)
-        g = (
-            _base(spark, sf_dir, node.sel)
-            .where(F.col("ms") <= t)
-            .groupBy("user")
-            .agg(F.max("ms").alias("last_ms"))
-            .where(F.col("last_ms") >= t - STALENESS_MS)
-        )
-        return _Vec(
-            g.select(
-                "user", F.col("last_ms").cast("long").alias("num"),
-                F.lit(1000).cast("long").alias("den"),
-            ),
-            ("user",),
-            den_const=1000,
-        )
+        return _Vec(out, keys, den_const=den)
     if isinstance(node, RangeFn):
-        if grid is not None:
-            return _compile_rangefn_grid(spark, sf_dir, node, grid, t_eval)
-        w = node.window_ms
-        t = _t_lit(node.sel, t_eval)
-        d = _base(spark, sf_dir, node.sel).where(
-            (F.col("ms") > t - w) & (F.col("ms") <= t)
-        )
-        if node.fn in ("stddev_over_time", "stdvar_over_time"):
-            # population variance = (n·Σc² − (Σc)²) / (n²·100²); the
-            # regression-sums discipline (t31): exact integer partials,
-            # value = sqrt(num/den) at finalize for stddev — stdvar
-            # (r13) is the same rational WITHOUT the sqrt, so it is
-            # variable-den (n² per series) and aggregations reject at
-            # compile. n·Σc² bounded ~1e16 at the 64× probe (ANSI mode
-            # raises loudly past int64).
-            g = d.groupBy("user").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("c").cast("long").alias("s1"),
-                F.sum(F.col("c") * F.col("c")).cast("long").alias("s2"),
-            )
-            out = g.select(
-                "user",
-                (F.col("n") * F.col("s2") - F.col("s1") * F.col("s1"))
-                .cast("long")
-                .alias("num"),
-                (F.col("n") * F.col("n") * 10000).cast("long").alias("den"),
-            )
-            return _Vec(
-                out, ("user",), sqrt=(node.fn == "stddev_over_time")
-            )
-        if node.fn == "delta":
-            # r13 (VERDICT r12 task #3): rate's GAUGE sibling — the
-            # window's last sample minus its first, NO reset logic, two
-            # samples required (the Prometheus rule; this subset is the
-            # non-extrapolated form, the t14/increase convention). Both
-            # picks share the unique (ms, event_id) key → deterministic.
-            key = F.struct("ms", "event_id")
-            g = (
-                d.groupBy("user")
-                .agg(
-                    F.max_by("c", key).alias("lc"),
-                    F.min_by("c", key).alias("fc"),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                .where(F.col("n") >= 2)
-            )
-            out = g.select(
-                "user",
-                (F.col("lc") - F.col("fc")).cast("long").alias("num"),
-                F.lit(100).cast("long").alias("den"),
-            )
-            return _Vec(out, ("user",), den_const=100)
-        if node.fn in ("changes", "resets"):
-            # counter-health kernels (r12): count of value changes /
-            # counter resets among window-local consecutive pairs; a
-            # single-sample series reports 0 (Prometheus's behavior) —
-            # integer counts, den = 1, fully aggregable
-            wl = Window.partitionBy("user").orderBy("ms", "event_id")
-            pc = F.lag("c").over(wl)
-            hit = (
-                (pc.isNotNull() & (F.col("c") != pc))
-                if node.fn == "changes"
-                else (pc.isNotNull() & (F.col("c") < pc))
-            )
-            g = (
-                d.select("user", hit.cast("long").alias("hit"))
-                .groupBy("user")
-                .agg(F.sum("hit").cast("long").alias("num"))
-                .select("user", "num", F.lit(1).cast("long").alias("den"))
-            )
-            return _Vec(g, ("user",), den_const=1)
-        if node.fn in ("idelta", "irate"):
-            # last-pair kernels (r12): idelta = c_last − c_prev (cents,
-            # may be negative); irate = reset-aware inc over the LAST
-            # sample gap, per second — den = 100·gap_ms is PER-SERIES,
-            # so irate is variable-den (aggregations reject at compile).
-            # All max_by picks share the unique (ms, event_id) key, so
-            # the four columns come from the same row deterministically.
-            wl = Window.partitionBy("user").orderBy("ms", "event_id")
-            dd = d.select(
-                "user", "ms", "event_id", "c",
-                F.lag("c").over(wl).alias("pc"),
-                F.lag("ms").over(wl).alias("pms"),
-            )
-            key = F.struct("ms", "event_id")
-            g = (
-                dd.groupBy("user")
-                .agg(
-                    F.max_by("c", key).alias("lc"),
-                    F.max_by("pc", key).alias("lpc"),
-                    F.max_by("ms", key).alias("lms"),
-                    F.max_by("pms", key).alias("lpms"),
-                )
-                .where(F.col("lpc").isNotNull())  # needs two samples
-            )
-            if node.fn == "idelta":
-                out = g.select(
-                    "user",
-                    (F.col("lc") - F.col("lpc")).cast("long").alias("num"),
-                    F.lit(100).cast("long").alias("den"),
-                )
-                return _Vec(out, ("user",), den_const=100)
-            inc_last = F.when(
-                F.col("lc") >= F.col("lpc"), F.col("lc") - F.col("lpc")
-            ).otherwise(F.col("lc"))
-            # a zero last-sample gap (same-ms duplicates — impossible in
-            # real Prometheus, present under replicated corpora) makes
-            # the rate undefined: drop the series, the VecBin '/'
-            # divisor-zero precedent (oracle carries ms <> pms)
-            g = g.where(F.col("lms") != F.col("lpms"))
-            out = g.select(
-                "user",
-                (inc_last * 1000).cast("long").alias("num"),
-                (F.lit(100) * (F.col("lms") - F.col("lpms")))
-                .cast("long")
-                .alias("den"),
-            )
-            return _Vec(out, ("user",))  # den varies per series
-        if node.fn in ("rate", "increase"):
-            wl = Window.partitionBy("user").orderBy("ms", "event_id")
-            inc = (
-                F.when(F.lag("c").over(wl).isNull(), F.lit(0))
-                .when(F.col("c") >= F.lag("c").over(wl), F.col("c") - F.lag("c").over(wl))
-                .otherwise(F.col("c"))
-            )
-            g = (
-                d.select("user", inc.alias("inc"))
-                .groupBy("user")
-                .agg(
-                    F.sum("inc").cast("long").alias("inc"),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                .where(F.col("n") >= 2)  # Prometheus: rate needs two samples
-            )
-            if node.fn == "rate":  # cents/(100) per (W/1000) s → num/den dollars/s
-                out = g.select(
-                    "user",
-                    (F.col("inc") * 1000).cast("long").alias("num"),
-                    F.lit(100 * w).cast("long").alias("den"),
-                )
-                return _Vec(out, ("user",), den_const=_chk_den(100 * w))
-            out = g.select(
-                "user", F.col("inc").alias("num"),
-                F.lit(100).cast("long").alias("den"),
-            )
-            return _Vec(out, ("user",), den_const=100)
-        aggs = {
-            # (num agg, den expr, den_const — None when data-dependent)
-            "avg_over_time": (F.sum("c").cast("long"), F.count(F.lit(1)) * 100, None),
-            "sum_over_time": (F.sum("c").cast("long"), F.lit(100), 100),
-            "count_over_time": (F.count(F.lit(1)), F.lit(1), 1),
-            "min_over_time": (F.min("c"), F.lit(100), 100),
-            "max_over_time": (F.max("c"), F.lit(100), 100),
-            "last_over_time": (
-                F.max_by("c", F.struct("ms", "event_id")),
-                F.lit(100),
-                100,
-            ),
-            "present_over_time": (F.max(F.lit(1)), F.lit(1), 1),
-        }
-        num, den, den_c = aggs[node.fn]
-        g = d.groupBy("user").agg(
-            num.cast("long").alias("num"), den.cast("long").alias("den")
-        )
-        return _Vec(g, ("user",), den_const=den_c)
+        return _compile_rangefn(spark, sf_dir, node, grid, t_eval)
     if isinstance(node, Agg):
         if node.op in (
             "sum", "avg", "min", "max", "stddev", "stdvar", "quantile"
@@ -2502,10 +2296,7 @@ def _compile_vector(
                 "outside the subset (evaluate as an instant query)"
             )
         w = node.window_ms if node.window_ms is not None else STALENESS_MS
-        t = _t_lit(node.sel, t_eval)
-        d = _base(spark, sf_dir, node.sel).where(
-            (F.col("ms") > t - w) & (F.col("ms") <= t)
-        )
+        d, _, _ = _windowed(spark, sf_dir, node.sel, w, None, t_eval)
         # a global count ALWAYS yields one row (0 on an empty scan) —
         # keep it only when the window is empty, then emit the 1-sample
         g = d.agg(F.count(F.lit(1)).alias("n")).where(F.col("n") == 0)
@@ -2652,19 +2443,9 @@ def _compile_vector(
         # and ONE array collect per series whose length is the window's
         # per-series sample count (scrape-rate bounded, the a7 envelope)
         p_, q_ = node.phi.numerator, node.phi.denominator
-        base = _base(spark, sf_dir, node.sel)
-        if grid is not None:
-            _no_at_on_grid(node.sel)
-            d = _grid_expand(
-                base, grid, node.window_ms, node.sel.offset_ms, t_eval=t_eval
-            )
-            keys = ["t_ms", "user"]
-        else:
-            t = _t_lit(node.sel, t_eval)
-            d = base.where(
-                (F.col("ms") > t - node.window_ms) & (F.col("ms") <= t)
-            )
-            keys = ["user"]
+        d, keys, _ = _windowed(
+            spark, sf_dir, node.sel, node.window_ms, grid, t_eval
+        )
         g = d.groupBy(*keys).agg(
             F.sort_array(F.collect_list("c")).alias("arr"),
             F.count(F.lit(1)).alias("n"),
@@ -2685,7 +2466,7 @@ def _compile_vector(
             .alias("num"),
             F.lit(100 * q_).cast("long").alias("den"),
         )
-        return _Vec(out, tuple(keys), den_const=_chk_den(100 * q_))
+        return _Vec(out, keys, den_const=_chk_den(100 * q_))
     if isinstance(node, HistQ):
         raise PromQLError(
             "histogram_quantile must be the outermost expression (its "
@@ -2717,41 +2498,17 @@ def _compile_deriv(
     series over the window cut (five mergeable partials), then the
     finalize expressions; the same shape as t31
     (`operators/time_windows.py` predict_linear) and equally flat at
-    scale.
-
-    GRID MODE (r13, VERDICT r12 task #2 — the trend-over-time panel a
-    dashboard graphs): the identical partials accumulate per
-    (t_ms, user) after the j10 bucket expansion. The rebase becomes
-    window-start-relative per grid point — t' = (ms + off) − (t_k − w)
-    ∈ (0, w], exactly the instant rebase at T = t_k — so the last grid
-    point is bit-equal to the instant query (pinned by pytest). The
-    shuffle key (t_ms, user) grows with retention × resolution, the
-    w3b axis; the per-sample fan-out stays the query constant
-    ⌈w/step⌉+1."""
+    scale. On a grid (r13 — the trend-over-time panel) the identical
+    partials accumulate per (t_ms, user) from ``_windowed``, rebased per
+    grid point, so the last grid point is bit-equal to the instant query
+    (pinned by pytest)."""
     w = node.window_ms
     dec = "decimal(38,0)"
-    if grid is not None:
-        _no_at_on_grid(node.sel)
-        d = _grid_expand(
-            _base(spark, sf_dir, node.sel),
-            grid, w, node.sel.offset_ms, t_eval=t_eval,
-        )
-        keys = ["t_ms", "user"]
-        # rebase to the grid window's start: the sample's effective ms
-        # (ms + off) sits in (t_k − w, t_k] by construction
-        tp = (
-            F.col("ms") + F.lit(node.sel.offset_ms)
-            - (F.col("t_ms") - w)
-        ).cast(dec)
-    else:
-        t = _t_lit(node.sel, t_eval)
-        d = _base(spark, sf_dir, node.sel).where(
-            (F.col("ms") > t - w) & (F.col("ms") <= t)
-        )
-        # rebase to the window start: t' ∈ (0, w] keeps every partial
-        # exact inside decimal(38,0) ≡ HUGEINT at any grammar window
-        tp = (F.col("ms") - (t - w)).cast(dec)
-        keys = ["user"]
+    d, keys, end = _windowed(spark, sf_dir, node.sel, w, grid, t_eval)
+    # rebase to the window start: the sample's effective ms (ms + off)
+    # sits in (end − w, end], so t' ∈ (0, w] keeps every partial exact
+    # inside decimal(38,0) ≡ HUGEINT at any grammar window
+    tp = (F.col("ms") + F.lit(node.sel.offset_ms) - (end - w)).cast(dec)
     c = F.col("c").cast(dec)
     g = (
         d.groupBy(*keys)
@@ -2851,29 +2608,15 @@ def _compile_histq(
         F.sum((F.col("c") <= int(round(b * 100))).cast("long")).alias(f"c{i}")
         for i, b in enumerate(_PQ_HQ_BOUNDS)
     ]
-    if grid is not None:
-        _no_at_on_grid(sel)
-        # GRID MODE (r13, VERDICT r12 task #2 — the p99-over-time panel):
-        # the identical |bounds| cumulative integer partials accumulate
-        # per grid point after the j10 bucket expansion; ONE hash
-        # aggregation keyed on t_ms (grows with the grid), each output
-        # row carrying the same fixed-width partial vector — the t36
-        # posture, reached from query text
-        d = _grid_expand(
-            _base(spark, sf_dir, sel),
-            grid, rf.window_ms, sel.offset_ms, t_eval=t_eval,
-        )
-        g = d.groupBy("t_ms").agg(F.count(F.lit(1)).alias("n"), *cum_aggs)
-        keys = [F.col("t_ms").cast("bigint").alias("t_ms")]
-    else:
-        t = _t_lit(sel, t_eval)
-        d = _base(spark, sf_dir, sel).where(
-            (F.col("ms") > t - rf.window_ms) & (F.col("ms") <= t)
-        )
-        g = d.agg(F.count(F.lit(1)).alias("n"), *cum_aggs).where(
-            F.col("n") > 0  # empty window → 0 rows (both engines)
-        )
-        keys = []
+    # the partials aggregate over ALL series: per grid point on a grid
+    # (ONE hash aggregation keyed on t_ms, growing with the grid, each
+    # row carrying the same fixed-width partial vector — the t36
+    # posture), globally at an instant
+    d, keys, _ = _windowed(spark, sf_dir, sel, rf.window_ms, grid, t_eval)
+    gkeys = [k for k in keys if k != "user"]
+    g = d.groupBy(*gkeys).agg(F.count(F.lit(1)).alias("n"), *cum_aggs)
+    if not gkeys:  # a global aggregate always yields one row:
+        g = g.where(F.col("n") > 0)  # empty window → 0 rows (both engines)
     cums = F.array(*[F.col(f"c{i}") for i in range(len(_PQ_HQ_BOUNDS))])
     bounds = F.array(*[F.lit(float(b)) for b in _PQ_HQ_BOUNDS])
     idx = F.size(F.filter(cums, lambda c: c * F.lit(q) < F.lit(p) * F.col("n")))
@@ -2885,7 +2628,10 @@ def _compile_histq(
     val = F.when(idx >= F.size(bounds), F.element_at(bounds, -1)).otherwise(
         lower + (upper - lower) * (rank - cum_lower) / (cum_upper - cum_lower)
     )
-    return g.select(*keys, (F.floor(val * 1e6) / 1e6).alias("value"))
+    return g.select(
+        *[F.col(k).cast("bigint").alias(k) for k in gkeys],
+        (F.floor(val * 1e6) / 1e6).alias("value"),
+    )
 
 
 def _string_forced(node) -> frozenset:
@@ -3135,15 +2881,15 @@ PQ3_ORACLE = f"""
     )
     SELECT floor(CAST(count(*) AS DOUBLE) / CAST(1 AS DOUBLE) * 1e6) / 1e6
                AS value
-    FROM g WHERE last_ms >= t - {STALENESS_MS}
+    FROM g WHERE last_ms > t - {STALENESS_MS}
 """
 
 
 @register("pq3_promql_count_instant", family="PQ", oracle=PQ3_ORACLE)
 def pq3_promql_count_instant(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PromQL ``count(signup)`` — cardinality of the live instant vector:
-    a bare selector compiles to each series' last sample under the
-    5-minute staleness cut (t23's semantics), and ``count`` folds the
+    a bare selector compiles to each series' last sample in the
+    left-open staleness window (T − 5m, T], and ``count`` folds the
     survivors."""
     return compile_promql(spark, sf_dir, PQ3_QUERY)
 
@@ -4740,7 +4486,7 @@ PQ42_ORACLE = """
     SELECT CAST(g.user_id AS BIGINT) AS user,
            floor(CAST(g.last_ms AS DOUBLE) / CAST(1000 AS DOUBLE) * 1e6)
                / 1e6 AS value
-    FROM g, b WHERE g.last_ms >= b.t - 300000
+    FROM g, b WHERE g.last_ms > b.t - 300000
 """
 
 
@@ -4750,7 +4496,8 @@ def pq42_promql_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes its last sample's OWN timestamp in seconds — num = ms,
     den = 1000, exact (every ms is n/1000). The plan is the instant
     selector's (same staleness cut, same max aggregation) projecting
-    last_ms instead of the value column. Sparse by design: only series
+    last_ms instead of the value column; the lookback is the
+    left-open (T − 5m, T], like every window. Sparse by design: only series
     with a sample in the 5-minute lookback exist — one row at sf0.01,
     exactly Prometheus's staleness behavior (the gridded pqr5 carries
     the many-row coverage of the same mechanism)."""
@@ -4849,7 +4596,7 @@ def pqr1_promql_range_sum_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolution, the w3b axis. The oracle re-derives the identical grid
     from the corpus max (generate_series), window-local lag per
     (tm, user) being provably identical to the stream-consecutive
-    formulation (see _compile_rangefn_grid). Step divides span, so the
+    formulation (see _compile_rangefn). Step divides span, so the
     final row is bit-equal to the instant query (pinned by pytest)."""
     return compile_promql_range(
         spark, sf_dir, PQR1_QUERY,

@@ -2129,22 +2129,33 @@ def test_promql_range_last_point_is_instant(spark):
     """query_range grid semantics anchor (r12): with a T-anchored grid
     whose step divides the span, the LAST grid point evaluates at
     exactly T — so its row must be bit-equal to the instant query.
-    Checked for an agg-over-rate and a plain selector."""
+    Checked for an agg-over-rate, a plain selector, timestamp(), the
+    pair and pick kernels and every gridded terminal."""
     from prometheus_remote_kinesis_spark.promql import (
         compile_promql, compile_promql_range,
     )
     from tests.conftest import SF_SMOKE
 
-    # the bare-selector case needs sf0.01: its 5-minute staleness windows
+    # the bare-selector cases need sf0.01: their 5-minute staleness windows
     # are empty at nearly every sf0.001 grid point (~1 sample / 13 ks per
     # type) — pqr2's registered form runs at sf0.01 for the same reason
+    import os
+
     from prometheus_remote_kinesis_spark.sources.tables import corpus_max_ms
 
+    sf001 = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
     nonempty_last = 0
     for q, sf in (
         ("sum(rate(view[1d]))", SF_SMOKE),
-        ("click", "/root/testdata/sf0.01"),
+        ("click", sf001),
+        ("timestamp(click)", sf001),
         ("count_over_time(error[1d])", SF_SMOKE),
+        ("changes(view[1d])", SF_SMOKE),
+        ("idelta(view[1d])", SF_SMOKE),
+        ("irate(view[1d])", SF_SMOKE),
+        ("last_over_time(view[1d])", SF_SMOKE),
+        ("min_over_time(purchase[1d])", SF_SMOKE),
+        ("quantile_over_time(0.9, purchase[30d])", SF_SMOKE),
         # r13: the gridded terminals share the anchor property
         ("predict_linear(purchase[30d], 3600)", SF_SMOKE),
         ("histogram_quantile(0.5, sum by (le) "
@@ -2869,6 +2880,21 @@ def test_promql_intfns_exact(spark):
         )
 
 
+def _promql_corpus(spark, path, rows) -> str:
+    """Write a hand-made ``events`` table of (event_id, event_type,
+    user_id, ms, value) rows under ``path``; returns the sf_dir."""
+    from pyspark.sql import functions as F
+
+    spark.createDataFrame(
+        rows,
+        "event_id long, event_type string, user_id long, ms long, value double",
+    ).select(
+        "event_id", "event_type", "user_id",
+        F.timestamp_millis(F.col("ms")).alias("ts"), "value",
+    ).write.parquet(str(path / "events.parquet"))
+    return str(path)
+
+
 def test_promql_irate_zero_gap_drops(spark, tmp_path):
     """Regression (r12, found by the 16x replication probe): a series
     whose LAST two samples share a millisecond (impossible in real
@@ -2876,8 +2902,6 @@ def test_promql_irate_zero_gap_drops(spark, tmp_path):
     finalize divide by zero under ANSI mode. The zero-gap series now
     DROPS (the VecBin divisor-zero precedent, mirrored in the oracle's
     ms <> pms cut) while normal series are untouched."""
-    from pyspark.sql import functions as F
-
     from prometheus_remote_kinesis_spark.promql import compile_promql
 
     rows = [
@@ -2888,24 +2912,79 @@ def test_promql_irate_zero_gap_drops(spark, tmp_path):
         # no: c_last=8.0 < c_prev=20.0 → inc = c_last; gap 60 s
         (4, 2, 1_000_000, 20.0), (5, 2, 1_061_000, 8.0),
     ]
-    df = spark.createDataFrame(
-        [(eid, "click", u, ms, v) for eid, u, ms, v in rows],
-        "event_id long, event_type string, user_id long, ms long, value double",
-    ).select(
-        "event_id", "event_type", "user_id",
-        F.timestamp_millis(F.col("ms")).alias("ts"), "value",
+    sf = _promql_corpus(
+        spark, tmp_path, [(eid, "click", u, ms, v) for eid, u, ms, v in rows]
     )
-    df.write.parquet(str(tmp_path / "events.parquet"))
     got = {
         r["user"]: r["value"]
-        for r in compile_promql(
-            spark, str(tmp_path), "irate(click[1h])"
-        ).collect()
+        for r in compile_promql(spark, sf, "irate(click[1h])").collect()
     }
     import math
 
     want2 = math.floor(800 * 1000 / (100.0 * 61_000) * 1e6) / 1e6
     assert got == {2: want2}  # user 1 dropped, user 2 exact
+
+
+def test_promql_lookback_is_left_open(spark, tmp_path):
+    """The instant selector's 5-minute lookback is (T − 5m, T], left-open
+    like every range window, absent() and the grid: a series whose only
+    sample sits EXACTLY 5 minutes before T is stale. ``click``,
+    ``timestamp(click)`` and ``absent(click)`` must agree with each
+    other and with the last point of their range query."""
+    from prometheus_remote_kinesis_spark.promql import (
+        STALENESS_MS, compile_promql, compile_promql_range,
+    )
+
+    t = 1_700_000_000_000
+    sf = _promql_corpus(spark, tmp_path, [
+        (1, "view", 1, t, 1.0),  # resolves T
+        (2, "click", 2, t - STALENESS_MS, 2.0),  # exactly on the boundary
+    ])
+
+    def rows(df):
+        return [tuple(r) for r in df.collect()]
+
+    assert rows(compile_promql(spark, sf, "absent(click)")) == [(1.0,)]
+    for q in ("click", "timestamp(click)"):
+        assert rows(compile_promql(spark, sf, q)) == [], q
+        grid = compile_promql_range(
+            spark, sf, q, step_ms=60_000, span_ms=STALENESS_MS
+        ).collect()
+        # live at the five earlier grid points, stale at the last one (T)
+        assert sorted(r["t_ms"] for r in grid) == [
+            t - STALENESS_MS + 60_000 * k for k in range(5)
+        ], q
+
+
+def test_promql_pair_kernel_values(spark, tmp_path):
+    """Literal values of the pair and pick kernels on one hand-written
+    series. Instant and range queries run the same kernel, so their
+    agreement cannot catch a kernel bug; these hand-computed values
+    can. The 1-minute window holds 5 samples
+    (1, 3, 3, 2, 5: one repeated value, one counter reset); a sixth
+    sample sits exactly at T − 1m, outside the left-open window."""
+    from prometheus_remote_kinesis_spark.promql import compile_promql
+
+    t = 1_700_000_000_000
+    values = (9.0, 1.0, 3.0, 3.0, 2.0, 5.0)  # 9.0 at T − 60 s: excluded
+    sf = _promql_corpus(spark, tmp_path, [
+        (i, "view", 7, t - 10_000 * (5 - i) if i else t - 60_000, v)
+        for i, v in enumerate(values)
+    ])
+    want = {
+        "changes": 3.0,  # 1→3, 3→2, 2→5
+        "resets": 1.0,  # 3→2
+        "idelta": 3.0,  # 5 − 2
+        "irate": 0.3,  # (5 − 2) over the last 10 s gap
+        "increase": 7.0,  # 2 + 0 + 2 (reset: the new value) + 3
+        "min_over_time": 1.0,
+        "last_over_time": 5.0,
+    }
+    for fn, v in want.items():
+        got = [tuple(r) for r in compile_promql(
+            spark, sf, f"{fn}(view[1m])"
+        ).collect()]
+        assert got == [(7, v)], fn
 
 
 def test_promql_without_clause(spark):

@@ -567,8 +567,9 @@ def test_promql_range_and_subquery_plan_shapes(spark):
     literal, not a 1-row eval-time frame) — and aggregates by hash on the (t_ms, ...) key; the subquery plan
     stacks a second HashAggregate over the grid one (fold collapsing
     t_ms); the rate grid computes its lag ONCE (a single Window node),
-    not once per grid point; label_replace adds NO join or extra
-    exchange to its input plan."""
+    not once per grid point, and the instant rate — the same kernel over
+    the instant window cut — has that one Window and no expansion;
+    label_replace adds NO join or extra exchange to its input plan."""
     import re as _re
 
     from prometheus_remote_kinesis_spark.promql import (
@@ -588,6 +589,11 @@ def test_promql_range_and_subquery_plan_shapes(spark):
     assert not joins, joins
     assert rng.count("Window") == 1  # the rate lag runs once, pre-expansion
     assert "HashAggregate" in rng
+    inst = compile_promql(
+        spark, SF_SMOKE, "sum(rate(view[1d]))"
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "Generate" not in inst
+    assert inst.count("Window") == 1
 
     sub = compile_promql(
         spark, SF_SMOKE, "max_over_time(sum_over_time(view[1d])[2d:6h])"
@@ -613,3 +619,40 @@ def test_promql_range_and_subquery_plan_shapes(spark):
     # label_replace is a pure projection: no extra exchange, no extra join
     assert lr.count("Exchange") == base.count("Exchange")
     assert lr.count("Join") == base.count("Join")
+
+
+def test_promql_compile_dataset_creations(spark):
+    """Every DataFrame method is a Py4J round trip plus an eager
+    re-analysis of the whole plan so far, so the number of Datasets a
+    compile creates is its build cost. The leaf kernels shared by
+    instant and range queries must create no more of them than the
+    instant-only kernels they replaced (20, 18 and 14 at sf0.1) — at
+    100 TB the build runs once per query, but a dashboard issues
+    thousands of small queries."""
+    import os
+
+    import pyspark.sql.classic.dataframe as cdf
+
+    from prometheus_remote_kinesis_spark.promql import compile_promql
+
+    sf = os.path.join(os.path.dirname(SF_SMOKE), "sf0.1")
+    created = [0]
+    init = cdf.DataFrame.__init__
+
+    def counting(self, *args, **kwargs):
+        created[0] += 1
+        init(self, *args, **kwargs)
+
+    for q, most in (
+        ("sum(increase(click[1d]))", 20),
+        ("irate(view[30d])", 18),
+        ("click", 14),
+    ):
+        compile_promql(spark, sf, q)  # warm: table plans cached per session
+        created[0] = 0
+        cdf.DataFrame.__init__ = counting
+        try:
+            compile_promql(spark, sf, q)
+        finally:
+            cdf.DataFrame.__init__ = init
+        assert 0 < created[0] <= most, (q, created[0])
