@@ -77,17 +77,20 @@ left-open like every range window.
 
 RANGE QUERIES (r12): ``compile_promql_range`` evaluates the same
 grammar on a step-aligned grid — the ``query_range`` semantics behind
-``GET /api/v1/query_range``, every Grafana panel's call. The grid
-timestamp rides as a leading ``t_ms`` label through the identical
-_Vec algebra (aggregations group per step, vector matching joins per
-step, topk ranks per step). Every leaf — the range functions, the
-selector, ``timestamp()``, ``quantile_over_time``, deriv/
-predict_linear and ``histogram_quantile`` — is ONE kernel over
-``_windowed``, which hands it either the instant window cut or the
-grid expansion (each sample bucket-expands to the ⌈w/step⌉+1 windows
-containing it, the j10 idiom): no second implementation, one hash
-aggregation per kernel, shuffle keys growing with retention ×
-resolution.
+``GET /api/v1/query_range``, every Grafana panel's call. An instant
+query is a ONE-STEP grid: both entry points share one compile body, and
+every compiled vector leads with the step label ``t_ms`` (aggregations
+group per step, vector matching joins per step, topk ranks per step).
+At an instant the step key is the T literal, grouped as an expression
+(``_step``) so Catalyst drops it — instant plans keep their shape, and
+an aggregation over no series returns nothing, as at a grid point.
+Every leaf — the range functions, the selector, ``timestamp()``,
+``quantile_over_time``, deriv/predict_linear and
+``histogram_quantile`` — is ONE kernel over ``_windowed``, which hands
+it either the instant window cut or the grid expansion (each sample
+bucket-expands to the ⌈w/step⌉+1 windows containing it, the j10
+idiom): one hash aggregation per kernel, shuffle keys growing with
+retention × resolution.
 
 EXACT-RATIONAL COMPILATION — the hash discipline as a compiler property:
 every vector node carries its value as an exact integer rational
@@ -1073,7 +1076,8 @@ def parse(text: str):
 
 # ------------------------------------------------------------ compiler
 
-_LABELS = {"user": "user_id"}
+_SERIES = "user"  # the one series label of the data model
+_LABELS = {_SERIES: "user_id"}
 STALENESS_MS = 300_000  # instant-vector lookback (t23's 5-minute cut)
 
 
@@ -1155,7 +1159,7 @@ class _Vec:
 
     ``df`` holds ``labels + [num (bigint/decimal), den (bigint)]`` with
     value = num/den in display units — exact on both engines until the
-    single finalize division."""
+    single finalize division. ``labels[0]`` is always the step ``t_ms``."""
 
     df: DataFrame
     labels: tuple[str, ...]
@@ -1175,17 +1179,14 @@ def _vec_match(lv, rv, node, opname: str):
     factored r13): applies on()/ignoring()/group_left/group_right (or
     bare one-to-one on identical label sets), returning the joined frame
     with value columns renamed (lnum, lden, rnum, rden) plus the output
-    label tuple. On a grid, t_ms is always an implicit extra key —
-    matching happens within one instant."""
+    label tuple. t_ms is always an implicit extra key — matching happens
+    within one evaluation step (at an instant both sides carry the same
+    T literal, so Catalyst folds that key away)."""
     if node.on is not None or node.ignoring is not None:
         # explicit vector matching: the match-key list compiles straight
         # to the equi-join key list — t24's mechanism with the clause
         # choosing the keys.
-        tgrid = ["t_ms"] if "t_ms" in lv.labels else []
-        if ("t_ms" in lv.labels) != ("t_ms" in rv.labels):
-            raise PromQLError("vector matching across grid and instant")
-        lset = tuple(lb for lb in lv.labels if lb != "t_ms")
-        rset = tuple(lb for lb in rv.labels if lb != "t_ms")
+        lset, rset = lv.labels[1:], rv.labels[1:]
         if node.on is not None:
             mk = tuple(node.on)
             missing = [lb for lb in mk if lb not in lset or lb not in rset]
@@ -1233,8 +1234,8 @@ def _vec_match(lv, rv, node, opname: str):
                     f"exactly by the match labels {mk} (got {lset} "
                     f"vs {rset}); add group_left for many-to-one"
                 )
-            out_labels = tuple(tgrid) + mk
-        keys = tgrid + list(mk)
+            out_labels = ("t_ms",) + mk
+        keys = ["t_ms", *mk]
     else:
         if lv.labels != rv.labels:
             raise PromQLError(
@@ -1250,10 +1251,7 @@ def _vec_match(lv, rv, node, opname: str):
     right = rv.df.select(
         *rv.labels, F.col("num").alias("rnum"), F.col("den").alias("rden")
     )
-    # scalar-result vectors (labels = ()) combine by cross join of
-    # two 1-row frames — sum(a) / sum(b) global ratios
-    j = left.join(right, keys) if keys else left.crossJoin(right)
-    return j, out_labels
+    return left.join(right, keys), out_labels
 
 
 def _chk_den(d: int) -> int:
@@ -1294,7 +1292,7 @@ def _base(spark: SparkSession, sf_dir: str, sel: Selector) -> DataFrame:
         else:  # '!~'
             ev = ev.where(~c.cast("string").rlike(f"^(?:{val})$"))
     return ev.select(
-        F.col("user_id").alias("user"),
+        F.col(_LABELS[_SERIES]).alias(_SERIES),
         F.unix_millis("ts").alias("ms"),
         "event_id",
         F.round(F.col("value") * 100, 0).cast("long").alias("c"),
@@ -1445,6 +1443,29 @@ def _grid_expand(
     )
 
 
+_LEAF = ("t_ms", _SERIES)  # every leaf kernel's labels, in both modes
+
+
+def _step(grid: _Grid | None, t_eval: int | None) -> Column:
+    """The step key of every ``groupBy``/``Window.partitionBy``: the
+    ``t_ms`` column on a grid, T as a long literal at an instant. An
+    expression, not a carried column: Catalyst's
+    ``RemoveLiteralFromGroupExpressions`` drops a literal key expression
+    (or, when it is the only key, keeps a placeholder, so an aggregation
+    over no series gives no row), while a literal COLUMN can stay a hash
+    key — a leaf grouping by a selected T column costs ``sum by (user)
+    (count_over_time(view[1d]))`` a second Exchange. Never NULL (0 when
+    T is None): a NULL key fails every vector-matching join on NULL = NULL."""
+    if grid is not None:
+        return F.col("t_ms")
+    return F.lit(0 if t_eval is None else t_eval).cast("long").alias("t_ms")
+
+
+def _by(labels, grid: _Grid | None, t_eval: int | None) -> list[Column]:
+    """Grouping expressions for ``labels`` — ``t_ms`` via ``_step``."""
+    return [_step(grid, t_eval) if lb == "t_ms" else F.col(lb) for lb in labels]
+
+
 def _windowed(
     spark: SparkSession,
     sf_dir: str,
@@ -1453,15 +1474,13 @@ def _windowed(
     grid: _Grid | None,
     t_eval: int | None,
     prep=None,
-) -> tuple[DataFrame, tuple[str, ...], Column]:
+) -> tuple[DataFrame, list[Column], Column]:
     """The samples of each evaluation window (t − w, t] — the ONE place
     a leaf chooses between instant and grid evaluation, so every leaf
     kernel (the range functions, the selector, timestamp(), the
-    terminals) is written once over the returned ``(df, keys, end)``:
-
-    - instant (``grid`` None): the ``_t_lit`` cut, keys ``("user",)``;
-    - grid: every grid point via ``_grid_expand``, keys
-      ``("t_ms", "user")``.
+    terminals) is written once over the returned ``(df, by, end)``: at
+    an instant the ``_t_lit`` cut (one grid step at T), on a grid every
+    point via ``_grid_expand``. ``by`` groups by the ``_LEAF`` labels.
 
     ``end`` is the window end in the ``ms + offset`` frame — ``t_ms`` on
     a grid, ``_t_lit + offset`` at an instant (Catalyst folds it to a
@@ -1469,6 +1488,7 @@ def _windowed(
     ``pms + offset > end − w`` in both modes. ``prep`` runs once over
     the cut stream, before grouping (on a grid, before the expansion)."""
     base = _base(spark, sf_dir, sel)
+    by = _by(_LEAF, grid, t_eval)
     if grid is not None:
         if sel.at_ms is not None:
             raise PromQLError(
@@ -1477,21 +1497,17 @@ def _windowed(
                 "— evaluate it as an instant query)"
             )
         d = _grid_expand(base, grid, w, sel.offset_ms, prep, t_eval)
-        return d, ("t_ms", "user"), F.col("t_ms")
+        return d, by, F.col("t_ms")
     t = _t_lit(sel, t_eval)
     d = base.where((F.col("ms") > t - w) & (F.col("ms") <= t))
-    return (
-        d if prep is None else prep(d),
-        ("user",),
-        t + F.lit(sel.offset_ms),
-    )
+    return d if prep is None else prep(d), by, t + F.lit(sel.offset_ms)
 
 
 def _lag_pairs(d: DataFrame) -> DataFrame:
     """Each sample's stream-previous (ms, c) per series — the ``prep``
     of the pair kernels: one Dataset and one Window, not two withColumns
     (r13)."""
-    wl = Window.partitionBy("user").orderBy("ms", "event_id")
+    wl = Window.partitionBy(_SERIES).orderBy("ms", "event_id")
     return d.select(
         "*",
         F.lag("ms").over(wl).alias("pms"),
@@ -1509,9 +1525,8 @@ def _compile_rangefn(
     grid: _Grid | None,
     t_eval: int | None,
 ) -> _Vec:
-    """The range-function kernels, one per function, grouped by the
-    ``_windowed`` keys — (user) at an instant, (t_ms, user) per grid
-    point.
+    """The range-function kernels, one per function, grouped per
+    (t_ms, user) by the ``_windowed`` keys in both modes.
 
     Pair-kernel correctness note: the per-series lag runs ONCE over the
     cut stream (``_lag_pairs``, before any grid expansion), and a pair
@@ -1521,11 +1536,11 @@ def _compile_rangefn(
     endpoints in-window are EXACTLY the window-local consecutive pairs,
     sample for sample (the window's first sample contributes 0)."""
     w, off = node.window_ms, node.sel.offset_ms
-    d, keys, end = _windowed(
+    d, by, end = _windowed(
         spark, sf_dir, node.sel, w, grid, t_eval,
         _lag_pairs if node.fn in _PAIR_FNS else None,
     )
-    gb = d.groupBy(*keys)
+    gb = d.groupBy(*by)
     # offset shifts both endpoints of a pair identically
     pair_in = F.col("pms").isNotNull() & (F.col("pms") + F.lit(off) > end - w)
     if node.fn in ("changes", "resets"):
@@ -1539,8 +1554,8 @@ def _compile_rangefn(
             else (F.col("c") < F.col("pc"))
         )
         g = gb.agg(F.sum(hit.cast("long")).cast("long").alias("num"))
-        out = g.select(*keys, "num", F.lit(1).cast("long").alias("den"))
-        return _Vec(out, keys, den_const=1)
+        out = g.select(*_LEAF, "num", F.lit(1).cast("long").alias("den"))
+        return _Vec(out, _LEAF, den_const=1)
     if node.fn in ("idelta", "irate"):
         # last-pair kernels (r12): idelta = c_last − c_prev (cents, may
         # be negative); irate = reset-aware inc over the LAST sample
@@ -1559,11 +1574,11 @@ def _compile_rangefn(
         )
         if node.fn == "idelta":
             out = g.select(
-                *keys,
+                *_LEAF,
                 (F.col("lc") - F.col("lpc")).cast("long").alias("num"),
                 F.lit(100).cast("long").alias("den"),
             )
-            return _Vec(out, keys, den_const=100)
+            return _Vec(out, _LEAF, den_const=100)
         inc_last = F.when(
             F.col("lc") >= F.col("lpc"), F.col("lc") - F.col("lpc")
         ).otherwise(F.col("lc"))
@@ -1573,13 +1588,13 @@ def _compile_rangefn(
         # precedent (oracle carries ms <> pms)
         g = g.where(F.col("lms") != F.col("lpms"))
         out = g.select(
-            *keys,
+            *_LEAF,
             (inc_last * 1000).cast("long").alias("num"),
             (F.lit(100) * (F.col("lms") - F.col("lpms")))
             .cast("long")
             .alias("den"),
         )
-        return _Vec(out, keys)  # den varies per series
+        return _Vec(out, _LEAF)  # den varies per series
     if node.fn in ("rate", "increase"):
         inc = (
             F.when(~pair_in, F.lit(0))
@@ -1592,16 +1607,16 @@ def _compile_rangefn(
         ).where(F.col("n") >= 2)  # Prometheus: rate needs two samples
         if node.fn == "rate":  # cents/(100) per (W/1000) s → num/den dollars/s
             out = g.select(
-                *keys,
+                *_LEAF,
                 (F.col("inc") * 1000).cast("long").alias("num"),
                 F.lit(100 * w).cast("long").alias("den"),
             )
-            return _Vec(out, keys, den_const=_chk_den(100 * w))
+            return _Vec(out, _LEAF, den_const=_chk_den(100 * w))
         out = g.select(
-            *keys, F.col("inc").alias("num"),
+            *_LEAF, F.col("inc").alias("num"),
             F.lit(100).cast("long").alias("den"),
         )
-        return _Vec(out, keys, den_const=100)
+        return _Vec(out, _LEAF, den_const=100)
     if node.fn in ("stddev_over_time", "stdvar_over_time"):
         # population variance = (n·Σc² − (Σc)²) / (n²·100²); the
         # regression-sums discipline (t31): exact integer partials,
@@ -1615,13 +1630,13 @@ def _compile_rangefn(
             F.sum(F.col("c") * F.col("c")).cast("long").alias("s2"),
         )
         out = g.select(
-            *keys,
+            *_LEAF,
             (F.col("n") * F.col("s2") - F.col("s1") * F.col("s1"))
             .cast("long")
             .alias("num"),
             (F.col("n") * F.col("n") * 10000).cast("long").alias("den"),
         )
-        return _Vec(out, keys, sqrt=(node.fn == "stddev_over_time"))
+        return _Vec(out, _LEAF, sqrt=(node.fn == "stddev_over_time"))
     if node.fn == "delta":
         # r13 (VERDICT r12 task #3): rate's GAUGE sibling — the window's
         # last sample minus its first, NO reset logic, two samples
@@ -1635,11 +1650,11 @@ def _compile_rangefn(
             F.count(F.lit(1)).alias("n"),
         ).where(F.col("n") >= 2)
         out = g.select(
-            *keys,
+            *_LEAF,
             (F.col("lc") - F.col("fc")).cast("long").alias("num"),
             F.lit(100).cast("long").alias("den"),
         )
-        return _Vec(out, keys, den_const=100)
+        return _Vec(out, _LEAF, den_const=100)
     aggs = {
         # (num agg, den expr, den_const — None when data-dependent)
         "avg_over_time": (F.sum("c").cast("long"), F.count(F.lit(1)) * 100, None),
@@ -1656,7 +1671,7 @@ def _compile_rangefn(
     }
     num, den, den_c = aggs[node.fn]
     g = gb.agg(num.cast("long").alias("num"), den.cast("long").alias("den"))
-    return _Vec(g, keys, den_const=den_c)
+    return _Vec(g, _LEAF, den_const=den_c)
 
 
 def _compile_vector(
@@ -1671,18 +1686,18 @@ def _compile_vector(
         # window (t − 5m, t] (t23's 5-minute cut); timestamp() projects
         # that sample's ms instead — num = ms, den = 1000 (seconds, exact)
         sel = node if isinstance(node, Selector) else node.sel
-        d, keys, _ = _windowed(spark, sf_dir, sel, STALENESS_MS, grid, t_eval)
+        d, by, _ = _windowed(spark, sf_dir, sel, STALENESS_MS, grid, t_eval)
         if isinstance(node, Selector):
             num, den = F.max_by("c", F.struct("ms", "event_id")), 100
         else:
             num, den = F.max("ms"), 1000
-        g = d.groupBy(*keys).agg(num.alias("num"))
+        g = d.groupBy(*by).agg(num.alias("num"))
         out = g.select(
-            *keys,
+            *_LEAF,
             F.col("num").cast("long").alias("num"),
             F.lit(den).cast("long").alias("den"),
         )
-        return _Vec(out, keys, den_const=den)
+        return _Vec(out, _LEAF, den_const=den)
     if isinstance(node, RangeFn):
         return _compile_rangefn(spark, sf_dir, node, grid, t_eval)
     if isinstance(node, Agg):
@@ -1699,11 +1714,11 @@ def _compile_vector(
                 "sum_over_time and count_over_time separately instead"
             )
         if "t_ms" in node.by:
-            # the grid coordinate is never user-addressable (mirrors the
-            # without() rule): on a grid it is ALREADY an implicit
-            # grouping key, and `sum by (t_ms)` would otherwise pass the
-            # membership check below and emit duplicate t_ms keys/columns
-            # — a malformed matrix (r12 ADVICE). Checked before the inner
+            # the step coordinate is never user-addressable (mirrors the
+            # without() rule): it is ALREADY an implicit grouping key,
+            # and `sum by (t_ms)` would otherwise pass the membership
+            # check below and emit duplicate t_ms keys/columns — a
+            # malformed matrix (r12 ADVICE). Checked before the inner
             # compile so it needs no SparkSession, like _variable_den.
             raise PromQLError(
                 "by(t_ms) is invalid — the grid timestamp is an "
@@ -1720,19 +1735,18 @@ def _compile_vector(
         for lbl in node.by:
             if lbl not in inner.labels:
                 raise PromQLError(f"by({lbl}) not in inner labels {inner.labels}")
-        # on a grid, every aggregation is per-evaluation-step: t_ms is
-        # an implicit grouping key (PromQL aggregates within one instant)
-        tgrid_keys = ["t_ms"] if grid is not None else []
+        # every aggregation is per evaluation step: t_ms is an implicit
+        # grouping key (PromQL aggregates within one instant)
         if node.without is not None:
             # the complement form: keep every inner label NOT listed
-            # (absent names are ignored — the PromQL rule); t_ms is a
-            # grid coordinate, never droppable by without()
-            keys = tgrid_keys + [
-                lb for lb in inner.labels
-                if lb != "t_ms" and lb not in node.without
+            # (absent names are ignored — the PromQL rule); t_ms is the
+            # step coordinate, never droppable by without()
+            keys = ["t_ms"] + [
+                lb for lb in inner.labels[1:] if lb not in node.without
             ]
         else:
-            keys = tgrid_keys + list(node.by)
+            keys = ["t_ms", *node.by]
+        by = _by(keys, grid, t_eval)
         if node.op == "count_values":
             # count_values("dst", v) (r13 — t27's mechanism from query
             # text): group by the sample VALUE itself; dst carries its
@@ -1756,17 +1770,18 @@ def _compile_vector(
                     "resets)"
                 )
             gcv = inner.df.groupBy(
-                *keys, F.col("num").cast("string").alias(dst)
+                *by, F.col("num").cast("string").alias(dst)
             )
             out = gcv.agg(
                 F.count(F.lit(1)).cast("long").alias("num")
             ).select(*keys, dst, "num", F.lit(1).cast("long").alias("den"))
             return _Vec(out, tuple(keys) + (dst,), den_const=1)
-        gb = inner.df.groupBy(*keys) if keys else inner.df.groupBy()
-        if node.op == "group":
-            # presence marker: the constant 1 per group (den-insensitive,
-            # accepted even over sqrt vectors — like count)
-            out = gb.agg(F.max(F.lit(1)).cast("long").alias("num")).select(
+        gb = inner.df.groupBy(*by)
+        if node.op in ("count", "group"):
+            # den-insensitive, so accepted even over sqrt vectors; group
+            # is the presence marker, the constant 1 per group
+            num = F.count(F.lit(1)) if node.op == "count" else F.max(F.lit(1))
+            out = gb.agg(num.cast("long").alias("num")).select(
                 *keys, "num", F.lit(1).cast("long").alias("den")
             )
             den_c = 1
@@ -1898,11 +1913,6 @@ def _compile_vector(
                 )
             # avg's den picks up the per-group n_in → not a query constant
             den_c = None if node.op == "avg" else inner.den_const
-        elif node.op == "count":
-            out = gb.agg(F.count(F.lit(1)).cast("long").alias("num")).select(
-                *keys, "num", F.lit(1).cast("long").alias("den")
-            )
-            den_c = 1
         return _Vec(out, tuple(keys), den_const=den_c)
     if isinstance(node, TopK):
         inner = _compile_vector(spark, sf_dir, node.expr, grid, t_eval)
@@ -1912,22 +1922,21 @@ def _compile_vector(
         # the direction (monotone-equivalent under sqrt too)
         key = F.col("num").cast("double") / F.col("den").cast("double")
         ordered = F.asc(key) if node.asc else F.desc(key)
-        if grid is not None and "t_ms" in inner.labels:
-            # per-STEP top-k (PromQL selects k series at each instant):
-            # rank within the t_ms partition — the partition key grows
-            # with the grid, and each partition holds one instant's
-            # series (a bounded per-step sort, the w4 WindowGroupLimit
-            # shape), never a global sort of the whole matrix
-            tie = [lb for lb in inner.labels if lb != "t_ms"]
-            wk = Window.partitionBy("t_ms").orderBy(ordered, *tie)
-            out = (
-                inner.df.withColumn("_rk", F.row_number().over(wk))
-                .where(F.col("_rk") <= node.k)
-                .drop("_rk")
-            )
-            return _Vec(out, inner.labels, sqrt=inner.sqrt,
-                        den_const=inner.den_const)
-        out = inner.df.orderBy(ordered, *inner.labels).limit(node.k)
+        # per-STEP top-k (PromQL selects k series at each instant):
+        # rank within the t_ms partition — the partition key grows with
+        # the grid, and each partition holds one instant's series (a
+        # bounded per-step sort, the w4 WindowGroupLimit shape), never a
+        # global sort of the whole matrix. At an instant the literal
+        # partition folds away and the rank filter plans as a
+        # TakeOrderedAndProject.
+        wk = Window.partitionBy(_step(grid, t_eval)).orderBy(
+            ordered, *inner.labels[1:]
+        )
+        out = (
+            inner.df.withColumn("_rk", F.row_number().over(wk))
+            .where(F.col("_rk") <= node.k)
+            .drop("_rk")
+        )
         return _Vec(out, inner.labels, sqrt=inner.sqrt,
                     den_const=inner.den_const)
     if isinstance(node, VecAbs):
@@ -2272,8 +2281,6 @@ def _compile_vector(
                 f"matching), got {lv.labels} vs {rv.labels}"
             )
         keys = list(lv.labels)
-        if not keys:
-            raise PromQLError(f"{node.op} needs at least one matching label")
         rhs_keys = rv.df.select(*keys)
         if node.op == "and":  # values from the lhs, existence from the rhs
             return _Vec(lv.df.join(rhs_keys, keys, "left_semi"), lv.labels,
@@ -2296,15 +2303,16 @@ def _compile_vector(
                 "outside the subset (evaluate as an instant query)"
             )
         w = node.window_ms if node.window_ms is not None else STALENESS_MS
-        d, _, _ = _windowed(spark, sf_dir, node.sel, w, None, t_eval)
-        # a global count ALWAYS yields one row (0 on an empty scan) —
+        d, _, _ = _windowed(spark, sf_dir, node.sel, w, grid, t_eval)
+        # a keyless count ALWAYS yields one row (0 on an empty scan) —
         # keep it only when the window is empty, then emit the 1-sample
         g = d.agg(F.count(F.lit(1)).alias("n")).where(F.col("n") == 0)
         out = g.select(
+            _step(grid, t_eval),
             F.lit(1).cast("long").alias("num"),
             F.lit(1).cast("long").alias("den"),
         )
-        return _Vec(out, (), den_const=1)
+        return _Vec(out, ("t_ms",), den_const=1)
     if isinstance(node, LabelJoin):
         if node.dst in ("t_ms", "num", "den"):
             raise PromQLError(f"label_join: reserved dst {node.dst!r}")
@@ -2382,8 +2390,10 @@ def _compile_vector(
                 f"{node.fn} over a sqrt-valued subquery is outside the "
                 "exact-rational subset"
             )
-        labels = tuple(lb for lb in inner.labels if lb != "t_ms")
-        gb = inner.df.groupBy(*labels) if labels else inner.df.groupBy()
+        # fold each series' inner grid points into the outer step: same
+        # labels, with the outer t_ms key in place of the inner grid's
+        labels = inner.labels
+        gb = inner.df.groupBy(*_by(labels, grid, t_eval))
         if node.fn in (
             "sum_over_time", "min_over_time", "max_over_time",
             "avg_over_time",
@@ -2394,21 +2404,20 @@ def _compile_vector(
                 "rational subset — per-point denominators differ"
             )
         dc = inner.den_const
-        if node.fn == "sum_over_time":
-            out = gb.agg(F.sum("num").cast("long").alias("num")).select(
-                *labels, "num", F.lit(dc).cast("long").alias("den")
+        folds = {
+            # fn: (num agg, den_const of the result)
+            "sum_over_time": (F.sum("num"), dc),
+            "min_over_time": (F.min("num"), dc),
+            "max_over_time": (F.max("num"), dc),
+            "count_over_time": (F.count(F.lit(1)), 1),
+            "present_over_time": (F.max(F.lit(1)), 1),
+        }
+        if node.fn in folds:
+            num, den_c = folds[node.fn]
+            out = gb.agg(num.cast("long").alias("num")).select(
+                *labels, "num", F.lit(den_c).cast("long").alias("den")
             )
-            return _Vec(out, labels, den_const=dc)
-        if node.fn == "min_over_time":
-            out = gb.agg(F.min("num").cast("long").alias("num")).select(
-                *labels, "num", F.lit(dc).cast("long").alias("den")
-            )
-            return _Vec(out, labels, den_const=dc)
-        if node.fn == "max_over_time":
-            out = gb.agg(F.max("num").cast("long").alias("num")).select(
-                *labels, "num", F.lit(dc).cast("long").alias("den")
-            )
-            return _Vec(out, labels, den_const=dc)
+            return _Vec(out, labels, den_const=den_c)
         if node.fn == "avg_over_time":
             g = gb.agg(
                 F.sum("num").cast("long").alias("num"),
@@ -2419,19 +2428,10 @@ def _compile_vector(
                 (F.lit(dc) * F.col("n")).cast("long").alias("den"),
             )
             return _Vec(out, labels)  # den varies per series — not const
-        if node.fn == "count_over_time":
-            out = gb.agg(F.count(F.lit(1)).cast("long").alias("num")).select(
-                *labels, "num", F.lit(1).cast("long").alias("den")
-            )
-            return _Vec(out, labels, den_const=1)
-        if node.fn == "present_over_time":
-            out = gb.agg(F.max(F.lit(1)).cast("long").alias("num")).select(
-                *labels, "num", F.lit(1).cast("long").alias("den")
-            )
-            return _Vec(out, labels, den_const=1)
         # last_over_time: the value at each series' latest present grid
-        # point — num and den picked by the SAME unique key (t_ms is a
-        # grouping key of the inner grid, so max_by is deterministic)
+        # point — num and den picked by the SAME unique key (the inner
+        # grid's t_ms is one of its grouping keys, so max_by is
+        # deterministic)
         out = gb.agg(
             F.max_by("num", "t_ms").cast("long").alias("num"),
             F.max_by("den", "t_ms").cast("long").alias("den"),
@@ -2443,10 +2443,10 @@ def _compile_vector(
         # and ONE array collect per series whose length is the window's
         # per-series sample count (scrape-rate bounded, the a7 envelope)
         p_, q_ = node.phi.numerator, node.phi.denominator
-        d, keys, _ = _windowed(
+        d, by, _ = _windowed(
             spark, sf_dir, node.sel, node.window_ms, grid, t_eval
         )
-        g = d.groupBy(*keys).agg(
+        g = d.groupBy(*by).agg(
             F.sort_array(F.collect_list("c")).alias("arr"),
             F.count(F.lit(1)).alias("n"),
         )
@@ -2460,13 +2460,13 @@ def _compile_vector(
             c_lo,
         )
         out = g.select(
-            *keys,
+            *_LEAF,
             (c_lo * (F.lit(q_) - rem) + c_hi * rem)
             .cast("long")
             .alias("num"),
             F.lit(100 * q_).cast("long").alias("den"),
         )
-        return _Vec(out, keys, den_const=_chk_den(100 * q_))
+        return _Vec(out, _LEAF, den_const=_chk_den(100 * q_))
     if isinstance(node, HistQ):
         raise PromQLError(
             "histogram_quantile must be the outermost expression (its "
@@ -2490,28 +2490,28 @@ def _compile_deriv(
     spark: SparkSession,
     sf_dir: str,
     node,  # Deriv | PredictLinear — shared partials, two finalizes
-    t_eval: int | None = None,
-    grid: _Grid | None = None,
-) -> DataFrame:
+    grid: _Grid | None,
+    t_eval: int | None,
+) -> tuple[DataFrame, tuple[str, ...], Column]:
     """Compile ``deriv(sel[w])`` — see the Deriv dataclass docstring for
     the exact-partials discipline. Plan: ONE hash aggregation per
     series over the window cut (five mergeable partials), then the
     finalize expressions; the same shape as t31
     (`operators/time_windows.py` predict_linear) and equally flat at
-    scale. On a grid (r13 — the trend-over-time panel) the identical
-    partials accumulate per (t_ms, user) from ``_windowed``, rebased per
-    grid point, so the last grid point is bit-equal to the instant query
-    (pinned by pytest)."""
+    scale. The partials accumulate per (t_ms, user) from ``_windowed``,
+    rebased per evaluation step, so the last grid point is bit-equal to
+    the instant query (pinned by pytest). Returns ``(df, labels,
+    value)`` for ``_compile``'s one finalize select."""
     w = node.window_ms
     dec = "decimal(38,0)"
-    d, keys, end = _windowed(spark, sf_dir, node.sel, w, grid, t_eval)
+    d, by, end = _windowed(spark, sf_dir, node.sel, w, grid, t_eval)
     # rebase to the window start: the sample's effective ms (ms + off)
     # sits in (end − w, end], so t' ∈ (0, w] keeps every partial exact
     # inside decimal(38,0) ≡ HUGEINT at any grammar window
     tp = (F.col("ms") + F.lit(node.sel.offset_ms) - (end - w)).cast(dec)
     c = F.col("c").cast(dec)
     g = (
-        d.groupBy(*keys)
+        d.groupBy(*by)
         .agg(
             F.count(F.lit(1)).cast(dec).alias("n"),
             F.sum(tp).alias("st"),
@@ -2524,11 +2524,10 @@ def _compile_deriv(
     num = (F.col("n") * F.col("stc") - F.col("st") * F.col("sc")).cast(dec)
     den = (F.col("n") * F.col("stt") - F.col("st") * F.col("st")).cast(dec)
     g = g.select(
-        *keys, "n", "st", "sc", num.alias("num"), den.alias("den")
+        *_LEAF, "n", "st", "sc", num.alias("num"), den.alias("den")
     ).where(
         F.col("den") != 0  # all samples on one ms → slope undefined
     )
-    out_keys = [F.col(k).cast("bigint").alias(k) for k in keys]
     if isinstance(node, PredictLinear):
         # ŷ at x_p = w + t·1000 (ms past the rebased origin), in cents:
         # (Σc·den + num·(n·x_p − Σx)) / (n·den); ÷100 for display units
@@ -2546,20 +2545,15 @@ def _compile_deriv(
         ).cast(dec)
         pden = (F.lit(100) * F.col("n") * F.col("den")).cast(dec)
         q = pnum.cast("double") / pden.cast("double")
-        return g.select(
-            *out_keys,
-            (F.floor(q * 1e6) / 1e6).alias("value"),
-        )
-    # cents/ms → display units/second: ×1000 (per second) ÷100 (cents),
-    # i.e. ×10 — applied INSIDE the exact decimal before the one
-    # double conversion per term (identical order in the oracle)
-    q = (F.col("num") * 10).cast(dec).cast("double") / F.col("den").cast(
-        "double"
-    )
-    return g.select(
-        *out_keys,
-        (F.floor(q * 1e6) / 1e6).alias("value"),
-    )
+    else:
+        # cents/ms → display units/second: ×1000 (per second) ÷100
+        # (cents), i.e. ×10 — applied INSIDE the exact decimal before
+        # the one double conversion per term (identical order in the
+        # oracle)
+        q = (F.col("num") * 10).cast(dec).cast("double") / F.col(
+            "den"
+        ).cast("double")
+    return g, _LEAF, F.floor(q * 1e6) / 1e6
 
 
 from prometheus_remote_kinesis_spark.operators.aggregates import (
@@ -2572,9 +2566,9 @@ def _compile_histq(
     spark: SparkSession,
     sf_dir: str,
     node: HistQ,
-    t_eval: int | None = None,
-    grid: _Grid | None = None,
-) -> DataFrame:
+    grid: _Grid | None,
+    t_eval: int | None,
+) -> tuple[DataFrame, tuple[str, ...], Column]:
     """Compile ``histogram_quantile(φ, sum by (le)
     (count_over_time(<m>_bucket[w])))`` to a10b's one-hash-aggregation +
     array-interpolation plan (`operators/aggregates.py:439`): the scan
@@ -2583,7 +2577,8 @@ def _compile_histq(
     cumulative by construction), the target bucket index comes from the
     EXACT integer comparison c_i·q < p·n (φ = p/q as a Fraction — no
     float rank ties), and Prometheus's linear interpolation runs as one
-    deterministic double expression, truncated by the f8 tie-free rule."""
+    deterministic double expression, truncated by the f8 tie-free rule.
+    Returns ``(df, labels, value)`` like ``_compile_deriv``."""
     inner = node.expr
     shape_ok = (
         isinstance(inner, Agg)
@@ -2608,15 +2603,14 @@ def _compile_histq(
         F.sum((F.col("c") <= int(round(b * 100))).cast("long")).alias(f"c{i}")
         for i, b in enumerate(_PQ_HQ_BOUNDS)
     ]
-    # the partials aggregate over ALL series: per grid point on a grid
-    # (ONE hash aggregation keyed on t_ms, growing with the grid, each
-    # row carrying the same fixed-width partial vector — the t36
-    # posture), globally at an instant
-    d, keys, _ = _windowed(spark, sf_dir, sel, rf.window_ms, grid, t_eval)
-    gkeys = [k for k in keys if k != "user"]
-    g = d.groupBy(*gkeys).agg(F.count(F.lit(1)).alias("n"), *cum_aggs)
-    if not gkeys:  # a global aggregate always yields one row:
-        g = g.where(F.col("n") > 0)  # empty window → 0 rows (both engines)
+    # the partials aggregate over ALL series per evaluation step (ONE
+    # hash aggregation keyed on t_ms, growing with the grid, each row
+    # carrying the same fixed-width partial vector — the t36 posture);
+    # an empty step has no row
+    d, _, _ = _windowed(spark, sf_dir, sel, rf.window_ms, grid, t_eval)
+    g = d.groupBy(_step(grid, t_eval)).agg(
+        F.count(F.lit(1)).alias("n"), *cum_aggs
+    )
     cums = F.array(*[F.col(f"c{i}") for i in range(len(_PQ_HQ_BOUNDS))])
     bounds = F.array(*[F.lit(float(b)) for b in _PQ_HQ_BOUNDS])
     idx = F.size(F.filter(cums, lambda c: c * F.lit(q) < F.lit(p) * F.col("n")))
@@ -2628,10 +2622,7 @@ def _compile_histq(
     val = F.when(idx >= F.size(bounds), F.element_at(bounds, -1)).otherwise(
         lower + (upper - lower) * (rank - cum_lower) / (cum_upper - cum_lower)
     )
-    return g.select(
-        *[F.col(k).cast("bigint").alias(k) for k in gkeys],
-        (F.floor(val * 1e6) / 1e6).alias("value"),
-    )
+    return g, ("t_ms",), F.floor(val * 1e6) / 1e6
 
 
 def _string_forced(node) -> frozenset:
@@ -2673,63 +2664,73 @@ def _finalize_label(name: str, forced: frozenset = frozenset()):
     OVERWRITTEN by label_replace (``forced``) finalizes as string too:
     the replacement may be non-numeric, and the bigint cast would be an
     ANSI runtime failure (r12 ADVICE)."""
-    if name in ("user", "t_ms") and name not in forced:
+    if name in (_SERIES, "t_ms") and name not in forced:
         return F.col(name).cast("bigint").alias(name)
     return F.col(name).cast("string").alias(name)
+
+
+def _compile(
+    spark: SparkSession,
+    sf_dir: str,
+    ast,
+    grid: _Grid | None,
+    t_eval: int | None,
+    with_t: bool,
+) -> DataFrame:
+    """The one compile body of instant and range queries: a terminal or
+    a vector, then ONE finalize select. A vector's value is
+    floor(num/den · 1e6)/1e6, the one division after an all-integer
+    pipeline; a terminal brings its own. ``with_t`` keeps the leading
+    ``t_ms`` label (the range matrix) or drops it (the instant)."""
+    if isinstance(ast, HistQ):
+        df, labels, value = _compile_histq(spark, sf_dir, ast, grid, t_eval)
+    elif isinstance(ast, (Deriv, PredictLinear)):
+        df, labels, value = _compile_deriv(spark, sf_dir, ast, grid, t_eval)
+    else:
+        vec = _compile_vector(spark, sf_dir, ast, grid, t_eval)
+        ratio = F.col("num").cast("double") / F.col("den").cast("double")
+        df, labels = vec.df, vec.labels
+        value = F.floor((F.sqrt(ratio) if vec.sqrt else ratio) * 1e6) / 1e6
+    forced = _string_forced(ast)
+    return df.select(
+        *[_finalize_label(c, forced) for c in labels[0 if with_t else 1:]],
+        value.alias("value"),
+    )
 
 
 def compile_promql(
     spark: SparkSession, sf_dir: str, query: str, eval_ms: int | None = None
 ) -> DataFrame:
-    """Parse + compile a PromQL instant query; returns (labels..., value)
-    with value = floor(num/den · 1e6)/1e6 — ONE division after an
-    all-integer pipeline (histogram_quantile finalizes through its
-    interpolation expression instead; see _compile_histq)."""
+    """Parse + compile a PromQL instant query; returns (labels..., value).
+    An instant is a one-step grid at T: ``compile_promql_range``'s
+    ``_compile`` body with no grid, so every step key is the T literal
+    (``_step``)."""
     ast = parse(query)
     # T resolved ONCE per compile (footer stats, else one scalar job) and
     # passed down as a literal; the client's time= needs no read at all
     t_eval = eval_ms if eval_ms is not None else corpus_max_ms(spark, sf_dir)
-    sort_desc: bool | None = None
-    sort_labels: tuple[str, ...] = ()
-    if isinstance(ast, SortFn):  # r13: outermost presentation order
-        sort_desc, sort_labels, ast = ast.desc, ast.by_labels, ast.expr
-
-    def _ordered(df: DataFrame) -> DataFrame:
-        if sort_desc is None:
-            return df
-        if sort_labels:
-            missing = [lb for lb in sort_labels if lb not in df.columns]
-            if missing:
-                raise PromQLError(
-                    f"sort_by_label: labels {missing} absent from the "
-                    f"result (have {[c for c in df.columns if c != 'value']})"
-                )
-            # Prometheus sorts label VALUES lexicographically — order on
-            # the STRING rendering even for numeric labels ("10" < "2")
-            keys = [
-                F.desc(F.col(lb).cast("string")) if sort_desc
-                else F.asc(F.col(lb).cast("string"))
-                for lb in sort_labels
-            ]
-            rest = [c for c in df.columns if c not in sort_labels]
-            return df.orderBy(*keys, *rest)
-        key = F.desc("value") if sort_desc else F.asc("value")
-        return df.orderBy(key, *[c for c in df.columns if c != "value"])
-
-    if isinstance(ast, HistQ):
-        return _ordered(_compile_histq(spark, sf_dir, ast, t_eval))
-    if isinstance(ast, (Deriv, PredictLinear)):
-        return _ordered(_compile_deriv(spark, sf_dir, ast, t_eval))
-    vec = _compile_vector(spark, sf_dir, ast, t_eval=t_eval)
-    ratio = F.col("num").cast("double") / F.col("den").cast("double")
-    val = F.sqrt(ratio) if vec.sqrt else ratio
-    forced = _string_forced(ast)
-    return _ordered(
-        vec.df.select(
-            *[_finalize_label(c, forced) for c in vec.labels],
-            (F.floor(val * 1e6) / 1e6).alias("value"),
-        )
-    )
+    if not isinstance(ast, SortFn):
+        return _compile(spark, sf_dir, ast, None, t_eval, with_t=False)
+    # r13: outermost presentation order
+    df = _compile(spark, sf_dir, ast.expr, None, t_eval, with_t=False)
+    if ast.by_labels:
+        missing = [lb for lb in ast.by_labels if lb not in df.columns]
+        if missing:
+            raise PromQLError(
+                f"sort_by_label: labels {missing} absent from the "
+                f"result (have {[c for c in df.columns if c != 'value']})"
+            )
+        # Prometheus sorts label VALUES lexicographically — order on
+        # the STRING rendering even for numeric labels ("10" < "2")
+        keys = [
+            F.desc(F.col(lb).cast("string")) if ast.desc
+            else F.asc(F.col(lb).cast("string"))
+            for lb in ast.by_labels
+        ]
+        rest = [c for c in df.columns if c not in ast.by_labels]
+        return df.orderBy(*keys, *rest)
+    key = F.desc("value") if ast.desc else F.asc("value")
+    return df.orderBy(key, *[c for c in df.columns if c != "value"])
 
 
 def compile_promql_range(
@@ -2746,7 +2747,7 @@ def compile_promql_range(
     ``query_range`` semantics, the dashboard's primary call): the
     expression evaluates at every step-aligned grid point and the
     result is the matrix (t_ms, labels..., value), one row per grid
-    point per series present there.
+    point per series present there (``compile_promql``'s body).
 
     Grid anchoring: pass ``start_ms``+``end_ms`` (the Prometheus API's
     client-supplied grid, used by ``GET /api/v1/query_range``) OR
@@ -2786,18 +2787,7 @@ def compile_promql_range(
     grid.check()
     # only a T-anchored grid needs T; a literal start/end grid never reads
     t_eval = corpus_max_ms(spark, sf_dir) if span_ms is not None else None
-    if isinstance(ast, HistQ):
-        return _compile_histq(spark, sf_dir, ast, t_eval, grid)
-    if isinstance(ast, (Deriv, PredictLinear)):
-        return _compile_deriv(spark, sf_dir, ast, t_eval, grid)
-    vec = _compile_vector(spark, sf_dir, ast, grid, t_eval)
-    ratio = F.col("num").cast("double") / F.col("den").cast("double")
-    val = F.sqrt(ratio) if vec.sqrt else ratio
-    forced = _string_forced(ast)
-    return vec.df.select(
-        *[_finalize_label(c, forced) for c in vec.labels],
-        (F.floor(val * 1e6) / 1e6).alias("value"),
-    )
+    return _compile(spark, sf_dir, ast, grid, t_eval, with_t=True)
 
 
 # ---------------------------------------------------- registered queries
@@ -2869,28 +2859,32 @@ def pq2_promql_threshold_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compile_promql(spark, sf_dir, PQ2_QUERY)
 
 
-PQ3_QUERY = "count(signup)"
+PQ3_QUERY = "count(view)"
 PQ3_ORACLE = f"""
     WITH b AS (SELECT max(epoch_us(ts) // 1000) AS t FROM events),
     g AS (
         SELECT user_id, max(epoch_us(ts) // 1000) AS last_ms, max(t) AS t
         FROM events, b
-        WHERE event_type = 'signup' AND value IS NOT NULL
+        WHERE event_type = 'view' AND value IS NOT NULL
           AND epoch_us(ts) // 1000 <= t
         GROUP BY 1
     )
     SELECT floor(CAST(count(*) AS DOUBLE) / CAST(1 AS DOUBLE) * 1e6) / 1e6
                AS value
     FROM g WHERE last_ms > t - {STALENESS_MS}
+    HAVING count(*) > 0
 """
 
 
 @register("pq3_promql_count_instant", family="PQ", oracle=PQ3_ORACLE)
 def pq3_promql_count_instant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL ``count(signup)`` — cardinality of the live instant vector:
+    """PromQL ``count(view)`` — cardinality of the live instant vector:
     a bare selector compiles to each series' last sample in the
     left-open staleness window (T − 5m, T], and ``count`` folds the
-    survivors."""
+    survivors. With no live series the answer is empty, not 0 (an
+    aggregation over nothing, like Prometheus) — hence the oracle's
+    HAVING. ``view`` is the metric with a live series at T at sf0.01;
+    no ``signup`` series is, which made a ``count(signup)`` form vacuous."""
     return compile_promql(spark, sf_dir, PQ3_QUERY)
 
 
@@ -3447,7 +3441,8 @@ def pq17_promql_group_left_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     match against the global denominator) and ``group_left`` permits
     many-to-one with the lhs keeping its full label set. The match-key
     list compiles straight to the join key list (t24's mechanism); an
-    empty key list is a 1-row cross join of the aggregated rhs — the
+    empty one leaves the step key alone, which Catalyst folds at an
+    instant into a 1-row cross join of the aggregated rhs — the
     per-series-share-of-total idiom every error-budget dashboard uses.
     The gcd-reduced '/' (both dens 100) leaves value = inc_e/inc_v as
     ONE IEEE division of exact integers, identical on both engines."""
@@ -4889,12 +4884,12 @@ def make_promql_metadata_handler(spark: SparkSession, sf_dir: str):
                 )
             d = _base(spark, sf_dir, sel)
             rows = (
-                d.select("user").distinct()
-                .orderBy("user").limit(limit + 1).collect()
+                d.select(_SERIES).distinct()
+                .orderBy(_SERIES).limit(limit + 1).collect()
             )
             return capped(
                 [
-                    {"__name__": sel.metric, "user": str(r["user"])}
+                    {"__name__": sel.metric, _SERIES: str(r[_SERIES])}
                     for r in rows
                 ]
             )

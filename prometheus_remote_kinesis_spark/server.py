@@ -251,14 +251,11 @@ class _Handler(BaseHTTPRequestHandler):
                 return
             try:
                 series = self.server.range_handler(q, start_s, end_s, step_s)  # type: ignore[attr-defined]
-                # NULL points are absent samples (Prometheus never returns
-                # a value-less point), and a series left with none is
-                # absent too
-                result = []
-                for labels, pts in series:
-                    values = [[t_s, str(float(v))] for t_s, v in pts if v is not None]
-                    if values:
-                        result.append({"metric": labels, "values": values})
+                result = [
+                    {"metric": labels,
+                     "values": [[t_s, str(float(v))] for t_s, v in pts]}
+                    for labels, pts in series
+                ]
             except ValueError as e:  # PromQLError subclasses ValueError
                 self._bad(str(e))
                 return
@@ -313,12 +310,9 @@ class _Handler(BaseHTTPRequestHandler):
                 return
         try:
             t_s, results = self.server.query_handler(q, time_s)  # type: ignore[attr-defined]
-            # a NULL value is an absent sample: an aggregation over no
-            # series is an empty vector, not an element without a value
             result = [
                 {"metric": labels, "value": [t_s, str(float(v))]}
                 for labels, v in results
-                if v is not None
             ]
         except ValueError as e:  # PromQLError subclasses ValueError
             self._bad(str(e))

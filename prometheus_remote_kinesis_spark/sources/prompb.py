@@ -141,27 +141,6 @@ def _parse_sample(buf: bytes) -> tuple[float, int]:
     return value, timestamp
 
 
-def _parse_timeseries(buf: bytes) -> dict:
-    labels: list[dict] = []
-    samples: list[dict] = []
-    pos = 0
-    while pos < len(buf):
-        field, wire, pos = _read_key(buf, pos)
-        if field == 1 and wire == 2:
-            ln, pos = _read_uvarint(buf, pos)
-            n, v = _parse_label(buf[pos : pos + ln])
-            labels.append({"name": n, "value": v})
-            pos += ln
-        elif field == 2 and wire == 2:
-            ln, pos = _read_uvarint(buf, pos)
-            val, ts = _parse_sample(buf[pos : pos + ln])
-            samples.append({"value": val, "timestamp": ts})
-            pos += ln
-        else:
-            pos = _skip(buf, pos, wire)
-    return {"labels": labels, "samples": samples}
-
-
 def _parse_timeseries_span(buf: bytes, pos: int, end: int) -> dict:
     """Span-based TimeSeries parse with inline fast paths for the
     CANONICAL wire layout every real Prometheus sender (and our encoder)

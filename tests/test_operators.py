@@ -2130,7 +2130,9 @@ def test_promql_range_last_point_is_instant(spark):
     whose step divides the span, the LAST grid point evaluates at
     exactly T — so its row must be bit-equal to the instant query.
     Checked for an agg-over-rate, a plain selector, timestamp(), the
-    pair and pick kernels and every gridded terminal."""
+    pair and pick kernels, every gridded terminal, and aggregations
+    over no live series (empty at T in both modes — an instant is a
+    one-step grid, so it has no 0-count or value-less row)."""
     from prometheus_remote_kinesis_spark.promql import (
         compile_promql, compile_promql_range,
     )
@@ -2144,11 +2146,15 @@ def test_promql_range_last_point_is_instant(spark):
     from prometheus_remote_kinesis_spark.sources.tables import corpus_max_ms
 
     sf001 = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
+    # sf0.01 has no click sample in (T − 5m, T], but has some at earlier
+    # grid points
+    empty_at_t = ("count(click)", "max(click)", "quantile(0.5, click)")
     nonempty_last = 0
     for q, sf in (
         ("sum(rate(view[1d]))", SF_SMOKE),
         ("click", sf001),
         ("timestamp(click)", sf001),
+        *((q, sf001) for q in empty_at_t),
         ("count_over_time(error[1d])", SF_SMOKE),
         ("changes(view[1d])", SF_SMOKE),
         ("idelta(view[1d])", SF_SMOKE),
@@ -2178,6 +2184,7 @@ def test_promql_range_last_point_is_instant(spark):
             for r in compile_promql(spark, sf, q).collect()
         }
         assert last == inst, q
+        assert not (inst and q in empty_at_t), q
         nonempty_last += bool(inst)
     assert nonempty_last >= 1  # the equality is exercised on real rows
 

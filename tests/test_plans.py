@@ -569,7 +569,12 @@ def test_promql_range_and_subquery_plan_shapes(spark):
     t_ms); the rate grid computes its lag ONCE (a single Window node),
     not once per grid point, and the instant rate — the same kernel over
     the instant window cut — has that one Window and no expansion;
-    label_replace adds NO join or extra exchange to its input plan."""
+    label_replace adds NO join or extra exchange to its input plan. An
+    instant is a one-step grid whose step key Catalyst drops: an
+    aggregation over a leaf reuses the leaf's one exchange (a leaf
+    grouping by a literal step COLUMN instead plans a second), and
+    instant topk keeps its single TakeOrderedAndProject over one
+    exchange."""
     import re as _re
 
     from prometheus_remote_kinesis_spark.promql import (
@@ -620,13 +625,25 @@ def test_promql_range_and_subquery_plan_shapes(spark):
     assert lr.count("Exchange") == base.count("Exchange")
     assert lr.count("Join") == base.count("Join")
 
+    by_user = compile_promql(
+        spark, SF_SMOKE, "sum by (user) (count_over_time(view[1d]))"
+    )._jdf.queryExecution().executedPlan().toString()
+    assert by_user.count("Exchange") == 1, by_user
+    top = compile_promql(
+        spark, SF_SMOKE, "topk(3, sum_over_time(purchase[30d]))"
+    )._jdf.queryExecution().executedPlan().toString()
+    assert top.count("Exchange") == 1, top
+    assert top.count("TakeOrderedAndProject") == 1, top
+
 
 def test_promql_compile_dataset_creations(spark):
     """Every DataFrame method is a Py4J round trip plus an eager
     re-analysis of the whole plan so far, so the number of Datasets a
     compile creates is its build cost. The leaf kernels shared by
     instant and range queries must create no more of them than the
-    instant-only kernels they replaced (20, 18 and 14 at sf0.1) — at
+    instant-only kernels they replaced (20, 18 and 14 at sf0.1), and
+    the one-step-grid instant no more than before it, except topk's one
+    rank Window (12 for histogram_quantile, 14 → 16 for topk) — at
     100 TB the build runs once per query, but a dashboard issues
     thousands of small queries."""
     import os
@@ -647,6 +664,9 @@ def test_promql_compile_dataset_creations(spark):
         ("sum(increase(click[1d]))", 20),
         ("irate(view[30d])", 18),
         ("click", 14),
+        ("histogram_quantile(0.5, sum by (le) "
+         "(count_over_time(purchase_bucket[30d])))", 10),
+        ("topk(3, sum_over_time(purchase[30d]))", 16),
     ):
         compile_promql(spark, sf, q)  # warm: table plans cached per session
         created[0] = 0

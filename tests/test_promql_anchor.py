@@ -147,11 +147,7 @@ def test_empty_corpus_answers(spark, empty_events_dir):
     assert tables.corpus_max_ms(spark, d) is None
     assert [r["value"] for r in compile_promql(spark, d, "absent(click)").collect()] == [1.0]
     assert compile_promql(spark, d, "click").collect() == []
-    # a global sum over no series is one value-less row, which the HTTP
-    # API leaves out (an absent sample)
-    assert all(
-        r["value"] is None
-        for r in compile_promql(spark, d, "sum(rate(click[5m]))").collect()
-    )
+    # an aggregation over no series has no row
+    assert compile_promql(spark, d, "sum(rate(click[5m]))").collect() == []
     assert _range(spark, d).collect() == []
     assert make_promql_http_handler(spark, d)("click") == (0.0, [])

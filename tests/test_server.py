@@ -941,8 +941,9 @@ def test_snappy_bomb_rejected_on_receive_and_read(tmp_path):
 
 def test_promql_empty_aggregate_over_http(spark, tmp_path):
     """An aggregation over no series answers 200 with an empty result,
-    never a value-less element or a dropped connection: ``sum(rate(...))``
-    at an evaluation time before the corpus's first sample (instant), and
+    never a 0 count, a value-less element, a 500 or a dropped
+    connection: ``sum(rate(...))``, ``count`` and ``quantile`` at an
+    evaluation time before the corpus's first sample (instant), and
     over a range that ends there (matrix)."""
     import json as _json
     from urllib.parse import quote
@@ -961,7 +962,6 @@ def test_promql_empty_aggregate_over_http(spark, tmp_path):
         .collect()[0]["t"]
     )
     t_s = (first_ms - 86_400_000) / 1000.0
-    q = quote("sum(rate(click[5m]))")
     srv = RemoteWriteServer(
         str(tmp_path / "spool"),
         query_handler=make_promql_http_handler(spark, SF_SMOKE),
@@ -970,11 +970,17 @@ def test_promql_empty_aggregate_over_http(spark, tmp_path):
     try:
         host, port = srv.server_address[:2]
         base = f"http://{host}:{port}/api/v1"
-        with urlopen(f"{base}/query?query={q}&time={t_s}", timeout=120) as resp:
-            assert resp.status == 200
-            doc = _json.loads(resp.read())
-        assert doc["status"] == "success"
-        assert doc["data"] == {"resultType": "vector", "result": []}
+        for text in (
+            "sum(rate(click[5m]))", "count(click)", "quantile(0.5, click)",
+        ):
+            q = quote(text)
+            url = f"{base}/query?query={q}&time={t_s}"
+            with urlopen(url, timeout=120) as resp:
+                assert resp.status == 200
+                doc = _json.loads(resp.read())
+            assert doc["status"] == "success"
+            assert doc["data"] == {"resultType": "vector", "result": []}, text
+        q = quote("sum(rate(click[5m]))")
         url = f"{base}/query_range?query={q}&start={t_s - 3600}&end={t_s}&step=15m"
         with urlopen(url, timeout=120) as resp:
             assert resp.status == 200

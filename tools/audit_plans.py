@@ -20,7 +20,9 @@ new offender fails loudly.
 
 Usage: python tools/audit_plans.py          # audit, exit 1 on violations
        python tools/audit_plans.py -v      # also print per-query flags
-Prints ONE JSON summary line last.
+Prints ONE JSON summary line last. Its ``stale_whitelist`` lists the
+whitelisted ``query:flag`` pairs of audited queries whose plan no longer
+trips that flag — entries to delete.
 """
 
 from __future__ import annotations
@@ -43,14 +45,6 @@ WHITELIST: set[tuple[str, str]] = {
     # Exact KNN broadcasts the (small) query side through a nested-loop
     # join by design; the scale paths are l4b (LSH) and l4c (IVF).
     ("l4_knn_join", "nested_loop_join"),
-    # l4s streams the corpus past the SAME broadcast query side (the
-    # stream-static twin of l4's topology); the != condition plans as
-    # BroadcastNestedLoopJoin with the ≤100-row standing-query side
-    # broadcast — per-micro-batch work is O(batch × |Q|), state O(|Q|).
-    ("l4s_knn_top1_stream", "nested_loop_join"),
-    ("l4b_lsh_ann", "nested_loop_join"),  # per-bucket candidate join, tiny sides
-    ("l4c_ivf_ann", "nested_loop_join"),  # probe×centroid, |centroids| rows
-    ("l3_cosine_topk", "nested_loop_join"),  # 1-row query vector broadcast
     # j7 is the reference cross join (region x region, 25 rows); Spark
     # plans the broadcasted cross as BroadcastNestedLoopJoin.
     ("j7_nation_region_cross", "nested_loop_join"),
@@ -230,6 +224,11 @@ def main() -> None:
         n: [f for f in fl if (n, f) not in WHITELIST] for n, fl in results.items()
     }
     violations = {n: fl for n, fl in violations.items() if fl}
+    # whitelist entries of audited queries that matched no flag
+    stale = sorted(
+        f"{n}:{f}" for n, f in WHITELIST
+        if n in queries and n not in errors and f not in results.get(n, [])
+    )
     print(
         json.dumps(
             {
@@ -237,6 +236,7 @@ def main() -> None:
                 "skipped_unplannable": len(errors),
                 "flagged": results,
                 "violations": violations,
+                "stale_whitelist": stale,
             }
         )
     )
