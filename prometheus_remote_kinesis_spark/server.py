@@ -6,11 +6,10 @@ reference handler's exact staging and status codes:
 
 | stage | reference | here | failure → HTTP |
 |---|---|---|---|
-| 1 read | ``ioutil.ReadAll`` (kinesis.go:69) | ``rfile.read(len)`` | 500 (kinesis.go:70-74) |
+| 1 read | ``ioutil.ReadAll`` (kinesis.go:69) | ``rfile.read(len)`` | 500 (kinesis.go:70-74); a bad ``Content-Length`` 400, as net/http |
 | 2 decompress | ``snappy.Decode`` (kinesis.go:76) | ``prompb.snappy_decompress`` (pyarrow's snappy; preamble capped at 22× the body) | 400 (kinesis.go:77-81) |
-| 3 decode | ``proto.Unmarshal`` (kinesis.go:83-84) | ``prompb.parse_write_request`` | 400 (kinesis.go:85-88) |
-| 4 transform | ``parseRecords`` (prometheus.go:10-37) | ``flatten_timeseries`` below | — (infallible) |
-| 5 handoff | ``writeCh <- records`` (kinesis.go:92) | atomic NDJSON file into the spool dir | — |
+| 3 decode + transform | ``proto.Unmarshal`` + ``parseRecords`` (kinesis.go:83-90, prometheus.go:10-37) | ``prompb.decode_write_request``: one pass to record columns | 400 (kinesis.go:85-88) |
+| 4 handoff | ``writeCh <- records`` (kinesis.go:92) | atomic NDJSON file into the spool dir | — |
 
 The spool directory IS the channel: the Structured Streaming relay
 (``streaming.pipeline.read_record_stream``) watches it as a file source,
@@ -19,14 +18,15 @@ giving the same ingest→writer decoupling as the reference's buffered
 ack-before-durable data loss window (SURVEY.md §3.2) is closed: we write
 the records before answering 200.
 
-``flatten_timeseries`` mirrors ``parseRecords`` row-at-a-time in the
-handler thread, exactly like the reference's per-request goroutine. It is
-the only Python copy of the flatten rules: the ``format("prompb")``
-DataSource and ``decode_remote_write`` build their Arrow batches from its
-output (``prompb_datasource.decode_body``). ``tests/test_server.py`` pins
-it against the Spark-side ``ingest.flatten_write_requests`` (which
-flattens already-nested Spark rows) on the same fixtures so the two can
-never diverge silently.
+Both spool modes run the same decoder as the ``format("prompb")``
+DataSource and the relay (``prompb_datasource.decode_body``). The NDJSON
+mode writes its columns as record lines; the raw mode (``raw=True``)
+drops them and spools the original body, so whatever the handler accepts,
+the executors decode. ``tests/test_server.py`` pins the decoder's flatten
+against the Spark-side ``ingest.flatten_write_requests`` (which flattens
+already-nested Spark rows) on the same fixtures so the two can never
+diverge silently. ``flatten_timeseries`` applies the same flatten to
+``parse_write_request``-shaped series.
 
 Beyond the reference's write-only surface, the same server optionally
 serves the data BACK: ``POST /read`` (Prometheus remote_read, r10) and
@@ -43,43 +43,40 @@ import math
 import os
 import threading
 import uuid
+from collections.abc import Iterator
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from prometheus_remote_kinesis_spark.sources.prompb import (
+    Columns,
+    decode_write_request,
     encode_read_response,
+    flatten_series,
     parse_read_request,
-    parse_write_request,
+    parse_write_request,  # noqa: F401 — perfbench's handler trace wraps it here
     snappy_compress,
     snappy_decompress,
 )
 
 
 def flatten_timeseries(timeseries: list[dict]) -> list[dict]:
-    """``parseRecords`` (prometheus.go:10-37), row-at-a-time.
+    """``parseRecords`` (prometheus.go:10-37) over
+    :func:`parse_write_request`-shaped series: the record dicts the NDJSON
+    spool writes, through the decoder's own flatten
+    (``prompb.flatten_series``)."""
+    return list(_records(flatten_series(
+        (
+            [(lbl["name"], lbl["value"]) for lbl in ts["labels"]],
+            [(smp["value"], smp["timestamp"]) for smp in ts["samples"]],
+        )
+        for ts in timeseries
+    )))
 
-    - labels list → dict (prometheus.go:14-17)
-    - name = labels["__name__"] or "" (prometheus.go:19)
-    - zero samples → one labels-only record, time=0, value None
-      (prometheus.go:20-23)
-    - one record per sample, full label map copied (prometheus.go:25-34)
-    - stale-marker NaN → None (prometheus.go:28-32)
-    """
-    records: list[dict] = []
-    for ts in timeseries:
-        labels = {lbl["name"]: lbl["value"] for lbl in ts["labels"]}
-        name = labels.get("__name__", "")
-        samples = ts["samples"]
-        if not samples:
-            records.append({"name": name, "time": 0, "value": None, "labels": labels})
-            continue
-        for s in samples:
-            value = s["value"]
-            if value is not None and math.isnan(value):
-                value = None
-            records.append(
-                {"name": name, "time": s["timestamp"], "value": value, "labels": labels}
-            )
-    return records
+
+def _records(columns: Columns) -> Iterator[dict]:
+    """Record columns → ``{"name", "time", "value", "labels"}`` dicts, the
+    field order of record.go:8-14."""
+    for name, time, value, labels in zip(*columns):
+        yield {"name": name, "time": time, "value": value, "labels": labels}
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -341,8 +338,7 @@ class _Handler(BaseHTTPRequestHandler):
             # URL, the body, or both — body wins per key (the spec lets
             # either carry them; merging matches Prometheus's ParseForm)
             try:
-                length = int(self.headers.get("Content-Length", "0"))
-                body = self.rfile.read(length).decode("utf-8")
+                body = self._read_body().decode("utf-8")
             except Exception:
                 self._bad("unreadable request body")
                 return
@@ -356,19 +352,15 @@ class _Handler(BaseHTTPRequestHandler):
             # BACK to a `remote_read` client, prompb.py read codecs):
             # snappy(ReadRequest) → handler(queries) → snappy(ReadResponse)
             try:
-                length = int(self.headers.get("Content-Length", "0"))
-                body = self.rfile.read(length)
-                queries = parse_read_request(snappy_decompress(body))
+                queries = parse_read_request(snappy_decompress(self._read_body()))
             except Exception:
-                self.send_response(400)
-                self.end_headers()
+                self._status(400)
                 return
             try:
                 results = self.server.read_handler(queries)  # type: ignore[attr-defined]
                 payload = snappy_compress(encode_read_response(results))
             except Exception:
-                self.send_response(500)
-                self.end_headers()
+                self._status(500)
                 return
             self.send_response(200)
             self.send_header("Content-Type", "application/x-protobuf")
@@ -378,41 +370,46 @@ class _Handler(BaseHTTPRequestHandler):
             self.wfile.write(payload)
             return
         if self.path != "/receive":  # route, main.go:61
-            self.send_response(404)
-            self.end_headers()
+            self._status(404)
             return
         try:
-            length = int(self.headers.get("Content-Length", "0"))
-            body = self.rfile.read(length)
+            body = self._read_body()
+        except ValueError:
+            self._status(400)  # bad Content-Length: net/http answers before the handler
+            return
         except Exception:
-            self.send_response(500)  # read failure, kinesis.go:70-74
-            self.end_headers()
+            self._status(500)  # read failure, kinesis.go:70-74
             return
         try:
             decompressed = snappy_decompress(body)  # kinesis.go:76
         except Exception:
-            self.send_response(400)  # kinesis.go:77-81
-            self.end_headers()
+            self._status(400)  # kinesis.go:77-81
             return
         try:
-            timeseries = parse_write_request(decompressed)  # kinesis.go:83-84
+            columns = decode_write_request(decompressed)  # kinesis.go:83-90
         except Exception:
-            self.send_response(400)  # kinesis.go:85-88
-            self.end_headers()
+            self._status(400)  # kinesis.go:85-88
             return
         if getattr(self.server, "raw", False):
-            # Raw mode: the handler only VALIDATES (status-code parity with
-            # kinesis.go:76-88) and persists the original snappy body; the
-            # flatten + encode work moves into Spark executors via
-            # read_prompb_record_stream — the handler does O(bytes) work
-            # per request instead of O(samples).
+            # Raw mode: the decode above only chooses the status; the
+            # original snappy body is spooled and the executors decode it
+            # again with the same decoder (read_prompb_record_stream).
             self.server.spool_raw(body)  # type: ignore[attr-defined]
-            self.send_response(200)
-            self.end_headers()
-            return
-        records = flatten_timeseries(timeseries)  # kinesis.go:90
-        self.server.spool(records)  # type: ignore[attr-defined]  # kinesis.go:92
-        self.send_response(200)  # implicit 200, kinesis.go:93
+        else:
+            self.server.spool(columns)  # type: ignore[attr-defined]  # kinesis.go:92
+        self._status(200)  # implicit 200, kinesis.go:93
+
+    def _read_body(self) -> bytes:
+        """The request body. A negative or non-numeric Content-Length raises
+        ``ValueError`` before anything is read (``rfile.read(-1)`` would
+        read to EOF); Go's net/http answers such a request 400."""
+        length = self.headers.get("Content-Length", "0").strip()
+        if not (length.isascii() and length.isdigit()):
+            raise ValueError(f"bad Content-Length {length!r}")
+        return self.rfile.read(int(length))
+
+    def _status(self, code: int) -> None:
+        self.send_response(code)
         self.end_headers()
 
 
@@ -465,15 +462,15 @@ class RemoteWriteServer(ThreadingHTTPServer):
         os.makedirs(spool_dir, exist_ok=True)
         self._thread: threading.Thread | None = None
 
-    def spool(self, records: list[dict]) -> None:
-        if not records:
+    def spool(self, columns: Columns) -> None:
+        if not columns[0]:
             return
         # Wire format = sinks.encode_ndjson: one JSON object per line,
         # explicit null value (record.go:21-27), name/time/value/labels
         # field order (record.go:8-14).
         lines = "".join(
             json.dumps(r, ensure_ascii=False, separators=(",", ":")) + "\n"
-            for r in records
+            for r in _records(columns)
         )
         tmp = os.path.join(self.spool_dir, f".{uuid.uuid4().hex}.tmp")
         final = os.path.join(self.spool_dir, f"{uuid.uuid4().hex}.json")

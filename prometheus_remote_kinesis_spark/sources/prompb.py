@@ -12,6 +12,14 @@ specification:
     Label        { string name = 1; string value = 2; }
     Sample       { double value = 1; int64 timestamp = 2; }
 
+``decode_write_request`` is the one WriteRequest decoder: one walk of the
+wire (``_timeseries``) feeding the ``parseRecords`` flatten
+(``flatten_series``, prometheus.go:10-37) straight into the four record
+columns. A length or fixed-width field that runs past its enclosing
+message raises ``ValueError``, as Go's ``proto.Unmarshal`` fails with
+``io.ErrUnexpectedEOF``. ``parse_write_request`` is the nested form of
+the same walk.
+
 No protobuf runtime dependency; snappy comes from pyarrow, which every
 Spark Arrow path already needs. Encoders exist for test fixtures and the
 ``/read`` responses.
@@ -20,15 +28,22 @@ Spark Arrow path already needs. Encoders exist for test fixtures and the
 from __future__ import annotations
 
 import struct
+from collections.abc import Iterable, Iterator
 
 import pyarrow as pa
 
 # --------------------------- snappy block format ---------------------------
 
 
-def _read_uvarint(buf: bytes, pos: int) -> tuple[int, int]:
+def _read_uvarint(buf: bytes, pos: int, end: int | None = None) -> tuple[int, int]:
+    """The varint at ``pos``; a varint running past ``end`` (default: the
+    buffer's end) or past 64 bits raises ``ValueError``."""
+    if end is None:
+        end = len(buf)
     result = shift = 0
     while True:
+        if pos >= end:
+            raise ValueError("truncated varint")
         b = buf[pos]
         pos += 1
         result |= (b & 0x7F) << shift
@@ -62,10 +77,7 @@ def snappy_decompress(data: bytes) -> bytes:
     """Block-format snappy decode (the format ``snappy.Decode`` consumes,
     kinesis.go:76): uvarint decompressed-length preamble, then pyarrow's
     snappy codec. Every failure raises ``ValueError``."""
-    try:
-        expected, _ = _read_uvarint(data, 0)
-    except IndexError:
-        raise ValueError("snappy: truncated length preamble") from None
+    expected, _ = _read_uvarint(data, 0)
     if expected > SNAPPY_MAX_EXPANSION * len(data):
         raise ValueError(
             f"snappy: preamble declares {expected} bytes for a {len(data)}-byte block"
@@ -86,199 +98,181 @@ def snappy_compress(data: bytes) -> bytes:
 # --------------------------- protobuf wire format --------------------------
 
 
-def _read_key(buf: bytes, pos: int) -> tuple[int, int, int]:
-    key, pos = _read_uvarint(buf, pos)
+def _read_key(buf: bytes, pos: int, end: int | None = None) -> tuple[int, int, int]:
+    key, pos = _read_uvarint(buf, pos, end)
     return key >> 3, key & 7, pos
 
 
-def _skip(buf: bytes, pos: int, wire: int) -> int:
+def _skip(buf: bytes, pos: int, wire: int, end: int | None = None) -> int:
+    if end is None:
+        end = len(buf)
     if wire == 0:
-        _, pos = _read_uvarint(buf, pos)
+        _, pos = _read_uvarint(buf, pos, end)
     elif wire == 1:
         pos += 8
     elif wire == 2:
-        ln, pos = _read_uvarint(buf, pos)
+        ln, pos = _read_uvarint(buf, pos, end)
         pos += ln
     elif wire == 5:
         pos += 4
     else:
         raise ValueError(f"unsupported wire type {wire}")
+    if pos > end:
+        raise ValueError("field runs past its message")
     return pos
 
 
-def _parse_label(buf: bytes) -> tuple[str, str]:
+def _read_span(buf: bytes, pos: int, end: int) -> tuple[int, int]:
+    """A length-delimited field's payload ``[pos, stop)``; a length that
+    runs past ``end`` raises ``ValueError`` (Go's ``io.ErrUnexpectedEOF``)."""
+    ln, pos = _read_uvarint(buf, pos, end)
+    if pos + ln > end:
+        raise ValueError("length runs past its message")
+    return pos, pos + ln
+
+
+_DOUBLE = struct.Struct("<d")
+# The record columns (name, time, value, labels) of RECORD_SCHEMA.
+Columns = tuple[list[str], list[int], list[float | None], list[dict[str, str]]]
+
+
+def _label(buf: bytes, pos: int, end: int) -> tuple[str, str]:
     name = value = ""
-    pos = 0
-    while pos < len(buf):
-        field, wire, pos = _read_key(buf, pos)
-        if field == 1 and wire == 2:
-            ln, pos = _read_uvarint(buf, pos)
-            name = buf[pos : pos + ln].decode("utf-8")
-            pos += ln
-        elif field == 2 and wire == 2:
-            ln, pos = _read_uvarint(buf, pos)
-            value = buf[pos : pos + ln].decode("utf-8")
-            pos += ln
+    while pos < end:
+        field, wire, pos = _read_key(buf, pos, end)
+        if field in (1, 2) and wire == 2:
+            start, pos = _read_span(buf, pos, end)
+            if field == 1:
+                name = buf[start:pos].decode("utf-8")
+            else:
+                value = buf[start:pos].decode("utf-8")
         else:
-            pos = _skip(buf, pos, wire)
+            pos = _skip(buf, pos, wire, end)
     return name, value
 
 
-def _parse_sample(buf: bytes) -> tuple[float, int]:
+def _sample(buf: bytes, pos: int, end: int) -> tuple[float, int]:
     value, timestamp = 0.0, 0
-    pos = 0
-    while pos < len(buf):
-        field, wire, pos = _read_key(buf, pos)
+    while pos < end:
+        field, wire, pos = _read_key(buf, pos, end)
         if field == 1 and wire == 1:
-            value = struct.unpack("<d", buf[pos : pos + 8])[0]
+            if pos + 8 > end:
+                raise ValueError("double runs past its message")
+            value = _DOUBLE.unpack_from(buf, pos)[0]
             pos += 8
         elif field == 2 and wire == 0:
-            raw, pos = _read_uvarint(buf, pos)
+            raw, pos = _read_uvarint(buf, pos, end)
             # int64: 64-bit two's complement varint
             timestamp = raw - (1 << 64) if raw >= 1 << 63 else raw
         else:
-            pos = _skip(buf, pos, wire)
+            pos = _skip(buf, pos, wire, end)
     return value, timestamp
 
 
-def _parse_timeseries_span(buf: bytes, pos: int, end: int) -> dict:
-    """Span-based TimeSeries parse with inline fast paths for the
-    CANONICAL wire layout every real Prometheus sender (and our encoder)
-    produces — single-byte tags/lengths, fields in declaration order:
-    ``Label = 0x0A <n> name 0x12 <n> value``; ``Sample = 0x09 <8-byte
-    double> 0x10 <ts varint>``. Anything else (multi-byte tags, >127-byte
-    strings, reordered or unknown fields) falls back to the general
-    helpers on the submessage, so behavior is identical — only the
-    per-message function-call/slice overhead is gone. Round-5 profiling:
-    this is the relay's per-core hot loop (~17 µs/record before, ~10 µs
-    after on the realistic single-sample/4-label shape — the practical
-    pure-Python floor: remaining time is the span loop's byte handling
-    itself, and numpy vectorization loses on the ≤16-byte submessages
-    prompb actually has, where array setup dominates)."""
-    labels: list[dict] = []
-    samples: list[dict] = []
-    while pos < end:
-        tag = buf[pos]
-        if tag == 0x0A and pos + 1 < end:  # Label submessage
-            ln = buf[pos + 1]
-            if ln < 0x80:
-                pos += 2
-            else:
-                ln, pos = _read_uvarint(buf, pos + 1)
-            lend = pos + ln
-            name = value = ""
-            p = pos
-            while p < lend:
-                t2 = buf[p]
-                # fast only when the WHOLE string lies inside the declared
-                # submessage span — a length claiming bytes past `lend`
-                # (malformed wire) must reparse through the slice-bounded
-                # general path so truncation behavior matches it exactly
+def _timeseries(buf: bytes) -> Iterator[tuple[list, list]]:
+    """The one walk of the ``WriteRequest`` wire: per TimeSeries, its
+    ``(name, value)`` label pairs and ``(value, timestamp)`` samples in wire
+    order. Unknown fields are skipped; a length or fixed-width field that
+    runs past its enclosing message raises ``ValueError``.
+
+    One fast path: the canonical Label every Prometheus sender (and our
+    encoder) writes, ``0A L 0A n name 12 m value`` with single-byte
+    lengths that fill the span exactly, is sliced without the general
+    key/varint helpers. Any other Label (long strings, reordered or
+    unknown fields, overlong keys) and every Sample take the general path."""
+    n = len(buf)
+    pos = 0
+    while pos < n:
+        field, wire, pos = _read_key(buf, pos, n)
+        if field != 1 or wire != 2:
+            pos = _skip(buf, pos, wire, n)
+            continue
+        pos, end = _read_span(buf, pos, n)
+        labels: list[tuple[str, str]] = []
+        samples: list[tuple[float, int]] = []
+        while pos < end:
+            # canonical Label: 0A L 0A n name 12 m value, stop = end of Label
+            if (
+                buf[pos] == 0x0A
+                and pos + 3 < end
+                and buf[pos + 1] < 0x80
+                and buf[pos + 2] == 0x0A
+            ):
+                stop = pos + 2 + buf[pos + 1]
+                q = pos + 4 + buf[pos + 3]  # a multi-byte n lands q past stop
                 if (
-                    t2 == 0x0A
-                    and p + 1 < lend
-                    and buf[p + 1] < 0x80
-                    and p + 2 + buf[p + 1] <= lend
+                    stop <= end
+                    and q + 2 <= stop
+                    and buf[q] == 0x12
+                    and buf[q + 1] == stop - q - 2
                 ):
-                    n2 = buf[p + 1]
-                    name = buf[p + 2 : p + 2 + n2].decode("utf-8")
-                    p += 2 + n2
-                elif (
-                    t2 == 0x12
-                    and p + 1 < lend
-                    and buf[p + 1] < 0x80
-                    and p + 2 + buf[p + 1] <= lend
-                ):
-                    n2 = buf[p + 1]
-                    value = buf[p + 2 : p + 2 + n2].decode("utf-8")
-                    p += 2 + n2
-                else:  # long/overflowing string / unknown field → reparse
-                    name, value = _parse_label(buf[pos:lend])
-                    break
-            labels.append({"name": name, "value": value})
-            pos = lend
-        elif tag == 0x12 and pos + 1 < end:  # Sample submessage
-            ln = buf[pos + 1]
-            if ln < 0x80:
-                pos += 2
-            else:
-                ln, pos = _read_uvarint(buf, pos + 1)
-            send = pos + ln
-            if ln >= 10 and buf[pos] == 0x09 and buf[pos + 9] == 0x10:
-                v = struct.unpack_from("<d", buf, pos + 1)[0]
-                p = pos + 10
-                raw = shift = 0
-                ok = False
-                # bounded exactly like _read_uvarint: never read past the
-                # declared span and never accept >64-bit varints (the
-                # general path raises on both; fast path defers to it)
-                while p < send and shift <= 63:
-                    b = buf[p]
-                    p += 1
-                    raw |= (b & 0x7F) << shift
-                    if not b & 0x80:
-                        ok = True
-                        break
-                    shift += 7
-                if ok and p == send:
-                    samples.append(
-                        {
-                            "value": v,
-                            "timestamp": raw - (1 << 64) if raw >= 1 << 63 else raw,
-                        }
-                    )
-                    pos = send
+                    name = buf[pos + 4 : q].decode("utf-8")
+                    labels.append((name, buf[q + 2 : stop].decode("utf-8")))
+                    pos = stop
                     continue
-            v, t = _parse_sample(buf[pos:send])
-            samples.append({"value": v, "timestamp": t})
-            pos = send
-        else:  # non-canonical key encoding → general path (incl. overlong
-            # varint keys, which still decode to field 1/2 wire 2)
-            field, wire, pos = _read_key(buf, pos)
-            if field == 1 and wire == 2:
-                ln, pos = _read_uvarint(buf, pos)
-                labels.append(dict(zip(("name", "value"), _parse_label(buf[pos : pos + ln]))))
-                pos += ln
-            elif field == 2 and wire == 2:
-                ln, pos = _read_uvarint(buf, pos)
-                v, t = _parse_sample(buf[pos : pos + ln])
-                samples.append({"value": v, "timestamp": t})
-                pos += ln
+            field, wire, pos = _read_key(buf, pos, end)
+            if field in (1, 2) and wire == 2:
+                start, pos = _read_span(buf, pos, end)
+                if field == 1:
+                    labels.append(_label(buf, start, pos))
+                else:
+                    samples.append(_sample(buf, start, pos))
             else:
-                pos = _skip(buf, pos, wire)
-    return {"labels": labels, "samples": samples}
+                pos = _skip(buf, pos, wire, end)
+        yield labels, samples
+
+
+def flatten_series(series: Iterable[tuple[list, list]]) -> Columns:
+    """``parseRecords`` (prometheus.go:10-37): ``(label pairs, samples)``
+    per series → the record columns ``(name, time, value, labels)``.
+
+    - label pairs → one dict per series, shared by its rows (prometheus.go:14-17)
+    - name = labels["__name__"] or "" (prometheus.go:19)
+    - zero samples → one labels-only row, time=0, value None (prometheus.go:20-23)
+    - one row per sample (prometheus.go:25-34)
+    - stale-marker NaN → None (prometheus.go:28-32)
+    """
+    names: list[str] = []
+    times: list[int] = []
+    values: list[float | None] = []
+    label_maps: list[dict[str, str]] = []
+    for pairs, samples in series:
+        labels = dict(pairs)
+        name = labels.get("__name__", "")
+        for value, time in samples or ((None, 0),):
+            names.append(name)
+            times.append(time)
+            values.append(value if value == value else None)  # NaN != NaN
+            label_maps.append(labels)
+    return names, times, values, label_maps
+
+
+def decode_write_request(buf: bytes) -> Columns:
+    """protobuf ``WriteRequest`` bytes → the record columns ``(name, time,
+    value, labels)`` in one pass: ``proto.Unmarshal`` then ``parseRecords``
+    (kinesis.go:83-90). Every Python ingest path decodes through this: both
+    ``/receive`` spool modes, the ``format("prompb")`` DataSource and the
+    relay (``prompb_datasource.decode_body``). Malformed wire raises
+    ``ValueError``.
+
+    A deployment with protobuf available JVM-side could use Spark's
+    ``from_protobuf()`` (spark-protobuf) instead; this pure-Python decoder
+    exists because the runtime ships no protobuf library."""
+    return flatten_series(_timeseries(buf))
 
 
 def parse_write_request(buf: bytes) -> list[dict]:
     """protobuf ``WriteRequest`` bytes → list of timeseries dicts shaped
-    exactly like ``schema.WRITE_REQUEST_SCHEMA``'s ``timeseries`` element.
-
-    A real deployment with protobuf available JVM-side would use Spark's
-    public ``from_protobuf()`` (spark-protobuf) and decode inside codegen;
-    this pure-Python path exists because the container has no protobuf
-    runtime, and after the r5 fast-path work it is at its practical
-    Python floor (see ``_parse_timeseries_span``)."""
-    out: list[dict] = []
-    pos, n = 0, len(buf)
-    while pos < n:
-        tag = buf[pos]
-        if tag == 0x0A and pos + 1 < n:  # field 1 wire 2: timeseries
-            ln = buf[pos + 1]
-            if ln < 0x80:
-                pos += 2
-            else:
-                ln, pos = _read_uvarint(buf, pos + 1)
-            out.append(_parse_timeseries_span(buf, pos, pos + ln))
-            pos += ln
-        else:
-            field, wire, pos = _read_key(buf, pos)
-            if field == 1 and wire == 2:  # overlong-varint key encoding
-                ln, pos = _read_uvarint(buf, pos)
-                out.append(_parse_timeseries_span(buf, pos, pos + ln))
-                pos += ln
-            else:
-                pos = _skip(buf, pos, wire)
-    return out
+    exactly like ``schema.WRITE_REQUEST_SCHEMA``'s ``timeseries`` element,
+    NaN kept as NaN: the nested form of the same wire walk that
+    :func:`decode_write_request` flattens."""
+    return [
+        {
+            "labels": [{"name": name, "value": value} for name, value in labels],
+            "samples": [{"value": value, "timestamp": t} for value, t in samples],
+        }
+        for labels, samples in _timeseries(buf)
+    ]
 
 
 # ------------------------------ test encoders ------------------------------

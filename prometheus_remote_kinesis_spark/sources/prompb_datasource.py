@@ -5,13 +5,14 @@ snappy-compressed protobuf ``WriteRequest`` spool files — the exact bytes
 the reference receives per HTTP POST (kinesis.go:68-93) and our
 ``server.py`` endpoint spools — and produces RECORD_SCHEMA rows with the
 reference's flatten semantics (prometheus.go:10-37, implemented once in
-``server.flatten_timeseries``). ``df.write.format("prompb")`` is the
+``prompb.decode_write_request``). ``df.write.format("prompb")`` is the
 archival twin that writes such files.
 
 The batch reader makes one InputPartition per spool file, and the decode
-(``decode_body``: pyarrow's snappy, the prompb parser, the flatten) runs on
-executors — the driver never touches payload bytes. ``decode_body`` is
-the one per-body decoder: the streaming relay
+(``decode_body``: pyarrow's snappy, then ``prompb.decode_write_request``'s
+record columns as one Arrow batch) runs on executors — the driver never
+touches payload bytes. ``decode_body`` is the one per-body decoder, the
+same call the ``/receive`` handler runs: the streaming relay
 (``streaming.pipeline.read_prompb_record_stream``) reads the same spool
 through Spark's own ``binaryFile`` file source, which packs many small
 files into few tasks, and decodes with it through ``mapInArrow``. There
@@ -31,9 +32,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from prometheus_remote_kinesis_spark.server import flatten_timeseries
 from prometheus_remote_kinesis_spark.sources.prompb import (
-    parse_write_request,
+    decode_write_request,
     snappy_decompress,
 )
 
@@ -52,8 +52,9 @@ def decode_body(body: bytes) -> pa.RecordBatch:
     """One remote-write body → one RECORD_DDL ``pyarrow.RecordBatch``.
     Yielding RecordBatch (supported by the Python DataSource API and
     ``mapInArrow``) skips Spark's per-row tuple→Arrow conversion."""
-    return pa.RecordBatch.from_pylist(
-        flatten_timeseries(parse_write_request(snappy_decompress(body))),
+    columns = decode_write_request(snappy_decompress(body))
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(columns, RECORD_ARROW_SCHEMA)],
         schema=RECORD_ARROW_SCHEMA,
     )
 

@@ -3,8 +3,10 @@
 ``decode_remote_write`` turns a DataFrame of raw POST bodies (binary
 snappy+protobuf, the exact bytes of ``kinesis.go:69``) into RECORD_SCHEMA
 rows through the same per-body decoder as the ``format("prompb")``
-DataSource (``prompb_datasource.decode_body``), as an Arrow-batched
-``mapInArrow`` (SURVEY.md §2.10 U1). The raw-spool relay
+DataSource (``prompb_datasource.decode_body``, built on the one
+WriteRequest decoder ``prompb.decode_write_request`` that the
+``/receive`` handler also runs), as an Arrow-batched ``mapInArrow``
+(SURVEY.md §2.10 U1). The raw-spool relay
 (``streaming.pipeline.read_prompb_record_stream``) is this stage over
 Spark's ``binaryFile`` stream.
 

@@ -8,7 +8,8 @@ Reference dataflow (kinesis.go / firehose.go):
 
 Spark mapping:
 
-    readStream(source) → flatten_write_requests → writeStream
+    readStream(spool) → decode_remote_write (raw bodies; an NDJSON spool
+      holds records already) → writeStream
       .trigger(processingTime='10 seconds')         (T1: main.go:75 default)
       .foreachBatch(chunked put: ≤500 / ≤4.5e6)     (T2: kinesis.go:22-23)
       .option('checkpointLocation', ...)            (T4: supersedes the
@@ -42,7 +43,6 @@ from prometheus_remote_kinesis_spark.schema import (
     MAX_PUT_BYTES,
     MAX_PUT_ENTRIES,
     RECORD_SCHEMA,
-    WRITE_REQUEST_SCHEMA,
 )
 from prometheus_remote_kinesis_spark.sinks import PutRecordsFn, foreach_batch_writer
 
@@ -66,8 +66,9 @@ def read_prompb_record_stream(
     spark: SparkSession, path: str, parallel: bool = True
 ) -> DataFrame:
     """Streaming record source over a RAW remote-write spool (snappy prompb
-    bodies, ``RemoteWriteServer(raw=True)``), so the HTTP handler stays
-    O(bytes) and the snappy+protobuf+flatten cost runs where the cores are.
+    bodies, ``RemoteWriteServer(raw=True)``): the handler decodes each body
+    only to choose its status and writes no records, and the records are
+    built here, where the cores are.
 
     Spark's own ``binaryFile`` streaming source lists the spool's new
     ``*.pb.sz`` files (dot-prefixed tmp files are hidden from it) and packs
@@ -97,12 +98,6 @@ def read_prompb_record_stream(
         .load(path)
     )
     return decode_remote_write(bodies.select(F.col("content").alias("body")))
-
-
-def read_write_request_stream(spark: SparkSession, path: str) -> DataFrame:
-    """Streaming source of WriteRequest-shaped JSON (the decoded form of
-    the remote-write POST body, kinesis.go:83-90)."""
-    return spark.readStream.schema(WRITE_REQUEST_SCHEMA).json(path)
 
 
 def relay(

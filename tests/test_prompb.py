@@ -15,6 +15,7 @@ from hypothesis import strategies as st
 from prometheus_remote_kinesis_spark.sources.prompb import (
     SNAPPY_MAX_EXPANSION,
     _write_uvarint,
+    decode_write_request,
     encode_remote_write_body,
     encode_write_request,
     parse_write_request,
@@ -191,10 +192,11 @@ def test_decode_remote_write_end_to_end(spark):
 )
 @settings(max_examples=100, deadline=None)
 def test_prompb_parse_fuzz_roundtrip(ts):
-    """Property fuzz for the r5 fast-path parser: encode∘parse is the
-    identity over arbitrary label strings (including >127-byte values,
-    which overflow the single-byte-length fast path and must fall back to
-    the general submessage parse), full-range int64 timestamps (negative
+    """Property fuzz for the decoder: encode∘parse is the identity, and
+    encode∘decode yields the records the prometheus.go:10-37 rules give
+    for the fixture, over arbitrary label strings (including >127-byte
+    values, which overflow the single-byte-length Label fast path and must
+    fall back to the general path), full-range int64 timestamps (negative
     → 10-byte varints), ±inf values, and empty series. Guards the
     fast/fallback boundary — the exact seam where an off-by-one would
     silently corrupt records."""
@@ -208,35 +210,101 @@ def test_prompb_parse_fuzz_roundtrip(ts):
         assert got["samples"] == [
             {"value": v, "timestamp": t} for v, t in samples
         ]
+    assert list(zip(*decode_write_request(body))) == _records(ts)
 
 
-def test_parse_malformed_wire_matches_slice_bounded_semantics():
-    """r5 code-review repro: the fast-path parser must not read past a
-    declared submessage span nor accept varints the general path rejects.
+def _records(ts) -> list[tuple]:
+    """``parseRecords`` (prometheus.go:10-37) over an encoder fixture: the
+    name is ``__name__`` or "", a series without samples gives one row
+    with time 0 and no value, NaN gives no value."""
+    out = []
+    for labels, samples in ts:
+        name = labels.get("__name__", "")
+        if not samples:
+            out.append((name, 0, None, labels))
+        for v, t in samples:
+            out.append((name, t, None if math.isnan(v) else v, labels))
+    return out
 
-    (a) A Label whose inner name length claims bytes beyond the label
-    span: the slice-bounded general parse truncates the name at the span
-    (here 'ab'); the fast path must yield the same, never bleeding bytes
-    from the following submessage.
-    (b) A Sample whose timestamp varint is 11 bytes (>64-bit): the
-    general path raises ValueError('uvarint too long'); the fast path
-    must defer to it, not silently accept a >int64 value."""
-    import pytest
 
-    # (a) TimeSeries = Label(span 4: 0x0A 0x06 'ab' — name claims 6 bytes)
-    #     followed by a valid Sample
-    label = bytes([0x0A, 0x06]) + b"ab"
-    sample = bytes([0x09]) + struct.pack("<d", 2.0) + bytes([0x10, 0x09])
-    ts_msg = bytes([0x0A, len(label)]) + label + bytes([0x12, len(sample)]) + sample
-    body = bytes([0x0A, len(ts_msg)]) + ts_msg
-    parsed = parse_write_request(body)
-    assert parsed[0]["labels"] == [{"name": "ab", "value": ""}]
-    assert parsed[0]["samples"] == [{"value": 2.0, "timestamp": 9}]
+def _ts(*fields: bytes) -> bytes:
+    """A one-TimeSeries WriteRequest around the given TimeSeries fields."""
+    ts_msg = b"".join(fields)
+    return bytes([0x0A, len(ts_msg)]) + ts_msg
 
-    # (b) overlong (11-byte) timestamp varint → ValueError, same as the
-    #     pre-fast-path parser
-    bad_sample = bytes([0x09]) + struct.pack("<d", 1.0) + bytes([0x10]) + b"\x80" * 10 + b"\x01"
-    ts_msg2 = bytes([0x12, len(bad_sample)]) + bad_sample
-    body2 = bytes([0x0A, len(ts_msg2)]) + ts_msg2
-    with pytest.raises(ValueError, match="uvarint too long"):
-        parse_write_request(body2)
+
+_SAMPLE = bytes([0x09]) + struct.pack("<d", 2.0) + bytes([0x10, 0x09])
+_GOOD = _ts(bytes([0x12, len(_SAMPLE)]) + _SAMPLE)
+
+
+@pytest.mark.parametrize(
+    "body",
+    [
+        # a Label whose name length claims 6 bytes of a 4-byte Label span
+        _ts(bytes([0x0A, 0x04, 0x0A, 0x06]) + b"ab", bytes([0x12, len(_SAMPLE)]) + _SAMPLE),
+        # a Label whose value length claims 9 bytes with only 2 present
+        _ts(bytes([0x0A, 0x07, 0x0A, 0x01]) + b"a" + bytes([0x12, 0x09]) + b"xy"),
+        # an 11-byte (>64-bit) timestamp varint
+        _ts(bytes([0x12, 0x15, 0x09]) + struct.pack("<d", 1.0) + bytes([0x10]) + b"\x80" * 10 + b"\x01"),
+        # a fixed64 unknown field in a Sample cut to 2 of its 8 bytes
+        _ts(bytes([0x12, len(_SAMPLE) + 3]) + _SAMPLE + bytes([0x19, 0x01, 0x02])),
+        # a top-level unknown field claiming 80 bytes, none present
+        _GOOD + bytes([0x1A, 0x50]),
+        # a TimeSeries claiming more bytes than the body holds
+        _GOOD[:-1],
+    ],
+    ids=["label-name-past-span", "label-value-past-span", "varint-too-long",
+         "sample-fixed64-cut", "top-level-field-cut", "timeseries-cut"],
+)
+def test_parse_malformed_wire_raises(body):
+    """A length or fixed-width field that runs past its enclosing message
+    raises ``ValueError`` — Go's ``proto.Unmarshal`` returns
+    ``io.ErrUnexpectedEOF`` there and the reference answers 400
+    (kinesis.go:83-88) — and so does a varint longer than 64 bits."""
+    assert parse_write_request(_GOOD) == [
+        {"labels": [], "samples": [{"value": 2.0, "timestamp": 9}]}
+    ]
+    with pytest.raises(ValueError):
+        decode_write_request(body)
+    with pytest.raises(ValueError):
+        parse_write_request(body)
+
+
+def test_non_canonical_wire_decodes_like_canonical():
+    """The wire a conformant encoder may send besides the canonical
+    layout: overlong-varint keys (``8A 00`` for ``0A``), a Label with its
+    value before its name, and unknown fields inside TimeSeries, Label and
+    Sample. It decodes to the same records as its canonical twin."""
+    canonical = encode_write_request(
+        [({"__name__": "up", "job": "api"}, [(1.5, 1000), (float("nan"), -2)])]
+    )
+    label_up = bytes([0x8A, 0x00, 0x08]) + b"__name__" + bytes([0x12, 0x02]) + b"up"
+    label_job = (
+        bytes([0x12, 0x03]) + b"api"  # value first
+        + bytes([0x18, 0x07])  # unknown varint field 3
+        + bytes([0x0A, 0x03]) + b"job"
+    )
+    sample1 = (
+        bytes([0x10, 0xE8, 0x07])  # timestamp before value
+        + bytes([0x1D]) + b"\x00" * 4  # unknown fixed32 field 3
+        + bytes([0x89, 0x00]) + struct.pack("<d", 1.5)  # overlong key of 09
+    )
+    sample2 = bytes([0x09]) + struct.pack("<d", float("nan")) + bytes([0x10]) + (
+        b"\xfe" + b"\xff" * 8 + b"\x01"  # -2 as a 10-byte int64 varint
+    )
+    ts_msg = (
+        bytes([0x8A, 0x00, len(label_up)]) + label_up
+        + bytes([0x22, 0x02]) + b"ex"  # unknown length-delimited field 4
+        + bytes([0x12, len(sample1)]) + sample1
+        + bytes([0x0A, len(label_job)]) + label_job
+        + bytes([0x92, 0x00, len(sample2)]) + sample2
+        + bytes([0x29]) + b"\x00" * 8  # unknown fixed64 field 5
+    )
+    body = bytes([0x8A, 0x00, len(ts_msg)]) + ts_msg + bytes([0x10, 0x2A])
+    assert body != canonical
+    assert decode_write_request(body) == decode_write_request(canonical) == (
+        ["up", "up"],
+        [1000, -2],
+        [1.5, None],
+        [{"__name__": "up", "job": "api"}] * 2,
+    )

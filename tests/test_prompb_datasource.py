@@ -199,15 +199,14 @@ def test_prompb_writer_roundtrip(spark, tmp_path):
 def test_decode_file_matches_flatten_property():
     """Property: for arbitrary label maps (unicode) and samples (incl. NaN
     and negative epoch values), the per-body Arrow batch every reader
-    yields (``decode_body``) equals the reference flatten of the same
-    parsed body, row for row and in order. Pure-Python — no Spark job per
-    example."""
+    yields (``decode_body``) holds the records the prometheus.go:10-37
+    rules give for the fixture, row for row and in order. Pure-Python — no
+    Spark job per example."""
+    import math
+
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from prometheus_remote_kinesis_spark.server import flatten_timeseries
-    from prometheus_remote_kinesis_spark.sources.prompb import parse_write_request
-    from prometheus_remote_kinesis_spark.sources.prompb import snappy_decompress
     from prometheus_remote_kinesis_spark.sources.prompb_datasource import (
         RECORD_ARROW_SCHEMA,
         decode_body,
@@ -226,17 +225,19 @@ def test_decode_file_matches_flatten_property():
     @given(series_st)
     @settings(max_examples=50, deadline=None, suppress_health_check=list(HealthCheck))
     def check(series):
-        body = encode_remote_write_body(series)
-        batch = decode_body(body)
+        batch = decode_body(encode_remote_write_body(series))
         assert batch.schema == RECORD_ARROW_SCHEMA
         got = [
             (r["name"], r["time"], r["value"], r["labels"])
             for r in batch.to_pylist()
         ]
-        want = [
-            (r["name"], r["time"], r["value"], list(r["labels"].items()))
-            for r in flatten_timeseries(parse_write_request(snappy_decompress(body)))
-        ]
+        # parseRecords: name from __name__ or "", a series without samples
+        # is one row at time 0 with no value, NaN has no value
+        want = []
+        for labels, samples in series:
+            name = labels.get("__name__", "")
+            for v, t in samples or [(float("nan"), 0)]:
+                want.append((name, t, None if math.isnan(v) else v, list(labels.items())))
         assert got == want
 
     check()

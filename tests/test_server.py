@@ -14,6 +14,7 @@ import pytest
 from prometheus_remote_kinesis_spark.server import RemoteWriteServer, flatten_timeseries
 from prometheus_remote_kinesis_spark.sources.prompb import (
     encode_remote_write_body,
+    encode_write_request,
     snappy_compress,
 )
 
@@ -23,6 +24,9 @@ FIXTURE = [
     ({"__name__": "empty_series"}, []),  # labels-only row, time=0
     ({"no_name": "x"}, [(2.5, 4000)]),  # missing __name__ → ""
 ]
+# valid series, then an unknown field whose length runs past the body:
+# proto.Unmarshal's io.ErrUnexpectedEOF → 400 (kinesis.go:85-88)
+TRUNCATED = snappy_compress(encode_write_request(FIXTURE) + b"\x1a\x50")
 
 
 def _post(url_host: str, port: int, body: bytes, path: str = "/receive") -> int:
@@ -43,6 +47,7 @@ def test_http_receive_to_streaming_relay(spark, tmp_path):
         assert _post(host, port, b"\xff\xff not snappy") == 400
         # valid snappy wrapping garbage protobuf → 400 (kinesis.go:85-88)
         assert _post(host, port, snappy_compress(b"\x99\x99\x99")) == 400
+        assert _post(host, port, TRUNCATED) == 400
         assert _post(host, port, encode_remote_write_body(FIXTURE), "/else") == 404
     finally:
         srv.stop()
@@ -71,8 +76,9 @@ def test_http_receive_to_streaming_relay(spark, tmp_path):
 
 
 def test_python_flatten_matches_spark_ingest(spark):
-    """The handler's row-at-a-time flatten and the declarative Spark
-    flatten must agree cell-for-cell on the edge fixtures."""
+    """The decoder's flatten (``prompb.flatten_series``, through
+    ``flatten_timeseries``) and the declarative Spark flatten must agree
+    cell-for-cell on the edge fixtures."""
     from prometheus_remote_kinesis_spark.schema import WRITE_REQUEST_SCHEMA
     from prometheus_remote_kinesis_spark.ingest import flatten_write_requests
     from prometheus_remote_kinesis_spark.sources.prompb import (
@@ -114,6 +120,7 @@ def test_raw_spool_to_prompb_stream_relay(spark, tmp_path):
         assert _post(host, port, encode_remote_write_body(FIXTURE)) == 200
         assert _post(host, port, b"\xff\xff not snappy") == 400
         assert _post(host, port, snappy_compress(b"\x99\x99\x99")) == 400
+        assert _post(host, port, TRUNCATED) == 400
     finally:
         srv.stop()
 
@@ -937,6 +944,29 @@ def test_snappy_bomb_rejected_on_receive_and_read(tmp_path):
             srv.stop()
         assert len([f for f in spool.iterdir() if not f.name.startswith(".")]) == 1
     assert calls == []
+
+
+def test_bad_content_length_answers_400_without_reading(tmp_path):
+    """A negative or non-numeric Content-Length answers 400 before any
+    read, as Go's net/http does; ``rfile.read(-1)`` would wait for EOF on
+    a socket the client keeps open. Nothing is spooled."""
+    import socket
+
+    spool = tmp_path / "spool"
+    srv = RemoteWriteServer(str(spool)).start()
+    host, port = srv.server_address[:2]
+    try:
+        for path, length in (("/receive", "-1"), ("/receive", "1x"), ("/api/v1/query", "-1")):
+            with socket.create_connection((host, port), timeout=2) as sock:
+                sock.sendall(
+                    f"POST {path} HTTP/1.1\r\nHost: x\r\n"
+                    f"Content-Length: {length}\r\n\r\nabc".encode()
+                )
+                status_line = sock.recv(64).split(b"\r\n")[0]
+            assert status_line.split()[1] == b"400", (path, length, status_line)
+    finally:
+        srv.stop()
+    assert list(spool.iterdir()) == []
 
 
 def test_promql_empty_aggregate_over_http(spark, tmp_path):
