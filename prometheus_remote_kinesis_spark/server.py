@@ -8,7 +8,7 @@ reference handler's exact staging and status codes:
 |---|---|---|---|
 | 1 read | ``ioutil.ReadAll`` (kinesis.go:69) | ``rfile.read(len)`` | 500 (kinesis.go:70-74); a bad ``Content-Length`` 400, as net/http |
 | 2 decompress | ``snappy.Decode`` (kinesis.go:76) | ``prompb.snappy_decompress`` (pyarrow's snappy; preamble capped at 22× the body) | 400 (kinesis.go:77-81) |
-| 3 decode + transform | ``proto.Unmarshal`` + ``parseRecords`` (kinesis.go:83-90, prometheus.go:10-37) | ``prompb.decode_write_request``: one pass to record columns | 400 (kinesis.go:85-88) |
+| 3 decode + transform | ``proto.Unmarshal`` + ``parseRecords`` (kinesis.go:83-90, prometheus.go:10-37) | ``prompb.decode_write_request``: one pass to record columns, label sets reused from a bounded cache keyed by their wire bytes | 400 (kinesis.go:85-88) |
 | 4 handoff | ``writeCh <- records`` (kinesis.go:92) | atomic NDJSON file into the spool dir | — |
 
 The spool directory IS the channel: the Structured Streaming relay
@@ -65,7 +65,7 @@ def flatten_timeseries(timeseries: list[dict]) -> list[dict]:
     (``prompb.flatten_series``)."""
     return list(_records(flatten_series(
         (
-            [(lbl["name"], lbl["value"]) for lbl in ts["labels"]],
+            {lbl["name"]: lbl["value"] for lbl in ts["labels"]},
             [(smp["value"], smp["timestamp"]) for smp in ts["samples"]],
         )
         for ts in timeseries
@@ -354,7 +354,7 @@ class _Handler(BaseHTTPRequestHandler):
             try:
                 queries = parse_read_request(snappy_decompress(self._read_body()))
             except Exception:
-                self._status(400)
+                self._status(400)  # bad snappy, or a ReadRequest cut short
                 return
             try:
                 results = self.server.read_handler(queries)  # type: ignore[attr-defined]

@@ -7,17 +7,23 @@ from __future__ import annotations
 
 import math
 import struct
+import sys
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from prometheus_remote_kinesis_spark.sources import prompb
 from prometheus_remote_kinesis_spark.sources.prompb import (
     SNAPPY_MAX_EXPANSION,
+    _forget_label_sets,
     _write_uvarint,
     decode_write_request,
+    encode_read_request,
     encode_remote_write_body,
     encode_write_request,
+    parse_read_request,
     parse_write_request,
     snappy_compress,
     snappy_decompress,
@@ -196,21 +202,25 @@ def test_prompb_parse_fuzz_roundtrip(ts):
     encode∘decode yields the records the prometheus.go:10-37 rules give
     for the fixture, over arbitrary label strings (including >127-byte
     values, which overflow the single-byte-length Label fast path and must
-    fall back to the general path), full-range int64 timestamps (negative
-    → 10-byte varints), ±inf values, and empty series. Guards the
+    fall back to the general path and end the label-set cache key),
+    full-range int64 timestamps (negative → 10-byte varints), ±inf
+    values, and empty series. Each body is decoded cold, with an empty
+    label-set cache, and then warm: both give the same records. Guards the
     fast/fallback boundary — the exact seam where an off-by-one would
     silently corrupt records."""
     body = encode_write_request(ts)
-    parsed = parse_write_request(body)
-    assert len(parsed) == len(ts)
-    for (labels, samples), got in zip(ts, parsed):
-        assert got["labels"] == [
-            {"name": n, "value": v} for n, v in labels.items()
-        ]
-        assert got["samples"] == [
-            {"value": v, "timestamp": t} for v, t in samples
-        ]
-    assert list(zip(*decode_write_request(body))) == _records(ts)
+    _forget_label_sets()
+    for _ in ("cold", "warm"):
+        parsed = parse_write_request(body)
+        assert len(parsed) == len(ts)
+        for (labels, samples), got in zip(ts, parsed):
+            assert got["labels"] == [
+                {"name": n, "value": v} for n, v in labels.items()
+            ]
+            assert got["samples"] == [
+                {"value": v, "timestamp": t} for v, t in samples
+            ]
+        assert list(zip(*decode_write_request(body))) == _records(ts)
 
 
 def _records(ts) -> list[tuple]:
@@ -235,6 +245,10 @@ def _ts(*fields: bytes) -> bytes:
 
 _SAMPLE = bytes([0x09]) + struct.pack("<d", 2.0) + bytes([0x10, 0x09])
 _GOOD = _ts(bytes([0x12, len(_SAMPLE)]) + _SAMPLE)
+# the label bytes of {"__name__": "up", "job": "api"}: the cache key of a
+# TimeSeries that starts with them
+_LABELS = encode_write_request([({"__name__": "up", "job": "api"}, [])])[2:]
+_LABELED = _ts(_LABELS, bytes([0x12, len(_SAMPLE)]) + _SAMPLE)
 
 
 @pytest.mark.parametrize(
@@ -252,22 +266,48 @@ _GOOD = _ts(bytes([0x12, len(_SAMPLE)]) + _SAMPLE)
         _GOOD + bytes([0x1A, 0x50]),
         # a TimeSeries claiming more bytes than the body holds
         _GOOD[:-1],
+        # a 10-byte timestamp varint whose last byte sets bits past 64
+        _ts(bytes([0x12, 0x14, 0x09]) + struct.pack("<d", 1.0) + bytes([0x10]) + b"\x80" * 9 + b"\x02"),
+        # a Label of the key run claiming more bytes than its TimeSeries holds
+        _ts(bytes([0x0A, 0x09, 0x0A, 0x01]) + b"a"),
+        # cached labels, then a Sample cut to 13 of its 15 bytes
+        _ts(_LABELS, bytes([0x12, len(_SAMPLE)]) + _SAMPLE[:-2]),
+        # cached labels, then a Sample whose double is cut short
+        _ts(_LABELS, bytes([0x12, 0x05, 0x09]) + b"\x00" * 4),
+        # cached labels in a TimeSeries claiming more bytes than the body holds
+        _LABELED[:-1],
+        # a TimeSeries that ends inside the last Label of the cached run
+        _ts(_LABELS[:-3]),
     ],
     ids=["label-name-past-span", "label-value-past-span", "varint-too-long",
-         "sample-fixed64-cut", "top-level-field-cut", "timeseries-cut"],
+         "sample-fixed64-cut", "top-level-field-cut", "timeseries-cut",
+         "varint-overflows-64-bits", "label-past-timeseries",
+         "cached-labels-sample-cut", "cached-labels-double-cut",
+         "cached-labels-timeseries-cut", "cached-label-run-cut"],
 )
 def test_parse_malformed_wire_raises(body):
     """A length or fixed-width field that runs past its enclosing message
     raises ``ValueError`` — Go's ``proto.Unmarshal`` returns
     ``io.ErrUnexpectedEOF`` there and the reference answers 400
-    (kinesis.go:83-88) — and so does a varint longer than 64 bits."""
+    (kinesis.go:83-88) — and so does a varint longer than 64 bits or
+    overflowing them. Each body is decoded cold, then warm: with the
+    label-set cache already holding the label bytes the malformed bodies
+    start with, since a cached label prefix must not hide a cut Sample or
+    a cut TimeSeries."""
+    _forget_label_sets()
     assert parse_write_request(_GOOD) == [
         {"labels": [], "samples": [{"value": 2.0, "timestamp": 9}]}
     ]
-    with pytest.raises(ValueError):
-        decode_write_request(body)
-    with pytest.raises(ValueError):
-        parse_write_request(body)
+    for warm in (False, True):
+        if warm:
+            assert decode_write_request(_LABELED) == (
+                ["up"], [9], [2.0], [{"__name__": "up", "job": "api"}]
+            )
+            assert _LABELS in prompb._label_sets
+        with pytest.raises(ValueError):
+            decode_write_request(body)
+        with pytest.raises(ValueError):
+            parse_write_request(body)
 
 
 def test_non_canonical_wire_decodes_like_canonical():
@@ -308,3 +348,142 @@ def test_non_canonical_wire_decodes_like_canonical():
         [1.5, None],
         [{"__name__": "up", "job": "api"}] * 2,
     )
+    # a canonical Sample's fields followed by more: read again from the
+    # start, the repeated timestamp winning and the unknown field skipped
+    for tail, t in ((bytes([0x10, 0x07]), 7), (bytes([0x1D]) + b"\x00" * 4, 9)):
+        sample = _SAMPLE + tail
+        body = _ts(bytes([0x12, len(sample)]) + sample)
+        assert decode_write_request(body) == ([""], [t], [2.0], [{}])
+    with pytest.raises(ValueError):
+        decode_write_request(_ts(bytes([0x12, len(_SAMPLE) + 1]) + _SAMPLE + b"\x10"))
+
+
+def test_label_cache_duplicates_and_labels_after_samples():
+    """Wire order and duplicate label names survive the cache: a run with a
+    repeated name is never cached (``parse_write_request`` keeps both
+    pairs, the dict keeps the later value), and a Label after the Samples
+    merges into a fresh dict after the cached run's labels, exactly as
+    ``dict(pairs)`` does, without touching the cached dict."""
+    dup = encode_write_request([({"job": "a"}, [])])[2:] * 2  # job twice
+    dup = dup[:-1] + b"b"  # job=a, job=b
+    late = encode_write_request([({"zone": "z", "job": "late"}, [])])[2:]
+    sample = bytes([0x12, len(_SAMPLE)]) + _SAMPLE
+    bodies = [_ts(dup, sample), _ts(_LABELS, sample, late), _LABELED]
+    _forget_label_sets()
+    cold = [(parse_write_request(b), decode_write_request(b)) for b in bodies]
+    warm = [(parse_write_request(b), decode_write_request(b)) for b in bodies]
+    assert cold == warm
+    assert [(lbl["name"], lbl["value"]) for lbl in warm[0][0][0]["labels"]] == [
+        ("job", "a"), ("job", "b")
+    ]
+    assert warm[0][1][3] == [{"job": "b"}]
+    assert dup not in prompb._label_sets
+    assert warm[1][1][3] == [{"__name__": "up", "job": "late", "zone": "z"}]
+    assert prompb._label_sets[_LABELS] == {"__name__": "up", "job": "api"}
+    assert warm[2][1][3][0] is prompb._label_sets[_LABELS]  # shared, read-only
+
+
+@pytest.mark.parametrize("cap", ["entries", "key_bytes"])
+def test_label_cache_stays_within_caps(monkeypatch, cap):
+    """More label sets than either cap admits leave both the entry count
+    and the key bytes within their caps, and the decodes stay what a cold
+    decode gives."""
+    ts = [({"__name__": "m", "i": f"{i:03d}"}, [(float(i), i)]) for i in range(9)]
+    bodies = [encode_write_request([t]) for t in ts]
+    key_len = len(encode_write_request([(ts[0][0], [])])) - 2
+    entries, key_bytes = (4, 1 << 20) if cap == "entries" else (1000, 4 * key_len)
+    monkeypatch.setattr(prompb, "LABEL_CACHE_MAX_ENTRIES", entries)
+    monkeypatch.setattr(prompb, "LABEL_CACHE_MAX_KEY_BYTES", key_bytes)
+    _forget_label_sets()
+    for _ in range(2):
+        for body, t in zip(bodies, ts):
+            assert list(zip(*decode_write_request(body))) == _records([t])
+            assert 0 < len(prompb._label_sets) <= entries
+            assert prompb._label_set_bytes <= key_bytes
+            assert prompb._label_set_bytes == sum(map(len, prompb._label_sets))
+    monkeypatch.setattr(prompb, "LABEL_CACHE_MAX_KEY_BYTES", key_len - 1)
+    _forget_label_sets()
+    assert list(zip(*decode_write_request(bodies[0]))) == _records(ts[:1])
+    assert not prompb._label_sets  # a key longer than the byte cap is not kept
+
+
+def test_full_label_cache_turns_away_then_clears(monkeypatch):
+    """A full cache keeps what it holds and turns new label sets away, so
+    a sender with more label sets than fit still hits on those it holds;
+    once it has turned away as many as it holds, it is cleared, so a
+    churning sender's new label sets get in."""
+    monkeypatch.setattr(prompb, "LABEL_CACHE_MAX_ENTRIES", 4)
+    ts = [({"__name__": "m", "i": str(i)}, [(1.0, i)]) for i in range(8)]
+    keys = [encode_write_request([(labels, [])])[2:] for labels, _ in ts]
+    bodies = [encode_write_request([t]) for t in ts]
+    _forget_label_sets()
+    for body in bodies[:4]:
+        decode_write_request(body)
+    held = dict(prompb._label_sets)
+    assert list(held) == keys[:4]
+    for body, t in zip(bodies[4:7], ts[4:7]):  # 3 turned away, 4 held
+        assert list(zip(*decode_write_request(body))) == _records([t])
+        assert prompb._label_sets == held
+    assert all(prompb._label_sets[k] is v for k, v in held.items())
+    assert decode_write_request(bodies[0])[3][0] is held[keys[0]]  # still hits
+    decode_write_request(bodies[7])  # the 4th turned away: cleared, then kept
+    assert list(prompb._label_sets) == [keys[7]]
+    assert prompb._label_set_bytes == len(keys[7])
+
+
+@pytest.mark.parametrize("entries", [32_768, 1_000], ids=["default", "clearing"])
+def test_label_cache_concurrent_decodes(monkeypatch, entries):
+    """8 threads decoding perfbench-shaped bodies at once, sharing the one
+    cache (as ``ThreadingHTTPServer`` handlers do), get the
+    single-thread results — also with a cap small enough that threads
+    fill, turn away and clear the cache under each other."""
+    from perfbench.bodies import BASE_MS, Universe, make_body
+
+    universe = Universe(1)
+    bodies = [snappy_decompress(make_body(universe, 1, i, BASE_MS + i)[0])
+              for i in range(4)]
+    _forget_label_sets()
+    expected = [decode_write_request(b) for b in bodies]
+    monkeypatch.setattr(prompb, "LABEL_CACHE_MAX_ENTRIES", entries)
+    _forget_label_sets()
+
+    def decode_all(k: int) -> list:
+        order = [(k + j) % len(bodies) for j in range(len(bodies))]
+        got = {j: decode_write_request(bodies[j]) for j in order}
+        return [got[j] for j in range(len(bodies))]
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # switch threads often, inside the inserts too
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futures = [pool.submit(decode_all, k) for k in range(8)]
+            results = [f.result(timeout=120) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(r == expected for r in results)
+    assert len(prompb._label_sets) <= entries
+    # a lost update of the key-byte count would break this
+    assert prompb._label_set_bytes == sum(map(len, prompb._label_sets))
+
+
+def test_parse_read_request_cut_raises():
+    """A ReadRequest cut short raises ``ValueError`` at every level instead
+    of parsing as another query: cut by one byte, ``__name__="up"`` would
+    otherwise read as ``__name__="u"``."""
+    req = encode_read_request(
+        [{"start_ms": 1000, "end_ms": 2000, "matchers": [(0, "__name__", "up")]}]
+    )
+    assert parse_read_request(req)[0]["matchers"] == [(0, "__name__", "up")]
+    for cut in (req[:-1], req[:-3], req[:1]):
+        with pytest.raises(ValueError):
+            parse_read_request(cut)
+    # each runs past its own message but not past the buffer
+    matcher = bytes([0x12, 0x08]) + b"__name__" + bytes([0x1A, 0x03]) + b"up"
+    next_matcher = bytes([0x1A, 0x02, 0x08, 0x00])
+    for query, after in (
+        (bytes([0x1A, len(matcher)]) + matcher + next_matcher, b""),  # matcher value
+        (bytes([0x1A, 0x02, 0x08, 0x80]) + next_matcher, b""),  # matcher type varint
+        (bytes([0x1A, 0x06, 0x08, 0x00]), bytes([0x10, 0x00, 0x18, 0x00])),  # matcher
+    ):
+        with pytest.raises(ValueError):
+            parse_read_request(bytes([0x0A, len(query)]) + query + after)

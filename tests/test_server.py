@@ -222,6 +222,53 @@ def test_remote_read_endpoint_round_trip(tmp_path):
         srv2.stop()
 
 
+def test_remote_read_cut_request_is_400(tmp_path):
+    """A ReadRequest cut by one byte answers 400 and never reaches the read
+    handler: before the decoder bounded its lengths, ``__name__="up"``
+    cut by one byte parsed as ``__name__="u"`` and was answered."""
+    from prometheus_remote_kinesis_spark.sources.prompb import MATCH_EQ, encode_read_request
+
+    seen = []
+    srv = RemoteWriteServer(str(tmp_path / "spool"), read_handler=seen.append).start()
+    req = encode_read_request(
+        [{"start_ms": 0, "end_ms": 1, "matchers": [(MATCH_EQ, "__name__", "up")]}]
+    )
+    try:
+        host, port = srv.server_address[:2]
+        assert _post(host, port, snappy_compress(req[:-1]), "/read") == 400
+    finally:
+        srv.stop()
+    assert seen == []
+
+
+def test_receive_and_decode_body_leave_cached_labels_unchanged(tmp_path):
+    """The label-set cache shares one labels dict across rows, bodies and
+    threads, so every consumer of the decoder must only read it. After
+    real POSTs to both spool modes and a ``decode_body`` over a warm
+    cache, the cached label sets are the same objects with the same
+    contents."""
+    from prometheus_remote_kinesis_spark.sources import prompb
+    from prometheus_remote_kinesis_spark.sources.prompb_datasource import decode_body
+
+    body = encode_remote_write_body(FIXTURE)
+    prompb._forget_label_sets()
+    prompb.decode_write_request(prompb.snappy_decompress(body))
+    held = {key: (labels, dict(labels)) for key, labels in prompb._label_sets.items()}
+    assert len(held) == len(FIXTURE)
+    for raw in (False, True):
+        srv = RemoteWriteServer(str(tmp_path / f"spool_{raw}"), raw=raw).start()
+        try:
+            host, port = srv.server_address[:2]
+            assert _post(host, port, body) == 200
+        finally:
+            srv.stop()
+    assert decode_body(body).num_rows == 5
+    assert prompb._label_sets.keys() == held.keys()
+    for key, (labels, contents) in held.items():
+        assert prompb._label_sets[key] is labels
+        assert labels == contents
+
+
 def test_remote_read_matcher_semantics(spark):
     """remote_read_select: NEQ and NRE matchers against a brute-force
     filter at sf0.001, closed [start, end] range edges included."""
