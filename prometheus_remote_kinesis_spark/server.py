@@ -6,10 +6,10 @@ reference handler's exact staging and status codes:
 
 | stage | reference | here | failure → HTTP |
 |---|---|---|---|
-| 1 read | ``ioutil.ReadAll`` (kinesis.go:69) | ``rfile.read(len)`` | 500 (kinesis.go:70-74); a bad ``Content-Length`` 400, as net/http |
+| 1 read | ``ioutil.ReadAll`` (kinesis.go:69) | ``rfile.read(len)`` | 500 (kinesis.go:70-74); a bad ``Content-Length`` 400, as net/http; one above ``MAX_BODY_BYTES`` (32 MiB) 413 before reading |
 | 2 decompress | ``snappy.Decode`` (kinesis.go:76) | ``prompb.snappy_decompress`` (pyarrow's snappy; preamble capped at 22× the body) | 400 (kinesis.go:77-81) |
 | 3 decode + transform | ``proto.Unmarshal`` + ``parseRecords`` (kinesis.go:83-90, prometheus.go:10-37) | ``prompb.decode_write_request``: one pass to record columns, label sets reused from a bounded cache keyed by their wire bytes | 400 (kinesis.go:85-88) |
-| 4 handoff | ``writeCh <- records`` (kinesis.go:92) | atomic NDJSON file into the spool dir | — |
+| 4 handoff | ``writeCh <- records`` (kinesis.go:92) | atomic NDJSON file into the spool dir; each label set's JSON encoded once and memoised on its cached ``LabelSet`` (~1.5-2.4 ms a warm 2,000-sample body, was 11-14 ms) | — |
 
 The spool directory IS the channel: the Structured Streaming relay
 (``streaming.pipeline.read_record_stream``) watches it as a file source,
@@ -48,6 +48,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from prometheus_remote_kinesis_spark.sources.prompb import (
     Columns,
+    LabelSet,
     decode_write_request,
     encode_read_response,
     flatten_series,
@@ -72,11 +73,55 @@ def flatten_timeseries(timeseries: list[dict]) -> list[dict]:
     )))
 
 
+# The NDJSON line builder's encoders: exactly json.dumps(record,
+# ensure_ascii=False, separators=(",", ":")) piece by piece. A value is
+# never NaN (flatten_series maps it to None), so finite floats are
+# float.__repr__, as json writes them.
+_encode_json = json.JSONEncoder(ensure_ascii=False, separators=(",", ":")).encode
+_VALUE_JSON = {None: "null", math.inf: "Infinity", -math.inf: "-Infinity"}
+
+
+def _ndjson_pieces(labels: dict) -> tuple[str, str]:
+    """A label set's record head ``{"name":<name>,"time":`` and tail
+    ``,"labels":{…}}\n``; kept in a ``LabelSet``'s memo slot."""
+    pieces = (
+        '{"name":' + _encode_json(labels.get("__name__", "")) + ',"time":',
+        ',"labels":' + _encode_json(labels) + "}\n",
+    )
+    if isinstance(labels, LabelSet):
+        labels.ndjson = pieces  # same value from any thread: no lock
+    return pieces
+
+
+def _ndjson_lines(columns: Columns) -> str:
+    """Record columns → NDJSON text, byte-identical to one ``json.dumps``
+    per record: each row is its label set's head + time + value + tail.
+    The pieces come from the set's memo, else are built once per series
+    run (a series' rows share one labels dict)."""
+    lines = []
+    last = None
+    for _, time, value, labels in zip(*columns):
+        if labels is not last:
+            last = labels
+            head, tail = getattr(labels, "ndjson", None) or _ndjson_pieces(labels)
+        lines.append(f'{head}{time},"value":{_VALUE_JSON.get(value) or repr(value)}{tail}')
+    return "".join(lines)
+
+
 def _records(columns: Columns) -> Iterator[dict]:
     """Record columns → ``{"name", "time", "value", "labels"}`` dicts, the
     field order of record.go:8-14."""
     for name, time, value, labels in zip(*columns):
         yield {"name": name, "time": time, "value": value, "labels": labels}
+
+
+# The largest request body any POST route reads; a larger Content-Length
+# answers 413 before anything is read or allocated. A remote-write body
+# carries one send of ``max_samples_per_send`` samples (Prometheus's
+# default is 2,000): a perfbench body of 2,000 samples with 6-8 labels
+# each is 116 KiB, so 32 MiB leaves room for sends ~100x larger with
+# longer label sets. ReadRequests and query forms are far smaller.
+MAX_BODY_BYTES = 32 << 20
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -337,13 +382,16 @@ class _Handler(BaseHTTPRequestHandler):
             # queries (r12 VERDICT task #8); parameters may arrive in the
             # URL, the body, or both — body wins per key (the spec lets
             # either carry them; merging matches Prometheus's ParseForm)
+            body = self._read_body()
+            if body is None:
+                return
             try:
-                body = self._read_body().decode("utf-8")
-            except Exception:
+                text = body.decode("utf-8")
+            except UnicodeDecodeError:
                 self._bad("unreadable request body")
                 return
             params = parse_qs(u.query)
-            params.update(parse_qs(body))
+            params.update(parse_qs(text))
             self._api(u.path, params)
             return
         if self.path == "/read" and getattr(self.server, "read_handler", None):
@@ -351,8 +399,11 @@ class _Handler(BaseHTTPRequestHandler):
             # reference is write-only — this serves the relayed series
             # BACK to a `remote_read` client, prompb.py read codecs):
             # snappy(ReadRequest) → handler(queries) → snappy(ReadResponse)
+            body = self._read_body()
+            if body is None:
+                return
             try:
-                queries = parse_read_request(snappy_decompress(self._read_body()))
+                queries = parse_read_request(snappy_decompress(body))
             except Exception:
                 self._status(400)  # bad snappy, or a ReadRequest cut short
                 return
@@ -372,13 +423,8 @@ class _Handler(BaseHTTPRequestHandler):
         if self.path != "/receive":  # route, main.go:61
             self._status(404)
             return
-        try:
-            body = self._read_body()
-        except ValueError:
-            self._status(400)  # bad Content-Length: net/http answers before the handler
-            return
-        except Exception:
-            self._status(500)  # read failure, kinesis.go:70-74
+        body = self._read_body()
+        if body is None:
             return
         try:
             decompressed = snappy_decompress(body)  # kinesis.go:76
@@ -399,14 +445,24 @@ class _Handler(BaseHTTPRequestHandler):
             self.server.spool(columns)  # type: ignore[attr-defined]  # kinesis.go:92
         self._status(200)  # implicit 200, kinesis.go:93
 
-    def _read_body(self) -> bytes:
-        """The request body. A negative or non-numeric Content-Length raises
-        ``ValueError`` before anything is read (``rfile.read(-1)`` would
-        read to EOF); Go's net/http answers such a request 400."""
+    def _read_body(self) -> bytes | None:
+        """The request body, or None after answering: 400 for a negative or
+        non-numeric Content-Length (``rfile.read(-1)`` would read to EOF;
+        Go's net/http answers such a request 400), 413 for one above
+        ``MAX_BODY_BYTES``, both before anything is read, and 500 when the
+        read fails (kinesis.go:70-74)."""
         length = self.headers.get("Content-Length", "0").strip()
         if not (length.isascii() and length.isdigit()):
-            raise ValueError(f"bad Content-Length {length!r}")
-        return self.rfile.read(int(length))
+            self._status(400)
+            return None
+        if int(length) > MAX_BODY_BYTES:
+            self._status(413)
+            return None
+        try:
+            return self.rfile.read(int(length))
+        except OSError:
+            self._status(500)
+            return None
 
     def _status(self, code: int) -> None:
         self.send_response(code)
@@ -463,26 +519,32 @@ class RemoteWriteServer(ThreadingHTTPServer):
         self._thread: threading.Thread | None = None
 
     def spool(self, columns: Columns) -> None:
-        if not columns[0]:
-            return
-        # Wire format = sinks.encode_ndjson: one JSON object per line,
-        # explicit null value (record.go:21-27), name/time/value/labels
-        # field order (record.go:8-14).
-        lines = "".join(
-            json.dumps(r, ensure_ascii=False, separators=(",", ":")) + "\n"
-            for r in _records(columns)
-        )
-        tmp = os.path.join(self.spool_dir, f".{uuid.uuid4().hex}.tmp")
-        final = os.path.join(self.spool_dir, f"{uuid.uuid4().hex}.json")
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(lines)
-        os.rename(tmp, final)
+        """Record columns (``decode_write_request``'s, so a row's name is
+        its labels' ``__name__``) → one ``.json`` NDJSON spool file.
+
+        Wire format = sinks.encode_ndjson: one JSON object per line,
+        explicit null value (record.go:21-27), name/time/value/labels
+        field order (record.go:8-14). The bytes are those of one
+        ``json.dumps(record, ensure_ascii=False, separators=(",", ":"))``
+        per record, but a label set's JSON is encoded once: its head and
+        tail are memoised on the cached ``LabelSet`` the first time it is
+        spooled (``_ndjson_lines``). Measured on 24 perfbench ``Universe(1)``
+        bodies (2,000 series of one sample each, best of 7, one 4-core
+        shared host): one ``json.dumps`` per record took 11-14 ms a body;
+        this builder takes 1.5-2.4 ms warm, and 8.8-10.5 ms with the memo
+        taken out. Bodies of only new label sets take 0.87-0.91x the
+        ``json.dumps`` loop (median of 9)."""
+        if columns[0]:
+            self._spool_file(_ndjson_lines(columns).encode("utf-8"), ".json")
 
     def spool_raw(self, body: bytes) -> None:
+        self._spool_file(body, ".pb.sz")
+
+    def _spool_file(self, payload: bytes, suffix: str) -> None:
         tmp = os.path.join(self.spool_dir, f".{uuid.uuid4().hex}.tmp")
-        final = os.path.join(self.spool_dir, f"{uuid.uuid4().hex}.pb.sz")
+        final = os.path.join(self.spool_dir, f"{uuid.uuid4().hex}{suffix}")
         with open(tmp, "wb") as f:
-            f.write(body)
+            f.write(payload)
         os.rename(tmp, final)
 
     @property

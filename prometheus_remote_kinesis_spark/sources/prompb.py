@@ -38,10 +38,17 @@ of hits falls with the excess: 83% at 1.2x the fit, 40% at 1.5x, 37% at
 2x, none from 3x. For one whose series churn, the cache refills as they
 do. Measured on perfbench bodies (one 4-core shared host): a warm decode
 takes 38-48% of the time it took before the cache; a body of all-new
-label sets takes 1.07-1.20x. With ``tracemalloc``, a full cache holds
-32.5 MiB at the perfbench label shape (27,000 entries, ~1.26 KB an
-entry) and 58.8 MiB at the worst case measured, short labels of
-two-character names and values (32,768 entries of 12 labels).
+label sets takes 1.07-1.20x.
+
+A cached set is a ``LabelSet``: a ``dict`` whose one slot holds the
+NDJSON spool's memo of the set's record head and tail, built the first
+time ``server.spool`` writes the set (raw mode, ``decode_body`` and the
+relay never build it). The memo goes with its entry, so the caps bound
+it too. With ``tracemalloc``, a full cache holds 32.6 MiB at the
+perfbench label shape (27,039 entries, ~1.27 KB an entry) and 59.0 MiB
+at the worst case measured, short labels of two-character names and
+values (32,768 entries of 12 labels); with every entry's memo built,
+41.9 and 68.6 MiB.
 
 No protobuf runtime dependency; snappy comes from pyarrow, which every
 Spark Arrow path already needs. Encoders exist for test fixtures and the
@@ -217,7 +224,18 @@ def _sample(buf: bytes, pos: int, end: int) -> tuple[float, int]:
 LABEL_CACHE_MAX_ENTRIES = 32_768
 LABEL_CACHE_MAX_KEY_BYTES = 4 << 20
 
-_label_sets: dict[bytes, dict[str, str]] = {}
+
+class LabelSet(dict):
+    """A decoded label set: a plain ``dict`` to every reader, plus the
+    slot ``ndjson``, the NDJSON spool's memo of the set's record head and
+    tail (``server.spool``). Unset until the spool first writes the set,
+    so it lives and dies with the cache entry (or the body) holding the
+    set; no other path sets it."""
+
+    __slots__ = ("ndjson",)
+
+
+_label_sets: dict[bytes, LabelSet] = {}
 _label_set_bytes = 0  # total length of the keys in _label_sets
 _turned_away = 0  # label sets refused since the cache last filled
 _label_set_lock = threading.Lock()  # ThreadingHTTPServer handlers share the cache
@@ -230,7 +248,7 @@ def _forget_label_sets() -> None:
         _label_set_bytes = _turned_away = 0
 
 
-def _remember_labels(key: bytes, labels: dict[str, str]) -> None:
+def _remember_labels(key: bytes, labels: LabelSet) -> None:
     global _label_set_bytes, _turned_away
     if len(key) > LABEL_CACHE_MAX_KEY_BYTES:
         return
@@ -261,13 +279,13 @@ def _timeseries(buf: bytes) -> Iterator[tuple[Iterable, dict, list]]:
     that runs past its enclosing message raises ``ValueError``.
 
     The leading run of Labels written ``0A L …`` with a one-byte ``L`` is
-    the label-set cache key: a hit reuses the cached dict (its items are
-    the pairs: a run with a repeated name is never cached), a miss
-    decodes the run with ``_label`` and caches it. A Label decodes from
-    its own bytes alone, so a hit is exactly what a fresh decode gives,
-    and only a run that decoded without error is cached. A Sample of
-    under 128 bytes has its one-byte header read here, like the run's
-    Labels. Anything else (Labels after Samples, long Labels or Samples,
+    the label-set cache key: a hit reuses the cached ``LabelSet`` (its
+    items are the pairs: a run with a repeated name is never cached), a
+    miss decodes the run with ``_label`` into a new one and caches it. A
+    Label decodes from its own bytes alone, so a hit is exactly what a
+    fresh decode gives, and only a run that decoded without error is
+    cached. A Sample of under 128 bytes has its one-byte header read here,
+    like the run's Labels. Anything else (Labels after Samples, long Labels or Samples,
     overlong keys, unknown fields) takes the general path, and Labels
     outside the run are merged into a fresh dict."""
     cached = _label_sets.get
@@ -292,7 +310,7 @@ def _timeseries(buf: bytes) -> Iterator[tuple[Iterable, dict, list]]:
                 stop = start + 2 + buf[start + 1]
                 pairs.append(_label(buf, start + 2, stop))
                 start = stop
-            labels = dict(pairs)
+            labels = LabelSet(pairs)
             if len(labels) == len(pairs):  # no duplicate names: items() is pairs
                 _remember_labels(key, labels)
         else:
@@ -357,7 +375,8 @@ def decode_write_request(buf: bytes) -> Columns:
     The labels dicts come from the label-set cache (see the module
     docstring for its key, caps, fill rule and costs). One dict is shared
     across rows, bodies and threads, so callers must treat it as
-    read-only; ``json.dumps`` in ``server.spool`` and ``pa.array`` in
+    read-only; ``server.spool`` (which keeps the set's NDJSON in the
+    ``LabelSet`` memo slot, not in the dict) and ``pa.array`` in
     ``decode_body`` only read it, which
     ``test_receive_and_decode_body_leave_cached_labels_unchanged`` checks.
 

@@ -7,11 +7,24 @@ against the Spark-side ingest on the same fixtures."""
 from __future__ import annotations
 
 import http.client
+import json
 import math
+import struct
+import sys
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
-from prometheus_remote_kinesis_spark.server import RemoteWriteServer, flatten_timeseries
+from prometheus_remote_kinesis_spark import server
+from prometheus_remote_kinesis_spark.server import (
+    RemoteWriteServer,
+    _ndjson_lines,
+    _records,
+    flatten_timeseries,
+)
+from prometheus_remote_kinesis_spark.sources import prompb
 from prometheus_remote_kinesis_spark.sources.prompb import (
     encode_remote_write_body,
     encode_write_request,
@@ -244,29 +257,178 @@ def test_remote_read_cut_request_is_400(tmp_path):
 def test_receive_and_decode_body_leave_cached_labels_unchanged(tmp_path):
     """The label-set cache shares one labels dict across rows, bodies and
     threads, so every consumer of the decoder must only read it. After
-    real POSTs to both spool modes and a ``decode_body`` over a warm
-    cache, the cached label sets are the same objects with the same
-    contents."""
-    from prometheus_remote_kinesis_spark.sources import prompb
+    a raw POST and a ``decode_body`` over a warm cache, the cached label
+    sets are the same objects with the same contents and no NDJSON memo;
+    after an NDJSON POST too, each holds its memo and the same contents."""
     from prometheus_remote_kinesis_spark.sources.prompb_datasource import decode_body
+
+    def unchanged() -> None:
+        assert prompb._label_sets.keys() == held.keys()
+        for key, (labels, contents) in held.items():
+            assert prompb._label_sets[key] is labels
+            assert list(labels.items()) == contents
 
     body = encode_remote_write_body(FIXTURE)
     prompb._forget_label_sets()
     prompb.decode_write_request(prompb.snappy_decompress(body))
-    held = {key: (labels, dict(labels)) for key, labels in prompb._label_sets.items()}
+    held = {key: (labels, list(labels.items())) for key, labels in prompb._label_sets.items()}
     assert len(held) == len(FIXTURE)
-    for raw in (False, True):
+    for raw in (True, False):
         srv = RemoteWriteServer(str(tmp_path / f"spool_{raw}"), raw=raw).start()
         try:
             host, port = srv.server_address[:2]
             assert _post(host, port, body) == 200
         finally:
             srv.stop()
-    assert decode_body(body).num_rows == 5
-    assert prompb._label_sets.keys() == held.keys()
-    for key, (labels, contents) in held.items():
-        assert prompb._label_sets[key] is labels
-        assert labels == contents
+        if raw:
+            assert decode_body(body).num_rows == 5
+            unchanged()
+            assert not any(hasattr(labels, "ndjson") for labels in prompb._label_sets.values())
+    unchanged()
+    assert all(hasattr(labels, "ndjson") for labels in prompb._label_sets.values())
+
+
+def _spool_text(columns) -> str:
+    """What the NDJSON spool must write: one ``json.dumps`` per record."""
+    return "".join(
+        json.dumps(r, ensure_ascii=False, separators=(",", ":")) + "\n"
+        for r in _records(columns)
+    )
+
+
+def _series_payload(labels: dict, samples: list) -> bytes:
+    """One TimeSeries' payload, without its ``0A len`` header."""
+    wire = encode_write_request([(labels, samples)])
+    start, end = prompb._read_span(wire, 1, len(wire))
+    return wire[start:end]
+
+
+_STALE_NAN = struct.unpack("<d", struct.pack("<Q", 0x7FF0000000000002))[0]
+_TEXT = st.text(max_size=6) | st.sampled_from(
+    ['"', "\\", "\x00\n\x1f\x7f", "é☃𝄞", "\u2028\ud7ff\ufeff", "a\\\"b"]
+)
+_SERIES = st.tuples(
+    st.dictionaries(st.sampled_from(["__name__", "job"]) | _TEXT, _TEXT, max_size=4),
+    st.lists(
+        st.tuples(
+            st.floats() | st.sampled_from(
+                [_STALE_NAN, math.inf, -math.inf, -0.0, 5e-324, 1e-310, 1e16, 1e-7]
+            ),
+            st.integers(-(1 << 63), (1 << 63) - 1) | st.sampled_from(
+                [-1, -(1 << 63), (1 << 53) + 1, (1 << 63) - 1]
+            ),
+        ),
+        max_size=3,
+    ),
+)
+
+
+@given(
+    series=st.lists(_SERIES, max_size=5),
+    held=st.sampled_from(
+        ["cached", "turned_away", "labels_after_samples", "duplicate_names"]
+    ),
+)
+@settings(max_examples=300, deadline=None)
+def test_ndjson_lines_match_json_dumps(series, held):
+    """The spool's line builder writes exactly the bytes of one
+    ``json.dumps(record, ensure_ascii=False, separators=(",", ":"))`` per
+    record: on a cold cache and a warm one (memo built, then reused), and
+    for label sets the cache does not hold (turned away by its key-byte
+    cap, Labels after Samples, a repeated label name)."""
+    parts = [
+        (_series_payload(labels, []), _series_payload({}, samples))
+        for labels, samples in series
+    ]
+    if held == "labels_after_samples":
+        parts = [(b"", smp + lbl) for lbl, smp in parts]
+    elif held == "duplicate_names":
+        parts = [(lbl + lbl, smp) for lbl, smp in parts]
+    wire = b"".join(prompb._len_delim(1, lbl + smp) for lbl, smp in parts)
+    cap = prompb.LABEL_CACHE_MAX_KEY_BYTES
+    prompb._forget_label_sets()
+    if held == "turned_away":
+        prompb.LABEL_CACHE_MAX_KEY_BYTES = 0
+    try:
+        for _ in ("cold", "warm"):
+            columns = prompb.decode_write_request(wire)
+            assert _ndjson_lines(columns) == _spool_text(columns)
+    finally:
+        prompb.LABEL_CACHE_MAX_KEY_BYTES = cap
+    if held == "cached":
+        assert all(hasattr(labels, "ndjson") for labels in prompb._label_sets.values())
+    elif held == "turned_away":
+        assert not any(prompb._label_sets)  # only the empty set fits a 0-byte cap
+
+
+def test_ndjson_spool_concurrent_memo_writes(tmp_path):
+    """8 threads spooling the same warm columns at once, building the
+    label sets' memos under each other without a lock, write the files
+    one ``json.dumps`` per record would."""
+    from perfbench.bodies import BASE_MS, Universe, make_body
+
+    universe = Universe(1)
+    bodies = [prompb.snappy_decompress(make_body(universe, 1, i, BASE_MS + i)[0])
+              for i in range(4)]
+    prompb._forget_label_sets()
+    for body in bodies:
+        prompb.decode_write_request(body)
+    columns = [prompb.decode_write_request(b) for b in bodies]  # all hits, no memo
+    assert not any(hasattr(labels, "ndjson") for labels in prompb._label_sets.values())
+    expected = [_spool_text(c) for c in columns]
+    spool = tmp_path / "spool"
+    srv = RemoteWriteServer(str(spool))  # never started: spool() alone
+
+    def spool_all(k: int) -> None:
+        for j in range(len(columns)):
+            srv.spool(columns[(k + j) % len(columns)])
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # switch threads often, inside the memo writes too
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            for f in [pool.submit(spool_all, k) for k in range(8)]:
+                f.result(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+        srv.server_close()
+    written = sorted(f.read_text(encoding="utf-8") for f in spool.iterdir())
+    assert written == sorted(expected * 8)
+
+
+def test_oversize_content_length_answers_413_without_reading(tmp_path, monkeypatch):
+    """A Content-Length above ``MAX_BODY_BYTES`` answers 413 before any
+    read on every POST route that reads a body: the client declares the
+    length and sends nothing, so a handler that tried to read would time
+    the client out. Nothing is spooled and the read handler never runs; a
+    body of exactly the cap is still read."""
+    import socket
+
+    def status(path: str, length: int) -> bytes:
+        with socket.create_connection((host, port), timeout=2) as sock:
+            sock.sendall(
+                f"POST {path} HTTP/1.1\r\nHost: x\r\n"
+                f"Content-Length: {length}\r\n\r\n".encode()
+            )
+            return sock.recv(64).split(b"\r\n")[0].split()[1]
+
+    spool = tmp_path / "spool"
+    calls = []
+    srv = RemoteWriteServer(str(spool), read_handler=calls.append).start()
+    host, port = srv.server_address[:2]
+    try:
+        for path in ("/receive", "/read", "/api/v1/query", "/api/v1/query_range"):
+            for length in (server.MAX_BODY_BYTES + 1, 1 << 62):
+                assert status(path, length) == b"413", (path, length)
+        body = encode_remote_write_body(FIXTURE)
+        monkeypatch.setattr(server, "MAX_BODY_BYTES", len(body))
+        assert status("/receive", len(body) + 1) == b"413"
+        assert list(spool.iterdir()) == []
+        assert _post(host, port, body) == 200
+    finally:
+        srv.stop()
+    assert len(list(spool.iterdir())) == 1
+    assert calls == []
 
 
 def test_remote_read_matcher_semantics(spark):
