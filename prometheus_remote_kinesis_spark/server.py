@@ -28,12 +28,22 @@ already-nested Spark rows) on the same fixtures so the two can never
 diverge silently. ``flatten_timeseries`` applies the same flatten to
 ``parse_write_request``-shaped series.
 
+``POST /receive`` routes on the URL path, as Go's ``ServeMux`` matches
+``r.URL.Path``: a remote-write URL with a query string is still received.
+
 Beyond the reference's write-only surface, the same server optionally
-serves the data BACK: ``POST /read`` (Prometheus remote_read, r10) and
-``GET /api/v1/query`` (the Prometheus HTTP API instant query, r11 —
-``promql.make_promql_http_handler`` puts the PQ compiler behind the
-spec's vector-JSON envelope). Both routes stay 404 unless a handler is
-injected, preserving reference parity by default.
+serves the data BACK: ``POST /read`` (Prometheus remote_read) and the
+Prometheus HTTP API (instant and range query, labels, label values,
+series, buildinfo; ``promql.make_promql_http_handler`` and its siblings
+put the PQ compiler behind the spec's JSON envelope). ``_ROUTES`` is the
+API's one route table: each path names the injected handler it needs and
+a route function that turns the request parameters into the reply's
+``data``. ``_Handler._api`` decides every API status in one place: 404
+for an unknown path or a handler that was not injected, 400 ``bad_data``
+when the route raises ValueError, 500 ``internal`` on any other failure,
+else 200. API routes take GET parameters or a POST form body (the body
+wins per key). Every read route stays 404 unless its handler is injected,
+preserving reference parity by default.
 """
 
 from __future__ import annotations
@@ -41,10 +51,14 @@ from __future__ import annotations
 import json
 import math
 import os
+import re
 import threading
 import uuid
 from collections.abc import Iterator
+from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from operator import attrgetter
+from urllib.parse import parse_qs, urlsplit
 
 from prometheus_remote_kinesis_spark.sources.prompb import (
     Columns,
@@ -124,6 +138,137 @@ def _records(columns: Columns) -> Iterator[dict]:
 MAX_BODY_BYTES = 32 << 20
 
 
+# Default metadata-route cap (the Prometheus API's `limit` parameter):
+# absent → this cap; `limit=0` (the spec's "disabled") → the hard server
+# max below, so NO client request can size a driver materialization by
+# data cardinality alone.
+_MD_DEFAULT_LIMIT = 1000
+_MD_HARD_MAX = 100_000
+_DURATION = re.compile(r"(\d+)(ms|s|m|h|d)")
+_DURATION_UNIT_S = {"ms": 0.001, "s": 1.0, "m": 60.0, "h": 3600.0, "d": 86400.0}
+
+
+def _parse_time_s(text: str) -> float:
+    """Prometheus API timestamp: unix seconds (float) or RFC3339 (the spec
+    allows both; Grafana sends either depending on the datasource
+    version). Anything else raises ValueError."""
+    try:
+        t = float(text)
+    except ValueError:
+        dt = datetime.fromisoformat(text.replace("Z", "+00:00"))
+        if dt.tzinfo is None:  # bare local times are ambiguous — spec
+            dt = dt.replace(tzinfo=timezone.utc)  # sends UTC ('Z') forms
+        return dt.timestamp()
+    if not math.isfinite(t):
+        # float() parses "inf"/"nan"; int(round(inf*1000)) downstream
+        # would raise OverflowError → a 500 'internal' where the spec
+        # wants 400 bad_data
+        raise ValueError(f"non-finite timestamp {text!r}")
+    return t
+
+
+def _parse_duration_s(text: str) -> float:
+    """Prometheus API step: a float (seconds) or a duration literal like
+    ``15s``/``5m``/``1h``; anything else raises ValueError."""
+    try:
+        return float(text)
+    except ValueError:
+        pass
+    m = _DURATION.fullmatch(text)
+    if not m:
+        raise ValueError(f"bad step {text!r}")
+    return int(m.group(1)) * _DURATION_UNIT_S[m.group(2)]
+
+
+def _parse_limit(params: dict) -> int:
+    """The metadata routes' ``limit=`` parameter → effective row cap
+    (always finite); a negative or non-integer limit raises ValueError."""
+    raw = params.get("limit", [None])[0]
+    if raw is None:
+        return _MD_DEFAULT_LIMIT
+    try:
+        n = int(raw)
+    except ValueError:
+        n = -1
+    if n < 0:
+        raise ValueError(f"bad limit parameter {raw!r}")
+    return min(n or _MD_HARD_MAX, _MD_HARD_MAX)  # spec: 0 disables the limit
+
+
+def _query(params: dict) -> str:
+    q = params.get("query", [None])[0]
+    if not q:
+        raise ValueError("missing query parameter")
+    return q
+
+
+def _instant(query_handler, params: dict) -> tuple:
+    q, time_s = _query(params), None
+    if "time" in params:  # spec: optional evaluation timestamp
+        try:
+            time_s = _parse_time_s(params["time"][0])
+        except ValueError:
+            raise ValueError(f"bad time parameter {params['time'][0]!r}") from None
+    t_s, results = query_handler(q, time_s)
+    result = [{"metric": labels, "value": [t_s, str(float(v))]} for labels, v in results]
+    return {"resultType": "vector", "result": result}, False
+
+
+def _range(range_handler, params: dict) -> tuple:
+    q = _query(params)
+    try:
+        start_s = _parse_time_s(params["start"][0])
+        end_s = _parse_time_s(params["end"][0])
+        step_s = _parse_duration_s(params["step"][0])
+    except (KeyError, ValueError):
+        raise ValueError("query_range needs start, end (unix seconds) "
+                         "and step (seconds or duration)") from None
+    result = [
+        {"metric": labels, "values": [[t_s, str(float(v))] for t_s, v in pts]}
+        for labels, pts in range_handler(q, start_s, end_s, step_s)
+    ]
+    return {"resultType": "matrix", "result": result}, False
+
+
+def _labels(metadata_handler, params: dict) -> tuple:
+    return metadata_handler("labels", limit=_parse_limit(params))
+
+
+def _label_values(metadata_handler, params: dict, name: str) -> tuple:
+    return metadata_handler("label_values", name, limit=_parse_limit(params))
+
+
+def _series(metadata_handler, params: dict) -> tuple:
+    limit = _parse_limit(params)
+    match = params.get("match[]", [None])[0]
+    if not match:
+        raise ValueError("series needs a match[] selector")
+    return metadata_handler("series", match, limit=limit)
+
+
+def _buildinfo(query_handler, params: dict) -> tuple:
+    # Grafana's Prometheus datasource probes buildinfo on save to pick its
+    # query UI feature set; the spec envelope with a conservative version
+    # is enough. Served only when a query surface is configured.
+    return {"version": "2.45.0", "application": "prometheus_remote_kinesis_spark"}, False
+
+
+# The Prometheus HTTP API's route table: path → (the injected server
+# handler the route needs, route function). A route function takes that
+# handler, the request parameters and, for label values, the label name
+# (the one path parameter); it returns ``(data, truncated)`` or raises
+# ValueError for bad input. ``_Handler._api`` does the rest.
+_LABEL_VALUES = re.compile(r"/api/v1/label/([^/]+)/values")
+_ROUTES = {
+    "/api/v1/query": (attrgetter("query_handler"), _instant),
+    "/api/v1/query_range": (attrgetter("range_handler"), _range),
+    "/api/v1/labels": (attrgetter("metadata_handler"), _labels),
+    "/api/v1/label/<name>/values": (attrgetter("metadata_handler"), _label_values),
+    "/api/v1/series": (attrgetter("metadata_handler"), _series),
+    "/api/v1/status/buildinfo": (attrgetter("query_handler"), _buildinfo),
+}
+
+
 class _Handler(BaseHTTPRequestHandler):
     # Quiet by default; the server object collects nothing per-request.
     def log_message(self, fmt: str, *args) -> None:  # noqa: A002
@@ -137,264 +282,49 @@ class _Handler(BaseHTTPRequestHandler):
         self.end_headers()
         self.wfile.write(body)
 
-    @staticmethod
-    def _parse_time_s(text: str) -> float:
-        """Prometheus API timestamp: unix seconds (float) or RFC3339
-        (the spec allows both; Grafana sends either depending on the
-        datasource version). Anything else → ValueError → 400."""
-        try:
-            t = float(text)
-        except ValueError:
-            from datetime import datetime, timezone
-
-            dt = datetime.fromisoformat(text.replace("Z", "+00:00"))
-            if dt.tzinfo is None:  # bare local times are ambiguous — spec
-                dt = dt.replace(tzinfo=timezone.utc)  # sends UTC ('Z') forms
-            return dt.timestamp()
-        if not math.isfinite(t):
-            # float() parses "inf"/"nan"; int(round(inf*1000)) downstream
-            # would raise OverflowError → a 500 'internal' where the spec
-            # wants 400 bad_data (r12 ADVICE)
-            raise ValueError(f"non-finite timestamp {text!r}")
-        return t
-
-    @staticmethod
-    def _parse_duration_s(text: str) -> float:
-        """Prometheus API step: a float (seconds) or a duration literal
-        like ``15s``/``5m``/``1h``; anything else → ValueError → 400."""
-        try:
-            return float(text)
-        except ValueError:
-            pass
-        import re as _re
-
-        m = _re.fullmatch(r"(\d+)(ms|s|m|h|d)", text)
-        if not m:
-            raise ValueError(f"bad step {text!r}")
-        return int(m.group(1)) * {
-            "ms": 0.001, "s": 1.0, "m": 60.0, "h": 3600.0, "d": 86400.0
-        }[m.group(2)]
-
-    def _bad(self, msg: str) -> None:
-        self._json(
-            400, {"status": "error", "errorType": "bad_data", "error": msg}
-        )
-
-    # Default metadata-route cap (the Prometheus API's `limit` parameter,
-    # r12 VERDICT task #5): absent → this cap; `limit=0` (the spec's
-    # "disabled") → the hard server max below, so NO client request can
-    # size a driver materialization by data cardinality alone.
-    _MD_DEFAULT_LIMIT = 1000
-    _MD_HARD_MAX = 100_000
-
-    def _parse_limit(self, params) -> int | None:
-        """The metadata routes' ``limit=`` parameter → effective row cap
-        (always finite). Returns None after answering 400 on bad input."""
-        raw = params.get("limit", [None])[0]
-        if raw is None:
-            return self._MD_DEFAULT_LIMIT
-        try:
-            n = int(raw)
-        except ValueError:
-            n = -1
-        if n < 0:
-            self._bad(f"bad limit parameter {raw!r}")
-            return None
-        if n == 0:  # spec: 0 disables the limit — bounded by the hard max
-            return self._MD_HARD_MAX
-        return min(n, self._MD_HARD_MAX)
-
-    def _md_reply(self, data, truncated: bool) -> None:
-        obj = {"status": "success", "data": data}
-        if truncated:  # the spec's truncation signal
-            obj["warnings"] = ["results truncated due to limit"]
-        self._json(200, obj)
-
     def do_GET(self) -> None:  # noqa: N802 (http.server API)
-        # Prometheus HTTP API (public spec): GET /api/v1/query (instant,
-        # optional time=) and GET /api/v1/query_range (start/end/step →
-        # matrix) — beyond-reference surface like /read: the PQ compiler
-        # serves the relayed series back to any Prometheus-API client
-        # (a Grafana panel's refresh IS a query_range call). Errors use
-        # the spec's status/errorType fields (bad_data for PromQL the
-        # subset rejects, internal for everything else).
-        from urllib.parse import parse_qs, urlparse
+        url = urlsplit(self.path)
+        self._api(url.path, url.query)
 
-        u = urlparse(self.path)
-        self._api(u.path, parse_qs(u.query))
-
-    def _api(self, path: str, params: dict) -> None:
-        """The shared API dispatcher — GET takes parameters from the URL,
-        POST from a form-encoded body (r12 VERDICT task #8: Prometheus
-        clients POST long queries; Grafana falls back to POST past
-        URL-length limits)."""
-        md = getattr(self.server, "metadata_handler", None)
-        if md is not None and path in ("/api/v1/labels", "/api/v1/series"):
-            limit = self._parse_limit(params)
-            if limit is None:
-                return
-            try:
-                if path == "/api/v1/labels":
-                    data, trunc = md("labels", limit=limit)
-                else:
-                    m = params.get("match[]", [None])[0]
-                    if not m:
-                        self._bad("series needs a match[] selector")
-                        return
-                    data, trunc = md("series", m, limit=limit)
-            except ValueError as e:
-                self._bad(str(e))
-                return
-            except Exception as e:  # noqa: BLE001 — spec: internal error
-                # (r12 ADVICE: a non-ValueError Spark failure previously
-                # escaped do_GET and dropped the connection)
-                self._json(
-                    500,
-                    {"status": "error", "errorType": "internal",
-                     "error": str(e)},
-                )
-                return
-            self._md_reply(data, trunc)
+    def _api(self, path: str, query: str, form: bytes = b"") -> None:
+        """Answers a Prometheus HTTP API request; every API status is
+        decided here. 404 for an unknown path or one whose handler was not
+        injected; otherwise the route runs on the URL query merged with a
+        POST form body (body wins per key, as Prometheus's ParseForm):
+        200 with the spec envelope, 400 ``bad_data`` when it raises
+        ValueError (bad parameters, PromQL the subset rejects, a body that
+        is not UTF-8), 500 ``internal`` on any other failure."""
+        m = _LABEL_VALUES.fullmatch(path)
+        handler_of, route = _ROUTES.get("/api/v1/label/<name>/values" if m else path, (None, None))
+        handler = handler_of and handler_of(self.server)
+        if handler is None:
+            self._status(404)
             return
-        if md is not None and path.startswith("/api/v1/label/") and path.endswith("/values"):
-            name = path[len("/api/v1/label/"):-len("/values")]
-            limit = self._parse_limit(params)
-            if limit is None:
-                return
-            try:
-                data, trunc = md("label_values", name, limit=limit)
-            except ValueError as e:
-                self._bad(str(e))
-                return
-            except Exception as e:  # noqa: BLE001 — spec: internal error
-                self._json(
-                    500,
-                    {"status": "error", "errorType": "internal",
-                     "error": str(e)},
-                )
-                return
-            self._md_reply(data, trunc)
-            return
-        if (
-            path == "/api/v1/query_range"
-            and getattr(self.server, "range_handler", None) is not None
-        ):
-            q = params.get("query", [None])[0]
-            if not q:
-                self._bad("missing query parameter")
-                return
-            try:
-                start_s = self._parse_time_s(params["start"][0])
-                end_s = self._parse_time_s(params["end"][0])
-                step_s = self._parse_duration_s(params["step"][0])
-            except (KeyError, ValueError, IndexError):
-                self._bad("query_range needs start, end (unix seconds) "
-                          "and step (seconds or duration)")
-                return
-            try:
-                series = self.server.range_handler(q, start_s, end_s, step_s)  # type: ignore[attr-defined]
-                result = [
-                    {"metric": labels,
-                     "values": [[t_s, str(float(v))] for t_s, v in pts]}
-                    for labels, pts in series
-                ]
-            except ValueError as e:  # PromQLError subclasses ValueError
-                self._bad(str(e))
-                return
-            except Exception as e:  # noqa: BLE001 — spec: internal error
-                self._json(
-                    500,
-                    {"status": "error", "errorType": "internal",
-                     "error": str(e)},
-                )
-                return
-            self._json(
-                200,
-                {
-                    "status": "success",
-                    "data": {"resultType": "matrix", "result": result},
-                },
-            )
-            return
-        if (
-            path == "/api/v1/status/buildinfo"
-            and getattr(self.server, "query_handler", None) is not None
-        ):
-            # Grafana's Prometheus datasource probes buildinfo on save to
-            # pick its query UI feature set (r13); the spec envelope with
-            # a conservative version is enough. Served only when a query
-            # surface is configured — a write-only relay keeps reference
-            # parity (404).
-            self._json(
-                200,
-                {
-                    "status": "success",
-                    "data": {"version": "2.45.0", "application": (
-                        "prometheus_remote_kinesis_spark"
-                    )},
-                },
-            )
-            return
-        if path != "/api/v1/query" or getattr(self.server, "query_handler", None) is None:
-            self.send_response(404)
-            self.end_headers()
-            return
-        q = params.get("query", [None])[0]
-        if not q:
-            self._bad("missing query parameter")
-            return
-        time_s = None
-        if "time" in params:  # spec: optional evaluation timestamp
-            try:
-                time_s = self._parse_time_s(params["time"][0])
-            except ValueError:
-                self._bad(f"bad time parameter {params['time'][0]!r}")
-                return
         try:
-            t_s, results = self.server.query_handler(q, time_s)  # type: ignore[attr-defined]
-            result = [
-                {"metric": labels, "value": [t_s, str(float(v))]}
-                for labels, v in results
-            ]
+            params = parse_qs(query)
+            params.update(parse_qs(form.decode("utf-8")))
+            data, truncated = route(handler, params, *(m.groups() if m else ()))
         except ValueError as e:  # PromQLError subclasses ValueError
-            self._bad(str(e))
+            self._json(400, {"status": "error", "errorType": "bad_data", "error": str(e)})
             return
         except Exception as e:  # noqa: BLE001 — spec: internal error
-            self._json(
-                500,
-                {"status": "error", "errorType": "internal", "error": str(e)},
-            )
+            self._json(500, {"status": "error", "errorType": "internal", "error": str(e)})
             return
-        self._json(
-            200,
-            {
-                "status": "success",
-                "data": {"resultType": "vector", "result": result},
-            },
-        )
+        reply = {"status": "success", "data": data}
+        if truncated:  # the spec's truncation signal
+            reply["warnings"] = ["results truncated due to limit"]
+        self._json(200, reply)
 
     def do_POST(self) -> None:  # noqa: N802 (http.server API)
-        from urllib.parse import parse_qs, urlparse
-
-        u = urlparse(self.path)
-        if u.path in ("/api/v1/query", "/api/v1/query_range"):
-            # Prometheus clients POST form-encoded bodies for long
-            # queries (r12 VERDICT task #8); parameters may arrive in the
-            # URL, the body, or both — body wins per key (the spec lets
-            # either carry them; merging matches Prometheus's ParseForm)
+        url = urlsplit(self.path)
+        if url.path.startswith("/api/v1/"):
+            # Prometheus clients POST form-encoded bodies for long queries;
+            # Grafana falls back to POST past URL-length limits.
             body = self._read_body()
-            if body is None:
-                return
-            try:
-                text = body.decode("utf-8")
-            except UnicodeDecodeError:
-                self._bad("unreadable request body")
-                return
-            params = parse_qs(u.query)
-            params.update(parse_qs(text))
-            self._api(u.path, params)
+            if body is not None:
+                self._api(url.path, url.query, body)
             return
-        if self.path == "/read" and getattr(self.server, "read_handler", None):
+        if url.path == "/read" and self.server.read_handler is not None:
             # Prometheus remote_read (beyond-reference surface; the
             # reference is write-only — this serves the relayed series
             # BACK to a `remote_read` client, prompb.py read codecs):
@@ -408,7 +338,7 @@ class _Handler(BaseHTTPRequestHandler):
                 self._status(400)  # bad snappy, or a ReadRequest cut short
                 return
             try:
-                results = self.server.read_handler(queries)  # type: ignore[attr-defined]
+                results = self.server.read_handler(queries)
                 payload = snappy_compress(encode_read_response(results))
             except Exception:
                 self._status(500)
@@ -420,7 +350,7 @@ class _Handler(BaseHTTPRequestHandler):
             self.end_headers()
             self.wfile.write(payload)
             return
-        if self.path != "/receive":  # route, main.go:61
+        if url.path != "/receive":  # route, main.go:61 (ServeMux matches the path)
             self._status(404)
             return
         body = self._read_body()
@@ -436,13 +366,13 @@ class _Handler(BaseHTTPRequestHandler):
         except Exception:
             self._status(400)  # kinesis.go:85-88
             return
-        if getattr(self.server, "raw", False):
+        if self.server.raw:
             # Raw mode: the decode above only chooses the status; the
             # original snappy body is spooled and the executors decode it
             # again with the same decoder (read_prompb_record_stream).
-            self.server.spool_raw(body)  # type: ignore[attr-defined]
+            self.server.spool_raw(body)
         else:
-            self.server.spool(columns)  # type: ignore[attr-defined]  # kinesis.go:92
+            self.server.spool(columns)  # kinesis.go:92
         self._status(200)  # implicit 200, kinesis.go:93
 
     def _read_body(self) -> bytes | None:

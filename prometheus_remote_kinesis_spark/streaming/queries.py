@@ -301,56 +301,6 @@ def t10s_counter_increase_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def tws_available() -> bool:
-    """``transformWithStateInPandas`` needs the google.protobuf python
-    package for its state-server wire protocol
-    (pyspark/sql/streaming/proto/StateMessage_pb2.py) — absent from this
-    container, so the TWS query registers only where it can actually run."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _t10c_counter_increase_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Counter increase via ``transformWithStateInPandas`` (Spark 4
-    arbitrary-state API) on the RocksDB state store — same oracle as the
-    applyInPandasWithState form, so both stateful APIs sit inside the
-    correctness gate."""
-    from prometheus_remote_kinesis_spark.streaming.stateful import counter_increase_tws
-
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = counter_increase_tws(_event_series_stream(spark, sf_dir))
-        result = run_to_batch(out, "append").select(
-            "name",
-            "time",
-            F.round("value", 6).alias("value"),
-            F.round("increase", 6).alias("increase"),
-            "resets",
-        )
-    finally:
-        if prev_provider:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev_provider)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    return result
-
-
-if tws_available():
-    register("t10c_counter_increase_tws", family="T10/U5", oracle=_T10_STREAM_ORACLE)(
-        _t10c_counter_increase_tws
-    )
-
-
 _T17_STREAM_ORACLE = """
     WITH d AS (
         SELECT event_type || '/' || CAST(user_id AS VARCHAR) AS name,

@@ -24,7 +24,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StatefulProcessor
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BooleanType,
@@ -124,79 +123,6 @@ def counter_increase(
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=timeout,
-    )
-
-
-class _CounterIncreaseProcessor(StatefulProcessor):
-    """``transformWithStateInPandas`` form of the counter-increase operator
-    (Spark 4 arbitrary-state API, the successor of applyInPandasWithState).
-
-    Same semantics as ``_increase_fn``; state is a typed ValueState cell
-    (last_value, last_time, resets) in the RocksDB state store — the
-    at-scale posture, since TWS state lives off-heap and snapshots
-    incrementally, unlike the HDFS-backed in-memory default."""
-
-    def init(self, handle) -> None:
-        from pyspark.sql.types import StructType as _St
-
-        schema = _St(
-            [
-                StructField("last_value", DoubleType()),
-                StructField("last_time", LongType()),
-                StructField("resets", LongType()),
-            ]
-        )
-        self._state = handle.getValueState("counter", schema)
-
-    def handleInputRows(
-        self, key: tuple[str], rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        (name,) = key
-        if self._state.exists():
-            last_value, last_time, resets = self._state.get()
-        else:
-            last_value, last_time, resets = None, None, 0
-
-        out: list[dict[str, Any]] = []
-        for pdf in rows:
-            pdf = pdf.sort_values("time")
-            for _, r in pdf.iterrows():
-                t, v = int(r["time"]), r["value"]
-                if v is None or pd.isna(v):
-                    continue
-                if last_value is None:
-                    inc = None
-                elif v >= last_value:
-                    inc = v - last_value
-                else:
-                    inc = v
-                    resets += 1
-                out.append(
-                    {"name": name, "time": t, "value": v, "increase": inc, "resets": resets}
-                )
-                last_value, last_time = v, t
-
-        self._state.update((last_value, last_time, resets))
-        yield pd.DataFrame(out, columns=[f.name for f in INCREASE_SCHEMA.fields])
-
-    def close(self) -> None:
-        # Mandatory StatefulProcessor lifecycle hook; this processor holds
-        # no external resources (its only state lives in the store handle
-        # Spark manages), so there is nothing to release here.
-        pass
-
-
-def counter_increase_tws(records: DataFrame) -> DataFrame:
-    """Counter increase via ``transformWithStateInPandas`` (Spark ≥4.0).
-
-    Requires the RocksDB state store provider — the caller (or session
-    builder) must set ``spark.sql.streaming.stateStore.providerClass`` to
-    ``...state.RocksDBStateStoreProvider`` before starting the query."""
-    return records.groupBy("name").transformWithStateInPandas(
-        statefulProcessor=_CounterIncreaseProcessor(),
-        outputStructType=INCREASE_SCHEMA,
-        outputMode="append",
-        timeMode="none",
     )
 
 

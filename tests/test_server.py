@@ -1227,3 +1227,130 @@ def test_promql_empty_aggregate_over_http(spark, tmp_path):
         assert doc["data"] == {"resultType": "matrix", "result": []}
     finally:
         srv.stop()
+
+
+@pytest.mark.parametrize("raw", [False, True])
+def test_receive_routes_on_url_path(tmp_path, raw):
+    """``/receive`` is matched on the URL path, as Go's ``ServeMux``
+    matches ``r.URL.Path``: a remote-write URL with a query string answers
+    200 and spools one file in either spool mode."""
+    spool = tmp_path / "spool"
+    srv = RemoteWriteServer(str(spool), raw=raw).start()
+    host, port = srv.server_address[:2]
+    try:
+        assert _post(host, port, encode_remote_write_body(FIXTURE), "/receive?tenant=a") == 200
+    finally:
+        srv.stop()
+    assert len(list(spool.iterdir())) == 1
+
+
+# Each API route: (path, request parameters, the call the injected
+# handler should receive). Buildinfo calls no handler.
+_API_ROUTES = {
+    "instant": ("/api/v1/query", {"query": "up", "time": "60"}, ("up", 60.0)),
+    "range": ("/api/v1/query_range", {"query": "up", "start": "0", "end": "60", "step": "15s"},
+              ("up", 0.0, 60.0, 15.0)),
+    "labels": ("/api/v1/labels", {}, ("labels",)),
+    "label_values": ("/api/v1/label/job/values", {"limit": "5"}, ("label_values", "job")),
+    "series": ("/api/v1/series", {"match[]": 'up{job="a"}'}, ("series", 'up{job="a"}')),
+    "buildinfo": ("/api/v1/status/buildinfo", {}, None),
+}
+
+
+def _api_request(srv, method: str, path: str, params: dict) -> tuple[int, dict | None]:
+    """GET with the parameters in the URL, or POST with them as a form
+    body; returns the status and the decoded JSON reply, if any."""
+    from urllib.parse import urlencode
+
+    form = urlencode(params)
+    conn = http.client.HTTPConnection(*srv.server_address[:2], timeout=10)
+    if method == "GET":
+        conn.request("GET", f"{path}?{form}")
+    else:
+        conn.request("POST", path, body=form.encode(),
+                     headers={"Content-Type": "application/x-www-form-urlencoded"})
+    resp = conn.getresponse()
+    status, body = resp.status, resp.read()
+    conn.close()
+    return status, json.loads(body) if body else None
+
+
+@pytest.mark.parametrize("exc, code, error_type", [
+    (RuntimeError("executor lost"), 500, "internal"),
+    (ValueError("parse error: unexpected end of input"), 400, "bad_data"),
+])
+@pytest.mark.parametrize("method", ["GET", "POST"])
+@pytest.mark.parametrize("route", sorted(_API_ROUTES))
+def test_api_answer_path(tmp_path, route, method, exc, code, error_type):
+    """Every API route answers its handler's failure with the spec's
+    error envelope, over GET and over a POST form body: a ValueError is
+    400 ``bad_data`` with its message, anything else 500 ``internal``.
+    The parameters reach the handler either way (a POSTed ``match[]``
+    too). Buildinfo calls no handler and answers 200."""
+    path, params, want_call = _API_ROUTES[route]
+    calls = []
+
+    def stub(*args, **kwargs):
+        calls.append(args)
+        raise exc
+
+    srv = RemoteWriteServer(str(tmp_path / "spool"), query_handler=stub,
+                            range_handler=stub, metadata_handler=stub).start()
+    try:
+        status, reply = _api_request(srv, method, path, params)
+    finally:
+        srv.stop()
+    if want_call is None:
+        assert (status, reply["status"], calls) == (200, "success", [])
+        return
+    assert calls == [want_call]
+    assert status == code
+    assert reply == {"status": "error", "errorType": error_type, "error": str(exc)}
+
+
+@pytest.mark.parametrize("method", ["GET", "POST"])
+def test_api_unknown_or_unconfigured_route_is_404(tmp_path, method):
+    """An unknown API path, a label-values path with no label name, and
+    every route whose handler was not injected answer 404 without calling
+    any handler."""
+    calls = []
+    srv = RemoteWriteServer(str(tmp_path / "spool"), query_handler=calls.append,
+                            metadata_handler=calls.append).start()
+    bare = RemoteWriteServer(str(tmp_path / "spool2")).start()
+    try:
+        for path in ("/api/v1/nosuch", "/api/v1/label/values", "/api/v1/label//values"):
+            assert _api_request(srv, method, path, {"query": "up"})[0] == 404, path
+        for path, params, _ in _API_ROUTES.values():
+            assert _api_request(bare, method, path, params)[0] == 404, path
+    finally:
+        srv.stop()
+        bare.stop()
+    assert calls == []
+
+
+@pytest.mark.parametrize("method", ["GET", "POST"])
+def test_api_success_envelopes(tmp_path, method):
+    """Each route's 200 reply: the instant vector and range matrix
+    envelopes with string values, metadata lists with the spec's
+    ``warnings`` only when the handler reports truncation, buildinfo."""
+    srv = RemoteWriteServer(
+        str(tmp_path / "spool"),
+        query_handler=lambda q, t: (60.0, [({"job": "a"}, 1.5)]),
+        range_handler=lambda q, start, end, step: [({"job": "a"}, [(0.0, 1), (15.0, 2.5)])],
+        metadata_handler=lambda kind, arg=None, limit=1000: ([kind, arg, limit], kind == "labels"),
+    ).start()
+    try:
+        got = {name: _api_request(srv, method, path, params)
+               for name, (path, params, _) in _API_ROUTES.items()}
+    finally:
+        srv.stop()
+    ok = {"status": "success"}
+    assert got["instant"] == (200, {**ok, "data": {"resultType": "vector", "result": [
+        {"metric": {"job": "a"}, "value": [60.0, "1.5"]}]}})
+    assert got["range"] == (200, {**ok, "data": {"resultType": "matrix", "result": [
+        {"metric": {"job": "a"}, "values": [[0.0, "1.0"], [15.0, "2.5"]]}]}})
+    assert got["labels"] == (200, {**ok, "data": ["labels", None, 1000],
+                                   "warnings": ["results truncated due to limit"]})
+    assert got["label_values"] == (200, {**ok, "data": ["label_values", "job", 5]})
+    assert got["series"] == (200, {**ok, "data": ["series", 'up{job="a"}', 1000]})
+    assert got["buildinfo"][0] == 200 and got["buildinfo"][1]["data"]["version"]

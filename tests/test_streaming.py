@@ -227,58 +227,6 @@ def test_counter_increase_stateful_vs_batch(spark, tmp_path):
     assert 5000 not in streamed  # NULL (stale) samples skipped
 
 
-def test_counter_increase_tws_vs_batch(spark, tmp_path):
-    """T10 via transformWithStateInPandas (Spark 4 arbitrary-state API):
-    same semantics as the applyInPandasWithState form. Skips where the
-    google.protobuf package (TWS state-server wire dep) is absent."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from prometheus_remote_kinesis_spark.streaming.stateful import (
-        counter_increase_batch,
-        counter_increase_tws,
-    )
-
-    src = tmp_path / "src"
-    out = tmp_path / "out"
-    ckpt = tmp_path / "ckpt"
-    for d in (src, out, ckpt):
-        d.mkdir()
-    series = [rec("c", 1000, 10.0), rec("c", 2000, 15.0), rec("c", 3000, 2.0)]
-    write_ndjson(str(src / "b1.json"), series)
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            counter_increase_tws(read_record_stream(spark, str(src)))
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    streamed = {
-        r["time"]: (r["increase"], r["resets"])
-        for r in spark.read.parquet(str(out)).collect()
-    }
-    batch_records = spark.createDataFrame(
-        [(r["name"], r["time"], r["value"]) for r in series],
-        "name string, time long, value double",
-    )
-    expected = {
-        r["time"]: (r["increase"], r["resets"])
-        for r in counter_increase_batch(batch_records).collect()
-    }
-    assert streamed == expected
-    assert streamed[3000] == (2.0, 1)
-
-
 def test_gap_fill_stateful_vs_batch(spark, tmp_path):
     """T10 gap fill: streaming LOCF grid emission across micro-batches
     (state carries last value + pending grid time) equals the batch twin
