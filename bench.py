@@ -209,6 +209,14 @@ def main() -> None:
                 # file source (bodies packed into few tasks), so the
                 # rates are not comparable across the marker.
                 "relay_prompb_source": "binaryFile",
+                # sink-path discontinuity marker: the relay_prompb_*
+                # drains decoded the bodies into an Arrow map column
+                # (mapInArrow) and encoded every row with the JVM's
+                # to_json for a second Python worker before this key
+                # appeared; each sink task now decodes its bodies and
+                # builds the NDJSON lines in one Python pass, so the
+                # rates are not comparable across the marker.
+                "relay_prompb_sink": "fused_python",
                 "relay_prompb_records_per_sec_1x_quotient": relay_pb[
                     "records_per_sec_1x_quotient"
                 ],

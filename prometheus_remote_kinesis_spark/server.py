@@ -9,7 +9,7 @@ reference handler's exact staging and status codes:
 | 1 read | ``ioutil.ReadAll`` (kinesis.go:69) | ``rfile.read(len)`` | 500 (kinesis.go:70-74); a bad ``Content-Length`` 400, as net/http; one above ``MAX_BODY_BYTES`` (32 MiB) 413 before reading |
 | 2 decompress | ``snappy.Decode`` (kinesis.go:76) | ``prompb.snappy_decompress`` (pyarrow's snappy; preamble capped at 22× the body) | 400 (kinesis.go:77-81) |
 | 3 decode + transform | ``proto.Unmarshal`` + ``parseRecords`` (kinesis.go:83-90, prometheus.go:10-37) | ``prompb.decode_write_request``: one pass to record columns, label sets reused from a bounded cache keyed by their wire bytes | 400 (kinesis.go:85-88) |
-| 4 handoff | ``writeCh <- records`` (kinesis.go:92) | atomic NDJSON file into the spool dir; each label set's JSON encoded once and memoised on its cached ``LabelSet`` (~1.5-2.4 ms a warm 2,000-sample body, was 11-14 ms) | — |
+| 4 handoff | ``writeCh <- records`` (kinesis.go:92) | atomic NDJSON file into the spool dir, lines from ``ndjson.ndjson_lines``; each label set's JSON encoded once and memoised on its cached ``LabelSet`` (~1.5-2.4 ms a warm 2,000-sample body, was 11-14 ms); the raw-spool relay's sink builds its lines with the same builder and memo | — |
 
 The spool directory IS the channel: the Structured Streaming relay
 (``streaming.pipeline.read_record_stream``) watches it as a file source,
@@ -19,10 +19,11 @@ ack-before-durable data loss window (SURVEY.md §3.2) is closed: we write
 the records before answering 200.
 
 Both spool modes run the same decoder as the ``format("prompb")``
-DataSource and the relay (``prompb_datasource.decode_body``). The NDJSON
-mode writes its columns as record lines; the raw mode (``raw=True``)
-drops them and spools the original body, so whatever the handler accepts,
-the executors decode. ``tests/test_server.py`` pins the decoder's flatten
+DataSource and the raw-spool relay (``prompb.decode_write_request``). The
+NDJSON mode writes its columns as record lines; the raw mode
+(``raw=True``) drops them and spools the original body, so whatever the
+handler accepts, the executors decode, and the relay sends the lines the
+NDJSON mode would have spooled. ``tests/test_server.py`` pins the decoder's flatten
 against the Spark-side ``ingest.flatten_write_requests`` (which flattens
 already-nested Spark rows) on the same fixtures so the two can never
 diverge silently. ``flatten_timeseries`` applies the same flatten to
@@ -60,9 +61,9 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from operator import attrgetter
 from urllib.parse import parse_qs, urlsplit
 
+from prometheus_remote_kinesis_spark.ndjson import ndjson_lines
 from prometheus_remote_kinesis_spark.sources.prompb import (
     Columns,
-    LabelSet,
     decode_write_request,
     encode_read_response,
     flatten_series,
@@ -85,41 +86,6 @@ def flatten_timeseries(timeseries: list[dict]) -> list[dict]:
         )
         for ts in timeseries
     )))
-
-
-# The NDJSON line builder's encoders: exactly json.dumps(record,
-# ensure_ascii=False, separators=(",", ":")) piece by piece. A value is
-# never NaN (flatten_series maps it to None), so finite floats are
-# float.__repr__, as json writes them.
-_encode_json = json.JSONEncoder(ensure_ascii=False, separators=(",", ":")).encode
-_VALUE_JSON = {None: "null", math.inf: "Infinity", -math.inf: "-Infinity"}
-
-
-def _ndjson_pieces(labels: dict) -> tuple[str, str]:
-    """A label set's record head ``{"name":<name>,"time":`` and tail
-    ``,"labels":{…}}\n``; kept in a ``LabelSet``'s memo slot."""
-    pieces = (
-        '{"name":' + _encode_json(labels.get("__name__", "")) + ',"time":',
-        ',"labels":' + _encode_json(labels) + "}\n",
-    )
-    if isinstance(labels, LabelSet):
-        labels.ndjson = pieces  # same value from any thread: no lock
-    return pieces
-
-
-def _ndjson_lines(columns: Columns) -> str:
-    """Record columns → NDJSON text, byte-identical to one ``json.dumps``
-    per record: each row is its label set's head + time + value + tail.
-    The pieces come from the set's memo, else are built once per series
-    run (a series' rows share one labels dict)."""
-    lines = []
-    last = None
-    for _, time, value, labels in zip(*columns):
-        if labels is not last:
-            last = labels
-            head, tail = getattr(labels, "ndjson", None) or _ndjson_pieces(labels)
-        lines.append(f'{head}{time},"value":{_VALUE_JSON.get(value) or repr(value)}{tail}')
-    return "".join(lines)
 
 
 def _records(columns: Columns) -> Iterator[dict]:
@@ -458,14 +424,14 @@ class RemoteWriteServer(ThreadingHTTPServer):
         ``json.dumps(record, ensure_ascii=False, separators=(",", ":"))``
         per record, but a label set's JSON is encoded once: its head and
         tail are memoised on the cached ``LabelSet`` the first time it is
-        spooled (``_ndjson_lines``). Measured on 24 perfbench ``Universe(1)``
+        spooled (``ndjson.ndjson_lines``). Measured on 24 perfbench ``Universe(1)``
         bodies (2,000 series of one sample each, best of 7, one 4-core
         shared host): one ``json.dumps`` per record took 11-14 ms a body;
         this builder takes 1.5-2.4 ms warm, and 8.8-10.5 ms with the memo
         taken out. Bodies of only new label sets take 0.87-0.91x the
         ``json.dumps`` loop (median of 9)."""
         if columns[0]:
-            self._spool_file(_ndjson_lines(columns).encode("utf-8"), ".json")
+            self._spool_file("".join(ndjson_lines(columns)).encode("utf-8"), ".json")
 
     def spool_raw(self, body: bytes) -> None:
         self._spool_file(body, ".pb.sz")

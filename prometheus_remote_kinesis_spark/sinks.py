@@ -29,7 +29,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from prometheus_remote_kinesis_spark.ndjson import ndjson_lines
 from prometheus_remote_kinesis_spark.schema import MAX_PUT_BYTES, MAX_PUT_ENTRIES
+from prometheus_remote_kinesis_spark.sources.prompb import (
+    decode_write_request,
+    snappy_decompress,
+)
 
 # NDJSON wire format: {"name":...,"time":...,"value":...,"labels":{...}}\n
 # Field order follows the Go struct (record.go:8-14); ignoreNullFields=false
@@ -140,6 +145,83 @@ def foreach_batch_writer(
     the batch instead of losing it silently. Entries of the batch that
     were delivered are delivered again on that replay (at-least-once).
     """
+    return _batch_writer(
+        _record_rows, _record_entries, put_records_fn, max_entries, max_bytes, commit_dir
+    )
+
+
+def body_batch_writer(
+    put_records_fn: PutRecordsFn,
+    max_entries: int = MAX_PUT_ENTRIES,
+    max_bytes: int = MAX_PUT_BYTES,
+    commit_dir: str | None = None,
+) -> Callable[[DataFrame, int], None]:
+    """``foreach_batch_writer`` for a stream of raw remote-write bodies
+    (one binary column of snappy ``WriteRequest`` bodies, as
+    ``streaming.pipeline.relay`` streams a raw spool): each task decodes
+    its bodies and sends the NDJSON lines of their records, the bytes the
+    NDJSON spool writes for the same body. Same send loop, limits,
+    retries, failure accounting and ``commit_dir`` markers. A body that
+    does not decode fails the batch."""
+    return _batch_writer(
+        lambda bodies: bodies, _body_entries, put_records_fn, max_entries, max_bytes,
+        commit_dir,
+    )
+
+
+# The two per-row encoders of ``_batch_writer``: which rows a micro-batch
+# ships to the executors' Python workers, and how a task turns them into
+# (partition key, NDJSON line) entries. The record path ships one to_json
+# string per record; the body path ships one snappy body per spool file
+# and builds the records and their lines in the task. Both ship rows
+# through foreachPartition, deliberately NOT mapInArrow: A/B-measured on
+# 100k-row micro-batches, an Arrow variant of the record path was ~17%
+# SLOWER (mean 25.2k vs 30.4k rec/s; re-measured r13: 0.80 s vs 0.63 s
+# median) — the per-partition Arrow conversion plus the extra result
+# stage cost more than column-batch access saved on these narrow rows.
+
+
+def _record_rows(batch_df: DataFrame) -> DataFrame:
+    """Records (RECORD_SCHEMA rows, or any frame with its four fields):
+    the JVM encodes each row with ``to_json`` and ships ONE string per
+    row, key + "\n" + line. The partition drain is ~100% JVM→Python row
+    pickling (r13: pickle-only 0.61 s vs full loop 0.63 s measured), and
+    one string instead of a 2-field Row measured 0.54 s vs 0.63 s (-14%)
+    on the same micro-batches."""
+    encoded = encode_ndjson(batch_df).where(F.col("line").isNotNull())
+    return encoded.select(F.concat_ws("\n", "partition_key", "line").alias("kl"))
+
+
+def _record_entries(rows: Iterator) -> Iterator[tuple[str, bytes]]:
+    # to_json output never contains a raw newline (JSON escapes control
+    # characters), so the LAST "\n" is always the separator, whatever the
+    # key holds; unpacking the 1-field rows skips Row.__getitem__.
+    for (kl,) in rows:
+        key, _, line = kl.rpartition("\n")
+        yield key, (line + "\n").encode("utf-8")
+
+
+def _body_entries(rows: Iterator) -> Iterator[tuple[str, bytes]]:
+    # The whole relay of a body in one Python pass: decode to record
+    # columns and build the lines the NDJSON spool would have written for
+    # it (the label sets' memoised heads and tails), keyed by name.
+    for (body,) in rows:
+        columns = decode_write_request(snappy_decompress(body))
+        for name, line in zip(columns[0], ndjson_lines(columns)):
+            yield name, line.encode("utf-8")
+
+
+def _batch_writer(
+    to_rows: Callable[[DataFrame], DataFrame],
+    to_entries: Callable[[Iterator], Iterator[tuple[str, bytes]]],
+    put_records_fn: PutRecordsFn,
+    max_entries: int,
+    max_bytes: int,
+    commit_dir: str | None,
+) -> Callable[[DataFrame, int], None]:
+    """The one send loop behind ``foreach_batch_writer`` and the raw-spool
+    relay: commit marker, chunking, retries and the failed-entries
+    accumulator, with the per-row encoder ``(to_rows, to_entries)``."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         if commit_dir is not None:
@@ -147,39 +229,13 @@ def foreach_batch_writer(
             marker = os.path.join(commit_dir, f"batch-{batch_id}.done")
             if os.path.exists(marker):
                 return  # replayed batch, already delivered
-        # foreachPartition, deliberately NOT mapInArrow: A/B-measured on
-        # 100k-row micro-batches, the Arrow variant was ~17% SLOWER
-        # (mean 25.2k vs 30.4k rec/s; re-measured r13: 0.80 s vs 0.63 s
-        # median) — the per-partition Arrow conversion plus the extra
-        # result stage cost more than column-batch access saved on these
-        # narrow rows.
-        #
-        # r13 (guide §4.1 "how efficiently they cross"): the partition
-        # drain is ~100% JVM→Python row pickling (pickle-only 0.61 s vs
-        # full loop 0.63 s measured), so ship ONE string per row instead
-        # of a 2-field Row: key + "\n" + line, split Python-side with
-        # rpartition (to_json output never contains a raw newline — JSON
-        # escapes control characters — so the LAST "\n" is always the
-        # separator, whatever the key contains). Tuple-unpacking the
-        # 1-field rows skips Row.__getitem__'s name lookup. Measured
-        # median 0.54 s vs 0.63 s (-14%) on the same micro-batches.
-        encoded = encode_ndjson(batch_df).where(F.col("line").isNotNull())
-        single = encoded.select(
-            F.concat_ws("\n", "partition_key", "line").alias("kl")
-        )
-
         failed = batch_df.sparkSession.sparkContext.accumulator(0)
 
         def send_partition(rows: Iterator) -> None:
-            def entries() -> Iterator[tuple[str, bytes]]:
-                for (kl,) in rows:
-                    key, _, line = kl.rpartition("\n")
-                    yield key, (line + "\n").encode("utf-8")
-
-            for chunk in chunk_entries(entries(), max_entries, max_bytes):
+            for chunk in chunk_entries(to_entries(rows), max_entries, max_bytes):
                 failed.add(put_batch(chunk, put_records_fn))
 
-        single.foreachPartition(send_partition)
+        to_rows(batch_df).foreachPartition(send_partition)
         if failed.value:
             raise RuntimeError(
                 f"batch {batch_id}: {failed.value} entries permanently failed "

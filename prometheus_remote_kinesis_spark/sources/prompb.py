@@ -41,10 +41,11 @@ takes 38-48% of the time it took before the cache; a body of all-new
 label sets takes 1.07-1.20x.
 
 A cached set is a ``LabelSet``: a ``dict`` whose one slot holds the
-NDJSON spool's memo of the set's record head and tail, built the first
-time ``server.spool`` writes the set (raw mode, ``decode_body`` and the
-relay never build it). The memo goes with its entry, so the caps bound
-it too. With ``tracemalloc``, a full cache holds 32.6 MiB at the
+memo of the set's NDJSON record head and tail, built the first time
+``ndjson.ndjson_lines`` writes the set: in the NDJSON spool
+(``server.spool``) or in a raw-spool relay's sink task (the raw
+handler and ``decode_body`` never build it). The memo goes with its
+entry, so the caps bound it too. With ``tracemalloc``, a full cache holds 32.6 MiB at the
 perfbench label shape (27,039 entries, ~1.27 KB an entry) and 59.0 MiB
 at the worst case measured, short labels of two-character names and
 values (32,768 entries of 12 labels); with every entry's memo built,
@@ -227,10 +228,10 @@ LABEL_CACHE_MAX_KEY_BYTES = 4 << 20
 
 class LabelSet(dict):
     """A decoded label set: a plain ``dict`` to every reader, plus the
-    slot ``ndjson``, the NDJSON spool's memo of the set's record head and
-    tail (``server.spool``). Unset until the spool first writes the set,
-    so it lives and dies with the cache entry (or the body) holding the
-    set; no other path sets it."""
+    slot ``ndjson``, the memo of the set's NDJSON record head and tail
+    (``ndjson.ndjson_lines``). Unset until a record line is first built
+    for the set, so it lives and dies with the cache entry (or the body)
+    holding the set; no other path sets it."""
 
     __slots__ = ("ndjson",)
 
@@ -368,15 +369,16 @@ def decode_write_request(buf: bytes) -> Columns:
     """protobuf ``WriteRequest`` bytes → the record columns ``(name, time,
     value, labels)`` in one pass: ``proto.Unmarshal`` then ``parseRecords``
     (kinesis.go:83-90). Every Python ingest path decodes through this: both
-    ``/receive`` spool modes, the ``format("prompb")`` DataSource and the
-    relay (``prompb_datasource.decode_body``). Malformed wire raises
-    ``ValueError``.
+    ``/receive`` spool modes, the ``format("prompb")`` DataSource and
+    ``read_prompb_record_stream`` (``prompb_datasource.decode_body``), and
+    the raw-spool relay's sink tasks (``sinks.body_batch_writer``).
+    Malformed wire raises ``ValueError``.
 
     The labels dicts come from the label-set cache (see the module
     docstring for its key, caps, fill rule and costs). One dict is shared
     across rows, bodies and threads, so callers must treat it as
-    read-only; ``server.spool`` (which keeps the set's NDJSON in the
-    ``LabelSet`` memo slot, not in the dict) and ``pa.array`` in
+    read-only; ``ndjson.ndjson_lines`` (which keeps the set's NDJSON in
+    the ``LabelSet`` memo slot, not in the dict) and ``pa.array`` in
     ``decode_body`` only read it, which
     ``test_receive_and_decode_body_leave_cached_labels_unchanged`` checks.
 

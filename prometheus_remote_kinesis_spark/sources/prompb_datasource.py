@@ -11,12 +11,14 @@ archival twin that writes such files.
 The batch reader makes one InputPartition per spool file, and the decode
 (``decode_body``: pyarrow's snappy, then ``prompb.decode_write_request``'s
 record columns as one Arrow batch) runs on executors — the driver never
-touches payload bytes. ``decode_body`` is the one per-body decoder, the
-same call the ``/receive`` handler runs: the streaming relay
+touches payload bytes. ``decode_body`` is the one per-body Arrow
+decoder, on the same ``decode_write_request`` the ``/receive`` handler
+runs: the raw-spool record stream
 (``streaming.pipeline.read_prompb_record_stream``) reads the same spool
 through Spark's own ``binaryFile`` file source, which packs many small
-files into few tasks, and decodes with it through ``mapInArrow``. There
-is no streaming reader here.
+files into few tasks, and decodes with it through ``mapInArrow``. (The
+relay of that stream skips the Arrow build: its sink tasks decode the
+bodies themselves.) There is no streaming reader here.
 """
 
 from __future__ import annotations

@@ -6,9 +6,10 @@ rows through the same per-body decoder as the ``format("prompb")``
 DataSource (``prompb_datasource.decode_body``, built on the one
 WriteRequest decoder ``prompb.decode_write_request`` that the
 ``/receive`` handler also runs), as an Arrow-batched ``mapInArrow``
-(SURVEY.md §2.10 U1). The raw-spool relay
+(SURVEY.md §2.10 U1). The raw-spool record stream
 (``streaming.pipeline.read_prompb_record_stream``) is this stage over
-Spark's ``binaryFile`` stream.
+Spark's ``binaryFile`` stream; ``relay`` given that stream as it is
+sends the bodies to its sink tasks instead (``sinks.body_batch_writer``).
 
 The HTTP listener itself is peripheral (BASELINE.json): in production the
 bodies arrive via a stream transport (Kinesis/Kafka topic of raw bodies, or

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from prometheus_remote_kinesis_spark.schema import RECORD_SCHEMA, TABLES
+from prometheus_remote_kinesis_spark.schema import TABLES
 
 # Columns written as parquet TIMESTAMP(NANOS), which Spark's vectorized
 # reader rejects outright ([PARQUET_TYPE_ILLEGAL]). We flip the runtime conf
@@ -248,14 +248,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every test table as a temp view for the SQL API."""
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def read_ndjson_records(spark: SparkSession, path: str) -> DataFrame:
-    """Read the engine's own NDJSON wire format back (S8).
-
-    Explicit ``RECORD_SCHEMA`` — never inference: ``value: null`` rows and
-    map-typed ``labels`` would break or destabilize inferred schemas
-    (SURVEY.md §1.3).  Wire format: one JSON object per line
-    (/root/reference/README.rst:44-61, kinesis.go:163).
-    """
-    return spark.read.schema(RECORD_SCHEMA).json(path)

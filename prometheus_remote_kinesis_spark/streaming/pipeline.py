@@ -8,14 +8,22 @@ Reference dataflow (kinesis.go / firehose.go):
 
 Spark mapping:
 
-    readStream(spool) → decode_remote_write (raw bodies; an NDJSON spool
-      holds records already) → writeStream
+    readStream(spool) → writeStream
       .trigger(processingTime='10 seconds')         (T1: main.go:75 default)
       .foreachBatch(chunked put: ≤500 / ≤4.5e6)     (T2: kinesis.go:22-23)
       .option('checkpointLocation', ...)            (T4: supersedes the
           reference's flush-on-close, which is unreachable on SIGTERM —
           SURVEY.md §4.3 bug 4; checkpointing also upgrades the
           ack-before-durable handoff of kinesis.go:92 to at-least-once)
+
+An NDJSON spool holds records already: the batch's rows are encoded
+with ``to_json`` in the JVM and shipped to a Python task for the put.
+A raw spool holds snappy remote-write bodies: ``relay`` streams the
+bodies themselves, and each Python task runs the reference's whole
+per-body pipeline (kinesis.go:76-93, :153-193) in one pass: snappy →
+decode → flatten → NDJSON lines (the spool's own line builder) → chunk →
+put. Any other records frame, a transformed raw one included, takes the
+``to_json`` path.
 
 Backpressure (T3, chan cap 1000) is Spark source admission control
 (``maxFilesPerTrigger`` / ``maxOffsetsPerTrigger``) — not re-implemented.
@@ -44,7 +52,11 @@ from prometheus_remote_kinesis_spark.schema import (
     MAX_PUT_ENTRIES,
     RECORD_SCHEMA,
 )
-from prometheus_remote_kinesis_spark.sinks import PutRecordsFn, foreach_batch_writer
+from prometheus_remote_kinesis_spark.sinks import (
+    PutRecordsFn,
+    body_batch_writer,
+    foreach_batch_writer,
+)
 
 DEFAULT_WRITE_INTERVAL = "10 seconds"  # -write-interval default, main.go:75
 
@@ -79,6 +91,12 @@ def read_prompb_record_stream(
     ``availableNow`` is native. ``parallel`` is accepted for older callers
     and ignored.
 
+    The returned frame remembers its bodies stream: ``relay`` given this
+    frame as it is streams the bodies and decodes them in its sink tasks
+    instead (same records, no Arrow build and no JVM ``to_json``). A
+    frame derived from it (``where``, ``select``, …) is a new frame and
+    relays its rows.
+
     Two consequences of reading bodies as files:
 
     - ``numInputRows`` in the query progress counts BODIES (files), not
@@ -97,7 +115,9 @@ def read_prompb_record_stream(
         .option("pathGlobFilter", "*.pb.sz")
         .load(path)
     )
-    return decode_remote_write(bodies.select(F.col("content").alias("body")))
+    records = decode_remote_write(bodies.select(F.col("content").alias("body")))
+    records._prompb_bodies = bodies.select("content")
+    return records
 
 
 def relay(
@@ -112,10 +132,24 @@ def relay(
     """The reference's whole writer loop (kinesis.go:99-151) as one
     writeStream: time trigger + sink-side size/count chunking + retry.
 
+    ``records`` exactly as ``read_prompb_record_stream`` returned it is
+    relayed from its bodies: the query streams the raw spool's
+    ``binaryFile`` bodies, and each sink task decodes them and sends the
+    NDJSON lines the spool's own line builder makes
+    (``sinks.body_batch_writer``). Every other frame is encoded with
+    ``to_json`` (``sinks.foreach_batch_writer``). Both send through one
+    loop: same chunk limits, retries and failure accounting.
+
     ``available_now=True`` drains the current source contents then stops —
     used by tests and batch-catchup runs."""
-    writer: DataStreamWriter = records.writeStream.foreachBatch(
-        foreach_batch_writer(put_records_fn, max_entries=max_entries, max_bytes=max_bytes)
+    # the instance dict, not getattr: DataFrame.__getattr__ resolves
+    # column names through the JVM
+    bodies = records.__dict__.get("_prompb_bodies")
+    stream, batch_writer = (
+        (records, foreach_batch_writer) if bodies is None else (bodies, body_batch_writer)
+    )
+    writer: DataStreamWriter = stream.writeStream.foreachBatch(
+        batch_writer(put_records_fn, max_entries=max_entries, max_bytes=max_bytes)
     ).option("checkpointLocation", checkpoint_dir)
     if available_now:
         writer = writer.trigger(availableNow=True)
@@ -155,23 +189,6 @@ def windowed_rollup(
         "n",
         "sum_value",
         "avg_value",
-    )
-
-
-def sessionized(
-    records: DataFrame, gap: str = "30 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """T7 streaming session windows per series name."""
-    ts = with_event_time(records).withWatermark("event_time", watermark)
-    return ts.groupBy(F.session_window("event_time", gap).alias("w"), "name").agg(
-        F.count(F.lit(1)).alias("n_records"),
-        F.sum("value").alias("sum_value"),
-    ).select(
-        "name",
-        F.col("w.start").alias("session_start"),
-        F.col("w.end").alias("session_end"),
-        "n_records",
-        "sum_value",
     )
 
 

@@ -5,6 +5,8 @@ pinned file-by-file, independent of the r4 oracle query.
 
 from __future__ import annotations
 
+import pytest
+
 from prometheus_remote_kinesis_spark.sources.prompb import encode_remote_write_body
 from prometheus_remote_kinesis_spark.sources.prompb_datasource import (
     register_prompb_source,
@@ -154,11 +156,15 @@ def test_prompb_stream_reads_only_spool_files(spark, tmp_path):
     assert [(r.name, r.time, r.value) for r in rows] == [("m1", 1000, 1.0)]
 
 
-def test_prompb_stream_corrupt_body_fails_loudly(spark, tmp_path):
-    """A ``.pb.sz`` file that is not snappy fails the query; it is never
-    dropped silently."""
-    import pytest
+@pytest.mark.parametrize("sink", ["memory", "relay"])
+def test_prompb_stream_corrupt_body_fails_loudly(spark, tmp_path, sink):
+    """A ``.pb.sz`` file that is not snappy fails the query and commits
+    no batch; it is never dropped silently. ``relay`` decodes the bodies
+    in its sink tasks, where the same failure ends the query."""
     from pyspark.errors import StreamingQueryException
+
+    from prometheus_remote_kinesis_spark.streaming.pipeline import relay
+    from prometheus_remote_kinesis_spark.testing import FilePutRecords
 
     src = tmp_path / "spool"
     src.mkdir()
@@ -166,8 +172,18 @@ def test_prompb_stream_corrupt_body_fails_loudly(spark, tmp_path):
         encode_remote_write_body([({"__name__": "m1"}, [(1.0, 1000)])])
     )
     (src / "bad.pb.sz").write_bytes(b"\xff\xff not snappy")
+    ckpt = tmp_path / "ckpt"
     with pytest.raises(StreamingQueryException):
-        _drain_to_memory(spark, src, tmp_path / "ckpt", "prompb_corrupt")
+        if sink == "memory":
+            _drain_to_memory(spark, src, ckpt, "prompb_corrupt")
+        else:
+            relay(
+                read_prompb_record_stream(spark, str(src)),
+                FilePutRecords(str(tmp_path)),
+                str(ckpt),
+                available_now=True,
+            ).awaitTermination()
+    assert not list((ckpt / "commits").glob("[0-9]*"))
 
 
 def test_prompb_writer_roundtrip(spark, tmp_path):

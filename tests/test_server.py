@@ -18,9 +18,9 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from prometheus_remote_kinesis_spark import server
+from prometheus_remote_kinesis_spark.ndjson import ndjson_lines
 from prometheus_remote_kinesis_spark.server import (
     RemoteWriteServer,
-    _ndjson_lines,
     _records,
     flatten_timeseries,
 )
@@ -352,7 +352,7 @@ def test_ndjson_lines_match_json_dumps(series, held):
     try:
         for _ in ("cold", "warm"):
             columns = prompb.decode_write_request(wire)
-            assert _ndjson_lines(columns) == _spool_text(columns)
+            assert "".join(ndjson_lines(columns)) == _spool_text(columns)
     finally:
         prompb.LABEL_CACHE_MAX_KEY_BYTES = cap
     if held == "cached":

@@ -3,6 +3,11 @@ reference bugs of SURVEY.md §4.3 that we deliberately fix)."""
 
 from __future__ import annotations
 
+import json
+import math
+import struct
+
+import pytest
 from pyspark.sql import functions as F
 
 from prometheus_remote_kinesis_spark.schema import MAX_PUT_BYTES, MAX_PUT_ENTRIES
@@ -102,6 +107,86 @@ def test_foreach_batch_writer_end_to_end(spark, tmp_path):
     assert by_key["m1"].startswith('{"name":"m1"')
     assert '"value":null' in by_key["m2"]  # record.go:21-27
     assert all(d.endswith("\n") for d in by_key.values())  # kinesis.go:163
+
+
+# One body of every record-encoding edge: non-ASCII, quote, backslash
+# and control-character names and values, no ``__name__``, a labels-only
+# series, a stale NaN, ±Inf, -0.0, the smallest subnormal, 1e16, and
+# negative and beyond-2^53 timestamps.
+_STALE_NAN = struct.unpack("<d", struct.pack("<Q", 0x7FF0000000000002))[0]
+EDGE_SERIES = [
+    (
+        {"__name__": 'é☃"q\\b', "job": 'a"b\\c', "ünï": "𝄞\u2028"},
+        [(_STALE_NAN, -1), (math.inf, (1 << 53) + 1), (-math.inf, -(1 << 63)),
+         (-0.0, (1 << 63) - 1), (5e-324, 0), (1e16, 1_700_000_000_000)],
+    ),
+    ({"job": "no_name", "ctl": "\x00\n\x1f\x7f"}, [(2.5, 1000), (-1e-7, -5)]),
+    ({"__name__": "labels_only", "job": "x"}, []),
+]
+
+
+def _edge_body() -> bytes:
+    from prometheus_remote_kinesis_spark.sources.prompb import encode_remote_write_body
+
+    return encode_remote_write_body(EDGE_SERIES)
+
+
+def test_body_entries_match_ndjson_spool(tmp_path):
+    """The raw-spool relay's per-body encoder sends, byte for byte, the
+    file the NDJSON spool writes for the same body, each line keyed by
+    its record's name; on a cold label-set cache and a warm one."""
+    from prometheus_remote_kinesis_spark.server import RemoteWriteServer
+    from prometheus_remote_kinesis_spark.sinks import _body_entries
+    from prometheus_remote_kinesis_spark.sources import prompb
+
+    body = _edge_body()
+    srv = RemoteWriteServer(str(tmp_path / "spool"))  # never started: spool() alone
+    try:
+        srv.spool(prompb.decode_write_request(prompb.snappy_decompress(body)))
+    finally:
+        srv.server_close()
+    (spooled,) = (tmp_path / "spool").iterdir()
+    names = [
+        labels.get("__name__", "") for labels, samples in EDGE_SERIES
+        for _ in samples or [None]
+    ]
+    prompb._forget_label_sets()
+    for _ in ("cold", "warm"):
+        entries = list(_body_entries(iter([(bytearray(body),)])))
+        assert [k for k, _ in entries] == names
+        assert b"".join(d for _, d in entries) == spooled.read_bytes()
+
+
+def test_body_writer_lines_load_as_to_json_lines(spark, tmp_path):
+    """Through the one send loop, the body writer's lines parse to the
+    records the ``to_json`` writer sends for the decoded body, same keys
+    and order, except ±Inf: bare ``Infinity`` (the NDJSON spool's
+    spelling) where ``to_json`` writes the string ``"Infinity"``."""
+    from prometheus_remote_kinesis_spark.sinks import body_batch_writer
+    from prometheus_remote_kinesis_spark.sources.remote_write import decode_remote_write
+    from prometheus_remote_kinesis_spark.testing import FilePutRecords
+
+    bodies = spark.createDataFrame([(_edge_body(),)], "body binary")
+    got = {}
+    for kind, writer, frame in (
+        ("json", foreach_batch_writer, decode_remote_write(bodies)),
+        ("body", body_batch_writer, bodies),
+    ):
+        out = tmp_path / kind
+        out.mkdir()
+        writer(FilePutRecords(str(out), keep_keys=True))(frame, 0)
+        (sent,) = out.iterdir()
+        got[kind] = [ln.split(b"\t", 1) for ln in sent.read_bytes().splitlines()]
+    assert [k for k, _ in got["body"]] == [k for k, _ in got["json"]]
+    n_inf = 0
+    for (_, body_line), (_, json_line) in zip(got["body"], got["json"]):
+        fused, parent = json.loads(body_line), json.loads(json_line)
+        if fused["value"] in (math.inf, -math.inf):
+            n_inf += 1
+            assert body_line.count(b"Infinity") == 1 and b'"Infinity"' not in body_line
+            parent["value"] = float(parent["value"])
+        assert fused == parent
+    assert n_inf == 2 and len(got["body"]) == 9
 
 
 def test_parquet_archive_roundtrip_and_pruning(spark, tmp_path):
@@ -258,13 +343,14 @@ def test_archive_write_is_time_clustered(spark, tmp_path):
         assert times == sorted(times), f
 
 
-def test_permanent_put_failure_fails_batch_and_replays(spark, tmp_path):
+@pytest.mark.parametrize("via", ["foreach_batch_writer", "relay"])
+def test_permanent_put_failure_fails_batch_and_replays(spark, tmp_path, via):
     """Entries that still fail after put_batch's retries fail the
     micro-batch loudly: the query ends in an exception and no commit
     marker is written, so a rerun on the same checkpoint with a working
     put replays the batch and delivers every record (nothing is lost
-    silently)."""
-    import pytest
+    silently). ``relay`` sends the raw spool's bodies through the same
+    loop, decoding them in its sink tasks."""
     from pyspark.errors import StreamingQueryException
 
     from prometheus_remote_kinesis_spark.sources.prompb import (
@@ -272,6 +358,7 @@ def test_permanent_put_failure_fails_batch_and_replays(spark, tmp_path):
     )
     from prometheus_remote_kinesis_spark.streaming.pipeline import (
         read_prompb_record_stream,
+        relay,
     )
     from prometheus_remote_kinesis_spark.testing import FilePutRecords
 
@@ -290,9 +377,11 @@ def test_permanent_put_failure_fails_batch_and_replays(spark, tmp_path):
             return list(range(len(batch.entries)))
 
     def drain(put_fn):
+        records = read_prompb_record_stream(spark, str(spool))
+        if via == "relay":
+            return relay(records, put_fn, str(tmp_path / "ckpt"), available_now=True)
         return (
-            read_prompb_record_stream(spark, str(spool))
-            .writeStream.foreachBatch(
+            records.writeStream.foreachBatch(
                 foreach_batch_writer(put_fn, commit_dir=str(commits))
             )
             .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -304,6 +393,7 @@ def test_permanent_put_failure_fails_batch_and_replays(spark, tmp_path):
     with pytest.raises(StreamingQueryException, match="4 entries permanently failed"):
         q.awaitTermination()
     assert not list(commits.glob("*.done"))
+    assert not list((tmp_path / "ckpt" / "commits").glob("[0-9]*"))
 
     q = drain(FilePutRecords(str(sink)))
     q.awaitTermination()
@@ -314,4 +404,4 @@ def test_permanent_put_failure_fails_batch_and_replays(spark, tmp_path):
         for i in range(2)
         for v, t in ((1.0, 1000), (2.0, 2000))
     )
-    assert list(commits.glob("*.done"))
+    assert bool(list(commits.glob("*.done"))) == (via == "foreach_batch_writer")

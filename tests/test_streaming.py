@@ -19,9 +19,11 @@ pytestmark = pytest.mark.slow
 
 from pyspark.sql import functions as F
 
+from prometheus_remote_kinesis_spark.sources.prompb import encode_remote_write_body
 from prometheus_remote_kinesis_spark.testing import FilePutRecords
 from prometheus_remote_kinesis_spark.streaming.pipeline import (
     dedup_stream,
+    read_prompb_record_stream,
     read_record_stream,
     relay,
     windowed_rollup,
@@ -46,10 +48,29 @@ def read_sink(out_dir) -> list[dict]:
     return out
 
 
-def test_relay_end_to_end(spark, tmp_path):
+def write_prompb(path: str, records: list[dict]) -> None:
+    """The same records as one raw-spool body (a series per label set)."""
+    series: dict = {}
+    for r in records:
+        value = float("nan") if r["value"] is None else r["value"]
+        key = tuple(r["labels"].items())
+        series.setdefault(key, (r["labels"], []))[1].append((value, r["time"]))
+    with open(path, "wb") as f:
+        f.write(encode_remote_write_body(list(series.values())))
+
+
+@pytest.mark.parametrize("spool", ["ndjson", "raw"])
+def test_relay_end_to_end(spark, tmp_path, spool):
     """Source files → record stream → foreachBatch chunked put: every
     record relayed exactly once per micro-batch run, NDJSON intact
-    (kinesis.go wire format), checkpoint created."""
+    (kinesis.go wire format), checkpoint created. The raw spool holds
+    the same records as ``.pb.sz`` bodies; its relay streams the bodies
+    themselves and decodes them in the sink tasks (no ``MapInArrow`` in
+    the query's plan)."""
+    write, read, suffix = {
+        "ndjson": (write_ndjson, read_record_stream, "json"),
+        "raw": (write_prompb, read_prompb_record_stream, "pb.sz"),
+    }[spool]
     src = tmp_path / "src"
     sink_dir = tmp_path / "sink"
     ckpt = tmp_path / "ckpt"
@@ -57,36 +78,56 @@ def test_relay_end_to_end(spark, tmp_path):
         d.mkdir()
     batch1 = [rec("up", 1000 + i, float(i), job="n") for i in range(600)]
     batch1.append(rec("stale", 1, None))
-    write_ndjson(str(src / "b1.json"), batch1)
+    write(str(src / f"b1.{suffix}"), batch1)
 
     q = relay(
-        read_record_stream(spark, str(src)),
+        read(spark, str(src)),
         FilePutRecords(str(sink_dir)),
         checkpoint_dir=str(ckpt),
         available_now=True,
         max_entries=500,  # forces ≥2 chunks for 601 records
     )
     q.awaitTermination(120)
+    assert len(os.listdir(sink_dir)) >= 2  # one file per put call
     got = read_sink(sink_dir)
-    assert len(got) == 601
-    by_name = {}
-    for g in got:
-        by_name.setdefault(g["name"], []).append(g)
-    assert len(by_name["up"]) == 600
-    assert by_name["stale"][0]["value"] is None  # explicit null survived
+    assert sorted(got, key=lambda g: (g["name"], g["time"])) == sorted(
+        batch1, key=lambda g: (g["name"], g["time"])
+    )
     assert os.listdir(ckpt)  # checkpoint exists (T4)
+    assert "MapInArrow" not in q._jsq.explainInternal(True)
 
     # restart with a second file: only the new data is relayed (exactly-once
     # source accounting across restarts — supersedes ack-before-durable)
-    write_ndjson(str(src / "b2.json"), [rec("up", 9999, 1.0)])
+    write(str(src / f"b2.{suffix}"), [rec("up", 9999, 1.0)])
     q2 = relay(
-        read_record_stream(spark, str(src)),
+        read(spark, str(src)),
         FilePutRecords(str(sink_dir)),
         checkpoint_dir=str(ckpt),
         available_now=True,
     )
     q2.awaitTermination(120)
     assert len(read_sink(sink_dir)) == 602
+
+
+def test_relay_of_transformed_prompb_frame_sends_its_rows(spark, tmp_path):
+    """A frame derived from ``read_prompb_record_stream`` (here a
+    ``where``) is relayed row by row through ``to_json``, not from the
+    raw bodies: only its ``m1`` rows are delivered, and the decode stays
+    in the query's plan."""
+    src, sink_dir = tmp_path / "src", tmp_path / "sink"
+    src.mkdir()
+    sink_dir.mkdir()
+    write_prompb(str(src / "b.pb.sz"), [rec("m1", 1, 1.0), rec("m2", 2, 2.0)])
+    records = read_prompb_record_stream(spark, str(src))
+    q = relay(
+        records.where(F.col("name") == "m1"),
+        FilePutRecords(str(sink_dir)),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination(120)
+    assert read_sink(sink_dir) == [rec("m1", 1, 1.0)]
+    assert "MapInArrow" in q._jsq.explainInternal(True)
 
 
 def test_windowed_rollup_with_late_data(spark, tmp_path):

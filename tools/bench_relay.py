@@ -186,11 +186,12 @@ if __name__ == "__main__":
 def measure_prompb(spark, sf_dir: str, bodies: int = 64, runs: int = 1) -> dict:
     """Raw-spool relay variant: the same record stream staged as snappy
     prompb WriteRequest bodies (what RemoteWriteServer(raw=True) persists),
-    decoded INSIDE Spark by ``read_prompb_record_stream`` (Spark's
-    binaryFile source, bodies packed into few tasks, ``decode_body``),
-    then through the identical chunked-put sink. Directly comparable to
-    ``measure``: same records, decode moved from HTTP handler to
-    executors.
+    read INSIDE Spark through ``read_prompb_record_stream`` (Spark's
+    binaryFile source, bodies packed into few tasks); ``relay`` sends the
+    bodies themselves to its sink tasks, which decode each one and build
+    its NDJSON lines in one Python pass before the identical chunked put.
+    Directly comparable to ``measure``: same records, decode moved from
+    HTTP handler to executors.
 
     The headline ``value`` is the MARGINAL (asymptotic) rate from two
     volume points — a 1× drain and a 4× drain (the staged bodies

@@ -10,8 +10,9 @@ only the machinery remains:
   init, offset/commit log creation, micro-batch planning, foreachBatch
   python round-trip) with negligible data and a JVM-only source.
 - ``tiny_prompb_drain``: the same over ONE 2-record snappy prompb body
-  via ``read_prompb_record_stream`` (binaryFile source + ``mapInArrow``
-  decode) — adds the Python-worker round trip of the decode.
+  via ``read_prompb_record_stream`` (binaryFile source; the relay's sink
+  tasks decode the body and build its NDJSON lines in one Python pass)
+  — adds the decode to the sink's Python task.
 - ``warm_checkpoint_restart``: re-start the already-drained NDJSON query
   on its existing checkpoint (no new files) — isolates checkpoint
   recovery + no-data-poll shutdown.
