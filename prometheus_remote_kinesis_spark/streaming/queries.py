@@ -545,17 +545,21 @@ def t19c_membership_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("t20s_holt_winters_stream", family="T20-stream", oracle=T20_ORACLE)
 def t20s_holt_winters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t20's Holt-Winters recurrence executed BY the streaming engine:
-    ``applyInPandasWithState`` carries (n, level, trend) per series and the
-    Python fold applies the recurrence in the identical operand order as
-    the batch ``aggregate`` fold and the recursive-CTE oracle, over the
-    identical (time, event_id) sample order — same IEEE doubles on all
-    three paths. Each micro-batch emits one summary row per touched
-    series, so under multi-batch chop the drain holds intermediate rows
-    too; n_samples grows monotonically per series, so the FINAL state is
-    the max-n row — a WindowGroupLimit-prunable top-1 per series — and the
-    filtered output registers directly against t20's recursive-CTE oracle
-    (promoted from rows-only in round 4). Exact stream==batch equality is
-    additionally pinned by test_holt_winters_stream_matches_batch."""
+    ``applyInPandasWithState`` carries (n, level, trend) per series plus
+    the reorder buffer (``stateful._reorder_fold`` at ``reorder_ms=0``:
+    the samples at the series' highest ms), and the Python fold applies
+    the recurrence in the identical operand order as the batch
+    ``aggregate`` fold and the recursive-CTE oracle, over the identical
+    (time, event_id) sample order — same IEEE doubles on all three paths.
+    A sample below a series' highest ms in a later micro-batch raises
+    instead of folding out of order. Each micro-batch emits one summary
+    row per touched series, so under multi-batch chop the drain holds
+    intermediate rows too; n_samples grows monotonically per series, so
+    the FINAL state is the max-n row — a WindowGroupLimit-prunable top-1
+    per series — and the filtered output registers directly against
+    t20's recursive-CTE oracle (promoted from rows-only in round 4).
+    Exact stream==batch equality is additionally pinned by
+    test_holt_winters_stream_matches_batch."""
     from pyspark.sql import Window
 
     from prometheus_remote_kinesis_spark.streaming.stateful import holt_winters
@@ -588,13 +592,16 @@ def t20s_holt_winters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t37s_time_weighted_avg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t37's trapezoidal time-weighted average MAINTAINED BY the
     streaming engine: ``applyInPandasWithState`` carries five integers
-    per series (n, last_ms, last_v100, span_ms, num) — O(1) state
-    regardless of stream length, every update integer-exact, so a chop
-    cannot move a bit (the t17s argument; t20s's float twin relies on
-    op-order identity instead). Each micro-batch emits one summary row
-    per touched series; n_samples grows monotonically, so the max-n row
-    is authoritative (t20s's emission protocol, WindowGroupLimit-pruned
-    top-1), zero-span series drop on both sides, and the drain applies
+    per series (n, last_ms, last_v100, span_ms, num) plus the reorder
+    buffer of ``stateful._reorder_fold`` at ``reorder_ms=0`` (the samples
+    at the series' highest ms) — state independent of stream length,
+    every update integer-exact, so a chop cannot move a bit (the t17s
+    argument; t20s's float twin relies on op-order identity instead); a
+    sample below a series' highest ms in a later micro-batch raises.
+    Each micro-batch emits one summary row per touched series;
+    n_samples grows monotonically, so the max-n row is authoritative
+    (t20s's emission protocol, WindowGroupLimit-pruned top-1), zero-span
+    series drop on both sides, and the drain applies
     t37's IDENTICAL divide-once + floor-truncate expression chain to the
     drained integers — registering directly against t37's oracle."""
     from pyspark.sql import Window
@@ -638,17 +645,20 @@ def t37s_time_weighted_avg_stream(spark: SparkSession, sf_dir: str) -> DataFrame
 def t39s_alert_for_duration_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t39's alert `for:` state machine EXECUTED BY the streaming engine
     — the form that actually pages someone: applyInPandasWithState keeps
-    the ONE open island per alert key (three integers, O(1) state),
-    closed islands emit exactly once as a non-breaching sample arrives,
-    and the drain keeps the max-n row per (key, island_seq) (open
-    islands are provisional rows superseded batch-over-batch; the
-    monotone sequence — not island_start — is the island identity, so
-    two islands opening on the same truncated ms stay distinct). fired /
-    fire_ms derive in the drain with t39's identical integer
-    expressions — registers against t39's oracle. Where the batch form
-    needs banded gaps-islands to avoid the low-cardinality-window
-    disease, the streaming form is IMMUNE by construction: the state
-    machine never buffers more than the open island."""
+    the ONE open island per alert key (a few integers) plus the reorder
+    buffer of ``stateful._reorder_fold`` at ``reorder_ms=0`` (the samples
+    at the key's highest ms; a sample below it in a later micro-batch
+    raises). Committed closures emit once, final; each batch re-emits
+    its speculative islands, every row stamped with ``version`` = samples
+    seen for the key, and the drain keeps the max-version row per (key,
+    island_seq) (the monotone sequence — not island_start — is the
+    island identity, so two islands opening on the same truncated ms
+    stay distinct). fired / fire_ms derive in the drain with t39's
+    identical integer expressions — registers against t39's oracle.
+    Where the batch form needs banded gaps-islands to avoid the
+    low-cardinality-window disease, the streaming form is IMMUNE by
+    construction: the state machine never buffers more than the open
+    island and the samples at the key's highest ms."""
     from pyspark.sql import Window
 
     from prometheus_remote_kinesis_spark.streaming.stateful import (
@@ -664,7 +674,7 @@ def t39s_alert_for_duration_stream(spark: SparkSession, sf_dir: str) -> DataFram
     out = alert_for_duration(records, thr=T39_THR, idle_timeout_ms=None)
     drained = run_to_batch(out, "append")
     w = Window.partitionBy("event_type", "island_seq").orderBy(
-        F.desc("n_samples")
+        F.desc("version")
     )
     return (
         drained.withColumn("rn", F.row_number().over(w))
@@ -691,11 +701,13 @@ def t39s_alert_for_duration_stream(spark: SparkSession, sf_dir: str) -> DataFram
 def t41s_ewma_halflife_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t41's half-life EWMA MAINTAINED BY the streaming engine:
     applyInPandasWithState carries (n, last_ms, level) per series — the
-    exact chunk-handoff t41's docstring prescribes, O(1) state — and
-    applies the identical dyadic-decay recurrence in the identical
-    operand order (Python IEEE doubles ≡ the batch fold ≡ the recursive
-    CTE; the decay 1/2^g is exact, so chop cannot move a bit). Max-n
-    drain row per series is authoritative (t20s protocol); the
+    exact chunk-handoff t41's docstring prescribes — plus the reorder
+    buffer of ``stateful._reorder_fold`` at ``reorder_ms=0`` (the samples
+    at the series' highest ms; a sample below it in a later micro-batch
+    raises), and applies the identical dyadic-decay recurrence in the
+    identical operand order (Python IEEE doubles ≡ the batch fold ≡ the
+    recursive CTE; the decay 1/2^g is exact, so chop cannot move a bit).
+    Max-n drain row per series is authoritative (t20s protocol); the
     floor-truncation applies in the drain expression — registers
     against t41's oracle."""
     from pyspark.sql import Window
@@ -1297,12 +1309,18 @@ def t21s_promql_vector_ops_stream(spark: SparkSession, sf_dir: str) -> DataFrame
 def t14s_rate_5m_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PromQL ``rate(m[5m])`` EXECUTED BY the streaming engine: per-series
     state = last sample + the trailing window's (timestamp, increase)
-    pairs (streaming/stateful.py::streaming_rate), the alerting-path form
-    of t14's batch RANGE frame. Registers with t14's own DuckDB oracle —
-    the streaming engine's rate output is hash-compared directly (t10s's
-    pattern: availableNow drains the file source in one batch). Exact
-    batch equality is additionally pinned by
+    pairs + the reorder buffer of ``stateful._reorder_fold`` at
+    ``reorder_ms=0`` (streaming/stateful.py::streaming_rate), the
+    alerting-path form of t14's batch RANGE frame. A sample at a series'
+    highest ms stays buffered and is re-emitted speculatively each batch
+    until a later ms commits it; every row carries ``seen`` (samples seen
+    for its series), so the drain keeps the argmax(``seen``) row per
+    event_id. Registers with t14's own DuckDB oracle — the streaming
+    engine's rate output is hash-compared directly. Exact batch equality
+    is additionally pinned by
     tests/test_streaming.py::test_streaming_rate_matches_batch."""
+    from pyspark.sql import Window
+
     from prometheus_remote_kinesis_spark.streaming.stateful import streaming_rate
 
     records = stream_table(spark, sf_dir, "events").select(
@@ -1312,7 +1330,13 @@ def t14s_rate_5m_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis("ts").alias("time"),
         "value",
     )
-    return run_to_batch(streaming_rate(records, idle_timeout_ms=None), "append")
+    drained = run_to_batch(streaming_rate(records, idle_timeout_ms=None), "append")
+    w = Window.partitionBy("event_id").orderBy(F.desc("seen"))
+    return (
+        drained.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("event_id", "event_type", "user_id", "rate_per_sec", "n_increases")
+    )
 
 
 @register("t25s_rate_extrapolated_stream", family="T25-stream", oracle=T25_ORACLE)

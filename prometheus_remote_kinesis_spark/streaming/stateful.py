@@ -2,22 +2,32 @@
 (``applyInPandasWithState``) — the one Spark surface where imperative
 per-key state is the right tool (SURVEY.md §2.10 U5).
 
-Two PromQL-flavored operators over the record model:
+Every operator here is a per-key state transition run through
+``_apply_with_state``, which picks the ``GroupStateTimeout``: idle keys
+are evicted after ``idle_timeout_ms`` (ProcessingTimeTimeout), or never
+(``None``, for drain-once ``availableNow`` runs). The families:
 
-- ``counter_increase``: per-series monotonic-counter delta with reset
-  detection (a counter that drops restarts from ~0; PromQL ``increase``
-  semantics: on reset the post-reset value IS the increase).
-- ``gap_fill``: emits per-interval carried-forward samples between
-  observed points (staleness-bounded last-observation-carried-forward).
+- PromQL-flavored per-series folds: ``counter_increase`` (monotonic
+  counter delta with reset detection), ``gap_fill`` / ``interp_fill``
+  (grid resampling), ``prefix_anomaly`` (z-score against prior moments).
+- Order-sensitive recurrences — ``holt_winters``, ``streaming_rate``,
+  ``time_weighted_avg``, ``alert_for_duration``, ``ewma_halflife`` —
+  each a ``fold``/``emit`` pair over ``_reorder_fold``, the one bounded
+  reorder buffer: samples up to ``reorder_ms`` late fold in
+  (ms, event_id) order, and a later one raises.
+- Buffers, sketches and pattern matchers behind the t15s/t16s/t22s/
+  t25s/t30s/l4s/a3cs/w6s/w7s streams.
 
-State per key is O(1) (last value/timestamp), so a 1000-executor cluster
-shards series across state stores with no unbounded growth; eviction via
-GroupStateTimeout on idle series.
+State per key is bounded by the operator's own window or horizon, never
+by stream length, so a 1000-executor cluster shards series across state
+stores with no unbounded growth.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
+from bisect import bisect_left
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -47,6 +57,36 @@ def _round_half_up(x: float, digits: int) -> float:
     shared oracle it registers against. This mirrors Spark exactly."""
     q = Decimal(1).scaleb(-digits)
     return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP))
+
+
+def _apply_with_state(
+    frame: DataFrame,
+    keys: list[str],
+    fn: Callable[[tuple, Iterator[pd.DataFrame], GroupState], Iterator[pd.DataFrame]],
+    out_schema: StructType,
+    state_schema: str,
+    idle_timeout_ms: int | None,
+) -> DataFrame:
+    """``fn`` per key of ``frame`` as an append-mode
+    ``applyInPandasWithState``. ``idle_timeout_ms`` evicts idle-key state
+    (ProcessingTimeTimeout) — the right posture for a long-running
+    service; ``fn`` re-arms it with ``state.setTimeoutDuration``. Pass
+    ``None`` for drain-once runs (``availableNow``): processing-time
+    timers keep the MultiBatchExecutor scheduling micro-batches waiting
+    for expiry, so an availableNow query with timers NEVER self-terminates
+    (measured: epoch 144 and climbing on a single-file source); NoTimeout
+    lets it stop after the data batch."""
+    return frame.groupBy(*keys).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=(
+            GroupStateTimeout.NoTimeout
+            if idle_timeout_ms is None
+            else GroupStateTimeout.ProcessingTimeTimeout
+        ),
+    )
 
 
 INCREASE_SCHEMA = StructType(
@@ -104,25 +144,15 @@ def counter_increase(
 ) -> DataFrame:
     """Per-series counter increase with reset detection over a STREAMING
     records DataFrame (RECORD_SCHEMA). Output mode: append.
-
-    ``idle_timeout_ms`` evicts idle-series state (ProcessingTimeTimeout) —
-    the right posture for a long-running service. Pass ``None`` for
-    drain-once runs (``availableNow``): processing-time timers keep the
-    MultiBatchExecutor scheduling micro-batches waiting for expiry, so an
-    availableNow query with timers NEVER self-terminates (measured: epoch
-    144 and climbing on a single-file source); NoTimeout lets it stop
-    after the data batch."""
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return records.groupBy("name").applyInPandasWithState(
+    ``idle_timeout_ms``: see ``_apply_with_state`` (``None`` for
+    drain-once runs)."""
+    return _apply_with_state(
+        records,
+        ["name"],
         _make_increase_fn(idle_timeout_ms),
-        outputStructType=INCREASE_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+        INCREASE_SCHEMA,
+        _STATE_SCHEMA,
+        idle_timeout_ms,
     )
 
 
@@ -227,7 +257,7 @@ def gap_fill(
     grid exactly (cross-checked in tests/test_streaming.py).
 
     ``idle_timeout_ms=None`` for drain-once (availableNow) runs — see
-    ``counter_increase``: processing-time timers block self-termination.
+    ``_apply_with_state``: processing-time timers block self-termination.
     """
 
     def fn(
@@ -264,17 +294,8 @@ def gap_fill(
             state.setTimeoutDuration(idle_timeout_ms)
         yield pd.DataFrame(rows, columns=[f.name for f in GAPFILL_SCHEMA.fields])
 
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return records.groupBy("name").applyInPandasWithState(
-        fn,
-        outputStructType=GAPFILL_SCHEMA,
-        stateStructType=_GF_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return _apply_with_state(
+        records, ["name"], fn, GAPFILL_SCHEMA, _GF_STATE_SCHEMA, idle_timeout_ms
     )
 
 
@@ -340,17 +361,112 @@ def prefix_anomaly(
             state.setTimeoutDuration(idle_timeout_ms)
         yield pd.DataFrame(rows, columns=[f.name for f in ANOMALY_SCHEMA.fields])
 
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
+    return _apply_with_state(
+        records, ["name"], fn, ANOMALY_SCHEMA, _ANOM_STATE_SCHEMA, idle_timeout_ms
     )
-    return records.groupBy("name").applyInPandasWithState(
-        fn,
-        outputStructType=ANOMALY_SCHEMA,
-        stateStructType=_ANOM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+
+
+# The reorder buffer every order-sensitive recurrence below carries after
+# its own accumulator: the highest event ms seen plus the samples not yet
+# committed, as parallel (ms, event_id, value) arrays.
+_REORDER_STATE_SCHEMA = "hi long, bms array<long>, bid array<long>, bv array<double>"
+
+
+def _reorder_fold(
+    records: DataFrame,
+    keys: list[str],
+    init: tuple,
+    fold: Callable[[tuple, list, list], tuple],
+    emit: Callable[[tuple, tuple, list, list], pd.DataFrame],
+    out_schema: StructType,
+    state_schema: str,
+    reorder_ms: int,
+    idle_timeout_ms: int | None,
+) -> DataFrame:
+    """Run an order-sensitive per-key recurrence over a stream whose
+    samples may arrive up to ``reorder_ms`` late — Structured Streaming's
+    event-time watermark, applied inside the operator.
+
+    ``fold(acc, rows, out)`` returns the accumulator tuple ``acc`` (``init``
+    for a new key, stored under ``state_schema``) advanced over ``rows``:
+    (ms, event_id, value) tuples of plain Python numbers in (ms, event_id)
+    order, NULL values already skipped. A fold that emits per-sample or
+    per-island rows appends them to ``out``. ``emit(key, acc, done,
+    spec)`` builds the batch's output frame from the speculative
+    accumulator and the rows the committed (``done``) and speculative
+    (``spec``) folds appended.
+
+    Per key and micro-batch:
+
+    - NULL values (staleness markers) skip, as the batch forms' filters do.
+    - The batch's samples are admitted as one set, so their order inside
+      the batch never matters. A sample more than ``reorder_ms`` below the
+      highest ms of EARLIER batches raises: folding it would run the
+      recurrence out of order, and dropping it would lose data silently.
+    - The buffer is sorted by (ms, event_id) and every sample strictly
+      below (highest ms) − ``reorder_ms`` is COMMITTED into the stored
+      accumulator. Strictly: a sample exactly ``reorder_ms`` late is
+      admitted, so its same-ms peers must still be buffered when it
+      arrives.
+    - The output folds the still-buffered suffix on top of the committed
+      accumulator without storing it, so each batch's rows reflect every
+      sample seen, as if the stream ended there.
+
+    Any arrival whose displacement stays within ``reorder_ms`` therefore
+    folds in exactly the global (ms, event_id) order: the output is
+    bit-equal to the in-order fold. With ``reorder_ms=0`` the buffer holds
+    only the samples at the highest ms seen. State is the accumulator plus
+    O(rate × reorder_ms) buffered samples per key, constant in stream
+    length."""
+    width = len(init)
+
+    def fn(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if state.exists:
+            saved = state.get
+            acc, (hi, bms, bid, bv) = saved[:width], saved[width:]
+            buf = list(zip(bms, bid, bv))
+        else:
+            acc, hi, buf = init, -(1 << 62), []
+        new = []
+        for pdf in pdfs:
+            ms_col = pdf["time"].tolist()
+            eids = (
+                pdf["event_id"].tolist()
+                if "event_id" in pdf.columns
+                else [0] * len(ms_col)
+            )
+            for ms, eid, v in zip(ms_col, eids, pdf["value"].tolist()):
+                if v is not None and v == v:  # NaN/NULL staleness markers skip
+                    new.append((ms, eid, v))
+        if new:
+            late = min(new)[0]
+            if late < hi - reorder_ms:
+                raise RuntimeError(
+                    f"sample at {late} arrived past its reorder horizon "
+                    f"(max seen {hi}, bound {reorder_ms} ms): the "
+                    "watermark contract is violated — widen reorder_ms"
+                )
+            hi = max(hi, max(new)[0])
+            buf = sorted(buf + new)
+        # (wm,) sorts before every (wm, event_id, value): the cut is the
+        # first sample AT the horizon, so only samples strictly below commit
+        cut = bisect_left(buf, (hi - reorder_ms,))
+        done: list = []
+        acc = fold(acc, buf[:cut], done)
+        buf = buf[cut:]
+        state.update(
+            (*acc, hi, [b[0] for b in buf], [b[1] for b in buf], [b[2] for b in buf])
+        )
+        if idle_timeout_ms is not None:
+            state.setTimeoutDuration(idle_timeout_ms)
+        spec: list = []
+        yield emit(key, fold(acc, buf, spec), done, spec)
+
+    return _apply_with_state(
+        records, keys, fn, out_schema, f"{state_schema}, {_REORDER_STATE_SCHEMA}",
+        idle_timeout_ms,
     )
 
 
@@ -373,68 +489,43 @@ def holt_winters(
     sf: float = 0.3,
     tf: float = 0.1,
     idle_timeout_ms: int | None = 3_600_000,
+    reorder_ms: int = 0,
 ) -> DataFrame:
     """Streaming twin of t20's Holt-Winters fold: (level, trend) carried
     as per-series state across micro-batches, one summary row emitted per
     (series, batch). The recurrence is written with EXACTLY the operand
     order of the batch fold and the recursive-CTE oracle — Python floats
     are the same IEEE doubles, so all three forms agree bit-for-bit.
-    State is O(1) per series; unlike the prefix-moment operator (t17s)
-    this state is a float pair, so its exactness argument is op-order
-    identity, not integer arithmetic."""
+    Unlike the prefix-moment operator (t17s) this state is a float pair,
+    so its exactness argument is op-order identity, not integer
+    arithmetic — which is why the fold runs through ``_reorder_fold``:
+    samples up to ``reorder_ms`` late still fold in (ms, event_id) order,
+    and a later one raises. n_samples grows monotonically, so the max-n
+    row per series is authoritative on drain."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def fold(acc, rows, _out):
+        n, level, trend = acc
+        for _ms, _eid, x in rows:
+            if n == 0:
+                level, trend = x, 0.0
+            else:
+                s = sf * x + (1.0 - sf) * (level + trend)
+                trend = tf * (s - level) + (1.0 - tf) * trend
+                level = s
+            n += 1
+        return n, level, trend
+
+    def emit(key, acc, _done, _spec):
         event_type, user_id = key
-        n, level, trend = state.get if state.exists else (0, 0.0, 0.0)
-        for pdf in pdfs:
-            # (time, event_id) — the exact batch/oracle sample order; a
-            # time-only sort would leave equal-timestamp neighbors in
-            # arrival order and the fold is order-sensitive.
-            sort_keys = (
-                ["time", "event_id"] if "event_id" in pdf.columns else ["time"]
-            )
-            pdf = pdf.sort_values(sort_keys)
-            for v in pdf["value"]:
-                if v is None or pd.isna(v):
-                    continue  # staleness marker (NaN→NULL) — the batch
-                    # fold's collect_list skips nulls identically
-                x = float(v)
-                if n == 0:
-                    level, trend = x, 0.0
-                else:
-                    s = sf * x + (1.0 - sf) * (level + trend)
-                    trend = tf * (s - level) + (1.0 - tf) * trend
-                    level = s
-                n += 1
-        state.update((n, level, trend))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            [
-                {
-                    "event_type": event_type,
-                    "user_id": user_id,
-                    "n_samples": n,
-                    "hw_level": level,
-                    "hw_trend": trend,
-                    "hw_forecast": level + trend,
-                }
-            ]
+        n, level, trend = acc
+        return pd.DataFrame(
+            [(event_type, user_id, n, level, trend, level + trend)],
+            columns=HW_SCHEMA.fieldNames(),
         )
 
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return records.groupBy("event_type", "user_id").applyInPandasWithState(
-        fn,
-        outputStructType=HW_SCHEMA,
-        stateStructType=_HW_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return _reorder_fold(
+        records, ["event_type", "user_id"], (0, 0.0, 0.0), fold, emit,
+        HW_SCHEMA, _HW_STATE_SCHEMA, reorder_ms, idle_timeout_ms,
     )
 
 
@@ -445,19 +536,24 @@ RATE_SCHEMA = StructType(
         StructField("user_id", LongType()),
         StructField("rate_per_sec", DoubleType()),
         StructField("n_increases", LongType()),
+        StructField("seen", LongType()),
+        StructField("committed", BooleanType()),
     ]
 )
 
 # trailing-window buffer: parallel arrays of increase timestamps/values
 # (integer cents — exact, see streaming_rate), plus the previous sample's
-# cents for the next delta
-_RATE_STATE_SCHEMA = "last_v100 long, inc_ms array<long>, inc_v array<long>"
+# cents for the next delta and the count of samples folded
+_RATE_STATE_SCHEMA = (
+    "last_v100 long, inc_ms array<long>, inc_v array<long>, n long"
+)
 
 
 def streaming_rate(
     records: DataFrame,
     window_ms: int = 300_000,
     idle_timeout_ms: int | None = 3_600_000,
+    reorder_ms: int = 0,
 ) -> DataFrame:
     """Streaming PromQL ``rate(m[5m])``: per-series state carries the last
     sample plus the (timestamp, increase) pairs inside the trailing window
@@ -472,75 +568,61 @@ def streaming_rate(
     sum is exact on any accumulation/batching order, the one cents→rate
     quotient is the identical IEEE double on all three paths, and
     floor-truncation is tie-free on identical doubles — hash-safe by
-    construction."""
+    construction.
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import math
+    Emission protocol (``_reorder_fold``): a sample's row is emitted
+    ``committed`` once it falls below the reorder horizon, and
+    speculatively, with ``committed`` false, each batch while it is still
+    buffered. Every row carries ``seen``, the samples seen for its series
+    so far; the drain keeps the argmax(``seen``) row per event_id. A
+    commit only happens when a new arrival advances the horizon, so a
+    committed row's ``seen`` exceeds every earlier row's for its sample,
+    and the last speculative rows fold the whole buffer in sorted order."""
 
+    def fold(acc, rows, out):
+        last_v100, inc_ms, inc_v, n = acc
+        # copies: the speculative fold must leave the committed frame alone
+        inc_ms, inc_v = list(inc_ms), list(inc_v)
+        for ms, eid, v in rows:
+            v100 = int(_round_half_up(v * 100, 0))
+            if last_v100 is None:
+                inc = None
+            elif v100 >= last_v100:
+                inc = v100 - last_v100
+            else:
+                inc = v100  # counter reset: the new value IS the increase
+            if inc is not None:
+                inc_ms.append(ms)
+                inc_v.append(inc)
+            last_v100 = v100
+            lo = ms - window_ms
+            while inc_ms and inc_ms[0] < lo:
+                inc_ms.pop(0)
+                inc_v.pop(0)
+            if inc_v:
+                # identical operand order as t14 batch / the oracle:
+                # cast exact cents sum to double, /100.0, /300.0, then
+                # tie-free floor truncation at 6 decimals
+                q = float(sum(inc_v)) / 100.0 / (window_ms / 1000.0)
+                rate = math.floor(q * 1e6) / 1e6
+            else:
+                rate = None
+            out.append((eid, rate, len(inc_v)))
+            n += 1
+        return last_v100, inc_ms, inc_v, n
+
+    def emit(key, acc, done, spec):
         event_type, user_id = key
-        if state.exists:
-            last_v100, inc_ms, inc_v = state.get
-            inc_ms, inc_v = list(inc_ms), list(inc_v)
-        else:
-            last_v100, inc_ms, inc_v = None, [], []
-        rows: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["time", "event_id"])
-            for _, r in pdf.iterrows():
-                if r["value"] is None or pd.isna(r["value"]):
-                    continue  # staleness marker — contributes no increase
-                t = int(r["time"])
-                v100 = int(_round_half_up(float(r["value"]) * 100, 0))
-                if last_v100 is None:
-                    inc = None
-                elif v100 >= last_v100:
-                    inc = v100 - last_v100
-                else:
-                    inc = v100  # counter reset: the new value IS the increase
-                if inc is not None:
-                    inc_ms.append(t)
-                    inc_v.append(inc)
-                last_v100 = v100
-                lo = t - window_ms
-                while inc_ms and inc_ms[0] < lo:
-                    inc_ms.pop(0)
-                    inc_v.pop(0)
-                in_frame = [x for m, x in zip(inc_ms, inc_v) if m >= lo]
-                if in_frame:
-                    # identical operand order as t14 batch / the oracle:
-                    # cast exact cents sum to double, /100.0, /300.0, then
-                    # tie-free floor truncation at 6 decimals
-                    q = float(sum(in_frame)) / 100.0 / (window_ms / 1000.0)
-                    rate = math.floor(q * 1e6) / 1e6
-                else:
-                    rate = None
-                rows.append(
-                    {
-                        "event_id": int(r["event_id"]),
-                        "event_type": event_type,
-                        "user_id": user_id,
-                        "rate_per_sec": rate,
-                        "n_increases": len(in_frame),
-                    }
-                )
-        state.update((last_v100, inc_ms, inc_v))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(rows, columns=[f.name for f in RATE_SCHEMA.fields])
+        seen = acc[3]
+        return pd.DataFrame(
+            [(eid, event_type, user_id, r, k, seen, True) for eid, r, k in done]
+            + [(eid, event_type, user_id, r, k, seen, False) for eid, r, k in spec],
+            columns=RATE_SCHEMA.fieldNames(),
+        )
 
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return records.groupBy("event_type", "user_id").applyInPandasWithState(
-        fn,
-        outputStructType=RATE_SCHEMA,
-        stateStructType=_RATE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return _reorder_fold(
+        records, ["event_type", "user_id"], (None, [], [], 0), fold, emit,
+        RATE_SCHEMA, _RATE_STATE_SCHEMA, reorder_ms, idle_timeout_ms,
     )
 
 
@@ -570,8 +652,6 @@ def interp_fill(
     exactly [ceil(lo/step)·step, hi] — a tail grid point past the last
     sample has no right bracket and is never emitted, matching the
     batch [lo, hi] bound."""
-    import math
-
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -641,17 +721,8 @@ def interp_fill(
             state.setTimeoutDuration(idle_timeout_ms)
         yield pd.DataFrame(rows, columns=[f.name for f in GAPFILL_SCHEMA.fields])
 
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return records.groupBy("name").applyInPandasWithState(
-        fn,
-        outputStructType=GAPFILL_SCHEMA,
-        stateStructType=_IF_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return _apply_with_state(
+        records, ["name"], fn, GAPFILL_SCHEMA, _IF_STATE_SCHEMA, idle_timeout_ms
     )
 
 
@@ -721,17 +792,8 @@ def cohort_pairs(
     is_signup 1 on signup events (signup events also count as activity,
     matching t16's act CTE which scans ALL events)."""
     fn = _make_cohort_fn(idle_timeout_ms)
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return records.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=COHORT_SCHEMA,
-        stateStructType=_COHORT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return _apply_with_state(
+        records, ["user_id"], fn, COHORT_SCHEMA, _COHORT_STATE_SCHEMA, idle_timeout_ms
     )
 
 
@@ -805,17 +867,8 @@ def funnel_views(
             state.setTimeoutDuration(idle_timeout_ms)
         yield pd.DataFrame(rows, columns=[f.name for f in FUNNEL_SCHEMA.fields])
 
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return records.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=FUNNEL_SCHEMA,
-        stateStructType=_FUNNEL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return _apply_with_state(
+        records, ["user_id"], fn, FUNNEL_SCHEMA, _FUNNEL_STATE_SCHEMA, idle_timeout_ms
     )
 
 
@@ -916,17 +969,13 @@ def trailing_day_buffer(
     boundary both ways). Emission is the whole buffer per micro-batch
     under an incrementing seq — O(buffer) per trigger, the price of a
     drain-anchored semantic; the max-seq emission is authoritative."""
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return records.groupBy("event_type", "user_id").applyInPandasWithState(
+    return _apply_with_state(
+        records,
+        ["event_type", "user_id"],
         _make_trailing_buffer_fn(window_ms, idle_timeout_ms),
-        outputStructType=T25_BUFFER_SCHEMA,
-        stateStructType=_T25_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+        T25_BUFFER_SCHEMA,
+        _T25_STATE_SCHEMA,
+        idle_timeout_ms,
     )
 
 
@@ -1108,17 +1157,13 @@ def downsample_buffer(
     sum/min/max skip them — nv tracks the split). Values are summed as
     integer cents (HALF_UP hundredths, exact for the corpus) so the
     drain's avg reproduces the oracle's DECIMAL sum bit-for-bit."""
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return records.groupBy("event_type", "user_id").applyInPandasWithState(
+    return _apply_with_state(
+        records,
+        ["event_type", "user_id"],
         _make_downsample_fn(window_ms, bucket_ms, idle_timeout_ms),
-        outputStructType=T22_DOWNSAMPLE_SCHEMA,
-        stateStructType=_T22_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+        T22_DOWNSAMPLE_SCHEMA,
+        _T22_STATE_SCHEMA,
+        idle_timeout_ms,
     )
 
 
@@ -1151,16 +1196,13 @@ def dod_sizing(records: DataFrame, idle_timeout_ms: int | None = None) -> DataFr
     misordered source surfaces as a loud query failure instead of a
     silent hash mismatch against the shared batch oracle."""
 
-    return records.groupBy("event_type").applyInPandasWithState(
+    return _apply_with_state(
+        records,
+        ["event_type"],
         _make_dod_fn(idle_timeout_ms),
-        outputStructType=DOD_SCHEMA,
-        stateStructType=_DOD_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if idle_timeout_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+        DOD_SCHEMA,
+        _DOD_STATE_SCHEMA,
+        idle_timeout_ms,
     )
 
 
@@ -1300,17 +1342,13 @@ def knn_topk_buffer(
     current top-k under an incrementing seq; the max-seq emission is
     authoritative (the t25s protocol), giving exactly batch
     l4_knn_join's rows."""
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return scored.groupBy("qid").applyInPandasWithState(
+    return _apply_with_state(
+        scored,
+        ["qid"],
         _make_knn_topk_fn(k, idle_timeout_ms),
-        outputStructType=L4KS_TOPK_SCHEMA,
-        stateStructType=_L4KS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+        L4KS_TOPK_SCHEMA,
+        _L4KS_STATE_SCHEMA,
+        idle_timeout_ms,
     )
 
 
@@ -1412,17 +1450,13 @@ def kmv_topk_sketch(
     )
 
     kk = KMV_K if k is None else k
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return hashed.groupBy("event_type").applyInPandasWithState(
+    return _apply_with_state(
+        hashed,
+        ["event_type"],
         _make_kmv_topk_fn(kk, KMV_BITS, idle_timeout_ms),
-        outputStructType=A3CP_SCHEMA,
-        stateStructType=_A3CP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+        A3CP_SCHEMA,
+        _A3CP_STATE_SCHEMA,
+        idle_timeout_ms,
     )
 
 
@@ -1511,17 +1545,13 @@ def event_pattern_stream(
     state = the trailing 2 rows per user (O(1), independent of history
     length), in-order arrival ENFORCED by the dod_sizing order guard.
     Input columns: user_id, event_type, ms, event_id."""
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return records.groupBy("user_id").applyInPandasWithState(
+    return _apply_with_state(
+        records,
+        ["user_id"],
         _make_pattern_fn(within_ms, idle_timeout_ms),
-        outputStructType=W6S_MATCH_SCHEMA,
-        stateStructType=_W6S_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+        W6S_MATCH_SCHEMA,
+        _W6S_STATE_SCHEMA,
+        idle_timeout_ms,
     )
 
 
@@ -1611,17 +1641,13 @@ def quantified_pattern_stream(
     arrives; state = the open view-run + previous event type per user —
     O(1) regardless of run length. Input: user_id, event_type, ms,
     event_id; in-order arrival enforced by the dod_sizing order guard."""
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return records.groupBy("user_id").applyInPandasWithState(
+    return _apply_with_state(
+        records,
+        ["user_id"],
         _make_quantified_pattern_fn(within_ms, idle_timeout_ms),
-        outputStructType=W7S_MATCH_SCHEMA,
-        stateStructType=_W7S_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+        W7S_MATCH_SCHEMA,
+        _W7S_STATE_SCHEMA,
+        idle_timeout_ms,
     )
 
 
@@ -1639,80 +1665,48 @@ _TWA_STATE_SCHEMA = "n long, last_ms long, last_v100 long, span_ms long, num lon
 
 
 def time_weighted_avg(
-    records: DataFrame, idle_timeout_ms: int | None = 3_600_000
+    records: DataFrame,
+    idle_timeout_ms: int | None = 3_600_000,
+    reorder_ms: int = 0,
 ) -> DataFrame:
     """Streaming twin of t37's trapezoidal time-weighted average: per
     series the state is FIVE integers — (n, last_ms, last_v100, span_ms,
-    num) where num = Σ (v100ᵢ₋₁+v100ᵢ)·Δt — O(1) regardless of stream
-    length (the t20s class, but integer-exact like t17s: every update is
-    integer adds/multiplies, so chop cannot move a bit). Each micro-batch
-    emits one summary row per touched series; n grows monotonically, so
-    the max-n row per series is the authoritative drain row (t20s's
-    emission protocol). The num→twa conversion happens OUTSIDE the
-    stream, in the drain's Spark expressions, with t37's identical
-    divide-once + floor-truncate chain. NaN staleness markers skip
-    identically to the batch filter; within-batch order is
-    (time, event_id) — in-order arrival across batches is the relay's
-    property, the same assumption t14s/t20s/t31's streams already pin.
-    Out-of-order deployment recipe: wrap the fold in the bounded
-    reorder buffer ``ewma_halflife_reordered`` demonstrates (commit
-    only past max-seen-ms − reorder_ms, in (ms, event_id) order; raise
-    past the horizon) — the trapezoid fold slots into the same _fold
-    seam, r11 task #6. Python ints are unbounded but state stores
-    int64: at 100 TB num splits into decimal partials exactly as t31s
-    does (docstring note; per-series num is ~1e11 at the 64× probe,
-    7 orders inside int64)."""
+    num) where num = Σ (v100ᵢ₋₁+v100ᵢ)·Δt — plus ``_reorder_fold``'s
+    buffer (the t20s class, but integer-exact like t17s: every update is
+    integer adds/multiplies, so chop cannot move a bit, and a sample up
+    to ``reorder_ms`` late still folds in (ms, event_id) order). Each
+    micro-batch emits one summary row per touched series; n grows
+    monotonically, so the max-n row per series is the authoritative drain
+    row (t20s's emission protocol). The num→twa conversion happens
+    OUTSIDE the stream, in the drain's Spark expressions, with t37's
+    identical divide-once + floor-truncate chain. NaN staleness markers
+    skip identically to the batch filter. Python ints are unbounded but
+    state stores int64: at 100 TB num splits into decimal partials
+    exactly as t31s does (docstring note; per-series num is ~1e11 at the
+    64× probe, 7 orders inside int64)."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def fold(acc, rows, _out):
+        n, last_ms, last_v100, span_ms, num = acc
+        for ms, _eid, v in rows:
+            v100 = int(_round_half_up(v * 100, 0))
+            if n > 0:
+                dt = ms - last_ms
+                num += (last_v100 + v100) * dt
+                span_ms += dt
+            n += 1
+            last_ms, last_v100 = ms, v100
+        return n, last_ms, last_v100, span_ms, num
+
+    def emit(key, acc, _done, _spec):
         event_type, user_id = key
-        n, last_ms, last_v100, span_ms, num = (
-            state.get if state.exists else (0, 0, 0, 0, 0)
-        )
-        for pdf in pdfs:
-            sort_keys = (
-                ["time", "event_id"] if "event_id" in pdf.columns else ["time"]
-            )
-            pdf = pdf.sort_values(sort_keys)
-            for _, r in pdf.iterrows():
-                v = r["value"]
-                if v is None or pd.isna(v):
-                    continue  # staleness marker — batch filter parity
-                ms = int(r["time"])
-                v100 = int(_round_half_up(float(v) * 100, 0))
-                if n > 0:
-                    dt = ms - last_ms
-                    num += (last_v100 + v100) * dt
-                    span_ms += dt
-                n += 1
-                last_ms, last_v100 = ms, v100
-        state.update((n, last_ms, last_v100, span_ms, num))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            [
-                {
-                    "event_type": event_type,
-                    "user_id": user_id,
-                    "n_samples": n,
-                    "span_ms": span_ms,
-                    "num": num,
-                }
-            ]
+        n, _last_ms, _last_v100, span_ms, num = acc
+        return pd.DataFrame(
+            [(event_type, user_id, n, span_ms, num)], columns=TWA_SCHEMA.fieldNames()
         )
 
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return records.groupBy("event_type", "user_id").applyInPandasWithState(
-        fn,
-        outputStructType=TWA_SCHEMA,
-        stateStructType=_TWA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return _reorder_fold(
+        records, ["event_type", "user_id"], (0, 0, 0, 0, 0), fold, emit,
+        TWA_SCHEMA, _TWA_STATE_SCHEMA, reorder_ms, idle_timeout_ms,
     )
 
 
@@ -1723,89 +1717,71 @@ ALERT_SCHEMA = StructType(
         StructField("island_start", LongType()),
         StructField("island_end", LongType()),
         StructField("n_samples", LongType()),
+        StructField("version", LongType()),
     ]
 )
 
-_ALERT_STATE_SCHEMA = "open_s long, open_e long, open_n long, seq long"
+_ALERT_STATE_SCHEMA = "open_s long, open_e long, open_n long, seq long, n long"
 
 
 def alert_for_duration(
-    records: DataFrame, thr: float, idle_timeout_ms: int | None = 3_600_000
+    records: DataFrame,
+    thr: float,
+    idle_timeout_ms: int | None = 3_600_000,
+    reorder_ms: int = 0,
 ) -> DataFrame:
     """Streaming twin of t39's alert `for:` state machine: per alert key
-    the state is the ONE open island (start, end, n) plus a monotone
-    island SEQUENCE number — O(1) regardless of stream length. A
-    breaching sample opens/extends the island (opening increments the
-    sequence); a non-breaching sample CLOSES it (emitted once, final);
-    batch end emits the still-open island as a provisional row that
-    later batches supersede with a larger n at the same island_seq — so
-    the max-n row per (key, island_seq) is authoritative on drain (the
-    t20s protocol, keyed by island IDENTITY). The sequence — not
-    island_start — is the identity: two distinct islands of the same
-    type can START at the same truncated millisecond (the partition key
-    is event_type alone, so a close + reopen can land on one ms), and
-    a start-keyed drain would collapse them to one max-n row. All state
-    and emissions are integers; NaN staleness markers skip identically
-    to the batch filter; within-batch order is (time, event_id) —
-    in-order arrival ACROSS batches is a precondition (a late breach
-    would reopen a closed island); the out-of-order deployment recipe
-    is ``ewma_halflife_reordered``'s bounded reorder buffer with the
-    island transition as the committed fold (r11 task #6)."""
+    the state is the ONE open island (start, end, n), a monotone island
+    SEQUENCE number and the samples seen, plus ``_reorder_fold``'s
+    buffer. A breaching sample opens/extends the island (opening
+    increments the sequence); a non-breaching sample CLOSES it. The
+    sequence — not island_start — is the identity: two distinct islands
+    of the same type can START at the same truncated millisecond (the
+    partition key is event_type alone, so a close + reopen can land on
+    one ms). All state and emissions are integers; NaN staleness markers
+    skip identically to the batch filter.
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (event_type,) = key
-        open_s, open_e, open_n, seq = (
-            state.get if state.exists else (0, 0, 0, 0)
-        )
-        out: list[tuple[int, int, int, int]] = []
-        for pdf in pdfs:
-            sort_keys = (
-                ["time", "event_id"] if "event_id" in pdf.columns else ["time"]
-            )
-            pdf = pdf.sort_values(sort_keys)
-            for _, r in pdf.iterrows():
-                v = r["value"]
-                if v is None or pd.isna(v):
-                    continue  # staleness marker — batch filter parity
-                ms = int(r["time"])
-                if float(v) > thr:
-                    if open_n == 0:
-                        seq += 1
-                        open_s, open_e, open_n = ms, ms, 1
-                    else:
-                        open_e, open_n = ms, open_n + 1
-                elif open_n > 0:
-                    out.append((seq, open_s, open_e, open_n))  # closed: final
-                    open_s, open_e, open_n = 0, 0, 0
-        state.update((open_s, open_e, open_n, seq))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
+    Late data is where alerting has operational consequences: a late
+    breach can open an island that should page, a late non-breach can
+    SPLIT one. Samples up to ``reorder_ms`` late still fold in
+    (ms, event_id) order, and a later one raises. EMISSION PROTOCOL: a
+    committed closure is emitted once, final; each batch re-emits the
+    whole speculative fold (closures over the buffer and the open
+    island), and every row carries ``version`` = samples seen for the
+    key, strictly larger at each batch that adds one. The drain keeps the
+    max-version row per (key, island_seq) — max-n would resurrect a
+    split island's stale row, whose n SHRINKS at the same seq. Islands
+    never merge (samples are only added, and a separating non-breach
+    persists), so no once-used seq is abandoned: every stale row has a
+    fresh same-seq successor or is a committed closure."""
+
+    def fold(acc, rows, out):
+        open_s, open_e, open_n, seq, n = acc
+        for ms, _eid, v in rows:
+            if v > thr:
+                if open_n == 0:
+                    seq += 1
+                    open_s, open_e, open_n = ms, ms, 1
+                else:
+                    open_e, open_n = ms, open_n + 1
+            elif open_n > 0:
+                out.append((seq, open_s, open_e, open_n))  # closed: final
+                open_s, open_e, open_n = 0, 0, 0
+            n += 1
+        return open_s, open_e, open_n, seq, n
+
+    def emit(key, acc, done, spec):
+        open_s, open_e, open_n, seq, n = acc
+        islands = done + spec
         if open_n > 0:
-            out.append((seq, open_s, open_e, open_n))  # provisional
-        yield pd.DataFrame(
-            {
-                "event_type": pd.Series([event_type] * len(out), dtype="object"),
-                "island_seq": pd.Series([q for q, _s, _e, _n in out], dtype="int64"),
-                "island_start": pd.Series([s for _q, s, _e, _n in out], dtype="int64"),
-                "island_end": pd.Series([e for _q, _s, e, _n in out], dtype="int64"),
-                "n_samples": pd.Series([n for _q, _s, _e, n in out], dtype="int64"),
-            },
-            columns=[f.name for f in ALERT_SCHEMA.fields],
-        )
+            islands.append((seq, open_s, open_e, open_n))  # provisional
+        return pd.DataFrame(
+            [(key[0], *isl, n) for isl in islands], columns=ALERT_SCHEMA.fieldNames()
+        ).astype({f: "int64" for f in ALERT_SCHEMA.fieldNames()[1:]})
 
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return records.groupBy("event_type").applyInPandasWithState(
-        fn,
-        outputStructType=ALERT_SCHEMA,
-        stateStructType=_ALERT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return _reorder_fold(
+        records, ["event_type"], (0, 0, 0, 0, 0), fold, emit,
+        ALERT_SCHEMA, _ALERT_STATE_SCHEMA, reorder_ms, idle_timeout_ms,
     )
 
 
@@ -1822,719 +1798,44 @@ _EWMA_STATE_SCHEMA = "n long, m long, l double"
 
 
 def ewma_halflife(
-    records: DataFrame, hl_ms: int, idle_timeout_ms: int | None = 3_600_000
+    records: DataFrame,
+    hl_ms: int,
+    idle_timeout_ms: int | None = 3_600_000,
+    reorder_ms: int = 0,
 ) -> DataFrame:
     """Streaming twin of t41's half-life EWMA: per series the state is
     (n, last_ms, level) — the exact (level, last_ms) chunk-handoff the
-    batch docstring prescribes, O(1) for any stream length. Every
+    batch docstring prescribes — plus ``_reorder_fold``'s buffer. Every
     update is level' = v + (level − v)·(1 / float(1 << g)) with
     g = min(Δt // hl, 62) — Python ints and IEEE doubles applying the
     IDENTICAL operand order as the batch ``aggregate`` fold and the
     recursive-CTE oracle (the t20s op-order-identity argument; the
     dyadic decay is exact, so even the multiply inputs are bit-equal).
-    One summary row per touched series per batch; max-n drain row is
-    authoritative (t20s protocol); the floor-truncation happens in the
-    drain's Spark expression, not here."""
+    Samples up to ``reorder_ms`` late still fold in (ms, event_id) order,
+    so Δt is never negative; a later one raises. One summary row per
+    touched series per batch; max-n drain row is authoritative (t20s
+    protocol); the floor-truncation happens in the drain's Spark
+    expression, not here."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        event_type, user_id = key
-        n, m, l = state.get if state.exists else (0, 0, 0.0)  # noqa: E741
-        for pdf in pdfs:
-            sort_keys = (
-                ["time", "event_id"] if "event_id" in pdf.columns else ["time"]
-            )
-            pdf = pdf.sort_values(sort_keys)
-            for _, r in pdf.iterrows():
-                v = r["value"]
-                if v is None or pd.isna(v):
-                    continue  # staleness marker — batch filter parity
-                ms = int(r["time"])
-                x = float(v)
-                if n == 0:
-                    l = x  # noqa: E741
-                else:
-                    # clamp at 0: an out-of-order sample (possible under
-                    # replayed/overlapping inputs; in-order arrival is the
-                    # batch-equivalence precondition, as for t20s) decays
-                    # by zero halvings instead of crashing the shift
-                    g = min(max((ms - m) // hl_ms, 0), 62)
-                    l = x + (l - x) * (1.0 / float(1 << g))  # noqa: E741
-                m, n = ms, n + 1
-        state.update((n, m, l))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            [
-                {
-                    "event_type": event_type,
-                    "user_id": user_id,
-                    "n_samples": n,
-                    "ewma_raw": l,
-                }
-            ]
-        )
-
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return records.groupBy("event_type", "user_id").applyInPandasWithState(
-        fn,
-        outputStructType=EWMA_SCHEMA,
-        stateStructType=_EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
-
-
-_TWA_RO_STATE_SCHEMA = (
-    "n long, last_ms long, last_v100 long, span_ms long, num long, "
-    "hi long, bms array<long>, bid array<long>, bv array<double>"
-)
-
-
-def time_weighted_avg_reordered(
-    records: DataFrame,
-    reorder_ms: int,
-    idle_timeout_ms: int | None = 3_600_000,
-) -> DataFrame:
-    """The PRODUCTION twin of ``time_weighted_avg`` for out-of-order
-    streams (r12 — the last in-order-precondition op on the r11 watch
-    list): the bounded reorder buffer rides in state, the trapezoidal
-    integer fold COMMITS samples strictly below (max event ms) −
-    reorder_ms in (ms, event_id) order, and each batch emits the
-    speculative summary (committed state + buffered suffix folded in
-    sorted order). Because every update is INTEGER arithmetic, the
-    committed accumulators are exactly — not just bit-for-bit-by-
-    op-order — the sorted-stream fold; n_samples stays monotone, so the
-    drain keeps the plain max-n protocol (unlike the alert twin, no
-    island identity exists to split). A sample past its horizon raises
-    loudly (the watermark contract)."""
-
-    def _fold(n, m, lv, span, num, rows):
-        for ms, _eid, v in rows:
-            v100 = int(_round_half_up(v * 100, 0))
-            if n > 0:
-                dt = ms - m
-                num += (lv + v100) * dt
-                span += dt
-            n += 1
-            m, lv = ms, v100
-        return n, m, lv, span, num
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        event_type, user_id = key
-        if state.exists:
-            n, m, lv, span, num, hi, bms, bid, bv = state.get
-            buf = list(zip(list(bms), list(bid), list(bv)))
-        else:
-            n = m = lv = span = num = 0
-            hi, buf = -(1 << 62), []
-        for pdf in pdfs:
-            for _, r in pdf.iterrows():
-                v = r["value"]
-                if v is None or pd.isna(v):
-                    continue  # staleness marker — batch filter parity
-                ms = int(r["time"])
-                if ms < hi - reorder_ms:
-                    raise RuntimeError(
-                        f"sample at {ms} arrived past its reorder horizon "
-                        f"(max seen {hi}, bound {reorder_ms} ms): the "
-                        "watermark contract is violated — widen reorder_ms"
-                    )
-                eid = int(r["event_id"]) if "event_id" in pdf.columns else 0
-                buf.append((ms, eid, float(v)))
-                if ms > hi:
-                    hi = ms
-        buf.sort()
-        wm = hi - reorder_ms
-        cut = 0
-        while cut < len(buf) and buf[cut][0] < wm:  # strictly below
-            cut += 1
-        n, m, lv, span, num = _fold(n, m, lv, span, num, buf[:cut])
-        buf = buf[cut:]
-        state.update(
-            (
-                n, m, lv, span, num, hi,
-                [b[0] for b in buf],
-                [b[1] for b in buf],
-                [b[2] for b in buf],
-            )
-        )
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        sn, _sm, _slv, sspan, snum = _fold(n, m, lv, span, num, buf)
-        yield pd.DataFrame(
-            [
-                {
-                    "event_type": event_type,
-                    "user_id": user_id,
-                    "n_samples": sn,
-                    "span_ms": sspan,
-                    "num": snum,
-                }
-            ]
-        )
-
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return records.groupBy("event_type", "user_id").applyInPandasWithState(
-        fn,
-        outputStructType=TWA_SCHEMA,
-        stateStructType=_TWA_RO_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
-
-
-ALERT_RO_SCHEMA = StructType(
-    [
-        StructField("event_type", StringType()),
-        StructField("island_seq", LongType()),
-        StructField("island_start", LongType()),
-        StructField("island_end", LongType()),
-        StructField("n_samples", LongType()),
-        StructField("version", LongType()),
-    ]
-)
-
-_ALERT_RO_STATE_SCHEMA = (
-    "open_s long, open_e long, open_n long, seq long, n_seen long, "
-    "hi long, bms array<long>, bid array<long>, bv array<double>"
-)
-
-
-def alert_for_duration_reordered(
-    records: DataFrame,
-    thr: float,
-    reorder_ms: int,
-    idle_timeout_ms: int | None = 3_600_000,
-) -> DataFrame:
-    """The PRODUCTION twin of ``alert_for_duration`` for out-of-order
-    streams (r12, VERDICT r11 task #5 — alerting is where late data has
-    operational consequences: a late breach can open an island that
-    should page, a late non-breach can close one that shouldn't). The
-    recipe is ``ewma_halflife_reordered``'s bounded reorder buffer with
-    the island transition as the committed fold: samples buffer in
-    state, and the state machine only COMMITS samples strictly below
-    (max event ms) − reorder_ms in (ms, event_id) order, so any arrival
-    pattern with displacement ≤ reorder_ms folds in exactly the global
-    sort order (committed islands are bit-equal to the in-order fold;
-    a later arrival raises loudly — the watermark contract).
-
-    EMISSION PROTOCOL — why the in-order max-n drain is NOT reused:
-    a late NON-breaching sample can SPLIT a previously-emitted
-    speculative island (its n SHRINKS at the same seq), so max-n per
-    (key, seq) would resurrect the stale pre-split row. Instead every
-    row carries ``version`` = total samples seen for the key (strictly
-    monotone across emissions), each batch re-emits the ENTIRE
-    speculative fold (committed open state + sorted buffer), and the
-    drain keeps the max-version row per (key, island_seq). Islands
-    never MERGE (samples are only ever added and a separating
-    non-breach persists), so the island count per prefix is monotone
-    and no once-used seq is ever abandoned — every stale row has a
-    fresh same-seq successor or is a committed closure (emitted once,
-    final: the guard proves no sample can land below the commit cut).
-    State is O(rate × reorder_ms) per alert key — constant in stream
-    length, the alert_for_duration property kept under disorder."""
-
-    def _fold(open_s, open_e, open_n, seq, rows):
-        closed: list[tuple[int, int, int, int]] = []
-        for ms, _eid, v in rows:
-            if v > thr:
-                if open_n == 0:
-                    seq += 1
-                    open_s, open_e, open_n = ms, ms, 1
-                else:
-                    open_e, open_n = ms, open_n + 1
-            elif open_n > 0:
-                closed.append((seq, open_s, open_e, open_n))
-                open_s, open_e, open_n = 0, 0, 0
-        return open_s, open_e, open_n, seq, closed
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (event_type,) = key
-        if state.exists:
-            open_s, open_e, open_n, seq, n_seen, hi, bms, bid, bv = state.get
-            buf = list(zip(list(bms), list(bid), list(bv)))
-        else:
-            open_s = open_e = open_n = seq = n_seen = 0
-            hi, buf = -(1 << 62), []
-        for pdf in pdfs:
-            for _, r in pdf.iterrows():
-                v = r["value"]
-                if v is None or pd.isna(v):
-                    continue  # staleness marker — batch filter parity
-                ms = int(r["time"])
-                if ms < hi - reorder_ms:
-                    raise RuntimeError(
-                        f"sample at {ms} arrived past its reorder horizon "
-                        f"(max seen {hi}, bound {reorder_ms} ms): the "
-                        "watermark contract is violated — widen reorder_ms"
-                    )
-                eid = int(r["event_id"]) if "event_id" in pdf.columns else 0
-                buf.append((ms, eid, float(v)))
-                n_seen += 1
-                if ms > hi:
-                    hi = ms
-        buf.sort()
-        wm = hi - reorder_ms
-        # strictly below the horizon — the ewma_halflife_reordered
-        # boundary rule (a displacement-exactly-reorder_ms arrival is
-        # admitted by the guard, so same-ms peers must not pre-commit)
-        cut = 0
-        while cut < len(buf) and buf[cut][0] < wm:
-            cut += 1
-        open_s, open_e, open_n, seq, closed = _fold(
-            open_s, open_e, open_n, seq, buf[:cut]
-        )
-        buf = buf[cut:]
-        state.update(
-            (
-                open_s, open_e, open_n, seq, n_seen, hi,
-                [b[0] for b in buf],
-                [b[1] for b in buf],
-                [b[2] for b in buf],
-            )
-        )
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        # speculative fold: committed open state + the whole buffer
-        s_s, s_e, s_n, s_seq, spec = _fold(open_s, open_e, open_n, seq, buf)
-        rows_out = closed + spec
-        if s_n > 0:
-            rows_out.append((s_seq, s_s, s_e, s_n))
-        yield pd.DataFrame(
-            {
-                "event_type": pd.Series(
-                    [event_type] * len(rows_out), dtype="object"
-                ),
-                "island_seq": pd.Series(
-                    [q for q, _s, _e, _n in rows_out], dtype="int64"
-                ),
-                "island_start": pd.Series(
-                    [s for _q, s, _e, _n in rows_out], dtype="int64"
-                ),
-                "island_end": pd.Series(
-                    [e for _q, _s, e, _n in rows_out], dtype="int64"
-                ),
-                "n_samples": pd.Series(
-                    [n for _q, _s, _e, n in rows_out], dtype="int64"
-                ),
-                "version": pd.Series(
-                    [n_seen] * len(rows_out), dtype="int64"
-                ),
-            },
-            columns=[f.name for f in ALERT_RO_SCHEMA.fields],
-        )
-
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return records.groupBy("event_type").applyInPandasWithState(
-        fn,
-        outputStructType=ALERT_RO_SCHEMA,
-        stateStructType=_ALERT_RO_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
-
-
-_EWMA_RO_STATE_SCHEMA = (
-    "n long, m long, l double, hi long, "
-    "bms array<long>, bid array<long>, bv array<double>"
-)
-
-
-def ewma_halflife_reordered(
-    records: DataFrame,
-    hl_ms: int,
-    reorder_ms: int,
-    idle_timeout_ms: int | None = 3_600_000,
-) -> DataFrame:
-    """The PRODUCTION twin of ``ewma_halflife`` for out-of-order streams
-    (r11, VERDICT r10 task #6): ``ewma_halflife`` documents in-order
-    arrival as its batch-equivalence precondition (an out-of-order
-    sample clamps to zero halvings — correct-ish, but not the batch
-    fold). This twin makes the precondition a CONTRACT instead: a
-    bounded reorder buffer rides in the state — the watermark idea
-    applied inside the operator — and the fold only COMMITS samples
-    older than (max event ms seen) − reorder_ms, in (ms, event_id)
-    order. Any arrival pattern whose displacement stays under
-    ``reorder_ms`` therefore folds in exactly the global sort order:
-    the committed recurrence is BIT-EQUAL to the in-order fold (pinned
-    by test_ewma_reordered_bit_equals_in_order). A sample arriving
-    later than its reorder horizon raises loudly (the watermark
-    contract violated — the caller chose the bound) rather than folding
-    out of order silently.
-
-    Each batch emits a SPECULATIVE summary: the committed state plus
-    the still-buffered suffix folded in sorted order — so the drain's
-    max-n row (t20s protocol) reflects every sample, exactly as if the
-    stream had ended and the watermark advanced past the buffer. State
-    is (n, last_ms, level) + the bounded buffer: O(rate × reorder_ms)
-    per series, the price of tolerating disorder — constant in stream
-    LENGTH, the property that matters at 100 TB."""
-
-    def _fold(n: int, m: int, l: float, rows) -> tuple[int, int, float]:
+    def fold(acc, rows, _out):
+        n, m, l = acc  # noqa: E741
         for ms, _eid, x in rows:
             if n == 0:
                 l = x  # noqa: E741
             else:
-                g = min(max((ms - m) // hl_ms, 0), 62)
+                g = min((ms - m) // hl_ms, 62)
                 l = x + (l - x) * (1.0 / float(1 << g))  # noqa: E741
             m, n = ms, n + 1
         return n, m, l
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def emit(key, acc, _done, _spec):
         event_type, user_id = key
-        if state.exists:
-            n, m, l, hi, bms, bid, bv = state.get  # noqa: E741
-            buf = list(zip(list(bms), list(bid), list(bv)))
-        else:
-            n, m, l, hi, buf = 0, 0, 0.0, -(1 << 62), []  # noqa: E741
-        for pdf in pdfs:
-            for _, r in pdf.iterrows():
-                v = r["value"]
-                if v is None or pd.isna(v):
-                    continue  # staleness marker — batch filter parity
-                ms = int(r["time"])
-                if ms < hi - reorder_ms:
-                    raise RuntimeError(
-                        f"sample at {ms} arrived past its reorder horizon "
-                        f"(max seen {hi}, bound {reorder_ms} ms): the "
-                        "watermark contract is violated — widen reorder_ms"
-                    )
-                eid = int(r["event_id"]) if "event_id" in pdf.columns else 0
-                buf.append((ms, eid, float(v)))
-                if ms > hi:
-                    hi = ms
-        buf.sort()
-        wm = hi - reorder_ms
-        # Commit strictly BELOW the horizon (r11 ADVICE): the late-arrival
-        # guard above admits ms == hi - reorder_ms (displacement exactly
-        # reorder_ms), so samples AT the horizon must stay buffered — were
-        # they committed (<=), a same-ms peer arriving at the boundary
-        # would fold after them, breaking the (ms, event_id) fold order.
-        cut = 0
-        while cut < len(buf) and buf[cut][0] < wm:
-            cut += 1
-        n, m, l = _fold(n, m, l, buf[:cut])  # noqa: E741
-        buf = buf[cut:]
-        state.update(
-            (
-                n, m, l, hi,
-                [b[0] for b in buf],
-                [b[1] for b in buf],
-                [b[2] for b in buf],
-            )
-        )
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        sn, _sm, sl = _fold(n, m, l, buf)  # speculative: buffer folded, not committed
-        yield pd.DataFrame(
-            [
-                {
-                    "event_type": event_type,
-                    "user_id": user_id,
-                    "n_samples": sn,
-                    "ewma_raw": sl,
-                }
-            ]
+        n, _m, l = acc  # noqa: E741
+        return pd.DataFrame(
+            [(event_type, user_id, n, l)], columns=EWMA_SCHEMA.fieldNames()
         )
 
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return records.groupBy("event_type", "user_id").applyInPandasWithState(
-        fn,
-        outputStructType=EWMA_SCHEMA,
-        stateStructType=_EWMA_RO_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
-
-
-_HW_RO_STATE_SCHEMA = (
-    "n long, level double, trend double, hi long, "
-    "bms array<long>, bid array<long>, bv array<double>"
-)
-
-
-def holt_winters_reordered(
-    records: DataFrame,
-    reorder_ms: int,
-    sf: float = 0.3,
-    tf: float = 0.1,
-    idle_timeout_ms: int | None = 3_600_000,
-) -> DataFrame:
-    """The PRODUCTION twin of ``holt_winters`` for out-of-order streams
-    (r13, VERDICT r12 task #6): holt_winters' float recurrence relies
-    on OP-ORDER IDENTITY with the batch fold — the most order-fragile
-    kernel of the family, which is exactly why the in-order
-    precondition deserved the contract upgrade. The recipe is
-    ``ewma_halflife_reordered``'s bounded reorder buffer verbatim:
-    samples commit strictly below (max event ms) − reorder_ms in
-    (ms, event_id) order, so any arrival pattern with displacement ≤
-    reorder_ms applies sf/tf updates in EXACTLY the global sort order —
-    the committed (level, trend) is bit-equal to the in-order fold by
-    the fold order alone (no integer-arithmetic escape hatch exists
-    here, making this the interesting case the VERDICT named). Each
-    batch emits the SPECULATIVE summary (committed state + buffered
-    suffix folded sorted) so the max-n drain row reflects every sample;
-    a past-horizon arrival raises loudly. State O(rate × reorder_ms)
-    per series — constant in stream length."""
-
-    def _fold(n: int, level: float, trend: float, rows):
-        for _ms, _eid, x in rows:
-            if n == 0:
-                level, trend = x, 0.0
-            else:
-                s = sf * x + (1.0 - sf) * (level + trend)
-                trend = tf * (s - level) + (1.0 - tf) * trend
-                level = s
-            n += 1
-        return n, level, trend
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        event_type, user_id = key
-        if state.exists:
-            n, level, trend, hi, bms, bid, bv = state.get
-            buf = list(zip(list(bms), list(bid), list(bv)))
-        else:
-            n, level, trend, hi, buf = 0, 0.0, 0.0, -(1 << 62), []
-        for pdf in pdfs:
-            for _, r in pdf.iterrows():
-                v = r["value"]
-                if v is None or pd.isna(v):
-                    continue  # staleness marker — batch filter parity
-                ms = int(r["time"])
-                if ms < hi - reorder_ms:
-                    raise RuntimeError(
-                        f"sample at {ms} arrived past its reorder horizon "
-                        f"(max seen {hi}, bound {reorder_ms} ms): the "
-                        "watermark contract is violated — widen reorder_ms"
-                    )
-                eid = int(r["event_id"]) if "event_id" in pdf.columns else 0
-                buf.append((ms, eid, float(v)))
-                if ms > hi:
-                    hi = ms
-        buf.sort()
-        wm = hi - reorder_ms
-        # strictly below the horizon — the ewma_halflife_reordered
-        # boundary rule (a same-ms peer may still arrive AT the horizon)
-        cut = 0
-        while cut < len(buf) and buf[cut][0] < wm:
-            cut += 1
-        n, level, trend = _fold(n, level, trend, buf[:cut])
-        buf = buf[cut:]
-        state.update(
-            (
-                n, level, trend, hi,
-                [b[0] for b in buf],
-                [b[1] for b in buf],
-                [b[2] for b in buf],
-            )
-        )
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        sn, sl, st = _fold(n, level, trend, buf)  # speculative suffix
-        yield pd.DataFrame(
-            [
-                {
-                    "event_type": event_type,
-                    "user_id": user_id,
-                    "n_samples": sn,
-                    "hw_level": sl,
-                    "hw_trend": st,
-                    "hw_forecast": sl + st,
-                }
-            ]
-        )
-
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return records.groupBy("event_type", "user_id").applyInPandasWithState(
-        fn,
-        outputStructType=HW_SCHEMA,
-        stateStructType=_HW_RO_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
-
-
-RATE_RO_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("user_id", LongType()),
-        StructField("rate_per_sec", DoubleType()),
-        StructField("n_increases", LongType()),
-        StructField("seen", LongType()),
-        StructField("committed", BooleanType()),
-    ]
-)
-
-_RATE_RO_STATE_SCHEMA = (
-    "last_v100 long, inc_ms array<long>, inc_v array<long>, n_c long, "
-    "hi long, bms array<long>, bid array<long>, bv array<double>"
-)
-
-
-def streaming_rate_reordered(
-    records: DataFrame,
-    reorder_ms: int,
-    window_ms: int = 300_000,
-    idle_timeout_ms: int | None = 3_600_000,
-) -> DataFrame:
-    """The PRODUCTION twin of ``streaming_rate`` for out-of-order
-    streams (r13, VERDICT r12 task #6): the bounded reorder buffer
-    rides in state and the per-sample trailing-frame fold COMMITS
-    strictly below (max event ms) − reorder_ms in (ms, event_id) order
-    — a committed sample's rate row is computed with exactly the
-    in-order twin's frame (integer-cents sum, identical quotient order),
-    so it is bit-equal to the in-order output. Unlike the summary-row
-    twins this op emits PER-SAMPLE rows, so the buffered suffix also
-    emits SPECULATIVE rows each batch (the sorted-suffix fold over a
-    COPY of the committed frame); every row carries (seen, committed)
-    and the drain picks argmax(seen) per event_id — a committed row's
-    seen strictly exceeds any speculative row's for the same sample
-    (commits only happen when a new arrival advances the horizon), and
-    the final batch's speculative rows equal the in-order values
-    because the whole suffix folds in sorted order. A past-horizon
-    arrival raises loudly. State O(window + rate × reorder_ms) per
-    series — constant in stream length."""
-
-    def _fold(last_v100, inc_ms, inc_v, rows, committed, seen_total, out):
-        import math
-
-        for ms, eid, v in rows:
-            v100 = int(_round_half_up(v * 100, 0))
-            if last_v100 is None:
-                inc = None
-            elif v100 >= last_v100:
-                inc = v100 - last_v100
-            else:
-                inc = v100  # counter reset: the new value IS the increase
-            if inc is not None:
-                inc_ms.append(ms)
-                inc_v.append(inc)
-            last_v100 = v100
-            lo = ms - window_ms
-            while inc_ms and inc_ms[0] < lo:
-                inc_ms.pop(0)
-                inc_v.pop(0)
-            in_frame = [x for m2, x in zip(inc_ms, inc_v) if m2 >= lo]
-            if in_frame:
-                # identical operand order as streaming_rate / t14 batch
-                q = float(sum(in_frame)) / 100.0 / (window_ms / 1000.0)
-                rate = math.floor(q * 1e6) / 1e6
-            else:
-                rate = None
-            out.append(
-                {
-                    "event_id": eid,
-                    "event_type": None,  # stamped by the caller
-                    "user_id": None,
-                    "rate_per_sec": rate,
-                    "n_increases": len(in_frame),
-                    "seen": seen_total,
-                    "committed": committed,
-                }
-            )
-        return last_v100
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        event_type, user_id = key
-        if state.exists:
-            last_v100, inc_ms, inc_v, n_c, hi, bms, bid, bv = state.get
-            inc_ms, inc_v = list(inc_ms), list(inc_v)
-            buf = list(zip(list(bms), list(bid), list(bv)))
-        else:
-            last_v100, inc_ms, inc_v, n_c = None, [], [], 0
-            hi, buf = -(1 << 62), []
-        for pdf in pdfs:
-            for _, r in pdf.iterrows():
-                v = r["value"]
-                if v is None or pd.isna(v):
-                    continue  # staleness marker — batch filter parity
-                ms = int(r["time"])
-                if ms < hi - reorder_ms:
-                    raise RuntimeError(
-                        f"sample at {ms} arrived past its reorder horizon "
-                        f"(max seen {hi}, bound {reorder_ms} ms): the "
-                        "watermark contract is violated — widen reorder_ms"
-                    )
-                eid = int(r["event_id"]) if "event_id" in pdf.columns else 0
-                buf.append((ms, eid, float(v)))
-                if ms > hi:
-                    hi = ms
-        buf.sort()
-        wm = hi - reorder_ms
-        cut = 0
-        while cut < len(buf) and buf[cut][0] < wm:  # strictly below
-            cut += 1
-        seen_total = n_c + len(buf)
-        rows: list[dict[str, Any]] = []
-        last_v100 = _fold(
-            last_v100, inc_ms, inc_v, buf[:cut], True, seen_total, rows
-        )
-        n_c += cut
-        buf = buf[cut:]
-        state.update(
-            (
-                last_v100, inc_ms, inc_v, n_c, hi,
-                [b[0] for b in buf],
-                [b[1] for b in buf],
-                [b[2] for b in buf],
-            )
-        )
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        # speculative suffix over COPIES of the committed frame
-        _fold(
-            last_v100, list(inc_ms), list(inc_v), buf, False, seen_total,
-            rows,
-        )
-        for row in rows:
-            row["event_type"] = event_type
-            row["user_id"] = user_id
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in RATE_RO_SCHEMA.fields]
-        )
-
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return records.groupBy("event_type", "user_id").applyInPandasWithState(
-        fn,
-        outputStructType=RATE_RO_SCHEMA,
-        stateStructType=_RATE_RO_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return _reorder_fold(
+        records, ["event_type", "user_id"], (0, 0, 0.0), fold, emit,
+        EWMA_SCHEMA, _EWMA_STATE_SCHEMA, reorder_ms, idle_timeout_ms,
     )

@@ -984,3 +984,180 @@ def test_quantified_pattern_chop_invariance_property(events, n_chops, data):
             run_n, run_first = 0, 0
         prev = et
     assert got == exp
+
+
+class _CaptureFrame:
+    """Stands in for the records DataFrame: a stateful operator built on
+    it returns its per-key fn instead of a streaming plan, so the fn can
+    be driven with ``_FakeGroupState`` outside Spark."""
+
+    def groupBy(self, *keys):
+        return self
+
+    def applyInPandasWithState(self, fn, **_conf):
+        return fn
+
+
+def _reorder_kernels():
+    """The five ``_reorder_fold`` recurrences: name → (build(records,
+    **kw), its key, drain(rows) → the authoritative output)."""
+    from prometheus_remote_kinesis_spark.streaming.stateful import (
+        alert_for_duration,
+        ewma_halflife,
+        holt_winters,
+        streaming_rate,
+        time_weighted_avg,
+    )
+
+    def summary(rows):  # max-n row per series (the t20s protocol)
+        return max(rows, key=lambda r: r["n_samples"], default=None)
+
+    def by_version(rows):  # max-version row per island_seq (t39s)
+        best = {}
+        for r in rows:
+            q = r["island_seq"]
+            if q not in best or r["version"] > best[q][3]:
+                best[q] = (r["island_start"], r["island_end"], r["n_samples"], r["version"])
+        return {q: (s, e, n) for q, (s, e, n, _v) in best.items()}
+
+    def by_seen(rows):  # argmax(seen) row per event_id (t14s)
+        best = {}
+        for r in rows:
+            if r["event_id"] not in best or r["seen"] > best[r["event_id"]]["seen"]:
+                best[r["event_id"]] = r
+        return {
+            eid: (None if r["rate_per_sec"] != r["rate_per_sec"] else r["rate_per_sec"],
+                  r["n_increases"])
+            for eid, r in best.items()
+        }
+
+    series = ("m", 1)
+    return {
+        "holt_winters": (
+            lambda recs, **kw: holt_winters(recs, idle_timeout_ms=None, **kw),
+            series, summary,
+        ),
+        "streaming_rate": (
+            lambda recs, **kw: streaming_rate(recs, idle_timeout_ms=None, **kw),
+            series, by_seen,
+        ),
+        "time_weighted_avg": (
+            lambda recs, **kw: time_weighted_avg(recs, idle_timeout_ms=None, **kw),
+            series, summary,
+        ),
+        "alert_for_duration": (
+            lambda recs, **kw: alert_for_duration(
+                recs, thr=10.0, idle_timeout_ms=None, **kw
+            ),
+            ("m",), by_version,
+        ),
+        "ewma_halflife": (
+            lambda recs, **kw: ewma_halflife(
+                recs, hl_ms=100_000, idle_timeout_ms=None, **kw
+            ),
+            series, summary,
+        ),
+    }
+
+
+REORDER_KERNELS = sorted(_reorder_kernels())
+
+
+def _drive_reorder_kernel(kernel, batches, **kw):
+    """Run one of the five kernels over ``batches`` (lists of (event_id,
+    time, value) samples of the series 'm'/1, one micro-batch each) with a
+    fake state store; returns the drained output."""
+    import pandas as pd
+
+    build, key, drain = _reorder_kernels()[kernel]
+    fn = build(_CaptureFrame(), **kw)
+    state = _FakeGroupState()
+    rows = []
+    for batch in batches:
+        pdf = pd.DataFrame(
+            [(eid, "m", 1, t, v) for eid, t, v in batch],
+            columns=["event_id", "event_type", "user_id", "time", "value"],
+        )
+        for out in fn(key, iter([pdf]), state):
+            rows.extend(out.to_dict("records"))
+    return drain(rows)
+
+
+@given(
+    kernel=st.sampled_from(REORDER_KERNELS),
+    samples=st.lists(
+        st.tuples(
+            # event ms and arrival delay on a 20 s grid: same-ms peers and
+            # displacements of exactly reorder_ms come up often
+            st.integers(min_value=0, max_value=50).map(lambda k: k * 20_000),
+            st.integers(min_value=0, max_value=15).map(lambda k: k * 20_000),
+            st.one_of(
+                st.none(),
+                st.floats(min_value=-1e4, max_value=1e4, allow_nan=False),
+            ),
+        ),
+        min_size=1,
+        max_size=16,
+    ),
+    n_chops=st.integers(min_value=1, max_value=4),
+    data=st.data(),
+)
+@settings(max_examples=300, deadline=None, suppress_health_check=list(HealthCheck))
+def test_reorder_fold_property(kernel, samples, n_chops, data):
+    """``_reorder_fold`` for all five recurrences: samples arrive in
+    (ms + random delay) order, chopped into 1-4 micro-batches. With
+    ``reorder_ms`` = the largest displacement (how far a sample lands
+    below the highest ms of EARLIER batches — the boundary case itself)
+    the drained output equals, floats bit for bit, the ``reorder_ms=0``
+    fold of the sorted stream; one ms less raises "reorder horizon".
+    NULL values skip: they are absent from the sorted stream and never
+    trip the guard, wherever they land."""
+    arrival = [
+        (i, t, v)
+        for i, (t, _d, v) in sorted(
+            enumerate(samples), key=lambda s: (s[1][0] + s[1][1], s[0])
+        )
+    ]
+    cuts = sorted(
+        data.draw(
+            st.lists(
+                st.integers(min_value=0, max_value=len(arrival)),
+                min_size=n_chops - 1,
+                max_size=n_chops - 1,
+            )
+        )
+    )
+    batches, lo = [], 0
+    for c in [*cuts, len(arrival)]:
+        batches.append(arrival[lo:c])
+        lo = c
+    disp, hi = 0, None
+    for batch in batches:
+        ms = [t for _i, t, v in batch if v is not None]
+        if ms and hi is not None:
+            disp = max(disp, hi - min(ms))
+        if ms:
+            hi = max([*ms, hi] if hi is not None else ms)
+
+    in_order = sorted(
+        [(t, i, v) for i, t, v in arrival if v is not None]
+    )
+    want = _drive_reorder_kernel(
+        kernel, [[(i, t, v) for t, i, v in in_order]], reorder_ms=0
+    )
+    assert _drive_reorder_kernel(kernel, batches, reorder_ms=disp) == want
+    if disp > 0:
+        with pytest.raises(RuntimeError, match="reorder horizon"):
+            _drive_reorder_kernel(kernel, batches, reorder_ms=disp - 1)
+
+
+@pytest.mark.parametrize("kernel", REORDER_KERNELS)
+def test_in_order_kernel_raises_on_late_sample(kernel):
+    """At the default ``reorder_ms=0`` a sample below the highest ms of an
+    earlier micro-batch raises instead of being clamped (ewma) or folded
+    out of order (the others) without a trace; disorder INSIDE one
+    micro-batch is sorted away, and a same-ms sample is still admitted."""
+    first = [(0, 1_000, 5.0), (1, 400, 20.0)]
+    _drive_reorder_kernel(kernel, [first, [(2, 1_000, 7.0)]])
+    with pytest.raises(RuntimeError, match="reorder horizon"):
+        _drive_reorder_kernel(kernel, [first, [(2, 999, 7.0)]])

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from prometheus_remote_kinesis_spark.sources.prompb import encode_remote_write_body
 from prometheus_remote_kinesis_spark.testing import FilePutRecords
 from prometheus_remote_kinesis_spark.streaming.pipeline import (
-    dedup_stream,
     read_prompb_record_stream,
     read_record_stream,
     relay,
@@ -182,29 +181,6 @@ def test_windowed_rollup_with_late_data(spark, tmp_path):
     assert first_window[0]["sum_value"] == 4.0
 
 
-def test_dedup_stream(spark, tmp_path):
-    """T9: retry-duplicated records (same name+labels+time) collapse."""
-    src = tmp_path / "src"
-    out = tmp_path / "out"
-    ckpt = tmp_path / "ckpt"
-    for d in (src, out, ckpt):
-        d.mkdir()
-    r = rec("up", 1_700_000_000_000, 1.0, job="n")
-    write_ndjson(str(src / "b1.json"), [r, r, rec("up", 1_700_000_000_000, 1.0, job="m")])
-    q = (
-        dedup_stream(read_record_stream(spark, str(src)))
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", str(out))
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.read.parquet(str(out)).collect()
-    assert len(rows) == 2  # exact dup dropped; different label set kept
-
-
 def test_counter_increase_stateful_vs_batch(spark, tmp_path):
     """T10: stateful increase/reset detection across MULTIPLE micro-
     batches (state carries over) equals the batch-twin computation."""
@@ -324,54 +300,6 @@ def test_gap_fill_stateful_vs_batch(spark, tmp_path):
     assert streamed[("g", 5000)] == 2.0
 
 
-def test_incremental_rollup_sink(spark, tmp_path):
-    """Continuous-aggregate upsert: two micro-batches (second updates a
-    window the first already wrote) land in a parquet store that exactly
-    equals the batch recomputation over all data."""
-    from prometheus_remote_kinesis_spark.streaming.pipeline import (
-        incremental_rollup_sink,
-    )
-
-    src = tmp_path / "src"
-    store = str(tmp_path / "store")
-    src.mkdir()
-    m = 60_000
-    # batch 1: two windows for m1, one for m2
-    write_ndjson(
-        str(src / "b1.json"),
-        [rec("m1", 1 * m, 1.0), rec("m1", 6 * m, 2.0), rec("m2", 1 * m, 5.0)],
-    )
-    q = incremental_rollup_sink(
-        read_record_stream(spark, str(src), max_files_per_trigger=1),
-        store,
-        str(tmp_path / "ckpt"),
-        available_now=True,
-    )
-    q.awaitTermination(300)
-    # batch 2 (new run, same checkpoint): updates m1's FIRST window and
-    # adds a third one — the first window's partition must be rewritten,
-    # m2's untouched partition must survive.
-    write_ndjson(str(src / "b2.json"), [rec("m1", 2 * m, 10.0), rec("m1", 11 * m, 3.0)])
-    q2 = incremental_rollup_sink(
-        read_record_stream(spark, str(src), max_files_per_trigger=1),
-        store,
-        str(tmp_path / "ckpt"),
-        available_now=True,
-    )
-    q2.awaitTermination(300)
-
-    got = {
-        (r["ws"], r["name"]): (r["n"], r["sum_value"])
-        for r in spark.read.parquet(store).collect()
-    }
-    assert got == {
-        (0, "m1"): (2, 11.0),       # updated in place by batch 2
-        (5 * m, "m1"): (1, 2.0),    # from batch 1, untouched
-        (10 * m, "m1"): (1, 3.0),   # new in batch 2
-        (0, "m2"): (1, 5.0),        # sibling partition survived overwrite
-    }
-
-
 def test_holt_winters_stream_matches_batch(spark):
     """The stateful streaming Holt-Winters fold must equal the batch
     aggregate() fold exactly on a single-batch drain — same recurrence,
@@ -426,12 +354,19 @@ def _chopped_stream(spark, tmp_path, rows, n_files):
     JSON chop files and stream them ONE FILE PER MICRO-BATCH — forcing
     real state carry-over, the path a single availableNow drain of one
     file never exercises."""
+    per = -(-len(rows) // n_files)
+    return _batched_stream(
+        spark, tmp_path, [rows[i * per : (i + 1) * per] for i in range(n_files)]
+    )
+
+
+def _batched_stream(spark, tmp_path, batches):
+    """Stream each non-empty list of rows in ``batches`` as its own
+    micro-batch (one JSON file each, in list order)."""
     src = tmp_path / "chop_src"
     src.mkdir()
-    per = -(-len(rows) // n_files)
     now = time.time()
-    for i in range(n_files):
-        chunk = rows[i * per : (i + 1) * per]
+    for i, chunk in enumerate(batches):
         if chunk:
             p = str(src / f"c{i}.json")
             write_ndjson(p, chunk)
@@ -455,7 +390,9 @@ def test_streaming_rate_multibatch_matches_naive(spark, tmp_path):
     (integer cents, floor-truncated quotient, t14's conventions).
     Timestamps straddle the 5-minute window so eviction happens
     mid-stream, and a counter reset lands in a later batch than the
-    samples it resets against."""
+    samples it resets against. The last sample of each batch is emitted
+    speculatively and re-emitted when the next batch commits it; the
+    drain keeps the argmax(seen) row per event_id, as t14s does."""
     import math
 
     from prometheus_remote_kinesis_spark.streaming.queries import run_to_batch
@@ -478,7 +415,9 @@ def test_streaming_rate_multibatch_matches_naive(spark, tmp_path):
         "append",
     )
     got = {
-        r["event_id"]: (r["rate_per_sec"], r["n_increases"]) for r in out.collect()
+        r["event_id"]: (r["rate_per_sec"], r["n_increases"])
+        # argmax(seen) per event_id: the dict keeps each id's last row
+        for r in sorted(out.collect(), key=lambda r: r["seen"])
     }
 
     window_ms = 300_000
@@ -882,103 +821,6 @@ def test_relay_rollup_e2e_chop_invariant(spark, tmp_path):
     assert got == expect
 
 
-def test_slo_burn_watermark_eviction(spark, tmp_path):
-    """t28s's production-bounded sibling (VERDICT r7 task #6): the
-    watermark-EVICTED 5-minute bucket form must (a) hold only the open
-    windows in state while hours of data stream past — bounded rows
-    under a moving watermark, unlike the registered drain-time form's
-    O(distinct samples) — and (b) reproduce t28's exact burn-rate
-    arithmetic at a bucket-boundary eval point from the emitted buckets
-    alone."""
-    import datetime as dt
-
-    from prometheus_remote_kinesis_spark.streaming.pipeline import slo_burn_buckets
-
-    base = dt.datetime(2024, 1, 1, 0, 0, 30)
-    rows = [
-        (base + dt.timedelta(minutes=i), u, "error" if (i + u) % 3 == 0 else "view")
-        for i in range(360)  # 6 hours, 1 sample/min/user
-        for u in (1, 2)
-    ]
-    src = tmp_path / "src"
-    src.mkdir()
-    for h in range(6):
-        chunk = [r for r in rows if r[0].hour == h]
-        pdf = spark.createDataFrame(chunk, "ts timestamp, user_id long, event_type string")
-        pdf.coalesce(1).write.parquet(str(src / f"h{h}.parquet"))
-        # one file per hour, mtime-ordered so micro-batches replay in
-        # event-time order (FileStreamSource picks oldest-first)
-        for root, _dirs, files in os.walk(src / f"h{h}.parquet"):
-            for f in files:
-                os.utime(os.path.join(root, f), (1_700_000_000 + h, 1_700_000_000 + h))
-
-    stream = (
-        spark.readStream.schema("ts timestamp, user_id long, event_type string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "h*.parquet"))
-    )
-    q = (
-        slo_burn_buckets(stream)
-        .writeStream.format("memory")
-        .queryName("burn_buckets")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination()
-    progresses = [json.loads(p.json) for p in q.recentProgress]
-    state_rows = [
-        so["numRowsTotal"] for p in progresses for so in p.get("stateOperators", [])
-    ]
-
-    # (a) bounded state: peak ≈ one hour of open windows (the batch
-    # granularity) per user — never the 144 total windows of the run —
-    # and the post-flush tail holds only the watermark horizon.
-    assert max(state_rows) <= 2 * 16, state_rows
-    assert state_rows[-1] <= 2 * 8, state_rows
-    total_windows = 2 * 72
-    assert max(state_rows) < total_windows / 4
-
-    buckets = {
-        (r.bucket_start, r.user_id): (r.n, r.err)
-        for r in spark.table("burn_buckets").collect()
-    }
-    # every emitted bucket carries the exact batch counts
-    expect_buckets = {}
-    for ts, u, et in rows:
-        b = ts.replace(minute=ts.minute - ts.minute % 5, second=0)
-        n, err = expect_buckets.get((b, u), (0, 0))
-        expect_buckets[(b, u)] = (n + 1, err + (et == "error"))
-    for k, v in buckets.items():
-        assert expect_buckets[k] == v
-    assert len(buckets) > total_windows / 2  # most windows were finalized
-
-    # (b) t28's arithmetic at T = the last finalized bucket boundary,
-    # derived from buckets alone vs the naive per-sample fold
-    t_end = max(b for (b, _u) in buckets)
-    T = t_end + dt.timedelta(minutes=5)
-    for u in (1, 2):
-        n_5m = sum(n for (b, uu), (n, _e) in buckets.items() if uu == u and b == t_end)
-        err_5m = sum(e for (b, uu), (_n, e) in buckets.items() if uu == u and b == t_end)
-        n_1h = sum(
-            n
-            for (b, uu), (n, _e) in buckets.items()
-            if uu == u and T - dt.timedelta(hours=1) <= b < T
-        )
-        err_1h = sum(
-            e
-            for (b, uu), (_n, e) in buckets.items()
-            if uu == u and T - dt.timedelta(hours=1) <= b < T
-        )
-        naive = [r for r in rows if r[1] == u and T - dt.timedelta(hours=1) <= r[0] <= T]
-        assert n_1h == len(naive)
-        assert err_1h == sum(1 for r in naive if r[2] == "error")
-        naive_5m = [r for r in naive if r[0] >= T - dt.timedelta(minutes=5)]
-        assert n_5m == len(naive_5m)
-        assert err_5m == sum(1 for r in naive_5m if r[2] == "error")
-
-
 def test_kmv_topk_sketch_production_state(spark, tmp_path):
     """a3cs's production-bounded sibling (VERDICT r8 task #6): the
     O(K)-state KMV form must (a) hold exactly one state row per type —
@@ -1064,193 +906,6 @@ def test_kmv_topk_sketch_production_state(spark, tmp_path):
     assert got == exp
     assert got["hot"][0] == KMV_K  # saturated: sketch path exercised
     assert got["cold"][0] == 20 and got["cold"][2] == 20  # exact fallback
-
-
-def test_exact_dedup_manifest_sink(spark, tmp_path):
-    """l1s's production-bounded sibling (VERDICT r8 task #6): the
-    manifest anti-join form must (a) keep ZERO rows in the streaming
-    state store (the distinct set lives at rest), (b) admit exactly one
-    representative per distinct document across waves — first-arriving
-    wave wins, min doc_id within a wave — including across a RESTART
-    (new query, same manifest), and (c) match batch l1's digest set."""
-    from prometheus_remote_kinesis_spark.streaming.pipeline import (
-        exact_dedup_manifest_sink,
-    )
-
-    waves = [
-        # wave 0: docs 10, 11 (+ an in-wave duplicate of 10's text at 12)
-        [(10, "alpha"), (11, "beta"), (12, "alpha")],
-        # wave 1: re-crawl of alpha (id 1 < 10 — must NOT displace 10),
-        # plus new gamma
-        [(1, "alpha"), (13, "gamma")],
-        # wave 2: NULL text (excluded), re-crawl of beta, new delta
-        [(14, None), (15, "beta"), (16, "delta")],
-    ]
-    src = tmp_path / "src"
-    src.mkdir()
-    for w, chunk in enumerate(waves):
-        spark.createDataFrame(
-            chunk, "doc_id long, text string"
-        ).coalesce(1).write.parquet(str(src / f"w{w}.parquet"))
-        for root, _dirs, files in os.walk(src / f"w{w}.parquet"):
-            for f in files:
-                os.utime(
-                    os.path.join(root, f),
-                    (1_700_000_000 + w, 1_700_000_000 + w),
-                )
-
-    manifest = str(tmp_path / "manifest")
-    out = str(tmp_path / "accepted")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "w*.parquet"))
-    )
-    q = exact_dedup_manifest_sink(
-        stream, manifest, out, str(tmp_path / "ckpt"), available_now=True
-    )
-    q.awaitTermination(300)
-    progresses = [json.loads(p.json) for p in q.recentProgress]
-    # (a) zero streaming state: the foreachBatch plan has no stateful op
-    assert all(
-        so["numRowsTotal"] == 0
-        for p in progresses
-        for so in p.get("stateOperators", [])
-    )
-
-    got = {
-        r.digest: r.rep_id for r in spark.read.parquet(out).collect()
-    }
-    # (b) one rep per distinct text; alpha kept its wave-0 min id 10
-    # (in-wave dup 12 lost to 10; later re-crawl id 1 did not displace)
-    import hashlib
-
-    def d(t):
-        return hashlib.sha256(t.encode()).hexdigest()
-
-    assert got == {
-        d("alpha"): 10,
-        d("beta"): 11,
-        d("gamma"): 13,
-        d("delta"): 16,
-    }
-
-    # (c) restart with a 4th wave: manifest persists across queries
-    spark.createDataFrame(
-        [(2, "alpha"), (17, "epsilon")], "doc_id long, text string"
-    ).coalesce(1).write.parquet(str(src / "w3.parquet"))
-    for root, _dirs, files in os.walk(src / "w3.parquet"):
-        for f in files:
-            os.utime(os.path.join(root, f), (1_700_000_004, 1_700_000_004))
-    q2 = exact_dedup_manifest_sink(
-        (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(src / "w*.parquet"))
-        ),
-        manifest,
-        out,
-        str(tmp_path / "ckpt"),
-        available_now=True,
-    )
-    q2.awaitTermination(300)
-    got2 = {
-        r.digest: r.rep_id for r in spark.read.parquet(out).collect()
-    }
-    assert got2 == {**got, d("epsilon"): 17}  # alpha STILL id 10
-    # batch-l1 digest-set equality over all non-NULL docs
-    all_docs = [r for w in waves for r in w] + [(2, "alpha"), (17, "epsilon")]
-    assert set(got2) == {d(t) for _i, t in all_docs if t is not None}
-
-
-def test_dedup_corpus_stats_manifest_bounded(spark, tmp_path):
-    """s2e's production-bounded twin (VERDICT r9 task #6): the manifest
-    form must (a) keep ZERO streaming-state rows — the distinct set
-    lives at rest, unlike s2e's deliberate O(distinct docs) election
-    state (the zero-state property itself is pinned by
-    test_exact_dedup_manifest_sink's stateOperators assertion on the
-    same sink) — and (b) produce the identical per-language corpus
-    stats as the batch dedup→stats chain (s2e's oracle semantics)."""
-    from tests.conftest import SF_SMOKE
-
-    from prometheus_remote_kinesis_spark.llm.text import token_stats
-    from prometheus_remote_kinesis_spark.sources.tables import load_table
-    from prometheus_remote_kinesis_spark.streaming.pipeline import (
-        dedup_corpus_stats_manifest,
-    )
-
-    sf_dir = SF_SMOKE
-    got = dedup_corpus_stats_manifest(
-        spark,
-        sf_dir,
-        str(tmp_path / "manifest"),
-        str(tmp_path / "accepted"),
-        str(tmp_path / "ckpt"),
-    )
-    # (b) equality vs the batch chain: min-doc_id rep per digest, then
-    # the identical token_stats expression tree
-    corpus = load_table(spark, sf_dir, "documents")
-    reps = (
-        corpus.filter(F.col("text").isNotNull())
-        .groupBy(F.sha2("text", 256).alias("digest"))
-        .agg(F.min("doc_id").alias("rep_id"))
-        .select("rep_id")
-    )
-    exp = token_stats(corpus.join(reps, corpus.doc_id == reps.rep_id, "leftsemi"))
-    key = lambda rows: sorted(tuple(r) for r in rows)  # noqa: E731
-    assert key(got.collect()) == key(exp.collect())
-
-
-def test_exact_dedup_manifest_sink_replay_idempotent(spark, tmp_path):
-    """The crash-replay guarantee (r9 ADVICE #2): out_dir is the single
-    source of truth — a foreachBatch REPLAY of already-committed batches
-    (simulated here by deleting the checkpoint and re-draining the same
-    source) anti-joins against out_dir itself, recomputes fresh as
-    empty, and appends nothing: no lost rows, no duplicates. Under the
-    old manifest-anti-join design this replay would have found the
-    digests already in the manifest and permanently dropped them from
-    out_dir had the first run crashed between the two appends."""
-    import shutil
-
-    from prometheus_remote_kinesis_spark.streaming.pipeline import (
-        exact_dedup_manifest_sink,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    spark.createDataFrame(
-        [(1, "alpha"), (2, "beta"), (3, "alpha")], "doc_id long, text string"
-    ).coalesce(1).write.parquet(str(src / "w0.parquet"))
-
-    manifest = str(tmp_path / "manifest")
-    out = str(tmp_path / "accepted")
-
-    def drain(ckpt: str) -> None:
-        q = exact_dedup_manifest_sink(
-            (
-                spark.readStream.schema("doc_id long, text string")
-                .parquet(str(src / "w*.parquet"))
-            ),
-            manifest,
-            out,
-            ckpt,
-            available_now=True,
-        )
-        q.awaitTermination(300)
-
-    drain(str(tmp_path / "ckpt"))
-    first = sorted(
-        (r.digest, r.rep_id) for r in spark.read.parquet(out).collect()
-    )
-    assert len(first) == 2  # alpha (rep 1), beta (rep 2)
-
-    # Full replay: fresh checkpoint, same source → every batch re-runs.
-    shutil.rmtree(tmp_path / "ckpt")
-    drain(str(tmp_path / "ckpt2"))
-    replayed = sorted(
-        (r.digest, r.rep_id) for r in spark.read.parquet(out).collect()
-    )
-    assert replayed == first  # unchanged: no dupes, no losses
 
 
 def test_time_weighted_avg_multibatch_chop_invariant(spark, tmp_path):
@@ -1444,20 +1099,108 @@ def test_ewma_halflife_multibatch_chop(spark, tmp_path):
     assert best["ewma_raw"] == l  # bit-exact
 
 
+# One series (event_type 'm', user 1), in event order. The alert kernel
+# (thr 10) sees islands {e0,e1}, {e3}, {e5,e7,e8} and {e10}; e6 is a
+# NULL staleness marker.
+_REORDER_SEQ = [
+    (0, 20.0), (0, 15.0), (100_000, 5.0), (200_000, 30.0), (250_000, 6.0),
+    (300_000, 35.0), (350_000, None), (400_000, 40.0), (600_000, 50.0),
+    (700_000, 4.0), (900_000, 60.0),
+]
+_REORDER_MS = 300_000
+
+
+@pytest.mark.parametrize(
+    "kernel",
+    [
+        "alert_for_duration",
+        "ewma_halflife",
+        "holt_winters",
+        "streaming_rate",
+        "time_weighted_avg",
+    ],
+)
+def test_reorder_buffer_through_state_store(spark, tmp_path, kernel):
+    """The five ``_reorder_fold`` kernels through a REAL state store, one
+    micro-batch per file, arrivals displaced up to ``reorder_ms``:
+
+    - batch 3 brings e0 (ms 0) while the highest ms seen is 300 000 — a
+      displacement of exactly ``reorder_ms``, admitted; its same-ms peer
+      e1 must still be buffered so e0 folds first (committing ms <=
+      horizon would have folded e1 first);
+    - batch 5 brings the non-breach e4 (250 000) after the speculative
+      alert island 200 000-400 000 was emitted: it SPLITS that island,
+      and the stale row must lose the max-version drain;
+    - the buffer round-trips the store between every batch.
+
+    The drained output equals, floats bit for bit, the in-order fold
+    (the kernel at ``reorder_ms=0`` over the sorted stream, driven
+    without Spark), and a sample past its horizon in a later micro-batch
+    fails the query."""
+    from pyspark.errors import StreamingQueryException
+
+    from prometheus_remote_kinesis_spark.streaming.queries import run_to_batch
+    from tests.test_stateful_props import _drive_reorder_kernel, _reorder_kernels
+
+    build, _key, drain = _reorder_kernels()[kernel]
+    rows = [
+        {"event_id": i, "event_type": "m", "user_id": 1, "time": t, "value": v}
+        for i, (t, v) in enumerate(_REORDER_SEQ)
+    ]
+
+    def drained(src, arrival):
+        return run_to_batch(
+            build(
+                _batched_stream(spark, src, [[rows[i] for i in b] for b in arrival]),
+                reorder_ms=_REORDER_MS,
+            ),
+            "append",
+        ).collect()
+
+    out = [
+        r.asDict()
+        for r in drained(tmp_path, [[1], [5], [0, 2, 3, 6], [7], [4, 8], [10, 9]])
+    ]
+    want = _drive_reorder_kernel(
+        kernel,
+        [[(i, t, v) for i, (t, v) in enumerate(_REORDER_SEQ) if v is not None]],
+        reorder_ms=0,
+    )
+    assert drain(out) == want
+    if kernel == "alert_for_duration":
+        assert any(r["island_seq"] == 2 and r["n_samples"] == 3 for r in out)
+        assert want == {
+            1: (0, 0, 2),
+            2: (200_000, 200_000, 1),
+            3: (300_000, 600_000, 3),
+            4: (900_000, 900_000, 1),
+        }
+    if kernel == "streaming_rate":
+        picked = {}
+        for r in out:
+            if r["event_id"] not in picked or r["seen"] > picked[r["event_id"]]["seen"]:
+                picked[r["event_id"]] = r
+        # both paths reach the drain; the NULL sample emits no row
+        assert {r["committed"] for r in picked.values()} == {True, False}
+        assert len(picked) == 10
+
+    bad_dir = tmp_path / "bad"
+    bad_dir.mkdir()
+    # e4 (250 000) after 600 000 was seen: 50 000 past the horizon
+    with pytest.raises(StreamingQueryException, match="reorder horizon"):
+        drained(bad_dir, [[0, 1, 2, 3], [5, 7, 8], [4, 6]])
+
+
 def test_ewma_reordered_bit_equals_in_order(spark, tmp_path):
-    """ewma_halflife_reordered under REAL multi-batch chop with
+    """ewma_halflife(reorder_ms=...) under REAL multi-batch chop with
     out-of-order arrival inside the reorder bound: the committed fold
     runs in global (ms, event_id) order regardless of arrival order, so
     the drained level is BIT-EQUAL to the in-order Python fold (the
     t20s op-order-identity argument, now robust to bounded disorder).
     NULLs skip; a sample arriving past its reorder horizon raises
     loudly instead of folding out of order."""
-    import pytest
-
     from prometheus_remote_kinesis_spark.streaming.queries import run_to_batch
-    from prometheus_remote_kinesis_spark.streaming.stateful import (
-        ewma_halflife_reordered,
-    )
+    from prometheus_remote_kinesis_spark.streaming.stateful import ewma_halflife
 
     HL, RO = 600_000, 300_000
     # event-time order (ms, value); gaps exercise g = 0, 1, >1 halvings
@@ -1475,7 +1218,7 @@ def test_ewma_reordered_bit_equals_in_order(spark, tmp_path):
     order = [1, 0, 2, 3, 4, 5, 7, 6, 8]
     rows_arrival = [rows_sorted[i] for i in order]
     out = run_to_batch(
-        ewma_halflife_reordered(
+        ewma_halflife(
             _chopped_stream(spark, tmp_path, rows_arrival, 4),
             hl_ms=HL,
             reorder_ms=RO,
@@ -1505,7 +1248,7 @@ def test_ewma_reordered_bit_equals_in_order(spark, tmp_path):
     bad_dir.mkdir()
     with pytest.raises(Exception, match="reorder horizon"):
         run_to_batch(
-            ewma_halflife_reordered(
+            ewma_halflife(
                 _chopped_stream(spark, bad_dir, bad, 3),
                 hl_ms=HL,
                 reorder_ms=RO,
@@ -1519,13 +1262,11 @@ def test_ewma_reordered_boundary_displacement(spark, tmp_path):
     """A sample arriving displaced EXACTLY reorder_ms sits inside the
     contract (the late-arrival guard admits ms == hi - reorder_ms) and
     must fold bit-equal to the in-order recurrence: the commit cut is
-    strictly-below-horizon (r11 ADVICE — committing ms <= hi - reorder_ms
-    let a boundary arrival fold after its already-committed same-ms
-    peers, breaking the documented (ms, event_id) fold order)."""
+    strictly-below-horizon (committing ms <= hi - reorder_ms would let a
+    boundary arrival fold after its already-committed same-ms peers,
+    breaking the documented (ms, event_id) fold order)."""
     from prometheus_remote_kinesis_spark.streaming.queries import run_to_batch
-    from prometheus_remote_kinesis_spark.streaming.stateful import (
-        ewma_halflife_reordered,
-    )
+    from prometheus_remote_kinesis_spark.streaming.stateful import ewma_halflife
 
     HL, RO = 600_000, 300_000
     seq = [(0, 10.0), (0, 12.0), (300_000, 8.0), (700_000, 20.0), (900_000, 4.0)]
@@ -1534,12 +1275,12 @@ def test_ewma_reordered_boundary_displacement(spark, tmp_path):
         for i, (t, v) in enumerate(seq)
     ]
     # arrival: eid1 (ms 0), eid2 (ms 300_000 → horizon reaches 0; the
-    # pre-fix commit took eid1 here), THEN eid0 at ms 0 — displacement
+    # a ms <= horizon cut would commit eid1 here), THEN eid0 at ms 0 — displacement
     # exactly RO, admitted by the guard — then the in-order suffix;
     # one file per micro-batch so each arrival is its own commit point
     order = [1, 2, 0, 3, 4]
     out = run_to_batch(
-        ewma_halflife_reordered(
+        ewma_halflife(
             _chopped_stream(spark, tmp_path, [rows_sorted[i] for i in order], 5),
             hl_ms=HL,
             reorder_ms=RO,
@@ -1558,301 +1299,3 @@ def test_ewma_reordered_boundary_displacement(spark, tmp_path):
         m, n = t, n + 1
     assert auth["n_samples"] == n == 5
     assert auth["ewma_raw"] == level  # bit-exact under boundary disorder
-
-
-def test_alert_for_duration_reordered_bit_equal(spark, tmp_path):
-    """alert_for_duration_reordered under real multi-batch chop with
-    bounded disorder (r12, VERDICT r11 task #5): the max-VERSION drain
-    per (key, island_seq) reproduces the in-order island set exactly —
-    including the SPLIT hazard the in-order max-n drain would get
-    wrong: a speculative island is emitted spanning 200k–400k (n=2),
-    then a LATE non-breaching sample lands inside it, splitting it into
-    a closed 1-sample island and a new island — the stale n=2 row must
-    lose. A sample past its reorder horizon raises loudly."""
-    import pytest
-
-    from prometheus_remote_kinesis_spark.streaming.queries import run_to_batch
-    from prometheus_remote_kinesis_spark.streaming.stateful import (
-        alert_for_duration_reordered,
-    )
-
-    RO, THR = 300_000, 10.0
-    seq = [
-        (0, 20.0),        # island 1 opens
-        (100_000, 5.0),   # closes island 1
-        (200_000, 30.0),  # island 2 opens
-        (250_000, 6.0),   # closes island 2 — ARRIVES LATE (the split)
-        (400_000, 40.0),  # island 3 opens
-        (600_000, 50.0),  # extends island 3
-        (700_000, 4.0),   # closes island 3
-        (900_000, 60.0),  # island 4 opens (provisional at drain)
-    ]
-    rows_sorted = [
-        {"event_id": i, "event_type": "m", "user_id": 1, "time": t, "value": v}
-        for i, (t, v) in enumerate(seq)
-    ]
-    # the late non-breach (eid 3) arrives after the 400k breach was seen
-    # and a speculative island 200k-400k (n=2) was already emitted;
-    # displacement 150k < RO, inside the contract
-    order = [0, 1, 2, 4, 3, 5, 6, 7]
-    out = run_to_batch(
-        alert_for_duration_reordered(
-            _chopped_stream(spark, tmp_path, [rows_sorted[i] for i in order], 8),
-            thr=THR,
-            reorder_ms=RO,
-            idle_timeout_ms=None,
-        ),
-        "append",
-    )
-    drained = out.collect()
-    # the split hazard really occurred: some emission carried seq 2 with
-    # n=2 (the stale pre-split speculative island)
-    assert any(
-        r["island_seq"] == 2 and r["n_samples"] == 2 for r in drained
-    ), "test setup no longer exercises the split hazard"
-    # drain: max-version row per island_seq
-    best = {}
-    for r in drained:
-        k = r["island_seq"]
-        if k not in best or r["version"] > best[k]["version"]:
-            best[k] = r
-    got = {
-        k: (r["island_start"], r["island_end"], r["n_samples"])
-        for k, r in best.items()
-    }
-    # in-order authority: the same fold over the SORTED sequence
-    want, open_isl, s = {}, None, 0
-    for t, v in seq:
-        if v > THR:
-            if open_isl is None:
-                s += 1
-                open_isl = [t, t, 1]
-            else:
-                open_isl[1], open_isl[2] = t, open_isl[2] + 1
-        elif open_isl is not None:
-            want[s] = tuple(open_isl)
-            open_isl = None
-    if open_isl is not None:
-        want[s] = tuple(open_isl)
-    assert got == want == {
-        1: (0, 0, 1),
-        2: (200_000, 200_000, 1),
-        3: (400_000, 600_000, 2),
-        4: (900_000, 900_000, 1),
-    }
-    # a sample past its horizon raises loudly (displacement > RO)
-    bad = [rows_sorted[i] for i in [0, 1, 2, 4, 5, 3, 6, 7]]  # 250k after 600k
-    bad_dir = tmp_path / "bad"
-    bad_dir.mkdir()
-    with pytest.raises(Exception, match="reorder horizon"):
-        run_to_batch(
-            alert_for_duration_reordered(
-                _chopped_stream(spark, bad_dir, bad, 8),
-                thr=THR,
-                reorder_ms=RO,
-                idle_timeout_ms=None,
-            ),
-            "append",
-        ).collect()
-
-
-def test_time_weighted_avg_reordered_integer_equal(spark, tmp_path):
-    """time_weighted_avg_reordered under multi-batch chop with bounded
-    disorder (incl. a displacement-exactly-reorder_ms arrival): the
-    drained max-n accumulators are INTEGER-equal to the in-order
-    trapezoidal fold — the last in-order-precondition op on the r11
-    watch list gets its production twin. Past-horizon arrival raises."""
-    import pytest
-
-    from prometheus_remote_kinesis_spark.streaming.queries import run_to_batch
-    from prometheus_remote_kinesis_spark.streaming.stateful import (
-        _round_half_up,
-        time_weighted_avg_reordered,
-    )
-
-    RO = 300_000
-    seq = [
-        (0, 10.5), (100_000, 12.25), (150_000, None), (400_000, 8.0),
-        (700_000, 20.0), (900_000, 4.75), (1_200_000, 16.0),
-    ]
-    rows_sorted = [
-        {"event_id": i, "event_type": "m", "user_id": 1, "time": t, "value": v}
-        for i, (t, v) in enumerate(seq)
-    ]
-    # eid0 (ms 0) arrives AFTER eid3 (ms 400k)? displacement would be
-    # 400k > RO — instead: swap neighbors within the bound, plus one
-    # boundary case (eid1 at 100k arrives when hi = 400k → displacement
-    # exactly 300k, admitted)
-    order = [0, 2, 3, 1, 4, 5, 6]
-    out = run_to_batch(
-        time_weighted_avg_reordered(
-            _chopped_stream(spark, tmp_path, [rows_sorted[i] for i in order], 7),
-            reorder_ms=RO,
-            idle_timeout_ms=None,
-        ),
-        "append",
-    )
-    best = max(out.collect(), key=lambda r: r["n_samples"])
-    n = m = lv = span = num = 0
-    for t, v in seq:
-        if v is None:
-            continue
-        v100 = int(_round_half_up(v * 100, 0))
-        if n > 0:
-            num += (lv + v100) * (t - m)
-            span += t - m
-        n += 1
-        m, lv = t, v100
-    assert best["n_samples"] == n == 6
-    assert best["span_ms"] == span and best["num"] == num  # integer-equal
-    # past the horizon → loud failure
-    bad = [rows_sorted[i] for i in [0, 2, 3, 4, 1, 5, 6]]  # 100k after 700k
-    bad_dir = tmp_path / "bad"
-    bad_dir.mkdir()
-    with pytest.raises(Exception, match="reorder horizon"):
-        run_to_batch(
-            time_weighted_avg_reordered(
-                _chopped_stream(spark, bad_dir, bad, 7),
-                reorder_ms=RO,
-                idle_timeout_ms=None,
-            ),
-            "append",
-        ).collect()
-
-
-def test_holt_winters_reordered_bit_equal(spark, tmp_path):
-    """holt_winters_reordered under multi-batch chop with bounded
-    disorder (r13, VERDICT r12 task #6 — the op-order-identity kernel
-    the VERDICT named as the interesting case): the committed sf/tf
-    recurrence applies in global (ms, event_id) order regardless of
-    arrival order, so the drained max-n row is BIT-EQUAL to the
-    IN-ORDER twin's on the same samples — level, trend and forecast
-    compared with ==, not approx. NULLs skip; same-ms peers exercise
-    the event_id tiebreak; a past-horizon arrival raises loudly."""
-    import pytest
-
-    from prometheus_remote_kinesis_spark.streaming.queries import run_to_batch
-    from prometheus_remote_kinesis_spark.streaming.stateful import (
-        holt_winters, holt_winters_reordered,
-    )
-
-    RO = 300_000
-    seq = [
-        (0, 5.0), (100_000, 6.25), (100_000, 4.5), (150_000, None),
-        (400_000, 8.0), (650_000, 7.75), (900_000, 9.0),
-        (1_100_000, 10.5), (1_150_000, 2.0), (1_400_000, 12.75),
-    ]
-    rows_sorted = [
-        {"event_id": i, "event_type": "m", "user_id": 1, "time": t, "value": v}
-        for i, (t, v) in enumerate(seq)
-    ]
-    # bounded disorder: displaced neighbors (incl. the same-ms pair 1/2
-    # swapped) — every displacement under RO
-    order = [2, 1, 0, 3, 4, 6, 5, 7, 8, 9]
-    out_ro = run_to_batch(
-        holt_winters_reordered(
-            _chopped_stream(
-                spark, tmp_path, [rows_sorted[i] for i in order], 4
-            ),
-            reorder_ms=RO,
-            idle_timeout_ms=None,
-        ),
-        "append",
-    ).collect()
-    in_dir = tmp_path / "in_order"
-    in_dir.mkdir()
-    out_in = run_to_batch(
-        holt_winters(
-            _chopped_stream(spark, in_dir, rows_sorted, 4),
-            idle_timeout_ms=None,
-        ),
-        "append",
-    ).collect()
-    auth_ro = max(out_ro, key=lambda r: r["n_samples"])
-    auth_in = max(out_in, key=lambda r: r["n_samples"])
-    assert auth_ro["n_samples"] == auth_in["n_samples"] == 9
-    assert auth_ro["hw_level"] == auth_in["hw_level"]      # bit-exact
-    assert auth_ro["hw_trend"] == auth_in["hw_trend"]      # bit-exact
-    assert auth_ro["hw_forecast"] == auth_in["hw_forecast"]
-    # past-horizon arrival (displacement > RO) raises loudly
-    bad_dir = tmp_path / "bad"
-    bad_dir.mkdir()
-    bad = [rows_sorted[i] for i in [1, 2, 4, 5, 0, 6, 7, 8, 9]]
-    with pytest.raises(Exception, match="reorder horizon"):
-        run_to_batch(
-            holt_winters_reordered(
-                _chopped_stream(spark, bad_dir, bad, 3),
-                reorder_ms=RO,
-                idle_timeout_ms=None,
-            ),
-            "append",
-        ).collect()
-
-
-def test_streaming_rate_reordered_bit_equal(spark, tmp_path):
-    """streaming_rate_reordered under multi-batch chop with bounded
-    disorder (r13, task #6): the argmax(seen)-per-event_id drain pick
-    reproduces the IN-ORDER twin's per-sample rows bit-exactly — a
-    committed row is computed with exactly the in-order frame, and the
-    final batch's speculative rows fold the whole suffix in sorted
-    order. The drained set mixes committed and speculative rows (both
-    paths exercised); a past-horizon arrival raises loudly."""
-    import pytest
-
-    from prometheus_remote_kinesis_spark.streaming.queries import run_to_batch
-    from prometheus_remote_kinesis_spark.streaming.stateful import (
-        streaming_rate, streaming_rate_reordered,
-    )
-
-    RO = 130_000
-    vals = [1.0, 2.5, 4.0, 7.5, 1.2, None, 3.0, 9.9, 12.4, 15.0, 20.25, 21.0]
-    rows_sorted = [
-        {
-            "event_id": i, "event_type": "m", "user_id": 1,
-            "time": i * 65_000, "value": v,
-        }
-        for i, v in enumerate(vals)
-    ]
-    order = [1, 0, 2, 4, 3, 5, 6, 8, 7, 9, 10, 11]  # displacement 65 s < RO
-    out_ro = run_to_batch(
-        streaming_rate_reordered(
-            _chopped_stream(
-                spark, tmp_path, [rows_sorted[i] for i in order], 5
-            ),
-            reorder_ms=RO,
-            idle_timeout_ms=None,
-        ),
-        "append",
-    ).collect()
-    picked = {}
-    for r in out_ro:
-        if r["event_id"] not in picked or r["seen"] > picked[r["event_id"]]["seen"]:
-            picked[r["event_id"]] = r
-    flags = {r["committed"] for r in picked.values()}
-    assert flags == {True, False}  # both paths exercised in the drain
-    in_dir = tmp_path / "in_order"
-    in_dir.mkdir()
-    out_in = run_to_batch(
-        streaming_rate(
-            _chopped_stream(spark, in_dir, rows_sorted, 4),
-            idle_timeout_ms=None,
-        ),
-        "append",
-    ).collect()
-    want = {r["event_id"]: (r["rate_per_sec"], r["n_increases"]) for r in out_in}
-    got = {
-        eid: (r["rate_per_sec"], r["n_increases"]) for eid, r in picked.items()
-    }
-    assert got == want and len(got) == 11  # NULL sample emits no row
-    bad_dir = tmp_path / "bad"
-    bad_dir.mkdir()
-    bad = [rows_sorted[i] for i in [2, 3, 4, 0, 6, 7, 8, 9, 10, 11]]
-    with pytest.raises(Exception, match="reorder horizon"):
-        run_to_batch(
-            streaming_rate_reordered(
-                _chopped_stream(spark, bad_dir, bad, 3),
-                reorder_ms=RO,
-                idle_timeout_ms=None,
-            ),
-            "append",
-        ).collect()
