@@ -291,7 +291,7 @@ def t10s_counter_increase_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle — upgrading T10 from rows-only to oracle-checked."""
     from prometheus_remote_kinesis_spark.streaming.stateful import counter_increase
 
-    out = counter_increase(_event_series_stream(spark, sf_dir), idle_timeout_ms=None)
+    out = counter_increase(_event_series_stream(spark, sf_dir))
     return run_to_batch(out, "append").select(
         "name",
         "time",
@@ -342,7 +342,7 @@ def t17s_prefix_anomaly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded stream."""
     from prometheus_remote_kinesis_spark.streaming.stateful import prefix_anomaly
 
-    out = prefix_anomaly(_event_series_stream(spark, sf_dir), idle_timeout_ms=None)
+    out = prefix_anomaly(_event_series_stream(spark, sf_dir))
     return run_to_batch(out, "append").select(
         "name",
         "time",
@@ -571,7 +571,7 @@ def t20s_holt_winters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis("ts").alias("time"),
         "value",
     )
-    out = holt_winters(records, idle_timeout_ms=None)
+    out = holt_winters(records)
     drained = run_to_batch(out, "append")
     w = Window.partitionBy("event_type", "user_id").orderBy(F.desc("n_samples"))
     return (
@@ -617,7 +617,7 @@ def t37s_time_weighted_avg_stream(spark: SparkSession, sf_dir: str) -> DataFrame
         F.unix_millis("ts").alias("time"),
         "value",
     )
-    out = time_weighted_avg(records, idle_timeout_ms=None)
+    out = time_weighted_avg(records)
     drained = run_to_batch(out, "append")
     w = Window.partitionBy("event_type", "user_id").orderBy(F.desc("n_samples"))
     return (
@@ -671,7 +671,7 @@ def t39s_alert_for_duration_stream(spark: SparkSession, sf_dir: str) -> DataFram
         F.unix_millis("ts").alias("time"),
         "value",
     )
-    out = alert_for_duration(records, thr=T39_THR, idle_timeout_ms=None)
+    out = alert_for_duration(records, thr=T39_THR)
     drained = run_to_batch(out, "append")
     w = Window.partitionBy("event_type", "island_seq").orderBy(
         F.desc("version")
@@ -721,7 +721,7 @@ def t41s_ewma_halflife_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis("ts").alias("time"),
         "value",
     )
-    out = ewma_halflife(records, hl_ms=T41_HL_MS, idle_timeout_ms=None)
+    out = ewma_halflife(records, hl_ms=T41_HL_MS)
     drained = run_to_batch(out, "append")
     w = Window.partitionBy("event_type", "user_id").orderBy(F.desc("n_samples"))
     return (
@@ -902,7 +902,7 @@ def t10bs_gap_fill_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis("ts").alias("time"),
         "value",
     )
-    out = gap_fill(records, interval_ms=60_000, idle_timeout_ms=None)
+    out = gap_fill(records, interval_ms=60_000)
     return run_to_batch(out, "append").select(
         "name", "time", F.round("value", 6).alias("value")
     )
@@ -1091,7 +1091,7 @@ def t26s_subquery_max_rate_stream(spark: SparkSession, sf_dir: str) -> DataFrame
         F.unix_millis("ts").alias("time"),
         F.round(F.col("value") * 100, 0).alias("value"),
     )
-    out = counter_increase(records, idle_timeout_ms=None)
+    out = counter_increase(records)
     drained = run_to_batch(out, "append").select(
         F.split_part(F.col("name"), F.lit("/"), F.lit(1)).alias("event_type"),
         F.split_part(F.col("name"), F.lit("/"), F.lit(2)).cast("bigint").alias(
@@ -1173,7 +1173,7 @@ def t13s_resample_linear_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis("ts").alias("time"),
         "value",
     )
-    out = interp_fill(records, step_ms=3_600_000, idle_timeout_ms=None)
+    out = interp_fill(records, step_ms=3_600_000)
     return run_to_batch(out, "append")
 
 
@@ -1201,7 +1201,7 @@ def t15s_funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis("ts").alias("time"),
         (F.col("event_type") == "purchase").cast("int").alias("side"),
     )
-    out = funnel_views(records, convert_ms=3_600_000, idle_timeout_ms=None)
+    out = funnel_views(records, convert_ms=3_600_000)
     drained = run_to_batch(out, "append")
     w = Window.partitionBy("user_id", "view_ms").orderBy(F.desc("resolved"))
     per_view = (
@@ -1236,7 +1236,7 @@ def t16s_retention_cohorts_stream(spark: SparkSession, sf_dir: str) -> DataFrame
         (F.unix_millis("ts") / 604800000).cast("long").alias("wk"),
         (F.col("event_type") == "signup").cast("int").alias("is_signup"),
     )
-    drained = run_to_batch(cohort_pairs(records, idle_timeout_ms=None), "append")
+    drained = run_to_batch(cohort_pairs(records), "append")
     # Both sides project the same drained table — rename the cohort key so
     # the self-join doesn't carry conflicting `user_id` attributes.
     cohorts = (
@@ -1330,7 +1330,7 @@ def t14s_rate_5m_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis("ts").alias("time"),
         "value",
     )
-    drained = run_to_batch(streaming_rate(records, idle_timeout_ms=None), "append")
+    drained = run_to_batch(streaming_rate(records), "append")
     w = Window.partitionBy("event_id").orderBy(F.desc("seen"))
     return (
         drained.withColumn("rn", F.row_number().over(w))
@@ -1364,7 +1364,7 @@ def t25s_rate_extrapolated_stream(spark: SparkSession, sf_dir: str) -> DataFrame
         F.unix_millis("ts").alias("time"),
         "value",
     )
-    out = trailing_day_buffer(records, window_ms=86_400_000, idle_timeout_ms=None)
+    out = trailing_day_buffer(records, window_ms=86_400_000)
     drained = run_to_batch(out, "append")
     w = Window.partitionBy("event_type", "user_id")
     resid = (
@@ -1409,7 +1409,7 @@ def t22s_downsample_retention_stream(spark: SparkSession, sf_dir: str) -> DataFr
         "value",
     )
     out = downsample_buffer(
-        records, window_ms=86_400_000, bucket_ms=3_600_000, idle_timeout_ms=None
+        records, window_ms=86_400_000, bucket_ms=3_600_000
     )
     drained = run_to_batch(out, "append")
     w = Window.partitionBy("event_type", "user_id")

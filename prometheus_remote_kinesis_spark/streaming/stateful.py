@@ -3,9 +3,10 @@
 per-key state is the right tool (SURVEY.md §2.10 U5).
 
 Every operator here is a per-key state transition run through
-``_apply_with_state``, which picks the ``GroupStateTimeout``: idle keys
-are evicted after ``idle_timeout_ms`` (ProcessingTimeTimeout), or never
-(``None``, for drain-once ``availableNow`` runs). The families:
+``_apply_with_state`` with no state timeout: a key's state lives as long
+as the query, bounded by the operator's window or horizon. A kernel that
+folds in order reads its key's micro-batch through ``_ordered`` (the
+chunks concatenated and sorted once). The families:
 
 - PromQL-flavored per-series folds: ``counter_increase`` (monotonic
   counter delta with reset detection), ``gap_fill`` / ``interp_fill``
@@ -65,28 +66,52 @@ def _apply_with_state(
     fn: Callable[[tuple, Iterator[pd.DataFrame], GroupState], Iterator[pd.DataFrame]],
     out_schema: StructType,
     state_schema: str,
-    idle_timeout_ms: int | None,
 ) -> DataFrame:
     """``fn`` per key of ``frame`` as an append-mode
-    ``applyInPandasWithState``. ``idle_timeout_ms`` evicts idle-key state
-    (ProcessingTimeTimeout) — the right posture for a long-running
-    service; ``fn`` re-arms it with ``state.setTimeoutDuration``. Pass
-    ``None`` for drain-once runs (``availableNow``): processing-time
-    timers keep the MultiBatchExecutor scheduling micro-batches waiting
-    for expiry, so an availableNow query with timers NEVER self-terminates
-    (measured: epoch 144 and climbing on a single-file source); NoTimeout
-    lets it stop after the data batch."""
+    ``applyInPandasWithState`` with ``GroupStateTimeout.NoTimeout``: keys
+    are never evicted, and ``fn`` is only called for a key with rows in
+    the micro-batch. A processing-time timeout would keep an
+    ``availableNow`` query scheduling micro-batches to wait for expiry, so
+    the query would never stop (measured: epoch 144 and climbing on a
+    single-file source)."""
     return frame.groupBy(*keys).applyInPandasWithState(
         fn,
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if idle_timeout_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
+
+
+def _ordered(
+    pdfs: Iterator[pd.DataFrame],
+    by: list[str],
+    boundary: tuple | None = None,
+    who: str = "",
+) -> pd.DataFrame:
+    """One key's micro-batch as one frame sorted by ``by``.
+
+    ``applyInPandasWithState`` hands over a key's rows as Arrow chunks of
+    at most ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, in no
+    order, so sorting each chunk on its own folds the wrong sequence once
+    a key spans two chunks: the chunks are concatenated, then sorted once.
+    ``boundary`` is the last ``by`` key an earlier micro-batch consumed
+    (``None`` for a new key). A batch whose first key sorts below it
+    raises ``ValueError`` naming ``who``: the fold would run out of order,
+    and a loud failure beats a silent mismatch against the batch form."""
+    chunks = list(pdfs)
+    pdf = pd.concat(
+        [c for c in chunks if len(c)] or chunks, ignore_index=True
+    ).sort_values(by)
+    if boundary is not None and len(pdf):
+        first = tuple(pdf[by].iloc[0].tolist())
+        if first < boundary:
+            raise ValueError(
+                f"{who}: misordered source: batch min key {first} precedes "
+                f"the consumed boundary {boundary}; the fold requires "
+                f"in-order {tuple(by)} micro-batches"
+            )
+    return pdf
 
 
 INCREASE_SCHEMA = StructType(
@@ -102,7 +127,7 @@ INCREASE_SCHEMA = StructType(
 _STATE_SCHEMA = "last_value double, last_time long, resets long"
 
 
-def _make_increase_fn(idle_timeout_ms: int | None):
+def _make_increase_fn():
     def _increase_fn(
         key: tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -112,47 +137,43 @@ def _make_increase_fn(idle_timeout_ms: int | None):
         else:
             last_value, last_time, resets = None, None, 0
 
+        pdf = _ordered(
+            pdfs,
+            ["time"],
+            None if last_time is None else (last_time,),
+            f"counter_increase series {name!r}",
+        )
         rows: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("time")
-            for _, r in pdf.iterrows():
-                t, v = int(r["time"]), r["value"]
-                if v is None or pd.isna(v):
-                    continue  # stale markers (NULL after NaN coercion) skipped
-                if last_value is None:
-                    inc = None  # first sample: no increase defined
-                elif v >= last_value:
-                    inc = v - last_value
-                else:  # counter reset: post-reset value is the increase
-                    inc = v
-                    resets += 1
-                rows.append(
-                    {"name": name, "time": t, "value": v, "increase": inc, "resets": resets}
-                )
-                last_value, last_time = v, t
+        for t, v in zip(pdf["time"].tolist(), pdf["value"].tolist()):
+            t = int(t)
+            if v is None or pd.isna(v):
+                continue  # stale markers (NULL after NaN coercion) skipped
+            if last_value is None:
+                inc = None  # first sample: no increase defined
+            elif v >= last_value:
+                inc = v - last_value
+            else:  # counter reset: post-reset value is the increase
+                inc = v
+                resets += 1
+            rows.append(
+                {"name": name, "time": t, "value": v, "increase": inc, "resets": resets}
+            )
+            last_value, last_time = v, t
 
         state.update((last_value, last_time, resets))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
         yield pd.DataFrame(rows, columns=[f.name for f in INCREASE_SCHEMA.fields])
 
     return _increase_fn
 
 
-def counter_increase(
-    records: DataFrame, idle_timeout_ms: int | None = 3_600_000
-) -> DataFrame:
+def counter_increase(records: DataFrame) -> DataFrame:
     """Per-series counter increase with reset detection over a STREAMING
-    records DataFrame (RECORD_SCHEMA). Output mode: append.
-    ``idle_timeout_ms``: see ``_apply_with_state`` (``None`` for
-    drain-once runs)."""
+    records DataFrame (RECORD_SCHEMA). Output mode: append. A sample older
+    than the series' last sample of an earlier micro-batch raises
+    ``ValueError`` (``_ordered``'s guard) instead of folding a made-up
+    increase and reset."""
     return _apply_with_state(
-        records,
-        ["name"],
-        _make_increase_fn(idle_timeout_ms),
-        INCREASE_SCHEMA,
-        _STATE_SCHEMA,
-        idle_timeout_ms,
+        records, ["name"], _make_increase_fn(), INCREASE_SCHEMA, _STATE_SCHEMA
     )
 
 
@@ -243,9 +264,7 @@ GAPFILL_SCHEMA = StructType(
 _GF_STATE_SCHEMA = "last_value double, next_grid long"
 
 
-def gap_fill(
-    records: DataFrame, interval_ms: int, idle_timeout_ms: int | None = 3_600_000
-) -> DataFrame:
+def gap_fill(records: DataFrame, interval_ms: int) -> DataFrame:
     """Streaming gap fill: per-series LOCF grid emission with O(1) state
     (last value + next pending grid time).
 
@@ -255,9 +274,6 @@ def gap_fill(
     before), and nothing at/after the newest sample is emitted yet. For a
     completed stream this reproduces ``gap_fill_batch``'s [first, last)
     grid exactly (cross-checked in tests/test_streaming.py).
-
-    ``idle_timeout_ms=None`` for drain-once (availableNow) runs — see
-    ``_apply_with_state``: processing-time timers block self-termination.
     """
 
     def fn(
@@ -269,34 +285,29 @@ def gap_fill(
         else:
             last_value, next_grid = None, None
 
+        # (time, value) order so duplicate-timestamp samples resolve
+        # max-wins WITHIN a batch (the last processed value at a ts is the
+        # max), matching the batch form's max(value) collapse and the
+        # t10bs oracle. Across micro-batches later-batch-wins applies —
+        # the availableNow drains the registered query runs are
+        # single-batch, where the equivalence is exact.
+        pdf = _ordered(pdfs, ["time", "value"])
         rows: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            # (time, value) sort so duplicate-timestamp samples resolve
-            # max-wins WITHIN a batch (the last processed value at a ts
-            # is the max), matching the batch form's max(value) collapse
-            # and the t10bs oracle. Across micro-batches later-batch-wins
-            # applies — the availableNow drains the registered query
-            # runs are single-batch, where the equivalence is exact.
-            pdf = pdf.sort_values(["time", "value"])
-            for t, v in zip(pdf["time"], pdf["value"]):
-                if v is None or pd.isna(v):
-                    continue
-                t = int(t)
-                if next_grid is None:
-                    next_grid = t  # grid anchors at the first sample
-                while next_grid < t:
-                    rows.append({"name": name, "time": next_grid, "value": last_value})
-                    next_grid += interval_ms
-                last_value = float(v)
+        for t, v in zip(pdf["time"].tolist(), pdf["value"].tolist()):
+            if v is None or pd.isna(v):
+                continue
+            t = int(t)
+            if next_grid is None:
+                next_grid = t  # grid anchors at the first sample
+            while next_grid < t:
+                rows.append({"name": name, "time": next_grid, "value": last_value})
+                next_grid += interval_ms
+            last_value = float(v)
 
         state.update((last_value, next_grid))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
         yield pd.DataFrame(rows, columns=[f.name for f in GAPFILL_SCHEMA.fields])
 
-    return _apply_with_state(
-        records, ["name"], fn, GAPFILL_SCHEMA, _GF_STATE_SCHEMA, idle_timeout_ms
-    )
+    return _apply_with_state(records, ["name"], fn, GAPFILL_SCHEMA, _GF_STATE_SCHEMA)
 
 
 ANOMALY_SCHEMA = StructType(
@@ -316,9 +327,7 @@ ANOMALY_SCHEMA = StructType(
 _ANOM_STATE_SCHEMA = "n long, sv long, svv long"
 
 
-def prefix_anomaly(
-    records: DataFrame, idle_timeout_ms: int | None = 3_600_000
-) -> DataFrame:
+def prefix_anomaly(records: DataFrame) -> DataFrame:
     """Per-series streaming anomaly detection: each sample's z-score
     against the running moments of all PRIOR samples of its series
     (applyInPandasWithState; state = three integers per key).
@@ -328,8 +337,7 @@ def prefix_anomaly(
     cross-batch accumulation has no float order-dependence; the one
     floating-point division per row is the identical expression the
     DuckDB oracle runs. z is NULL until a series has ≥2 priors with
-    nonzero variance. Same timeout posture as ``counter_increase``
-    (NoTimeout for availableNow drains)."""
+    nonzero variance."""
 
     def fn(
         key: tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -337,33 +345,26 @@ def prefix_anomaly(
         (name,) = key
         n, sv, svv = state.get if state.exists else (0, 0, 0)
 
+        pdf = _ordered(pdfs, ["time"])
         rows: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("time")
-            for _, r in pdf.iterrows():
-                t, v = int(r["time"]), r["value"]
-                if v is None or pd.isna(v):
-                    continue
-                num = n * svv - sv * sv  # n² × variance, exact
-                if n < 2 or num == 0:
-                    z = None
-                else:
-                    mean = sv / 100.0 / n
-                    var = num / (n * (n - 1)) / 10000.0
-                    z = (v - mean) / var**0.5
-                rows.append(
-                    {"name": name, "time": t, "value": v, "z": z, "n_prior": n}
-                )
-                v100 = int(_round_half_up(v * 100, 0))
-                n, sv, svv = n + 1, sv + v100, svv + v100 * v100
+        for t, v in zip(pdf["time"].tolist(), pdf["value"].tolist()):
+            t = int(t)
+            if v is None or pd.isna(v):
+                continue
+            num = n * svv - sv * sv  # n² × variance, exact
+            if n < 2 or num == 0:
+                z = None
+            else:
+                mean = sv / 100.0 / n
+                var = num / (n * (n - 1)) / 10000.0
+                z = (v - mean) / var**0.5
+            rows.append({"name": name, "time": t, "value": v, "z": z, "n_prior": n})
+            v100 = int(_round_half_up(v * 100, 0))
+            n, sv, svv = n + 1, sv + v100, svv + v100 * v100
         state.update((n, sv, svv))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
         yield pd.DataFrame(rows, columns=[f.name for f in ANOMALY_SCHEMA.fields])
 
-    return _apply_with_state(
-        records, ["name"], fn, ANOMALY_SCHEMA, _ANOM_STATE_SCHEMA, idle_timeout_ms
-    )
+    return _apply_with_state(records, ["name"], fn, ANOMALY_SCHEMA, _ANOM_STATE_SCHEMA)
 
 
 # The reorder buffer every order-sensitive recurrence below carries after
@@ -381,7 +382,6 @@ def _reorder_fold(
     out_schema: StructType,
     state_schema: str,
     reorder_ms: int,
-    idle_timeout_ms: int | None,
 ) -> DataFrame:
     """Run an order-sensitive per-key recurrence over a stream whose
     samples may arrive up to ``reorder_ms`` late — Structured Streaming's
@@ -459,14 +459,11 @@ def _reorder_fold(
         state.update(
             (*acc, hi, [b[0] for b in buf], [b[1] for b in buf], [b[2] for b in buf])
         )
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
         spec: list = []
         yield emit(key, fold(acc, buf, spec), done, spec)
 
     return _apply_with_state(
-        records, keys, fn, out_schema, f"{state_schema}, {_REORDER_STATE_SCHEMA}",
-        idle_timeout_ms,
+        records, keys, fn, out_schema, f"{state_schema}, {_REORDER_STATE_SCHEMA}"
     )
 
 
@@ -488,7 +485,6 @@ def holt_winters(
     records: DataFrame,
     sf: float = 0.3,
     tf: float = 0.1,
-    idle_timeout_ms: int | None = 3_600_000,
     reorder_ms: int = 0,
 ) -> DataFrame:
     """Streaming twin of t20's Holt-Winters fold: (level, trend) carried
@@ -525,7 +521,7 @@ def holt_winters(
 
     return _reorder_fold(
         records, ["event_type", "user_id"], (0, 0.0, 0.0), fold, emit,
-        HW_SCHEMA, _HW_STATE_SCHEMA, reorder_ms, idle_timeout_ms,
+        HW_SCHEMA, _HW_STATE_SCHEMA, reorder_ms,
     )
 
 
@@ -552,7 +548,6 @@ _RATE_STATE_SCHEMA = (
 def streaming_rate(
     records: DataFrame,
     window_ms: int = 300_000,
-    idle_timeout_ms: int | None = 3_600_000,
     reorder_ms: int = 0,
 ) -> DataFrame:
     """Streaming PromQL ``rate(m[5m])``: per-series state carries the last
@@ -622,16 +617,14 @@ def streaming_rate(
 
     return _reorder_fold(
         records, ["event_type", "user_id"], (None, [], [], 0), fold, emit,
-        RATE_SCHEMA, _RATE_STATE_SCHEMA, reorder_ms, idle_timeout_ms,
+        RATE_SCHEMA, _RATE_STATE_SCHEMA, reorder_ms,
     )
 
 
 _IF_STATE_SCHEMA = "t_prev long, v_prev double, next_g long"
 
 
-def interp_fill(
-    records: DataFrame, step_ms: int, idle_timeout_ms: int | None = 3_600_000
-) -> DataFrame:
+def interp_fill(records: DataFrame, step_ms: int) -> DataFrame:
     """Streaming LINEAR-interpolation resample (t13's semantics as a
     stateful op; gap_fill is the LOCF sibling): per series, each grid
     point g in (prev_sample, curr_sample] emits
@@ -660,70 +653,44 @@ def interp_fill(
             t_prev, v_prev, next_g = state.get
         else:
             t_prev, v_prev, next_g = None, None, None
+        # NULLs (staleness markers) dropped BEFORE the dedup — pandas
+        # sorts NaN last, so a keep-last dedup would otherwise shadow the
+        # real max with a NaN. (time, value) order + keep-last = max-wins
+        # per timestamp over the whole batch, collapsed before the loop so
+        # an exact-hit grid point at a duplicated ts emits the max (the
+        # oracle's max(value)), not whichever duplicate came first.
+        pdf = _ordered(pdfs, ["time", "value"])
+        pdf = pdf[pdf["value"].notna()].drop_duplicates(subset=["time"], keep="last")
         rows: list[dict[str, Any]] = []
-        # The group's micro-batch arrives as an ITERATOR of Arrow chunks;
-        # a per-chunk dedup would degrade to later-chunk-wins when one
-        # timestamp's duplicates straddle a chunk boundary, so the chunks
-        # are concatenated FIRST and deduped once per (group, micro-batch).
-        # Memory bound: one group's batch slice, the same bound the sort
-        # below already implies.
-        chunks = [c for c in pdfs if len(c)]
-        if chunks:
-            # NULLs (staleness markers) filtered FIRST — pandas sorts NaN
-            # last, so a keep-last dedup would otherwise shadow the real
-            # max with a NaN. Then (time, value) sort + keep-last =
-            # max-wins per timestamp, collapsed BEFORE the loop so an
-            # exact-hit grid point at a duplicated ts emits the max (the
-            # oracle's max(value)), not whichever duplicate came first.
-            pdf = pd.concat(chunks, ignore_index=True)
-            pdf = (
-                pdf[pdf["value"].notna()]
-                .sort_values(["time", "value"])
-                .drop_duplicates(subset=["time"], keep="last")
-            )
-            for t, v in zip(pdf["time"], pdf["value"]):
-                t, v = int(t), float(v)
-                if t_prev is None:
-                    next_g = -(-t // step_ms) * step_ms  # ceil to grid
+        for t, v in zip(pdf["time"].tolist(), pdf["value"].tolist()):
+            t, v = int(t), float(v)
+            if t_prev is None:
+                next_g = -(-t // step_ms) * step_ms  # ceil to grid
+                if next_g == t:
+                    rows.append(
+                        {"name": name, "time": t, "value": math.floor(v * 1e6) / 1e6}
+                    )
+                    next_g += step_ms
+            else:
+                while next_g <= t:
+                    # exact hit short-circuits to v: the oracle's
+                    # bracketing makes the sample the LEFT endpoint (ratio
+                    # exactly 0 → v), while this op's ratio would be 1 and
+                    # v_prev + (v - v_prev) is NOT guaranteed to round back
+                    # to v in IEEE.
                     if next_g == t:
-                        rows.append(
-                            {
-                                "name": name,
-                                "time": t,
-                                "value": math.floor(v * 1e6) / 1e6,
-                            }
-                        )
-                        next_g += step_ms
-                else:
-                    while next_g <= t:
-                        # exact hit short-circuits to v: the oracle's
-                        # bracketing makes the sample the LEFT endpoint
-                        # (ratio exactly 0 → v), while this op's ratio
-                        # would be 1 and v_prev + (v - v_prev) is NOT
-                        # guaranteed to round back to v in IEEE.
-                        if next_g == t:
-                            x = v
-                        else:
-                            x = v_prev + (v - v_prev) * (next_g - t_prev) / (
-                                t - t_prev
-                            )
-                        rows.append(
-                            {
-                                "name": name,
-                                "time": next_g,
-                                "value": math.floor(x * 1e6) / 1e6,
-                            }
-                        )
-                        next_g += step_ms
-                t_prev, v_prev = t, v
+                        x = v
+                    else:
+                        x = v_prev + (v - v_prev) * (next_g - t_prev) / (t - t_prev)
+                    rows.append(
+                        {"name": name, "time": next_g, "value": math.floor(x * 1e6) / 1e6}
+                    )
+                    next_g += step_ms
+            t_prev, v_prev = t, v
         state.update((t_prev, v_prev, next_g))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
         yield pd.DataFrame(rows, columns=[f.name for f in GAPFILL_SCHEMA.fields])
 
-    return _apply_with_state(
-        records, ["name"], fn, GAPFILL_SCHEMA, _IF_STATE_SCHEMA, idle_timeout_ms
-    )
+    return _apply_with_state(records, ["name"], fn, GAPFILL_SCHEMA, _IF_STATE_SCHEMA)
 
 
 COHORT_SCHEMA = StructType(
@@ -737,7 +704,7 @@ COHORT_SCHEMA = StructType(
 _COHORT_STATE_SCHEMA = "cw long, weeks array<long>"
 
 
-def _make_cohort_fn(idle_timeout_ms: int | None):
+def _make_cohort_fn():
     """Module-level so the pure state-transition logic is property-testable
     against a fake GroupState without a Spark streaming query (the
     _make_increase_fn pattern)."""
@@ -762,16 +729,12 @@ def _make_cohort_fn(idle_timeout_ms: int | None):
                     seen.add(wk)
                     rows.append({"user_id": user_id, "is_cohort": 0, "wk": wk})
         state.update((cw, sorted(seen)))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
         yield pd.DataFrame(rows, columns=[f.name for f in COHORT_SCHEMA.fields])
 
     return fn
 
 
-def cohort_pairs(
-    records: DataFrame, idle_timeout_ms: int | None = 3_600_000
-) -> DataFrame:
+def cohort_pairs(records: DataFrame) -> DataFrame:
     """Streaming feed for cohort retention (T16's single-pass form): per
     user, emit each activity week ONCE (is_cohort=0 rows — a stateful
     dedup of (user, week)) and the user's signup-cohort week whenever the
@@ -791,9 +754,8 @@ def cohort_pairs(
     Input: (user_id, wk, is_signup) with wk an integer week number and
     is_signup 1 on signup events (signup events also count as activity,
     matching t16's act CTE which scans ALL events)."""
-    fn = _make_cohort_fn(idle_timeout_ms)
     return _apply_with_state(
-        records, ["user_id"], fn, COHORT_SCHEMA, _COHORT_STATE_SCHEMA, idle_timeout_ms
+        records, ["user_id"], _make_cohort_fn(), COHORT_SCHEMA, _COHORT_STATE_SCHEMA
     )
 
 
@@ -812,7 +774,6 @@ _FUNNEL_STATE_SCHEMA = "pending array<long>"
 def funnel_views(
     records: DataFrame,
     convert_ms: int = 3_600_000,
-    idle_timeout_ms: int | None = 3_600_000,
 ) -> DataFrame:
     """Streaming funnel step (T15's alerting-path form): per user, every
     'view' is resolved by the FIRST later-or-simultaneous 'purchase' —
@@ -841,34 +802,29 @@ def funnel_views(
     ) -> Iterator[pd.DataFrame]:
         (user_id,) = key
         pending: list[int] = list(state.get[0]) if state.exists else []
+        pdf = _ordered(pdfs, ["time", "side"])
         rows: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["time", "side"])
-            for t, side in zip(pdf["time"], pdf["side"]):
-                t = int(t)
-                if side == 0:
-                    pending.append(t)
+        for t, side in zip(pdf["time"].tolist(), pdf["side"].tolist()):
+            t = int(t)
+            if side == 0:
+                pending.append(t)
+                rows.append({"user_id": user_id, "view_ms": t, "conv": 0, "resolved": 0})
+            else:
+                for v in pending:
                     rows.append(
-                        {"user_id": user_id, "view_ms": t, "conv": 0, "resolved": 0}
+                        {
+                            "user_id": user_id,
+                            "view_ms": v,
+                            "conv": 1 if t - v <= convert_ms else 0,
+                            "resolved": 1,
+                        }
                     )
-                else:
-                    for v in pending:
-                        rows.append(
-                            {
-                                "user_id": user_id,
-                                "view_ms": v,
-                                "conv": 1 if t - v <= convert_ms else 0,
-                                "resolved": 1,
-                            }
-                        )
-                    pending = []
+                pending = []
         state.update((pending,))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
         yield pd.DataFrame(rows, columns=[f.name for f in FUNNEL_SCHEMA.fields])
 
     return _apply_with_state(
-        records, ["user_id"], fn, FUNNEL_SCHEMA, _FUNNEL_STATE_SCHEMA, idle_timeout_ms
+        records, ["user_id"], fn, FUNNEL_SCHEMA, _FUNNEL_STATE_SCHEMA
     )
 
 
@@ -889,7 +845,7 @@ T25_BUFFER_SCHEMA = StructType(
 _T25_STATE_SCHEMA = "ms array<long>, v array<double>, seq long"
 
 
-def _make_trailing_buffer_fn(window_ms: int, idle_timeout_ms: int | None):
+def _make_trailing_buffer_fn(window_ms: int):
     """State-transition factory for ``trailing_day_buffer`` — module-level
     so the chop-invariance property test can drive it with a fake
     GroupState (the ``_make_cohort_fn`` pattern)."""
@@ -904,31 +860,28 @@ def _make_trailing_buffer_fn(window_ms: int, idle_timeout_ms: int | None):
         else:
             ms, vs, seq = [], [], 0
         hi = max(ms) if ms else None
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["time", "event_id"])
-            for _, r in pdf.iterrows():
-                t = int(r["time"])
-                v = None if pd.isna(r["value"]) else float(r["value"])
-                if hi is not None and t < hi - window_ms:
-                    continue  # below the retention horizon: unreachable
-                ms.append(t)
-                vs.append(v)
-                if hi is None or t > hi:
-                    hi = t
-                    lo = hi - window_ms
-                    # Eviction is a MEMORY bound, not a correctness gate
-                    # (the drain re-filters to the true global window), so
-                    # an O(1) head check per advance is enough — stale
-                    # out-of-order stragglers behind a fresh head get
-                    # swept the next time the head itself goes stale.
-                    if ms[0] < lo:
-                        kept = [(m, x) for m, x in zip(ms, vs) if m >= lo]
-                        ms = [m for m, _ in kept]
-                        vs = [x for _, x in kept]
+        pdf = _ordered(pdfs, ["time", "event_id"])
+        for t, v in zip(pdf["time"].tolist(), pdf["value"].tolist()):
+            t = int(t)
+            v = None if pd.isna(v) else float(v)
+            if hi is not None and t < hi - window_ms:
+                continue  # below the retention horizon: unreachable
+            ms.append(t)
+            vs.append(v)
+            if hi is None or t > hi:
+                hi = t
+                lo = hi - window_ms
+                # Eviction is a MEMORY bound, not a correctness gate (the
+                # drain re-filters to the true global window), so an O(1)
+                # head check per advance is enough — stale out-of-order
+                # stragglers behind a fresh head get swept the next time
+                # the head itself goes stale.
+                if ms[0] < lo:
+                    kept = [(m, x) for m, x in zip(ms, vs) if m >= lo]
+                    ms = [m for m, _ in kept]
+                    vs = [x for _, x in kept]
         seq += 1
         state.update((ms, vs, seq))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
         yield pd.DataFrame(
             {
                 "event_type": event_type,
@@ -946,7 +899,6 @@ def _make_trailing_buffer_fn(window_ms: int, idle_timeout_ms: int | None):
 def trailing_day_buffer(
     records: DataFrame,
     window_ms: int = 86_400_000,
-    idle_timeout_ms: int | None = 3_600_000,
 ) -> DataFrame:
     """Per-series trailing-window sample buffer — the state layer under
     the streaming form of Prometheus's extrapolated ``rate(m[1d])``
@@ -972,10 +924,9 @@ def trailing_day_buffer(
     return _apply_with_state(
         records,
         ["event_type", "user_id"],
-        _make_trailing_buffer_fn(window_ms, idle_timeout_ms),
+        _make_trailing_buffer_fn(window_ms),
         T25_BUFFER_SCHEMA,
         _T25_STATE_SCHEMA,
-        idle_timeout_ms,
     )
 
 
@@ -1016,7 +967,7 @@ def _cents(val: float) -> int:
     )
 
 
-def _make_downsample_fn(window_ms: int, bucket_ms: int, idle_timeout_ms: int | None):
+def _make_downsample_fn(window_ms: int, bucket_ms: int):
     """State-transition factory for ``downsample_buffer`` — module-level
     so the chop-invariance property test can drive it with a fake
     GroupState (the ``_make_trailing_buffer_fn`` pattern)."""
@@ -1046,34 +997,33 @@ def _make_downsample_fn(window_ms: int, bucket_ms: int, idle_timeout_ms: int | N
                 r[3] = v if r[3] is None else min(r[3], v)
                 r[4] = v if r[4] is None else max(r[4], v)
 
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["time", "event_id"])
-            for _, r in pdf.iterrows():
-                t = int(r["time"])
-                v = None if pd.isna(r["value"]) else float(r["value"])
-                if hi is not None and t < hi - window_ms:
-                    # Below the retention horizon on arrival: provably in
-                    # the drain's OLD branch (t < hi-W <= g-W) — fold
-                    # straight into the rollup, never buffered.
-                    fold(t, v)
-                    continue
-                ms.append(t)
-                vs.append(v)
-                if hi is None or t > hi:
-                    hi = t
-                    lo = hi - window_ms
-                    # Lazy head-check eviction (t25s) — but evicted
-                    # samples are FOLDED, not dropped: ms < hi-W <= g-W
-                    # puts them in the drain's old branch with certainty.
-                    if ms[0] < lo:
-                        kept_ms, kept_vs = [], []
-                        for m, x in zip(ms, vs):
-                            if m >= lo:
-                                kept_ms.append(m)
-                                kept_vs.append(x)
-                            else:
-                                fold(m, x)
-                        ms, vs = kept_ms, kept_vs
+        pdf = _ordered(pdfs, ["time", "event_id"])
+        for t, v in zip(pdf["time"].tolist(), pdf["value"].tolist()):
+            t = int(t)
+            v = None if pd.isna(v) else float(v)
+            if hi is not None and t < hi - window_ms:
+                # Below the retention horizon on arrival: provably in the
+                # drain's OLD branch (t < hi-W <= g-W) — fold straight
+                # into the rollup, never buffered.
+                fold(t, v)
+                continue
+            ms.append(t)
+            vs.append(v)
+            if hi is None or t > hi:
+                hi = t
+                lo = hi - window_ms
+                # Lazy head-check eviction (t25s) — but evicted samples
+                # are FOLDED, not dropped: ms < hi-W <= g-W puts them in
+                # the drain's old branch with certainty.
+                if ms[0] < lo:
+                    kept_ms, kept_vs = [], []
+                    for m, x in zip(ms, vs):
+                        if m >= lo:
+                            kept_ms.append(m)
+                            kept_vs.append(x)
+                        else:
+                            fold(m, x)
+                    ms, vs = kept_ms, kept_vs
         seq += 1
         bks = sorted(roll)
         state.update(
@@ -1089,8 +1039,6 @@ def _make_downsample_fn(window_ms: int, bucket_ms: int, idle_timeout_ms: int | N
                 seq,
             )
         )
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
         n_raw, n_agg = len(ms), len(bks)
         yield pd.DataFrame(
             {
@@ -1133,7 +1081,6 @@ def downsample_buffer(
     records: DataFrame,
     window_ms: int = 86_400_000,
     bucket_ms: int = 3_600_000,
-    idle_timeout_ms: int | None = 3_600_000,
 ) -> DataFrame:
     """Per-series downsample-at-ingest state — the streaming form of
     retention downsampling (t22s), REFUTING t22's former impossibility
@@ -1160,10 +1107,9 @@ def downsample_buffer(
     return _apply_with_state(
         records,
         ["event_type", "user_id"],
-        _make_downsample_fn(window_ms, bucket_ms, idle_timeout_ms),
+        _make_downsample_fn(window_ms, bucket_ms),
         T22_DOWNSAMPLE_SCHEMA,
         _T22_STATE_SCHEMA,
-        idle_timeout_ms,
     )
 
 
@@ -1180,7 +1126,7 @@ _DOD_STATE_SCHEMA = (
 )
 
 
-def dod_sizing(records: DataFrame, idle_timeout_ms: int | None = None) -> DataFrame:
+def dod_sizing(records: DataFrame) -> DataFrame:
     """Streaming delta-of-delta bit accounting (t30's per-series fold as
     an O(1) stateful op): state = five integers per series (sample rank,
     last timestamp, last time-delta, last value, last value-delta); each
@@ -1190,19 +1136,14 @@ def dod_sizing(records: DataFrame, idle_timeout_ms: int | None = None) -> DataFr
     ``int.bit_length`` with a floor of 1 — identical to the engines'
     ``length(bin(z))`` string length including z=0 ('0', length 1).
 
-    The in-order assumption is ENFORCED, not assumed (r7 ADVICE): state
-    carries the max (ms, event_id) consumed per series, and a batch whose
-    minimum key precedes that boundary raises ``ValueError`` — a
-    misordered source surfaces as a loud query failure instead of a
-    silent hash mismatch against the shared batch oracle."""
+    The in-order assumption is ENFORCED, not assumed: state carries the
+    max (ms, event_id) consumed per series, and a batch whose minimum key
+    precedes that boundary raises ``ValueError`` (``_ordered``'s guard).
+    One micro-batch is one sorted sequence, however many Arrow chunks it
+    spans; the in-order contract applies BETWEEN micro-batches only."""
 
     return _apply_with_state(
-        records,
-        ["event_type"],
-        _make_dod_fn(idle_timeout_ms),
-        DOD_SCHEMA,
-        _DOD_STATE_SCHEMA,
-        idle_timeout_ms,
+        records, ["event_type"], _make_dod_fn(), DOD_SCHEMA, _DOD_STATE_SCHEMA
     )
 
 
@@ -1211,7 +1152,7 @@ def _dod_bits(x: int) -> int:
     return max(z.bit_length(), 1) + 1
 
 
-def _make_dod_fn(idle_timeout_ms: int | None):
+def _make_dod_fn():
     _bits = _dod_bits
 
     def fn(
@@ -1222,48 +1163,29 @@ def _make_dod_fn(idle_timeout_ms: int | None):
             state.get if state.exists else (0, 0, 0, 0, 0, -1)
         )
         n = bits = 0
-        # Concatenate the group's Arrow chunks BEFORE sorting: a large
-        # group spans multiple ~10k-row chunks within one micro-batch and
-        # arrives in arbitrary shuffle order across them, so a per-chunk
-        # sort (the pre-r8 form) folds a different sequence than the
-        # batch oracle whenever chunk boundaries interleave timestamps —
-        # exposed by the 4x replication probe the moment the order guard
-        # landed. One batch = one sorted sequence; the in-order contract
-        # applies BETWEEN micro-batches only.
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ms", "event_id"]
-            )
-            if rn > 0:
-                first = (int(pdf["ms"].iloc[0]), int(pdf["event_id"].iloc[0]))
-                if first < (last_ms, last_eid):
-                    raise ValueError(
-                        f"dod_sizing: misordered source for series {etype!r}: "
-                        f"batch min key {first} precedes consumed boundary "
-                        f"({last_ms}, {last_eid}) — the per-series fold "
-                        "requires in-order (ms, event_id) micro-batches"
-                    )
-            for ms, eid, v in zip(
-                pdf["ms"].astype(int),
-                pdf["event_id"].astype(int),
-                pdf["v100"].astype(int),
-            ):
-                rn += 1
-                if rn == 1:
-                    bits += 128
-                elif rn == 2:
-                    last_dt, last_dv = ms - last_ms, v - last_v
-                    bits += _bits(last_dt) + _bits(last_dv)
-                else:
-                    dt, dv = ms - last_ms, v - last_v
-                    bits += _bits(dt - last_dt) + _bits(dv - last_dv)
-                    last_dt, last_dv = dt, dv
-                last_ms, last_v, last_eid = ms, v, eid
-                n += 1
+        pdf = _ordered(
+            pdfs,
+            ["ms", "event_id"],
+            (last_ms, last_eid) if rn > 0 else None,
+            f"dod_sizing series {etype!r}",
+        )
+        for ms, eid, v in zip(
+            pdf["ms"].tolist(), pdf["event_id"].tolist(), pdf["v100"].tolist()
+        ):
+            ms, eid, v = int(ms), int(eid), int(v)
+            rn += 1
+            if rn == 1:
+                bits += 128
+            elif rn == 2:
+                last_dt, last_dv = ms - last_ms, v - last_v
+                bits += _bits(last_dt) + _bits(last_dv)
+            else:
+                dt, dv = ms - last_ms, v - last_v
+                bits += _bits(dt - last_dt) + _bits(dv - last_dv)
+                last_dt, last_dv = dt, dv
+            last_ms, last_v, last_eid = ms, v, eid
+            n += 1
         state.update((rn, last_ms, last_dt, last_v, last_dv, last_eid))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
         yield pd.DataFrame(
             [{"event_type": etype, "n": n, "bits": bits}],
             columns=[f.name for f in DOD_SCHEMA.fields],
@@ -1287,7 +1209,7 @@ L4KS_TOPK_SCHEMA = StructType(
 _L4KS_STATE_SCHEMA = "sims array<double>, ids array<long>, seq long"
 
 
-def _make_knn_topk_fn(k: int, idle_timeout_ms: int | None):
+def _make_knn_topk_fn(k: int):
     """State-transition factory for ``knn_topk_buffer`` — module-level so
     the chop-invariance property test can drive it with a fake GroupState
     (the ``_make_cohort_fn`` pattern). State per standing query is the
@@ -1314,8 +1236,6 @@ def _make_knn_topk_fn(k: int, idle_timeout_ms: int | None):
         del top[k:]
         seq += 1
         state.update(([s for s, _ in top], [i for _, i in top], seq))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
         yield pd.DataFrame(
             {
                 "qid": qid,
@@ -1330,9 +1250,7 @@ def _make_knn_topk_fn(k: int, idle_timeout_ms: int | None):
     return fn
 
 
-def knn_topk_buffer(
-    scored: DataFrame, k: int = L4KS_K, idle_timeout_ms: int | None = None
-) -> DataFrame:
+def knn_topk_buffer(scored: DataFrame, k: int = L4KS_K) -> DataFrame:
     """Streaming top-k nearest-neighbor tracking per standing query
     (VERDICT r8 task #5 — l4s's bounded-state multi-k upgrade): input is
     the scored (qid, nn_id, cos_sim) stream (stream-static broadcast
@@ -1345,10 +1263,9 @@ def knn_topk_buffer(
     return _apply_with_state(
         scored,
         ["qid"],
-        _make_knn_topk_fn(k, idle_timeout_ms),
+        _make_knn_topk_fn(k),
         L4KS_TOPK_SCHEMA,
         _L4KS_STATE_SCHEMA,
-        idle_timeout_ms,
     )
 
 
@@ -1365,7 +1282,7 @@ A3CP_SCHEMA = StructType(
 _A3CP_STATE_SCHEMA = "hs array<long>, seq long"
 
 
-def _make_kmv_topk_fn(k: int, bits: int, idle_timeout_ms: int | None):
+def _make_kmv_topk_fn(k: int, bits: int):
     """State-transition factory for ``kmv_topk_sketch`` — module-level so
     tests can drive it with a fake GroupState. State per type is ONLY
     the K smallest DISTINCT hashes (sorted ascending) — the O(K) bound
@@ -1402,8 +1319,6 @@ def _make_kmv_topk_fn(k: int, bits: int, idle_timeout_ms: int | None):
             del hs[k:]
         seq += 1
         state.update((hs, seq))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
         k_actual = len(hs)
         h_k = hs[-1] if hs else None
         est = k_actual if k_actual < k else ((k - 1) * (2**bits)) // h_k
@@ -1426,7 +1341,6 @@ def _make_kmv_topk_fn(k: int, bits: int, idle_timeout_ms: int | None):
 def kmv_topk_sketch(
     hashed: DataFrame,
     k: int | None = None,
-    idle_timeout_ms: int | None = None,
 ) -> DataFrame:
     """The PRODUCTION-BOUNDED form of a3cs's KMV cardinality stream
     (VERDICT r8 task #6): a3cs keeps one state row per DISTINCT (type,
@@ -1453,10 +1367,9 @@ def kmv_topk_sketch(
     return _apply_with_state(
         hashed,
         ["event_type"],
-        _make_kmv_topk_fn(kk, KMV_BITS, idle_timeout_ms),
+        _make_kmv_topk_fn(kk, KMV_BITS),
         A3CP_SCHEMA,
         _A3CP_STATE_SCHEMA,
-        idle_timeout_ms,
     )
 
 
@@ -1474,7 +1387,7 @@ _W6S_STATE_SCHEMA = (
 )
 
 
-def _make_pattern_fn(within_ms: int, idle_timeout_ms: int | None):
+def _make_pattern_fn(within_ms: int):
     """State-transition factory for ``event_pattern_stream`` — the CEP
     (complex-event-processing) form of w6's fixed-length row pattern:
     state per user is ONLY the trailing two rows (event_type, ms) plus
@@ -1492,38 +1405,30 @@ def _make_pattern_fn(within_ms: int, idle_timeout_ms: int | None):
         )
         out_ms: list[int] = []
         out_span: list[int] = []
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ms", "event_id"]
-            )
-            if cnt > 0:
-                first = (int(pdf["ms"].iloc[0]), int(pdf["event_id"].iloc[0]))
-                if first < (last_ms, last_eid):
-                    raise ValueError(
-                        f"event_pattern_stream: misordered source for user "
-                        f"{user_id!r}: batch min key {first} precedes the "
-                        f"consumed boundary ({last_ms}, {last_eid})"
-                    )
-            for et, ms, eid in zip(
-                pdf["event_type"], pdf["ms"].astype(int), pdf["event_id"].astype(int)
+        pdf = _ordered(
+            pdfs,
+            ["ms", "event_id"],
+            (last_ms, last_eid) if cnt > 0 else None,
+            f"event_pattern_stream user {user_id!r}",
+        )
+        for et, ms, eid in zip(
+            pdf["event_type"].tolist(), pdf["ms"].tolist(), pdf["event_id"].tolist()
+        ):
+            ms, eid = int(ms), int(eid)
+            if (
+                cnt >= 2
+                and p2_et == "view"
+                and p1_et == "click"
+                and et == "purchase"
+                and ms - p2_ms <= within_ms
             ):
-                if (
-                    cnt >= 2
-                    and p2_et == "view"
-                    and p1_et == "click"
-                    and et == "purchase"
-                    and ms - p2_ms <= within_ms
-                ):
-                    out_ms.append(p2_ms)
-                    out_span.append(ms - p2_ms)
-                cnt += 1
-                p2_et, p2_ms = p1_et, p1_ms
-                p1_et, p1_ms = et, ms
-                last_ms, last_eid = ms, eid
+                out_ms.append(p2_ms)
+                out_span.append(ms - p2_ms)
+            cnt += 1
+            p2_et, p2_ms = p1_et, p1_ms
+            p1_et, p1_ms = et, ms
+            last_ms, last_eid = ms, eid
         state.update((cnt, p2_et, p2_ms, p1_et, p1_ms, last_ms, last_eid))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
         yield pd.DataFrame(
             {
                 "user_id": user_id,
@@ -1536,22 +1441,19 @@ def _make_pattern_fn(within_ms: int, idle_timeout_ms: int | None):
     return fn
 
 
-def event_pattern_stream(
-    records: DataFrame, within_ms: int, idle_timeout_ms: int | None = None
-) -> DataFrame:
+def event_pattern_stream(records: DataFrame, within_ms: int) -> DataFrame:
     """w6's MATCH_RECOGNIZE-lite pattern as a STREAMING CEP operator:
     matches emit as their closing row arrives (the alerting shape —
     Flink's CEP bread-and-butter, here as ``applyInPandasWithState``),
     state = the trailing 2 rows per user (O(1), independent of history
-    length), in-order arrival ENFORCED by the dod_sizing order guard.
+    length), in-order arrival ENFORCED by ``_ordered``'s guard.
     Input columns: user_id, event_type, ms, event_id."""
     return _apply_with_state(
         records,
         ["user_id"],
-        _make_pattern_fn(within_ms, idle_timeout_ms),
+        _make_pattern_fn(within_ms),
         W6S_MATCH_SCHEMA,
         _W6S_STATE_SCHEMA,
-        idle_timeout_ms,
     )
 
 
@@ -1569,7 +1471,7 @@ _W7S_STATE_SCHEMA = (
 )
 
 
-def _make_quantified_pattern_fn(within_ms: int, idle_timeout_ms: int | None):
+def _make_quantified_pattern_fn(within_ms: int):
     """State-transition factory for ``quantified_pattern_stream`` — the
     CEP form of w7's ``PATTERN (view+ purchase)``: state per user is the
     OPEN view-run (count + first timestamp) plus the previous event type
@@ -1586,40 +1488,32 @@ def _make_quantified_pattern_fn(within_ms: int, idle_timeout_ms: int | None):
             state.get if state.exists else (0, 0, None, 0, -1)
         )
         out: list[tuple[int, int, int]] = []
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ms", "event_id"]
-            )
-            if prev_et is not None or last_eid >= 0:
-                first = (int(pdf["ms"].iloc[0]), int(pdf["event_id"].iloc[0]))
-                if last_eid >= 0 and first < (last_ms, last_eid):
-                    raise ValueError(
-                        f"quantified_pattern_stream: misordered source for "
-                        f"user {user_id!r}: batch min key {first} precedes "
-                        f"the consumed boundary ({last_ms}, {last_eid})"
-                    )
-            for et, ms, eid in zip(
-                pdf["event_type"], pdf["ms"].astype(int), pdf["event_id"].astype(int)
-            ):
-                if et == "view":
-                    if run_n == 0:
-                        run_first_ms = ms
-                    run_n += 1
-                else:
-                    if (
-                        et == "purchase"
-                        and prev_et == "view"
-                        and run_n > 0
-                        and ms - run_first_ms <= within_ms
-                    ):
-                        out.append((run_n, run_first_ms, ms - run_first_ms))
-                    run_n, run_first_ms = 0, 0
-                prev_et = et
-                last_ms, last_eid = ms, eid
+        pdf = _ordered(
+            pdfs,
+            ["ms", "event_id"],
+            (last_ms, last_eid) if last_eid >= 0 else None,
+            f"quantified_pattern_stream user {user_id!r}",
+        )
+        for et, ms, eid in zip(
+            pdf["event_type"].tolist(), pdf["ms"].tolist(), pdf["event_id"].tolist()
+        ):
+            ms, eid = int(ms), int(eid)
+            if et == "view":
+                if run_n == 0:
+                    run_first_ms = ms
+                run_n += 1
+            else:
+                if (
+                    et == "purchase"
+                    and prev_et == "view"
+                    and run_n > 0
+                    and ms - run_first_ms <= within_ms
+                ):
+                    out.append((run_n, run_first_ms, ms - run_first_ms))
+                run_n, run_first_ms = 0, 0
+            prev_et = et
+            last_ms, last_eid = ms, eid
         state.update((run_n, run_first_ms, prev_et, last_ms, last_eid))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
         yield pd.DataFrame(
             {
                 "user_id": user_id,
@@ -1633,21 +1527,18 @@ def _make_quantified_pattern_fn(within_ms: int, idle_timeout_ms: int | None):
     return fn
 
 
-def quantified_pattern_stream(
-    records: DataFrame, within_ms: int, idle_timeout_ms: int | None = None
-) -> DataFrame:
+def quantified_pattern_stream(records: DataFrame, within_ms: int) -> DataFrame:
     """w7's quantified pattern as a STREAMING CEP operator (w6s's sibling
     for one-or-more quantifiers): matches emit as their closing purchase
     arrives; state = the open view-run + previous event type per user —
     O(1) regardless of run length. Input: user_id, event_type, ms,
-    event_id; in-order arrival enforced by the dod_sizing order guard."""
+    event_id; in-order arrival enforced by ``_ordered``'s guard."""
     return _apply_with_state(
         records,
         ["user_id"],
-        _make_quantified_pattern_fn(within_ms, idle_timeout_ms),
+        _make_quantified_pattern_fn(within_ms),
         W7S_MATCH_SCHEMA,
         _W7S_STATE_SCHEMA,
-        idle_timeout_ms,
     )
 
 
@@ -1666,7 +1557,6 @@ _TWA_STATE_SCHEMA = "n long, last_ms long, last_v100 long, span_ms long, num lon
 
 def time_weighted_avg(
     records: DataFrame,
-    idle_timeout_ms: int | None = 3_600_000,
     reorder_ms: int = 0,
 ) -> DataFrame:
     """Streaming twin of t37's trapezoidal time-weighted average: per
@@ -1706,7 +1596,7 @@ def time_weighted_avg(
 
     return _reorder_fold(
         records, ["event_type", "user_id"], (0, 0, 0, 0, 0), fold, emit,
-        TWA_SCHEMA, _TWA_STATE_SCHEMA, reorder_ms, idle_timeout_ms,
+        TWA_SCHEMA, _TWA_STATE_SCHEMA, reorder_ms,
     )
 
 
@@ -1727,7 +1617,6 @@ _ALERT_STATE_SCHEMA = "open_s long, open_e long, open_n long, seq long, n long"
 def alert_for_duration(
     records: DataFrame,
     thr: float,
-    idle_timeout_ms: int | None = 3_600_000,
     reorder_ms: int = 0,
 ) -> DataFrame:
     """Streaming twin of t39's alert `for:` state machine: per alert key
@@ -1781,7 +1670,7 @@ def alert_for_duration(
 
     return _reorder_fold(
         records, ["event_type"], (0, 0, 0, 0, 0), fold, emit,
-        ALERT_SCHEMA, _ALERT_STATE_SCHEMA, reorder_ms, idle_timeout_ms,
+        ALERT_SCHEMA, _ALERT_STATE_SCHEMA, reorder_ms,
     )
 
 
@@ -1800,7 +1689,6 @@ _EWMA_STATE_SCHEMA = "n long, m long, l double"
 def ewma_halflife(
     records: DataFrame,
     hl_ms: int,
-    idle_timeout_ms: int | None = 3_600_000,
     reorder_ms: int = 0,
 ) -> DataFrame:
     """Streaming twin of t41's half-life EWMA: per series the state is
@@ -1837,5 +1725,5 @@ def ewma_halflife(
 
     return _reorder_fold(
         records, ["event_type", "user_id"], (0, 0, 0.0), fold, emit,
-        EWMA_SCHEMA, _EWMA_STATE_SCHEMA, reorder_ms, idle_timeout_ms,
+        EWMA_SCHEMA, _EWMA_STATE_SCHEMA, reorder_ms,
     )

@@ -841,7 +841,7 @@ def test_kmv_pair_from_topk_arrays(spark, tmp_path):
         hs = [
             r.h for r in dh.where(F.col("event_type") == et).collect()
         ]
-        fn = _make_kmv_topk_fn(KMV_K, KMV_BITS, None)
+        fn = _make_kmv_topk_fn(KMV_K, KMV_BITS)
         state = _FakeGroupState()
         list(fn((et,), iter([pd.DataFrame({"h": hs})]), state))
         arrays[et] = state.get[0]  # sorted K-array

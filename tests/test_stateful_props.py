@@ -371,7 +371,7 @@ def test_asof_join_int_float_pair_raises(spark):
 
 class _FakeGroupState:
     """Minimal GroupState stand-in for driving stateful fns outside a
-    streaming query: exists/get/update plus a no-op timeout setter."""
+    streaming query: exists/get/update."""
 
     def __init__(self):
         self._v = None
@@ -386,9 +386,6 @@ class _FakeGroupState:
 
     def update(self, v):
         self._v = v
-
-    def setTimeoutDuration(self, ms):
-        pass
 
 
 cohort_events_st = st.lists(
@@ -435,7 +432,7 @@ def test_cohort_pairs_chop_invariance_property(events, n_chops, data):
         batches.append(events[lo:c])
         lo = c
 
-    fn = _make_cohort_fn(None)
+    fn = _make_cohort_fn()
     states: dict[int, _FakeGroupState] = {}
     emitted = []
     for batch in batches:
@@ -519,7 +516,7 @@ def test_trailing_buffer_chop_invariance_property(events, n_chops, data):
         batches.append(events[lo:c])
         lo = c
 
-    fn = _make_trailing_buffer_fn(W, None)
+    fn = _make_trailing_buffer_fn(W)
     state = _FakeGroupState()
     emissions = []
     for i, batch in enumerate(batches):
@@ -611,7 +608,7 @@ def test_downsample_buffer_chop_invariance_property(events, n_chops, data):
         batches.append(events[lo:c])
         lo = c
 
-    fn = _make_downsample_fn(W, B, None)
+    fn = _make_downsample_fn(W, B)
     state = _FakeGroupState()
     emissions = []
     for batch in batches:
@@ -732,7 +729,7 @@ def test_dod_sizing_chop_invariance_property(samples, n_chops, data):
         batches.append(ordered[lo:c])
         lo = c
 
-    fn = _make_dod_fn(None)
+    fn = _make_dod_fn()
     state = _FakeGroupState()
     tot_n = tot_bits = 0
     for batch in batches:
@@ -757,28 +754,36 @@ def test_dod_sizing_chop_invariance_property(samples, n_chops, data):
     assert (tot_n, tot_bits) == (len(ordered), exp_bits)
 
 
-def test_dod_sizing_rejects_misordered_source():
-    """t30s's in-order assumption is enforced at runtime (r7 ADVICE):
-    a batch whose minimum (ms, event_id) key precedes the consumed
-    per-series boundary raises loudly instead of silently diverging
-    from the shared batch oracle. In-order continuation (including an
-    equal-ms row with a later event_id) still passes."""
+@pytest.mark.parametrize(
+    "factory", ["dod_sizing", "event_pattern_stream", "quantified_pattern_stream"]
+)
+def test_order_guard_rejects_misordered_source(factory):
+    """The in-order kernels enforce their assumption at runtime: a batch
+    whose minimum (ms, event_id) key precedes the consumed per-key
+    boundary raises loudly instead of silently diverging from the shared
+    batch oracle. In-order continuation (including an equal-ms row with a
+    later event_id) still passes."""
     import pandas as pd
-    import pytest
 
-    from prometheus_remote_kinesis_spark.streaming.stateful import _make_dod_fn
+    from prometheus_remote_kinesis_spark.streaming import stateful
 
-    fn = _make_dod_fn(None)
+    fn, extra = {
+        "dod_sizing": (stateful._make_dod_fn(), "v100"),
+        "event_pattern_stream": (stateful._make_pattern_fn(10_000), "event_type"),
+        "quantified_pattern_stream": (
+            stateful._make_quantified_pattern_fn(10_000), "event_type"
+        ),
+    }[factory]
+
+    def batch(ms, eids):
+        vals = [10 * e for e in eids] if extra == "v100" else ["view"] * len(eids)
+        return pd.DataFrame({"ms": ms, "event_id": eids, extra: vals})
+
     state = _FakeGroupState()
-    b1 = pd.DataFrame({"ms": [100, 200], "event_id": [1, 2], "v100": [10, 20]})
-    list(fn(("t",), iter([b1]), state))
-
-    ok = pd.DataFrame({"ms": [200, 300], "event_id": [3, 4], "v100": [30, 40]})
-    list(fn(("t",), iter([ok]), state))
-
-    bad = pd.DataFrame({"ms": [150], "event_id": [9], "v100": [50]})
+    list(fn(("t",), iter([batch([100, 200], [1, 2])]), state))
+    list(fn(("t",), iter([batch([200, 300], [3, 4])]), state))
     with pytest.raises(ValueError, match="misordered source"):
-        list(fn(("t",), iter([bad]), state))
+        list(fn(("t",), iter([batch([150], [9])]), state))
 
 
 knn_cands_st = st.lists(
@@ -828,7 +833,7 @@ def test_knn_topk_chop_invariance_property(cands, n_chops, data):
         batches.append(cands[lo:c])
         lo = c
 
-    fn = _make_knn_topk_fn(3, None)
+    fn = _make_knn_topk_fn(3)
     state = _FakeGroupState()
     last = None
     for batch in batches:
@@ -893,7 +898,7 @@ def test_event_pattern_chop_invariance_property(events, n_chops, data):
         batches.append(ordered[lo:c])
         lo = c
 
-    fn = _make_pattern_fn(within, None)
+    fn = _make_pattern_fn(within)
     state = _FakeGroupState()
     got = []
     for batch in batches:
@@ -952,7 +957,7 @@ def test_quantified_pattern_chop_invariance_property(events, n_chops, data):
         batches.append(ordered[lo:c])
         lo = c
 
-    fn = _make_quantified_pattern_fn(within, None)
+    fn = _make_quantified_pattern_fn(within)
     state = _FakeGroupState()
     got = []
     for batch in batches:
@@ -1034,26 +1039,26 @@ def _reorder_kernels():
     series = ("m", 1)
     return {
         "holt_winters": (
-            lambda recs, **kw: holt_winters(recs, idle_timeout_ms=None, **kw),
+            lambda recs, **kw: holt_winters(recs, **kw),
             series, summary,
         ),
         "streaming_rate": (
-            lambda recs, **kw: streaming_rate(recs, idle_timeout_ms=None, **kw),
+            lambda recs, **kw: streaming_rate(recs, **kw),
             series, by_seen,
         ),
         "time_weighted_avg": (
-            lambda recs, **kw: time_weighted_avg(recs, idle_timeout_ms=None, **kw),
+            lambda recs, **kw: time_weighted_avg(recs, **kw),
             series, summary,
         ),
         "alert_for_duration": (
             lambda recs, **kw: alert_for_duration(
-                recs, thr=10.0, idle_timeout_ms=None, **kw
+                recs, thr=10.0, **kw
             ),
             ("m",), by_version,
         ),
         "ewma_halflife": (
             lambda recs, **kw: ewma_halflife(
-                recs, hl_ms=100_000, idle_timeout_ms=None, **kw
+                recs, hl_ms=100_000, **kw
             ),
             series, summary,
         ),
@@ -1161,3 +1166,142 @@ def test_in_order_kernel_raises_on_late_sample(kernel):
     _drive_reorder_kernel(kernel, [first, [(2, 1_000, 7.0)]])
     with pytest.raises(RuntimeError, match="reorder horizon"):
         _drive_reorder_kernel(kernel, [first, [(2, 999, 7.0)]])
+
+
+def _ordered_kernels():
+    """The ten kernels that read a key's micro-batch through
+    ``stateful._ordered``: name → (build(records), its key). Each reads
+    its own columns of the wide frame ``_drive_ordered_kernel`` builds."""
+    from prometheus_remote_kinesis_spark.streaming.stateful import (
+        counter_increase,
+        dod_sizing,
+        downsample_buffer,
+        event_pattern_stream,
+        funnel_views,
+        gap_fill,
+        interp_fill,
+        prefix_anomaly,
+        quantified_pattern_stream,
+        trailing_day_buffer,
+    )
+
+    return {
+        "counter_increase": (counter_increase, ("m",)),
+        "prefix_anomaly": (prefix_anomaly, ("m",)),
+        "gap_fill": (lambda recs: gap_fill(recs, interval_ms=7), ("m",)),
+        "interp_fill": (lambda recs: interp_fill(recs, step_ms=7), ("m",)),
+        "funnel_views": (lambda recs: funnel_views(recs, convert_ms=20), (1,)),
+        "trailing_day_buffer": (
+            lambda recs: trailing_day_buffer(recs, window_ms=30), ("m", 1)
+        ),
+        "downsample_buffer": (
+            lambda recs: downsample_buffer(recs, window_ms=30, bucket_ms=8), ("m", 1)
+        ),
+        "dod_sizing": (dod_sizing, ("m",)),
+        "event_pattern_stream": (
+            lambda recs: event_pattern_stream(recs, within_ms=30), (1,)
+        ),
+        "quantified_pattern_stream": (
+            lambda recs: quantified_pattern_stream(recs, within_ms=30), (1,)
+        ),
+    }
+
+
+ORDERED_KERNELS = sorted(_ordered_kernels())
+
+# The wide sample frame every ordered kernel reads its columns from.
+_WIDE_COLUMNS = [
+    "name", "event_type", "user_id", "event_id", "time", "ms", "value", "v100", "side",
+]
+
+
+def _drive_ordered_kernel(kernel, chunks):
+    """Feed one micro-batch of ``chunks`` (lists of (event_id, ms, value,
+    event_type, side, v100) samples) to a kernel; returns its output frame
+    and the fake state it left."""
+    import pandas as pd
+
+    build, key = _ordered_kernels()[kernel]
+    fn = build(_CaptureFrame())
+    state = _FakeGroupState()
+    pdfs = [
+        pd.DataFrame(
+            [("m", et, 1, eid, ms, ms, v, v100, side) for eid, ms, v, et, side, v100 in c],
+            columns=_WIDE_COLUMNS,
+        ).astype({"value": "float64"})
+        for c in chunks
+    ]
+    (out,) = fn(key, iter(pdfs), state)
+    return out, state
+
+
+@given(
+    kernel=st.sampled_from(ORDERED_KERNELS),
+    samples=st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=60),  # ms: duplicates come up
+            st.one_of(st.none(), st.floats(min_value=-100, max_value=100)),
+            st.sampled_from(["view", "click", "purchase", "error"]),
+            st.integers(min_value=0, max_value=1),  # side: 0 view, 1 purchase
+            st.integers(min_value=-50, max_value=50),  # v100
+        ),
+        min_size=1,
+        max_size=20,
+    ),
+    n_chunks=st.integers(min_value=1, max_value=4),
+    data=st.data(),
+)
+@settings(max_examples=300, deadline=None, suppress_health_check=list(HealthCheck))
+def test_ordered_read_is_chunk_invariant(kernel, samples, n_chunks, data):
+    """``applyInPandasWithState`` hands a key's micro-batch over as Arrow
+    chunks in no order. For every kernel reading through ``_ordered``,
+    the batch fed as 1-4 shuffled chunks (empty ones included) gives the
+    same output frame and the same state as the batch fed as one sorted
+    chunk. Kernels that order by time alone see unique times, so the
+    sorted order is total."""
+    import pandas as pd
+
+    rows = [(eid, *s) for eid, s in enumerate(samples)]
+    if kernel in ("counter_increase", "prefix_anomaly"):
+        rows = list({r[1]: r for r in rows}.values())
+    shuffled = data.draw(st.permutations(rows))
+    cuts = sorted(
+        data.draw(
+            st.lists(
+                st.integers(min_value=0, max_value=len(shuffled)),
+                min_size=n_chunks - 1,
+                max_size=n_chunks - 1,
+            )
+        )
+    )
+    chunks, lo = [], 0
+    for c in [*cuts, len(shuffled)]:
+        chunks.append(shuffled[lo:c])
+        lo = c
+
+    want, want_state = _drive_ordered_kernel(
+        kernel, [sorted(rows, key=lambda r: (r[1], r[0]))]
+    )
+    got, got_state = _drive_ordered_kernel(kernel, chunks)
+    pd.testing.assert_frame_equal(got, want)
+    assert got_state.get == want_state.get
+
+
+def test_counter_increase_rejects_late_sample():
+    """A later-batch sample older than the series' last sample raises,
+    instead of folding a made-up increase and counter reset; a sample at
+    the last sample's ms is still admitted."""
+    import pandas as pd
+
+    from prometheus_remote_kinesis_spark.streaming.stateful import counter_increase
+
+    fn = counter_increase(_CaptureFrame())
+    state = _FakeGroupState()
+
+    def batch(times, values):
+        return iter([pd.DataFrame({"name": "c", "time": times, "value": values})])
+
+    list(fn(("c",), batch([1000, 2000], [10.0, 15.0]), state))
+    list(fn(("c",), batch([2000, 3000], [15.0, 17.0]), state))
+    with pytest.raises(ValueError, match="misordered source"):
+        list(fn(("c",), batch([1500], [12.0]), state))

@@ -201,7 +201,6 @@ def test_counter_increase_stateful_vs_batch(spark, tmp_path):
     q = (
         counter_increase(
             read_record_stream(spark, str(src), max_files_per_trigger=1),
-            idle_timeout_ms=None,  # drain-once: timers block availableNow exit
         )
         .writeStream.outputMode("append")
         .format("parquet")
@@ -215,7 +214,6 @@ def test_counter_increase_stateful_vs_batch(spark, tmp_path):
     q2 = (
         counter_increase(
             read_record_stream(spark, str(src), max_files_per_trigger=1),
-            idle_timeout_ms=None,
         )
         .writeStream.outputMode("append")
         .format("parquet")
@@ -267,7 +265,6 @@ def test_gap_fill_stateful_vs_batch(spark, tmp_path):
             gap_fill(
                 read_record_stream(spark, str(src), max_files_per_trigger=1),
                 1000,
-                idle_timeout_ms=None,  # drain-once: timers block availableNow exit
             )
             .writeStream.outputMode("append")
             .format("parquet")
@@ -298,6 +295,80 @@ def test_gap_fill_stateful_vs_batch(spark, tmp_path):
     assert streamed == batch
     assert streamed[("g", 4000)] == 1.0  # LOCF before the 4500 sample
     assert streamed[("g", 5000)] == 2.0
+
+
+def test_key_split_over_arrow_chunks_folds_in_order(spark, tmp_path):
+    """One series' shuffled samples in ONE micro-batch, handed to the
+    stateful kernels as 2-row Arrow chunks (``maxRecordsPerBatch=2``):
+    the kernels must fold the whole batch in time order, as if it were
+    one chunk. Sorting each chunk on its own got every increase, every
+    ``n_prior``, most gap-fill grid points and most funnel resolutions
+    wrong."""
+    import random
+
+    from prometheus_remote_kinesis_spark.streaming.queries import run_to_batch
+    from prometheus_remote_kinesis_spark.streaming.stateful import (
+        counter_increase,
+        counter_increase_batch,
+        funnel_views,
+        gap_fill,
+        gap_fill_batch,
+        prefix_anomaly,
+    )
+
+    H = 3_600_000
+    rows = [
+        {
+            "event_id": i,
+            "event_type": "p" if i % 4 == 3 else "v",
+            "user_id": 1,
+            "time": i * 1000 + (i % 3) * 100,
+            "value": float((i * 7) % 23),  # a counter with resets
+        }
+        for i in range(20)
+    ]
+    shuffled = rows[:]
+    random.Random(13).shuffle(shuffled)
+    stream = _batched_stream(spark, tmp_path, [shuffled])
+    series = stream.select(F.lit("m").alias("name"), "time", "value")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        inc = run_to_batch(counter_increase(series), "append").collect()
+        anom = run_to_batch(prefix_anomaly(series), "append").collect()
+        grid = run_to_batch(gap_fill(series, interval_ms=700), "append").collect()
+        funnel = run_to_batch(
+            funnel_views(
+                stream.select(
+                    "user_id", "time", (F.col("event_type") == "p").cast("int").alias("side")
+                ),
+                convert_ms=H,
+            ),
+            "append",
+        ).collect()
+    finally:
+        spark.conf.set(key, old)
+
+    batch = spark.createDataFrame(
+        [("m", r["time"], r["value"]) for r in rows], "name string, time long, value double"
+    )
+    assert sorted((r["time"], r["increase"], r["resets"]) for r in inc) == sorted(
+        (r["time"], r["increase"], r["resets"])
+        for r in counter_increase_batch(batch).collect()
+    )
+    assert {r["time"]: r["n_prior"] for r in anom} == {
+        r["time"]: i for i, r in enumerate(rows)
+    }
+    assert sorted((r["time"], r["value"]) for r in grid) == sorted(
+        (r["time"], r["value"]) for r in gap_fill_batch(batch, 700).collect()
+    )
+    views = [r["time"] for r in rows if r["event_type"] == "v"]
+    buys = [r["time"] for r in rows if r["event_type"] == "p"]
+    want = [(v, 0, 0) for v in views] + [
+        (v, 1, 1) for v in views if any(b >= v for b in buys)
+    ]
+    assert sorted((r["view_ms"], r["conv"], r["resolved"]) for r in funnel) == sorted(want)
 
 
 def test_holt_winters_stream_matches_batch(spark):
@@ -411,7 +482,7 @@ def test_streaming_rate_multibatch_matches_naive(spark, tmp_path):
         for i, v in enumerate(vals)
     ]
     out = run_to_batch(
-        streaming_rate(_chopped_stream(spark, tmp_path, rows, 4), idle_timeout_ms=None),
+        streaming_rate(_chopped_stream(spark, tmp_path, rows, 4)),
         "append",
     )
     got = {
@@ -468,7 +539,7 @@ def test_holt_winters_multibatch_final_state(spark, tmp_path):
         for i, v in enumerate(vals)
     ]
     drained = run_to_batch(
-        holt_winters(_chopped_stream(spark, tmp_path, rows, 3), idle_timeout_ms=None),
+        holt_winters(_chopped_stream(spark, tmp_path, rows, 3)),
         "append",
     )
     assert drained.count() >= 2  # really was chopped into multiple batches
@@ -514,7 +585,7 @@ def test_gap_fill_duplicate_timestamp_max_wins(spark, tmp_path):
         spark.readStream.schema("name string, time long, value double")
         .parquet(str(src))
     )
-    out = run_to_batch(gap_fill(stream, interval_ms=60_000, idle_timeout_ms=None), "append")
+    out = run_to_batch(gap_fill(stream, interval_ms=60_000), "append")
     got = sorted((r["time"], r["value"]) for r in out.collect())
     assert got == [(0, 9.0), (60_000, 9.0), (120_000, 9.0)], got
 
@@ -546,7 +617,7 @@ def test_funnel_multibatch_chop_invariant(spark, tmp_path):
         "time",
         (F.col("event_type") == "p").cast("int").alias("side"),
     )
-    out = run_to_batch(funnel_views(stream, idle_timeout_ms=None), "append")
+    out = run_to_batch(funnel_views(stream), "append")
     w = Window.partitionBy("user_id", "view_ms").orderBy(F.desc("resolved"))
     got = {
         (r["user_id"], r["view_ms"]): r["conv"]
@@ -592,7 +663,7 @@ def test_cohort_pairs_multibatch_chop_invariant(spark, tmp_path):
         F.col("time").alias("wk"),
         (F.col("event_type") == "signup").cast("int").alias("is_signup"),
     )
-    drained = run_to_batch(cohort_pairs(stream, idle_timeout_ms=None), "append")
+    drained = run_to_batch(cohort_pairs(stream), "append")
     # week rows are emitted exactly once per (user, week)
     week_rows = drained.filter(F.col("is_cohort") == 0).collect()
     assert len(week_rows) == len({(r["user_id"], r["wk"]) for r in week_rows})
@@ -691,7 +762,7 @@ def test_interp_fill_multibatch_matches_naive(spark, tmp_path):
     stream = _chopped_stream(spark, tmp_path, rows, 3).select(
         F.col("event_type").alias("name"), "time", "value"
     )
-    out = run_to_batch(interp_fill(stream, step_ms=step, idle_timeout_ms=None), "append")
+    out = run_to_batch(interp_fill(stream, step_ms=step), "append")
     got = {r["time"]: r["value"] for r in out.collect()}
 
     def lerp(t0, v0, t1, v1, g):
@@ -723,7 +794,7 @@ def test_interp_fill_all_null_first_batch(spark, tmp_path):
     stream = _chopped_stream(spark, tmp_path, rows, 2).select(
         F.col("event_type").alias("name"), "time", "value"
     )
-    out = run_to_batch(interp_fill(stream, step_ms=1000, idle_timeout_ms=None), "append")
+    out = run_to_batch(interp_fill(stream, step_ms=1000), "append")
     got = {r["time"]: r["value"] for r in out.collect()}
     assert got == {2000: 6.0}, got  # midpoint of (1500, 4.0) → (2500, 8.0)
 
@@ -944,7 +1015,7 @@ def test_time_weighted_avg_multibatch_chop_invariant(spark, tmp_path):
     ]
     out = run_to_batch(
         time_weighted_avg(
-            _chopped_stream(spark, tmp_path, rows, 4), idle_timeout_ms=None
+            _chopped_stream(spark, tmp_path, rows, 4)
         ),
         "append",
     )
@@ -1000,7 +1071,7 @@ def test_alert_for_duration_multibatch_chop(spark, tmp_path):
     ]
     out = run_to_batch(
         alert_for_duration(
-            _chopped_stream(spark, tmp_path, rows, 3), thr=50, idle_timeout_ms=None
+            _chopped_stream(spark, tmp_path, rows, 3), thr=50
         ),
         "append",
     )
@@ -1044,7 +1115,7 @@ def test_alert_for_duration_same_ms_islands_stay_distinct(spark, tmp_path):
     ]
     out = run_to_batch(
         alert_for_duration(
-            _chopped_stream(spark, tmp_path, rows, 2), thr=50, idle_timeout_ms=None
+            _chopped_stream(spark, tmp_path, rows, 2), thr=50
         ),
         "append",
     )
@@ -1079,7 +1150,6 @@ def test_ewma_halflife_multibatch_chop(spark, tmp_path):
     out = run_to_batch(
         ewma_halflife(
             _chopped_stream(spark, tmp_path, rows, 4), hl_ms=HL,
-            idle_timeout_ms=None,
         ),
         "append",
     )
@@ -1222,7 +1292,6 @@ def test_ewma_reordered_bit_equals_in_order(spark, tmp_path):
             _chopped_stream(spark, tmp_path, rows_arrival, 4),
             hl_ms=HL,
             reorder_ms=RO,
-            idle_timeout_ms=None,
         ),
         "append",
     )
@@ -1252,7 +1321,6 @@ def test_ewma_reordered_bit_equals_in_order(spark, tmp_path):
                 _chopped_stream(spark, bad_dir, bad, 3),
                 hl_ms=HL,
                 reorder_ms=RO,
-                idle_timeout_ms=None,
             ),
             "append",
         ).collect()
@@ -1284,7 +1352,6 @@ def test_ewma_reordered_boundary_displacement(spark, tmp_path):
             _chopped_stream(spark, tmp_path, [rows_sorted[i] for i in order], 5),
             hl_ms=HL,
             reorder_ms=RO,
-            idle_timeout_ms=None,
         ),
         "append",
     )

@@ -26,10 +26,12 @@ Usage: python tools/audit_oracle_types.py  (exit 0 = clean)
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# The checkout this file lives in, so a copied tree audits its own package.
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from prometheus_remote_kinesis_spark.registry import all_queries  # noqa: E402
 from prometheus_remote_kinesis_spark.schema import TABLES  # noqa: E402

@@ -15,13 +15,16 @@ from __future__ import annotations
 
 import argparse
 import math
+import os
 import sys
 import time
 import traceback
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# The checkout this file lives in, so a copied tree checks its own package.
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from prometheus_remote_kinesis_spark.registry import all_queries  # noqa: E402
 from prometheus_remote_kinesis_spark.schema import TABLES  # noqa: E402
@@ -29,9 +32,15 @@ from prometheus_remote_kinesis_spark.session import get_spark  # noqa: E402
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """One view per table; a table stored as a directory of part files
+    (the layout Spark writers and ``bench_scale.build_scaled_dir`` leave)
+    is read through a glob over its parts."""
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     return con
 
 
